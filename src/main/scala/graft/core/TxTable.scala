@@ -34,11 +34,11 @@ import org.apache.spark.sql.types.{ByteType, DecimalType, DoubleType, FloatType,
   * to `N.checkpoint.json` (best-effort, AFTER the commit publishes —
   * a missing checkpoint only lengthens the replay, never loses data).
   * Snapshot state is reconstructed by walking back from the requested
-  * version to the nearest self-contained base (a checkpoint, or a
-  * pre-checkpoint-era full manifest) and replaying ≤ interval deltas
-  * forward; a JVM-wide cache of the latest reconstructed state per
-  * table root makes the hot path (streaming writer, repeated reads)
-  * zero extra log reads. The reconstructed state is the COMPLETE file
+  * version to the nearest checkpoint and replaying ≤ interval deltas
+  * forward (a version file is always a delta; a pre-delta
+  * full-manifest log entry is refused by name); a JVM-wide cache of
+  * the latest reconstructed state per table root makes the hot path
+  * (streaming writer, repeated reads) zero extra log reads. The reconstructed state is the COMPLETE file
   * listing of one snapshot plus the snapshot's schema (DDL), each file
   * tagged with its partition values. All correctness flows from three
   * rules:
@@ -175,10 +175,9 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
   }
 
-  /** The raw log entry of version `v` — a [[CommitDelta]] normally, a
-    * self-contained full [[Manifest]] for pre-checkpoint-era logs.
-    * The byte length rides along as the state-cache freshness token. */
-  private def logEntryWithLen(v: Long): (Either[Manifest, CommitDelta], Long) = {
+  /** The raw log entry of version `v`, a [[CommitDelta]]. The byte
+    * length rides along as the state-cache freshness token. */
+  private def logEntryWithLen(v: Long): (CommitDelta, Long) = {
     val p = manifestPath(v)
     require(fs.exists(p), s"snapshot $v of $root does not exist (expired?)")
     val in = fs.open(p)
@@ -188,8 +187,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       bytes.length.toLong)
   }
 
-  private def logEntry(v: Long): Either[Manifest, CommitDelta] =
-    logEntryWithLen(v)._1
+  private def logEntry(v: Long): CommitDelta = logEntryWithLen(v)._1
 
   /** Log reads (entry/checkpoint files opened + existence probes) the
     * last [[manifest]] reconstruction made — instrumentation so tests
@@ -198,9 +196,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
   @volatile private[graft] var lastStateOps: Int = 0
 
   /** Snapshot STATE of version `v`, reconstructed from the log:
-    * nearest self-contained base at or below `v` (the JVM cache, a
-    * checkpoint, or a legacy full manifest), plus ≤ interval replayed
-    * deltas. The cache holds the highest reconstructed state per table
+    * nearest self-contained base at or below `v` (the JVM cache or a
+    * checkpoint), plus ≤ interval replayed deltas. The cache holds the highest reconstructed state per table
     * root — versions are immutable, so a cached state ≤ v is always a
     * valid replay base; a cached state > v (time travel) falls back to
     * the checkpoint walk. */
@@ -239,11 +236,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       var k = from
       while (k <= v) {
         ops += 1
-        val (entry, len) = logEntryWithLen(k)
-        entry match {
-          case Left(full)   => state = full // legacy self-contained entry
-          case Right(delta) => state = applyDelta(state, delta)
-        }
+        val (delta, len) = logEntryWithLen(k)
+        state = applyDelta(state, delta)
         if (k == v) stateLen = len
         k += 1
       }
@@ -263,9 +257,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
             ops += 1
             replayForward(Manifest.fromJson(readLogFile(checkpointPath(h))), h + 1)
           case _ =>
-            // walk back collecting deltas until a self-contained base
-            // (a checkpoint or a legacy full manifest) — bounded by
-            // the checkpoint interval once checkpoints exist
+            // walk back collecting deltas until a checkpoint —
+            // bounded by the checkpoint interval once checkpoints exist
             val pending = scala.collection.mutable.ArrayBuffer.empty[CommitDelta]
             var base: Manifest = null
             var k = v
@@ -275,12 +268,10 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
                 base = Manifest.fromJson(readLogFile(checkpointPath(k)))
               else {
                 ops += 1
-                val (entry, len) = logEntryWithLen(k)
+                val (delta, len) = logEntryWithLen(k)
                 if (k == v) stateLen = len
-                entry match {
-                  case Left(full)   => base = full
-                  case Right(delta) => pending += delta; k -= 1
-                }
+                pending += delta
+                k -= 1
               }
             }
             var s = if (base != null) base
@@ -1331,7 +1322,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     // surface the reset signal, never a raw missing-file error (the
     // read itself races concurrent expiry, so the catch — not a
     // pre-scan — is what makes the contract airtight)
-    def entryOrReset(v: Long): Either[Manifest, CommitDelta] =
+    def entryOrReset(v: Long): CommitDelta =
       try logEntry(v)
       catch { case _: IllegalArgumentException => sys.error(
         s"$root version $v expired (snapshot retention) — " +
@@ -1346,56 +1337,26 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     // readable until their own log entries expire. Stops at the first
     // genuine rewrite (fail-fast before reading more).
     val adds = Seq.newBuilder[FileEntry]
-    var sawLegacyFull = false
-    var sawCompact = false
     var k = fromVersion + 1
     while (k <= to) {
-      val e = entryOrReset(k)
-      val op = e.fold(_.operation, _.operation)
-      if (op == OpCompact) sawCompact = true
-      else {
-        if (op != OpAppend) sys.error(
-          s"$root version $k is '$op', not append — " +
+      val d = entryOrReset(k)
+      if (d.operation != OpCompact) {
+        if (d.operation != OpAppend) sys.error(
+          s"$root version $k is '${d.operation}', not append — " +
             "file diff is not a row diff; reset the change-feed consumer " +
             "from a full snapshot read")
-        e match {
-          case Right(d) => adds ++= d.add
-          case Left(_)  => sawLegacyFull = true
-        }
+        adds ++= d.add
       }
       k += 1
     }
-    // the legacy fallback diffs SNAPSHOT file lists, which a compact
-    // in the window poisons (rewritten copies of already-consumed
-    // rows would read as adds) — that rare combination resets
-    if (sawLegacyFull && sawCompact) sys.error(
-      s"$root: change window mixes a pre-delta-era append with a " +
-        "compact — reset the change-feed consumer from a full snapshot read")
-    if (sawLegacyFull) {
-      // pre-checkpoint-era full manifests carry no explicit delta:
-      // fall back to the snapshot file-list diff (same result)
-      def stateOrReset(v: Long): Manifest =
-        try manifest(v)
-        catch { case _: IllegalArgumentException => sys.error(
-          s"$root version $v expired (snapshot retention) — " +
-            "reset the change-feed consumer from a full snapshot read")
-        }
-      val seen = stateOrReset(fromVersion).files.map(_.path).toSet
-      val m = stateOrReset(to)
-      readEntries(m, m.files.filterNot(f => seen(f.path)))
-    } else {
-      val files = adds.result()
-      // header (schema/bucket spec) from the newest entry in range —
-      // appends never change layout; empty range reads the snapshot
-      // header (cache-friendly, no file scan: the entry list is empty)
-      val header = entryOrReset(to) match {
-        case Left(full) => full
-        case Right(d)   => Manifest(d.version, d.operation, d.schemaDdl,
-          files, d.partitionCols, d.bucketSpec, colMap = d.colMap,
-          retired = d.retired)
-      }
-      readEntries(header, files)
-    }
+    val files = adds.result()
+    // header (schema/bucket spec) from the newest entry in range —
+    // appends never change layout; empty range reads the snapshot
+    // header (cache-friendly, no file scan: the entry list is empty)
+    val d = entryOrReset(to)
+    readEntries(Manifest(d.version, d.operation, d.schemaDdl, files,
+      d.partitionCols, d.bucketSpec, colMap = d.colMap, retired = d.retired),
+      files)
   }
 
   /** ROW-level change feed over `(fromVersion, toVersion]`: every
@@ -1417,7 +1378,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val to = toVersion.orElse(latestVersion).getOrElse(
       sys.error(s"$root has no committed snapshots"))
     require(to >= fromVersion, s"$root: changeFeed($fromVersion) > latest $to")
-    def entryOrReset(v: Long): Either[Manifest, CommitDelta] =
+    def entryOrReset(v: Long): CommitDelta =
       try logEntry(v)
       catch { case _: IllegalArgumentException => sys.error(
         s"$root version $v expired (snapshot retention) — " +
@@ -1426,7 +1387,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val parts: Seq[DataFrame] =
       (fromVersion + 1 to to).iterator.flatMap { v =>
         entryOrReset(v) match {
-          case Right(d) if d.operation == OpAppend =>
+          case d if d.operation == OpAppend =>
             if (d.add.isEmpty) None
             else Some(readEntries(
                 Manifest(d.version, d.operation, d.schemaDdl, d.add,
@@ -1434,26 +1395,9 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
                   retired = d.retired), d.add)
               .withColumn(ChangeTypeCol, lit("insert"))
               .withColumn(CommitVersionCol, lit(v)))
-          case Right(d) if d.operation == OpCompact =>
+          case d if d.operation == OpCompact =>
             None // a compact rewrites byte-identical rows: no data change
-          case Left(full) if full.operation == OpAppend =>
-            // legacy full-manifest append (pre-delta-log era): its
-            // add-set is the file-list diff vs the previous snapshot —
-            // the same fallback changesSince uses
-            val prev =
-              try manifest(v - 1).files.map(_.path).toSet
-              catch { case _: IllegalArgumentException => sys.error(
-                s"$root version ${v - 1} expired (snapshot retention) — " +
-                  "reset the change-feed consumer from a full snapshot read")
-              }
-            val added = full.files.filterNot(f => prev(f.path))
-            if (added.isEmpty) None
-            else Some(readEntries(full, added)
-              .withColumn(ChangeTypeCol, lit("insert"))
-              .withColumn(CommitVersionCol, lit(v)))
-          case Left(full) if full.operation == OpCompact =>
-            None
-          case Right(d) if d.cdc.isDefined =>
+          case d if d.cdc.isDefined =>
             val files = d.cdc.get
             if (files.isEmpty) None // CDF commit that changed nothing
             else {
@@ -1470,10 +1414,9 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
                   d.colMap.map(_.swap))
                 .withColumn(CommitVersionCol, lit(v)))
             }
-          case e =>
-            val op = e.fold(_.operation, _.operation)
-            sys.error(s"$root version $v is '$op' with no recorded change " +
-              "files — row changes were not captured (write through a " +
+          case d =>
+            sys.error(s"$root version $v is '${d.operation}' with no " +
+              "recorded change files — row changes were not captured (write through a " +
               "changeDataFeed=true handle); reset the change-feed " +
               "consumer from a full snapshot read")
         }
@@ -1578,15 +1521,10 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     try latestVersion.foreach { v =>
       val m = manifest(v)
       if (boolProp(m, TxTable.PropAutoCompact).getOrElse(false)) {
-        def sizeOf(f: FileEntry): Long =
-          if (f.bytes >= 0) f.bytes
-          else fs.getFileStatus(new Path(root, f.path)).getLen
-        val target = 128L * 1024 * 1024
         val small = m.files.count(f =>
-          sizeOf(f) < target / 2 || f.dvPath.isDefined)
+          fileBytes(f) < DefaultTargetFileBytes / 2 || f.dvPath.isDefined)
         if (small >= TxTable.AutoCompactMinFiles) {
-          compactSmall(targetFileBytes = target,
-            minFiles = TxTable.AutoCompactMinFiles); ()
+          compactSmall(minFiles = TxTable.AutoCompactMinFiles); ()
         }
       }
     } catch { case scala.util.control.NonFatal(_) => () }
@@ -4122,12 +4060,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       // auto-mirror self-heal retried with coalesce
       val dataChange =
         if (coalesce)
-          versions.filter(v => v > anchor && v <= latest).exists { v =>
-            (logEntry(v) match {
-              case Right(d)    => d.operation
-              case Left(full)  => full.operation
-            }) != OpCompact
-          }
+          versions.filter(v => v > anchor && v <= latest)
+            .exists(v => logEntry(v).operation != OpCompact)
         else cur.operation != OpCompact
       val prevPaths = prev.files.map(_.path).toSet
       val curPaths = cur.files.map(_.path).toSet
@@ -4557,23 +4491,10 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     * [[ParquetIOManager.compact]]'s rename swap: here there is no
     * swap window at all, readers flip manifests or keep the old one.
     * Partitioned/bucketed layouts are preserved. */
-  def compact(targetFileBytes: Long = 128L * 1024 * 1024): Long = {
+  def compact(targetFileBytes: Long = DefaultTargetFileBytes): Long = {
     val v = latestVersion.getOrElse(sys.error(s"$root: nothing to compact"))
     val m = manifest(v)
-    val n = targetFileCount(m, targetFileBytes, m.files)
-    val spec = m.bucketSpec
-    val base = readVersion(v)
-    val laid = spec.map(withBucket(base, _)).getOrElse(base)
-    val rep =
-      if (m.partitionCols.nonEmpty)
-        laid.repartition(n, m.partitionCols.map(col): _*)
-      else laid.repartition(n)
-    val (files, schema) = writeDataFiles(rep, m.partitionCols)
-    commit { latest =>
-      require(latest.exists(_.version == m.version),
-        s"concurrent commit during compact of $root — rerun compact")
-      Pending(OpCompact, files, schemaDdlOf(schema), m.partitionCols, spec, None)
-    }
+    rewriteFiles("compact", m, m.files, Nil, targetFileBytes)()
   }
 
   /** Purge deletion vectors: rewrite ONLY the files whose deleted
@@ -4583,7 +4504,9 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     * reclaims the space and the read-side anti-join of heavily
     * deleted files without paying a full [[compact]]. Files with an
     * unknown row count (stats-off writes) purge whenever they carry a
-    * vector — the conservative direction. Commits as a compact
+    * vector — the conservative direction. Survivors are sized like
+    * any compaction output (~128 MB files, hashed by partition), not
+    * left in the anti-join's scan split. Commits as a compact
     * (dataChange=false: the rows a reader sees are identical before
     * and after), so change feeds skip it. */
   def purgeDeletes(minDeletedFraction: Double = 0.05): Long = {
@@ -4594,39 +4517,9 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val (purge, keep) = m.files.partition(f => f.dvPath.isDefined &&
       (f.rows <= 0 || f.dvRows.toDouble / f.rows >= minDeletedFraction))
     if (purge.isEmpty) return v
-    val rewritten = readEntries(m, purge) // DV-applied: survivors only
-    val data = m.bucketSpec.map(withBucket(rewritten, _)).getOrElse(rewritten)
-    val (files, _) = writeDataFiles(data, m.partitionCols)
-    commit { latest =>
-      require(latest.exists(_.version == m.version),
-        s"concurrent commit during purgeDeletes of $root — rerun")
-      Pending(OpCompact, keep ++ files, m.schemaDdl, m.partitionCols,
-        m.bucketSpec, None)
-    }
+    rewriteFiles("purgeDeletes", m, purge, keep, DefaultTargetFileBytes)()
   }
 
-  /** Z-order clustering compaction: rewrite the current snapshot
-    * ordered along the Morton curve over `zCols`, so per-file
-    * [min,max] ranges stay tight in EVERY listed dimension and
-    * [[readWhereRange]] skips files for predicates on ANY of them —
-    * multi-dimensional data skipping, where a plain sort only serves
-    * its leading column.
-    *
-    * Curve coordinates are min/max-normalized 16-bit ranks over a
-    * per-type monotone numeric projection: numerics cast to double,
-    * dates/timestamps to their epoch value, strings to their first
-    * six UTF-8 bytes as an unsigned integer (exact in a double;
-    * monotone in the same unsigned-byte order the string stats use —
-    * the scalable stand-in for a global dictionary rank, which would
-    * cost a global sort). The z-value itself is pure column
-    * arithmetic (magic-number bit spreading — codegen'd, no UDF).
-    *
-    * On a hive-partitioned table the curve clusters WITHIN each
-    * partition (range-partition and sort by partition values first,
-    * z-value second) — partition pruning keeps serving the layout
-    * columns, the curve serves the rest. Bucketed tables are refused:
-    * the bucket function owns the file mapping. The rewrite commits
-    * like any [[compact]] — readers flip manifests, never block. */
   /** The OPTIMIZE entry point: z-order along the table's
     * [[TxTable.PropZOrderColumns]] property when set (the table
     * remembers its own clustering policy — maintenance jobs need no
@@ -4634,7 +4527,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     * rewrites the snapshot), INCREMENTAL small-file compaction
     * ([[compactSmall]]) otherwise — the Delta OPTIMIZE semantics:
     * maintenance cost ∝ small-file debt, never O(table). */
-  def optimize(targetFileBytes: Long = 128L * 1024 * 1024,
+  def optimize(targetFileBytes: Long = DefaultTargetFileBytes,
       partitionEq: Map[String, String] = Map.empty): Long = {
     val zcols = latestVersion.map(v => manifest(v).properties
         .getOrElse(TxTable.PropZOrderColumns, ""))
@@ -4675,7 +4568,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     * it. Partitioned/bucketed layouts are preserved — rewritten rows
     * re-shadow their partition dirs and recompute their buckets from
     * the data. */
-  def compactSmall(targetFileBytes: Long = 128L * 1024 * 1024,
+  def compactSmall(targetFileBytes: Long = DefaultTargetFileBytes,
       minFiles: Int = 2, smallFileBytes: Long = -1L,
       partitionEq: Map[String, String] = Map.empty): Long = {
     require(minFiles >= 2, "minFiles < 2 would rewrite lone files for nothing")
@@ -4690,32 +4583,36 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     // a nightly per-partition OPTIMIZE on a date-partitioned table
     // touches yesterday's dir only, never the historical tail
     val scope = resolvePartitionScope(m, partitionEq)
-    def sizeOf(f: FileEntry): Long =
-      if (f.bytes >= 0) f.bytes
-      else fs.getFileStatus(new Path(root, f.path)).getLen
     val (small, keep) = m.files.partition(f =>
-      inScope(f, scope) && (sizeOf(f) < cutoff || f.dvPath.isDefined))
+      inScope(f, scope) && (fileBytes(f) < cutoff || f.dvPath.isDefined))
     if (small.size < minFiles) return v
-    val base = readEntries(m, small) // DV-applied: survivors only
-    val spec = m.bucketSpec
-    val laid = spec.map(withBucket(base, _)).getOrElse(base)
-    val n = math.max(1, math.ceil(
-      small.map(sizeOf).sum.toDouble / targetFileBytes).toInt)
-    val rep =
-      if (m.partitionCols.nonEmpty)
-        laid.repartition(n, m.partitionCols.map(col): _*)
-      else laid.repartition(n)
-    val (files, _) = writeDataFiles(rep, m.partitionCols)
-    commit { latest =>
-      require(latest.exists(_.version == m.version),
-        s"concurrent commit during compactSmall of $root — rerun")
-      Pending(OpCompact, keep ++ files, m.schemaDdl, m.partitionCols,
-        spec, None)
-    }
+    rewriteFiles("compactSmall", m, small, keep, targetFileBytes)()
   }
 
+  /** Z-order clustering compaction: rewrite the current snapshot
+    * ordered along the Morton curve over `zCols`, so per-file
+    * [min,max] ranges stay tight in EVERY listed dimension and
+    * [[readWhereRange]] skips files for predicates on ANY of them —
+    * multi-dimensional data skipping, where a plain sort only serves
+    * its leading column.
+    *
+    * Curve coordinates are min/max-normalized 16-bit ranks over a
+    * per-type monotone numeric projection: numerics cast to double,
+    * dates/timestamps to their epoch value, strings to their first
+    * six UTF-8 bytes as an unsigned integer (exact in a double;
+    * monotone in the same unsigned-byte order the string stats use —
+    * the scalable stand-in for a global dictionary rank, which would
+    * cost a global sort). The z-value itself is pure column
+    * arithmetic (magic-number bit spreading — codegen'd, no UDF).
+    *
+    * On a hive-partitioned table the curve clusters WITHIN each
+    * partition (range-partition and sort by partition values first,
+    * z-value second) — partition pruning keeps serving the layout
+    * columns, the curve serves the rest. Bucketed tables are refused:
+    * the bucket function owns the file mapping. The rewrite commits
+    * like any [[compact]] — readers flip manifests, never block. */
   def compactZOrder(zCols: Seq[String],
-      targetFileBytes: Long = 128L * 1024 * 1024,
+      targetFileBytes: Long = DefaultTargetFileBytes,
       partitionEq: Map[String, String] = Map.empty): Long = {
     require(zCols.size >= 2 && zCols.size <= 3,
       "z-order needs 2..3 columns (16-bit ranks × stride stay " +
@@ -4742,7 +4639,6 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       return v
     require(scoped.nonEmpty,
       s"$root: OPTIMIZE WHERE matches no files (scope $scope)")
-    val base = readEntries(m, scoped)
     import org.apache.spark.sql.functions.{lit => flit, min => fmin, max => fmax}
     val tableSchema = StructType.fromDDL(m.schemaDdl)
     // per-type MONOTONE numeric projection — the curve only needs
@@ -4768,26 +4664,6 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
           "curve coordinates must be numeric, date/timestamp, or string")
       }
     }
-    // normalization bounds: one tiny agg over the projections
-    val aggExprs = zCols.flatMap(c => Seq(fmin(coord(c)), fmax(coord(c))))
-    val bounds = base.agg(aggExprs.head, aggExprs.tail: _*).head()
-    def rank16(c: String, i: Int): Column = {
-      require(!bounds.isNullAt(2 * i) && !bounds.isNullAt(2 * i + 1),
-        s"$root: z-order column $c has no non-null values")
-      val lo = bounds.getDouble(2 * i)
-      val hi = bounds.getDouble(2 * i + 1)
-      require(!lo.isNaN && !hi.isNaN,
-        s"$root: z-order column $c bound is NaN — a NaN coordinate " +
-          "would silently corrupt the curve; filter or repair first")
-      val span = if (hi > lo) hi - lo else 1.0
-      // clamp: out-of-range inputs (incl. NaN rows, which cast to 0)
-      // stay inside the 16-bit rank domain instead of wrapping the
-      // curve non-monotonically
-      org.apache.spark.sql.functions.least(
-        org.apache.spark.sql.functions.greatest(
-          ((coord(c) - flit(lo)) / flit(span) * flit(65535.0))
-            .cast("long"), flit(0L)), flit(65535L))
-    }
     // Morton spread of a 16-bit value to every zCols.size-th bit
     // (the standard magic-number dilation, generalized to stride k)
     def spread(x0: Column, k: Int): Column =
@@ -4796,56 +4672,87 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
           org.apache.spark.sql.functions.shiftright(x0, bit)
             .bitwiseAND(flit(1L)), bit * k)
       }.reduce(_ bitwiseOR _)
-    val z = zCols.zipWithIndex.map { case (c, i) =>
-      org.apache.spark.sql.functions.shiftleft(
-        spread(rank16(c, i), zCols.size), i)
-    }.reduce(_ bitwiseOR _)
-    val n = targetFileCount(m, targetFileBytes, scoped)
-    // partition values lead the clustering keys so each write task
-    // holds whole (partition, z-range) runs: files stay per-partition
-    // AND z-tight within it
-    val clusterKeys = m.partitionCols.map(col) :+ col(ZTmpCol)
-    val clustered = base.withColumn(ZTmpCol, z)
-      .repartitionByRange(n, clusterKeys: _*)
-      .sortWithinPartitions(clusterKeys: _*)
-      .drop(ZTmpCol)
-    val (files, schema) = writeDataFiles(clustered, m.partitionCols)
-    // carried (out-of-scope) entries keep the table schema; a full
-    // rewrite takes the written files' schema as before
-    val ddl = if (carried.isEmpty) schemaDdlOf(schema) else m.schemaDdl
+    def zLayout(base: DataFrame, n: Int): DataFrame = {
+      // normalization bounds: one tiny agg over the projections
+      val aggExprs = zCols.flatMap(c => Seq(fmin(coord(c)), fmax(coord(c))))
+      val bounds = base.agg(aggExprs.head, aggExprs.tail: _*).head()
+      def rank16(c: String, i: Int): Column = {
+        require(!bounds.isNullAt(2 * i) && !bounds.isNullAt(2 * i + 1),
+          s"$root: z-order column $c has no non-null values")
+        val lo = bounds.getDouble(2 * i)
+        val hi = bounds.getDouble(2 * i + 1)
+        require(!lo.isNaN && !hi.isNaN,
+          s"$root: z-order column $c bound is NaN — a NaN coordinate " +
+            "would silently corrupt the curve; filter or repair first")
+        val span = if (hi > lo) hi - lo else 1.0
+        // clamp: out-of-range inputs (incl. NaN rows, which cast to 0)
+        // stay inside the 16-bit rank domain instead of wrapping the
+        // curve non-monotonically
+        org.apache.spark.sql.functions.least(
+          org.apache.spark.sql.functions.greatest(
+            ((coord(c) - flit(lo)) / flit(span) * flit(65535.0))
+              .cast("long"), flit(0L)), flit(65535L))
+      }
+      val z = zCols.zipWithIndex.map { case (c, i) =>
+        org.apache.spark.sql.functions.shiftleft(
+          spread(rank16(c, i), zCols.size), i)
+      }.reduce(_ bitwiseOR _)
+      // partition values lead the clustering keys so each write task
+      // holds whole (partition, z-range) runs: files stay per-partition
+      // AND z-tight within it
+      val clusterKeys = m.partitionCols.map(col) :+ col(ZTmpCol)
+      base.withColumn(ZTmpCol, z)
+        .repartitionByRange(n, clusterKeys: _*)
+        .sortWithinPartitions(clusterKeys: _*)
+        .drop(ZTmpCol)
+    }
+    rewriteFiles("z-order compact", m, scoped, carried, targetFileBytes)(zLayout)
+  }
+
+  /** The one file-rewrite step behind [[compact]], [[compactSmall]],
+    * [[purgeDeletes]] and [[compactZOrder]]: each verb only picks the
+    * files to `rewrite` and the files `carried` by reference. Reads
+    * the rewritten files with their deletion vectors applied
+    * (survivors only), recomputes buckets, lays the rows out into
+    * ~`targetFileBytes` outputs (`layout` gets the frame and the
+    * output count; by default a hash on the partition columns), and
+    * commits `carried ++ outputs` as a compact of snapshot `m` —
+    * dataChange=false, so change feeds skip it. The commit keeps the
+    * snapshot's schema: a rewrite changes no column. */
+  private def rewriteFiles(verb: String, m: Manifest, rewrite: Seq[FileEntry],
+      carried: Seq[FileEntry], targetFileBytes: Long)(
+      layout: (DataFrame, Int) => DataFrame = (df, n) =>
+        if (m.partitionCols.isEmpty) df.repartition(n)
+        else df.repartition(n, m.partitionCols.map(col): _*)): Long = {
+    val base = readEntries(m, rewrite)
+    val laid = m.bucketSpec.fold(base)(withBucket(base, _))
+    val n = math.max(1, math.ceil(
+      rewrite.map(fileBytes).sum.toDouble / targetFileBytes).toInt)
+    val (files, _) = writeDataFiles(layout(laid, n), m.partitionCols)
     commit { latest =>
       require(latest.exists(_.version == m.version),
-        s"concurrent commit during z-order compact of $root — rerun")
-      Pending(OpCompact, carried ++ files, ddl, m.partitionCols, None, None)
+        s"concurrent commit during $verb of $root — rerun")
+      Pending(OpCompact, carried ++ files, m.schemaDdl, m.partitionCols,
+        m.bucketSpec, None)
     }
   }
 
-  /** Shared compaction sizing: rewrite `files` into ~targetFileBytes
-    * outputs. */
-  private def targetFileCount(m: Manifest, targetFileBytes: Long,
-      files: Seq[FileEntry]): Int = {
-    val bytes = files.map(f =>
-      if (f.bytes >= 0) f.bytes
-      else fs.getFileStatus(new Path(root, f.path)).getLen).sum
-    math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-  }
+  /** A file's recorded size; a stat for entries that predate it. */
+  private def fileBytes(f: FileEntry): Long =
+    if (f.bytes >= 0) f.bytes
+    else fs.getFileStatus(new Path(root, f.path)).getLen
 
   /** Commit history, oldest first — the DESCRIBE HISTORY surface
     * (version, operation, live file count, files/bytes ADDED by the
     * commit — the per-commit write cost, straight from its delta)
     * a transactional table owes its operators; reads only the
-    * (small) log entries. Self-contained entries (v0 overwrites,
-    * legacy full manifests) count their whole listing as added. */
+    * (small) log entries. */
   def history(): Seq[(Long, String, Int, Int, Long)] =
     versions.map { v =>
       val m = manifest(v)
-      val (nAdd, bAdd) = logEntry(v) match {
-        case Right(d)   => (d.add.size,
-          d.add.map(f => math.max(f.bytes, 0L)).sum)
-        case Left(full) => (full.files.size,
-          full.files.map(f => math.max(f.bytes, 0L)).sum)
-      }
-      (m.version, m.operation, m.files.size, nAdd, bAdd)
+      val add = logEntry(v).add
+      (m.version, m.operation, m.files.size, add.size,
+        add.map(f => math.max(f.bytes, 0L)).sum)
     }
 
   // ---- maintenance --------------------------------------------------------
@@ -4856,20 +4763,17 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     *
     * Delta logs make expiry two-phase: the oldest KEPT version must
     * stay reconstructible after its predecessors vanish, so a
-    * checkpoint is forced there first (no-op when one exists or the
-    * entry is a self-contained legacy manifest); only then do the
-    * older deltas + checkpoints die. */
+    * checkpoint is forced there first (no-op when one exists); only
+    * then do the older deltas + checkpoints die. */
   def expireSnapshots(keepLast: Int): Seq[Long] = {
     require(keepLast >= 1, "must keep at least the latest snapshot")
     val vs = versions
     val drop = vs.dropRight(keepLast)
     if (drop.nonEmpty) {
       val oldestKept = vs(vs.length - keepLast)
-      val selfContained = fs.exists(checkpointPath(oldestKept)) ||
-        logEntry(oldestKept).isLeft
-      if (!selfContained) writeCheckpoint(manifest(oldestKept))
-      require(fs.exists(checkpointPath(oldestKept)) ||
-          logEntry(oldestKept).isLeft,
+      if (!fs.exists(checkpointPath(oldestKept)))
+        writeCheckpoint(manifest(oldestKept))
+      require(fs.exists(checkpointPath(oldestKept)),
         s"$root: could not checkpoint version $oldestKept — expiry would " +
           "orphan the retained snapshots; retry")
       drop.foreach { v =>
@@ -4891,7 +4795,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       dryRun: Boolean = false): Seq[String] = {
     // live = every path referenced by any retained snapshot. With a
     // delta log that's the union of retained ADDS plus retained
-    // checkpoint/legacy-full listings — sound because a path present
+    // checkpoint listings — sound because a path present
     // in state(v) was either added by a retained delta or already
     // live at the expiry-forced checkpoint below it (removed files
     // never re-enter: write-once paths). One pass over the log, no
@@ -4903,11 +4807,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val live: Set[String] = versions.flatMap { v =>
       // CDC files are referenced ONLY by their commit's delta — they
       // live exactly as long as the log entry that could serve them
-      val entryPaths = logEntry(v) match {
-        case Left(full)   => withDv(full.files)
-        case Right(delta) =>
-          withDv(delta.add) ++ delta.cdc.getOrElse(Nil).map(_.path)
-      }
+      val delta = logEntry(v)
+      val entryPaths = withDv(delta.add) ++ delta.cdc.getOrElse(Nil).map(_.path)
       val ckptPaths =
         if (fs.exists(checkpointPath(v)))
           withDv(Manifest.fromJson(readLogFile(checkpointPath(v))).files)
@@ -6023,6 +5924,8 @@ object TxTable {
     * low enough to keep streaming-append tables tidy, high enough
     * that the compact amortizes over many appends. */
   val AutoCompactMinFiles = 8
+  /** Output file size the compaction verbs pack toward by default. */
+  private val DefaultTargetFileBytes = 128L * 1024 * 1024
 
   /** Largest per-key distinct-value set a non-bucketed MERGE collects
     * for IN-list candidate pruning (which consults per-file Blooms);
@@ -6376,18 +6279,19 @@ object TxTable {
       colMap: Option[Map[String, String]] = None,
       retired: Option[Seq[String]] = None)
 
-  /** Shared JSON plumbing for the two log-entry shapes. */
+  /** Shared JSON plumbing for version files and checkpoints. */
   private[core] object LogFormat {
     import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
     import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
-    /** A version file is a [[CommitDelta]] (has add/remove) or a
-      * pre-checkpoint-era full [[Manifest]] (has files) — the latter is
-      * self-contained state, letting old logs read unmodified. */
-    def parseEntry(json: String): Either[Manifest, CommitDelta] = {
+    /** A version file is a [[CommitDelta]] (has add/remove). A file
+      * without either is a full manifest from before the delta log,
+      * refused by name rather than misread as an empty commit. */
+    def parseEntry(json: String): CommitDelta = {
       val n = new ObjectMapper().readTree(json)
-      if (n.has("add") || n.has("remove")) Right(CommitDelta.fromNode(n))
-      else Left(Manifest.fromNode(n))
+      if (!n.has("add") && !n.has("remove")) sys.error(
+        "pre-delta full-manifest log entry; this log format is no longer read")
+      CommitDelta.fromNode(n)
     }
 
     def putHeader(node: ObjectNode, version: Long, operation: String,

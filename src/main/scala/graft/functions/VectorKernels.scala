@@ -351,7 +351,8 @@ object VectorKernels {
     * (ascending ⇒ a < b canonical order for free) of values in
     * [0, 2³¹): the guard REFUSES out-of-range ids by name rather than
     * silently merging distinct pairs (the engine's refuse-by-name
-    * discipline; for wider id spaces use [[pairsFrom]]). The suffix
+    * discipline; for wider id spaces use [[bucketPairs]], the
+    * `graft_bucket_pairs` struct emitter). The suffix
     * form bounds the emitted array by the list length — one
     * (row, position) emission is ≤ |rs| longs — so a df-cap-sized hot
     * key (10⁴ ids ⇒ 5·10⁷ pairs) never materializes one 400 MB array:
@@ -363,7 +364,8 @@ object VectorKernels {
       throw new IllegalArgumentException(
         "graft_packed_pairs_from: ids must lie in [0, 2^31) to pack as " +
           s"a<<32|b (got ${rs.getLong(0)}..${rs.getLong(n - 1)}); " +
-          "use the struct pair kernel for wider id spaces")
+          "use graft_bucket_pairs (VectorKernels.bucketPairs) for wider " +
+          "id spaces")
     val a = rs.getLong(i) << 32
     val out = new Array[Long](n - i - 1)
     var j = i + 1

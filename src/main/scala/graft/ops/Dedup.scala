@@ -153,8 +153,8 @@ object Dedup {
       maxDocFreq: Option[Int] = Some(DefaultMaxDocFreq)): DataFrame = {
     // pre-filter on raw token count: a post-projection
     // `size(sh) > 0` gets inlined by predicate pushdown and the
-    // kernel then runs twice per row (seen in PLANS.md: Filter and
-    // Project both evaluating graft_shingle_hashes)
+    // kernel then runs twice per row (seen in a DumpPlans dump of c4:
+    // Filter and Project both evaluating graft_shingle_hashes)
     val withSh = docs
       .where(size(split(col("text"), " ")) >= n)
       .select(col("doc_id"), hashedShingles(col("text"), n).as("sh"))

@@ -83,9 +83,9 @@ object GraphOps {
     * decision, not a guess (100× probe battery, 40–48 GB heap):
     * DISK_ONLY costs ~45% on g4 at 10× (36.2 s vs 24.5 s) and
     * MEMORY_AND_DISK_SER ~18%, while the DEFAULT memory-first level
-    * completes the 100× run too (staged ProbeG4: closure 72 s, 96 s
-    * per peel round — block-level spill handles state larger than the
-    * storage region). Keep the default; if a deployment's iteration
+    * completes the 100× run too (staged 100× attribution: closure
+    * 72 s, 96 s per peel round — block-level spill handles state larger
+    * than the storage region). Keep the default; if a deployment's iteration
     * state outgrows executor memory × spill, the SER/DISK levels are
     * one constant away. */
   private val IterCkpt = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -372,9 +372,10 @@ object GraphOps {
   }
 
   /** The weighted co-occurrence projection the census closes over —
-    * exposed so measurement harnesses (tools.ProbeG6) can count the
-    * projection and its wedge join at different scales without
-    * replicating the df-cap/threshold logic. Returns the pinned
+    * its own entry point so specs can pin the projection without
+    * replicating the df-cap/threshold logic (a sf0.1-vs-10× count of
+    * it and its wedge join measured both exactly linear: 1,153 →
+    * 11,530 pairs, 1,433 → 14,330 wedges). Returns the pinned
     * (hash-partitioned on `a`, checkpointed) pair set. */
   private[graft] def coProjection(incidence: DataFrame,
       maxLeftDegree: Int, minShareTenths: Int): DataFrame = {

@@ -5,7 +5,8 @@ import graft.core.Sessions
 
 /** Dump formatted physical plans for headline queries → PLANS.md
   * (plan-review evidence: broadcast placement, pushdown, codegen
-  * spans). Usage: tools/run.sh graft.tools.DumpPlans [SF_DIR] [OUT] */
+  * spans; a generated artifact, not committed). Usage:
+  * tools/run.sh graft.tools.DumpPlans [SF_DIR] [OUT] */
 object DumpPlans {
   val headline = Seq("q01_scan_project", "q02_filter", "q05_groupby_agg",
     "q07_star_join", "q11_window_rank", "q13_topk", "q27_part_join",
@@ -75,7 +76,7 @@ object DumpPlans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val out = args.lift(1).getOrElse("/root/repo/PLANS.md")
+    val out = args.lift(1).getOrElse("PLANS.md")
     val spark = Sessions.local()
     val sb = new StringBuilder
     sb.append("# Physical plans (generated by graft.tools.DumpPlans at ")

@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 import graft.core.Sessions
 
 /** Per-query formatted-plan snapshots for the optimization-round
-  * evidence trail (`plans/rNN/<query>_{before,after}.txt`): unlike
+  * evidence trail (`plans/rNN/<query>_{before,after}.txt`, generated,
+  * not committed): unlike
   * [[DumpPlans]] (one PLANS.md from a fixed headline list), this
   * takes an explicit query list and writes ONE FILE PER QUERY with a
   * suffix, so before/after pairs of only the touched queries can be

@@ -208,6 +208,8 @@ class GraphPipelineSpec extends SparkSpec {
           Array(1L, 1L << 31)), 0)
     }
     assert(ex.getMessage.contains("2^31"))
+    assert(ex.getMessage.contains("graft_bucket_pairs"),
+      "the refusal must name the wide-id kernel that exists")
   }
 
   test("triangleCensus: sparse hand graph, hot-left df-cap") {

@@ -68,6 +68,16 @@ class PlanLintSpec extends SparkSpec {
     }
   }
 
+  test("q25_percentiles executes without ObjectHashAggregate") {
+    // the grouped bin-bounded order statistics replaced the exact
+    // percentile aggregates, whose object buffers planned 8 of these
+    val df = SparkEntry.queries("q25_percentiles")(spark, sf)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("ObjectHashAggregate"),
+      s"q25_percentiles plans an ObjectHashAggregate:\n$plan")
+  }
+
   test("no interpreted python/UDF eval nodes in any gated plan") {
     SparkEntry.queries.foreach { case (name, fn) =>
       if (!streamingGates(name)) {

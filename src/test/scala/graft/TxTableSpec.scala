@@ -20,6 +20,23 @@ class TxTableSpec extends SparkSpec {
     ids.map(i => (i.toLong, s"name_$i", i * 10.0)).toDF("id", "name", "score")
   }
 
+  /** The schema DDL version `v`'s log entry records. */
+  private def schemaDdlAt(t: TxTable, v: Long): String =
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(f"${t.location}/_graft_log/$v%020d.json"))
+      .get("schema_ddl").asText()
+
+  /** A rewrite verb changed neither the rows nor the schema: the
+    * snapshots `v0` and `v1` read row-identical (multiset, both
+    * directions) and record the same schema DDL. */
+  private def assertSameContents(t: TxTable, v0: Long, v1: Long): Unit = {
+    val (a, b) = (t.readVersion(v0), t.readVersion(v1))
+    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
+      s"versions $v0 and $v1 read different rows")
+    assert(schemaDdlAt(t, v1) == schemaDdlAt(t, v0),
+      s"the rewrite at $v1 changed the schema")
+  }
+
   test("overwrite + time travel: every committed snapshot stays readable") {
     val (t, _) = freshTable("tx_tt")
     val v0 = t.overwrite(df(0 until 10))
@@ -117,10 +134,12 @@ class TxTableSpec extends SparkSpec {
     t.compact(targetFileBytes = 16 * 1024) // normalize into ≥1 sized file(s)
     val vBase = t.latestVersion.get
     val bigFiles = t.readVersion(vBase).inputFiles.toSet
+    assertSameContents(t, vBase - 1, vBase)
     // small-file debt: 6 tiny appends
     (0 until 6).foreach(i => t.append(df(5000 + i until 5001 + i)))
     val vOpt = t.compactSmall(targetFileBytes = 16 * 1024)
     assert(vOpt > vBase + 5)
+    assertSameContents(t, vOpt - 1, vOpt)
     val after = t.read()
     assert(after.count() == 2006)
     // the compact files carried by reference — same paths serve reads
@@ -153,6 +172,7 @@ class TxTableSpec extends SparkSpec {
     val before = parts(t.latestVersion.get)
     val v = t.compactSmall(targetFileBytes = 16 * 1024,
       partitionEq = Map("grp" -> "a"))
+    assertSameContents(t, v - 1, v)
     val after = parts(v)
     assert(t.read().count() == nBefore)
     // b untouched — the SAME manifest entries carry by reference
@@ -239,10 +259,9 @@ class TxTableSpec extends SparkSpec {
     val (t, dir) = freshTable("tx_compact")
     t.overwrite(df(0 until 1000).repartition(16)) // 16 small files
     t.append(df(1000 until 1100).repartition(8))
-    val before = t.read()
     val vCompact = t.compact()
     assert(t.read().count() == 1100)
-    assert(t.read().exceptAll(before).count() == 0)
+    assertSameContents(t, vCompact - 1, vCompact)
     // compacted snapshot has fewer, larger files
     val dataFiles = (v: Long) => t.readVersion(v).inputFiles.length
     assert(dataFiles(vCompact) < dataFiles(vCompact - 1))
@@ -733,6 +752,7 @@ class TxTableSpec extends SparkSpec {
     // and the rewrite changed no data
     assert(t.readVersion(vz).exceptAll(grid).count() == 0)
     assert(grid.exceptAll(t.readVersion(vz)).count() == 0)
+    assertSameContents(t, vz - 1, vz)
     assert(t.readWhereRange("y", 10, 15).count() == 600)
   }
 
@@ -791,6 +811,7 @@ class TxTableSpec extends SparkSpec {
     val e = intercept[RuntimeException](t.compactZOrder(Seq("part", "x")))
     assert(e.getMessage.contains("partition layout"))
     val vz = t.compactZOrder(Seq("x", "y"), targetFileBytes = 4 * 1024)
+    assertSameContents(t, vz - 1, vz)
     val m = t.fileEntries(vz)
     // every rewritten file still belongs to exactly one partition
     assert(m.forall(_.partition.contains("part")))
@@ -803,6 +824,34 @@ class TxTableSpec extends SparkSpec {
     assert(t.readWhereRange("x", 5, 8).inputFiles.length < nz)
     assert(t.readWhereRange("y", 5, 8).inputFiles.length < nz)
     assert(t.readWhereRange("y", 5, 8).count() == 4 * 40 * 4)
+  }
+
+  test("a pre-delta full-manifest version file is refused by name") {
+    val (t, dir) = freshTable("tx_legacy_full")
+    t.overwrite(df(0 until 10)) // v0, a delta
+    // v1 as a pre-delta writer left it: the whole snapshot listing
+    // under `files`, no add/remove
+    val files = t.fileEntries(0).map(f => s"""{"path": "${f.path}"}""")
+    val full =
+      s"""{"version": 1, "operation": "append",
+         | "schema_ddl": "id BIGINT,name STRING,score DOUBLE",
+         | "files": [${files.mkString(", ")}], "num_files": ${files.size}}"""
+        .stripMargin
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(f"$dir/_graft_log/${1}%020d.json"),
+      full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val named =
+      "pre-delta full-manifest log entry; this log format is no longer read"
+    Seq[(String, () => Any)](
+      "read" -> (() => t.read()),
+      "changesSince" -> (() => t.changesSince(0)),
+      "vacuum" -> (() => t.vacuum(minAgeMs = 0))).foreach { case (verb, call) =>
+      val e = intercept[RuntimeException](call())
+      assert(e.getMessage.contains(named), s"$verb: ${e.getMessage}")
+    }
+    // the refusal deleted nothing: v0's files are still on disk
+    assert(t.fileEntries(0).forall(f =>
+      new java.io.File(s"$dir/${f.path}").exists()))
   }
 
   test("changesSince reads only appended files; refuses across rewrites") {
@@ -1666,6 +1715,7 @@ class TxTableSpec extends SparkSpec {
       f.dvRows.toDouble / f.rows >= 0.1)
     assert(overThreshold >= 1, "the 40%-deleted file must cross 10%")
     val v = t.purgeDeletes(minDeletedFraction = 0.1)
+    assertSameContents(t, v - 1, v)
     val after = t.fileEntries(v)
     // exactly the over-threshold files rewrote; the rest carried with
     // their vectors intact
@@ -1692,6 +1742,29 @@ class TxTableSpec extends SparkSpec {
       f.dvPath.isEmpty || f.dvRows.toDouble / math.max(f.rows, 1) < 0.05))
     // 7592 survivors + 1 appended - 499 newly deleted (7999 was gone)
     assert(t.read().count() == 8000 - 400 - 8 + 1 - 499)
+    // partitioned input: each touched partition's survivors pack into
+    // at most ceil(purged bytes / 128 MB) files, not one per scan split
+    val pt = TxTable(spark, EventsStream.scratchDir("tx_purge_part") + "/t",
+      deletionVectors = true)
+    pt.overwrite((0 until 4000).map(i => (i.toLong, s"g${i % 2}", i * 1.0))
+      .toDF("id", "grp", "score").repartitionByRange(8, col("id")),
+      partitionBy = Seq("grp"))
+    pt.deleteWhere(col("id") % 3 === 0L) // a third of every file
+    val pBefore = pt.fileEntries(pt.latestVersion.get)
+    assert(pBefore.forall(_.dvPath.isDefined))
+    assert(pBefore.count(_.partition("grp") == "g0") > 1,
+      "several files per partition, else the bound is vacuous")
+    val pv = pt.purgeDeletes(minDeletedFraction = 0.1)
+    assertSameContents(pt, pv - 1, pv)
+    val pAfter = pt.fileEntries(pv)
+    assert(pAfter.forall(_.dvPath.isEmpty))
+    pBefore.groupBy(_.partition("grp")).foreach { case (g, purged) =>
+      val written = pAfter.count(_.partition("grp") == g)
+      val bound = math.ceil(
+        purged.map(_.bytes).sum.toDouble / (128L * 1024 * 1024)).toInt
+      assert(written >= 1 && written <= bound,
+        s"partition $g: $written files for bound $bound")
+    }
   }
 
   test("table properties: metadata-only commits, carried across writes, " +
