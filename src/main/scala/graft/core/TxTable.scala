@@ -1529,361 +1529,231 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       }
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Row-level MERGE, copy-on-write at file granularity. Requires a
-    * bucketed table ([[overwriteBucketed]]). `resolve` receives
-    * (existing rows of the TOUCHED buckets only, source rows) and
-    * returns the new contents of those buckets; files in untouched
-    * buckets are carried into the new snapshot by reference, never
-    * read or rewritten. Cost ∝ |source| + |rows in touched buckets|.
+  /** Row-level MERGE, copy-on-write at file granularity, on any
+    * layout. `resolve` receives (existing rows of the AFFECTED files
+    * only, source rows) and returns their new contents; every other
+    * file is carried into the new snapshot by reference, never read or
+    * rewritten. Cost ∝ |source| + |rows in affected files|. A bucketed
+    * table ([[overwriteBucketed]]) plans by bucket: the files of the
+    * buckets the source touches are affected. A flat or
+    * hive-partitioned table names its ON equi-key columns in `keys`
+    * and plans by file ([[planFiles]]).
     *
     * Concurrency: the merge composes against the snapshot current at
-    * its start; if another commit lands first, it fails (rerun) —
-    * same discipline as [[compact]]. */
+    * its start; a racing commit auto-rebases or refuses with "rerun"
+    * by the row-level rule of [[commitRowLevel]]. */
   def merge(source: DataFrame, txn: Option[(String, Long)] = None,
       sourceIsPinned: Boolean = false, keys: Seq[String] = Nil,
-      /** Skip the touched-bucket discovery job and treat EVERY bucket
-        * as touched — a correct superset plan (an untouched bucket
-        * rewrites byte-identically). Worth it when the caller knows
-        * each source batch spans the keyspace (state-table upserts):
-        * the discovery job + its planning gap is pure overhead. */
+      /** Skip the discovery job and treat EVERY file as affected — a
+        * correct superset plan (an unmatched file rewrites
+        * row-identical). Worth it when the caller knows each source
+        * batch spans the keyspace (state-table upserts): the discovery
+        * job + its planning gap is pure overhead. */
       touchAllBuckets: Boolean = false)(
-      resolve: (DataFrame, DataFrame) => DataFrame): Long =
-    if (latestVersion.map(manifest).flatMap(_.bucketSpec).isDefined)
-      mergeOp(OpMerge, source, txn, sourceIsPinned,
-        touchAllBuckets = touchAllBuckets)(resolve)
-    else {
-      require(keys.nonEmpty,
-        s"$root is not bucketed — merge needs explicit key columns " +
-          "(keys = ...) for file-granular planning")
-      mergeOpFiles(OpMerge, source, keys, txn, sourceIsPinned)(resolve)
-    }
-
-  private def mergeOp(op: String, source: DataFrame,
-      txn: Option[(String, Long)], sourceIsPinned: Boolean = false,
-      checkSourceSchema: Boolean = true, touchAllBuckets: Boolean = false)(
       resolve: (DataFrame, DataFrame) => DataFrame): Long = {
-    val v = latestVersion.getOrElse(
-      sys.error(s"$root: merge needs an existing bucketed table"))
-    val m = manifest(v)
-    val spec = m.bucketSpec.getOrElse(
-      sys.error(s"$root is not bucketed — overwriteBucketed first"))
+    require(keys.nonEmpty ||
+        latestVersion.map(manifest).flatMap(_.bucketSpec).isDefined,
+      s"$root is not bucketed — merge needs explicit key columns " +
+        "(keys = ...) for file-granular planning")
+    mergeOp(OpMerge, source, keys, txn, sourceIsPinned,
+      touchAll = touchAllBuckets)(resolve)
+  }
+
+  /** The copy-on-write merge core behind [[merge]], [[upsert]],
+    * [[mergeClauses]] and [[deleteKeys]]: pin the source once
+    * ([[pinSource]]), plan the affected files by layout
+    * ([[planBuckets]] or [[planFiles]]), resolve their rows against
+    * the source, rewrite them in the table's layout, capture CDC and
+    * commit through [[commitRowLevel]]. `keys` are the ON columns of a
+    * non-bucketed table (a bucketed one keys on its bucket columns);
+    * `touchAll` makes every file affected. */
+  private def mergeOp(op: String, source: DataFrame, keys: Seq[String],
+      txn: Option[(String, Long)], sourceIsPinned: Boolean = false,
+      checkSourceSchema: Boolean = true, touchAll: Boolean = false)(
+      resolve: (DataFrame, DataFrame) => DataFrame): Long = {
+    val m = manifest(latestVersion.getOrElse(
+      sys.error(s"$root: merge needs an existing table")))
+    val schema = StructType.fromDDL(m.schemaDdl)
     // clause merges ([[mergeClauses]]) feed a source whose payload
     // columns are deliberately NOT table columns (prefixed namespace);
-    // their key columns carry the table names, which is all the
-    // bucket routing below needs
+    // their key columns carry the table names, which is all planning
+    // needs.
     // schema evolution (the reference's schema.autoMerge.enabled,
     // resources/spark.py:68-69, as a TABLE property): a source with
-    // NEW columns widens the table schema at commit; untouched
-    // buckets' files lack the column and null-backfill on read (the
+    // NEW columns widens the table schema at commit; files the merge
+    // did not rewrite lack the column and null-backfill on read (the
     // append-widening machinery). Off = the strict refusal below.
     val autoMerge = boolProp(m, TxTable.PropSchemaAutoMerge).getOrElse(false)
     if (checkSourceSchema)
-      requireCompatible(StructType.fromDDL(m.schemaDdl),
-        source.schema, allowNew = autoMerge)
-    // pin ONE evaluation of the source (localCheckpoint, the
-    // probeSignatureIndex discipline): it feeds both the touched-
-    // bucket set and the resolve — a non-deterministic source
-    // re-evaluated between the two could hash a key into a bucket
-    // the plan didn't rewrite, silently breaking replace-by-key.
-    // `sourceIsPinned` callers (foreachBatch microbatches: already
-    // materialized, offset-pinned, deterministic by the replay
-    // contract) skip the checkpoint — one fewer full write of the
-    // batch per commit; the touched-set job then reads the pinned
-    // source directly. For the checkpointed path the touched set
-    // rides the checkpoint job itself as an observed metric instead
-    // of a second collect — either way ONE driver-side job before
-    // the write, not two.
-    val bucketed = withBucket(source, spec)
-    val (src, touched0) =
-      if (sourceIsPinned) (bucketed, None)
-      else {
-        val obs = org.apache.spark.sql.Observation()
-        val ckpt = bucketed
-          .observe(obs, org.apache.spark.sql.functions
-            .collect_set(col(BucketCol)).as("touched"))
-          .localCheckpoint(true)
-        (ckpt, Some(obs.get("touched").asInstanceOf[Seq[Int]]
-          .map(_.toString).toSet))
-      }
+      requireCompatible(schema, source.schema, allowNew = autoMerge)
+    val keyNames = m.bucketSpec.map(_.cols).getOrElse(keys.map(k =>
+      schema.fields.find(_.name.equalsIgnoreCase(k))
+        .getOrElse(sys.error(s"$root has no merge key column $k")).name))
+    val (src, observed) = pinSource(source, m.bucketSpec, sourceIsPinned)
     try {
-      // buckets the source touches: bounded by nBuckets, collected as
-      // a model-sized driver list (the c10/probe-id discipline).
-      // touchAllBuckets (WHEN NOT MATCHED BY SOURCE semantics: every
-      // target row participates) reads and rewrites the whole table —
-      // the documented price of a by-source clause, exactly Delta's.
-      val touched: Set[String] =
-        if (touchAllBuckets) (0 until spec.n).map(_.toString).toSet
-        else touched0.getOrElse(
-          src.select(col(BucketCol)).distinct()
-            .collect().map(_.getInt(0).toString).toSet)
-      val (affected, untouched) =
-        m.files.partition(f => f.partition.get(BucketCol).exists(touched))
+      val (affected, mayMatch) = m.bucketSpec match {
+        case Some(_) => planBuckets(m, src, observed, touchAll)
+        case None    => planFiles(m, keyNames, src, touchAll)
+      }
       val existing = readEntries(m, affected)
       val resolved = resolve(existing, src.drop(BucketCol))
-      val (files, schema) = writeDataFiles(bucketedWriteFrame(resolved, spec), Seq(BucketCol))
-      // change-data-feed: row-level diff of the touched buckets,
+      val (files, outSchema) = writeDataFiles(
+        m.bucketSpec.map(bucketedWriteFrame(resolved, _)).getOrElse(resolved),
+        m.partitionCols)
+      requireRewriteSchema(op, m, outSchema, allowNew = autoMerge)
+      // change-data-feed: row-level diff of the affected files,
       // computed against the files JUST WRITTEN (single resolver
       // evaluation — the written data is the truth), classified by the
-      // bucket key into pre/post images vs pure inserts/deletes, and
-      // landed as CDC files the commit's delta records. Cost ∝ touched
-      // buckets, like the merge itself; rows the merge left
+      // merge keys into pre/post images vs pure inserts/deletes, and
+      // landed as CDC files the commit's delta records. Cost ∝ affected
+      // files, like the merge itself; rows the merge left
       // byte-identical produce NO change rows (exceptAll drops them).
       val cdcFiles: Option[Seq[FileEntry]] =
         if (!effCdf(m)) None
         else Some {
-          val keys = spec.cols
+          import org.apache.spark.sql.functions.lit
           val rewritten = readEntries(m, files)
           // materialize the two diffs ONCE (change-sized): four join
           // branches below would otherwise re-evaluate each exceptAll
-          // subtree — re-reading the touched buckets per branch (the
+          // subtree — re-reading the affected files per branch (the
           // dominant cost of a CDC-enabled merge commit, measured 6.1s
           // vs 1.0s stats-off at sf0.1 before this checkpoint)
-          val del = existing.exceptAll(rewritten).localCheckpoint(true)
-          val ins = rewritten.exceptAll(existing).localCheckpoint(true)
-          val delK = del.select(keys.map(col): _*).distinct()
-          val insK = ins.select(keys.map(col): _*).distinct()
-          val changes = del.join(insK, keys, "left_semi")
-            .withColumn(ChangeTypeCol,
-              org.apache.spark.sql.functions.lit("update_preimage"))
-            .unionByName(del.join(insK, keys, "left_anti")
-              .withColumn(ChangeTypeCol,
-                org.apache.spark.sql.functions.lit("delete")))
-            .unionByName(ins.join(delK, keys, "left_semi")
-              .withColumn(ChangeTypeCol,
-                org.apache.spark.sql.functions.lit("update_postimage")))
-            .unionByName(ins.join(delK, keys, "left_anti")
-              .withColumn(ChangeTypeCol,
-                org.apache.spark.sql.functions.lit("insert")))
-          writeDataFiles(changes, Nil, withStats = false, enforce = false)._1
-        }
-      requireCompatible(StructType.fromDDL(m.schemaDdl), schema,
-        allowNew = autoMerge)
-      if (autoMerge) requireFreshNamesAddressable(m, schema)
-      // the ⊆ check above lets a resolver that DROPS a column pass;
-      // the commit would keep m.schemaDdl and reads would silently
-      // null-backfill that column in the rewritten buckets while
-      // untouched buckets keep real values — require the resolved
-      // field set to cover every table column (modulo __bucket)
-      val resolvedNames = schema.fieldNames.toSet
-      val dropped = StructType.fromDDL(m.schemaDdl).fieldNames
-        .filterNot(n => n == BucketCol || resolvedNames.contains(n))
-      require(dropped.isEmpty,
-        s"merge resolver dropped column(s) ${dropped.mkString(", ")} — " +
-          "resolved rows must keep every table column")
-      val ddl = if (autoMerge) mergedDdl(Some(m), schema) else m.schemaDdl
-      commit { latest =>
-        val cur = latest.getOrElse(
-          sys.error(s"$root vanished during merge — rerun merge"))
-        if (cur.version == m.version)
-          Pending(op, untouched ++ files, ddl, Seq(BucketCol),
-            Some(spec), txn, cdcFiles)
-        else {
-          // AUTO-REBASE (optimistic concurrency with logical conflict
-          // detection, the Delta discipline): a commit that raced in
-          // is harmless iff it left our TOUCHED buckets alone — same
-          // schema and bucket layout, none of the files we read
-          // rewritten, no new files landed in our buckets. Then the
-          // merge result is byte-for-byte what a serial execution
-          // would produce: recompose against the new snapshot
-          // (keeping files the other commit added/removed in OTHER
-          // buckets) and publish. Anything touching our buckets is a
-          // genuine write-write conflict — fail with rerun, which
-          // re-reads the buckets.
-          require(cur.schemaDdl == m.schemaDdl && cur.bucketSpec == m.bucketSpec,
-            s"concurrent schema/layout change during merge into $root — " +
-              "rerun merge")
-          val affectedPaths = affected.map(_.path).toSet
-          val basePaths = m.files.map(_.path).toSet
-          val curFiles = cur.files
-          require(affectedPaths.subsetOf(curFiles.map(_.path).toSet),
-            s"concurrent commit rewrote merged buckets of $root — rerun merge")
-          val intruding = curFiles.exists(f => !basePaths(f.path) &&
-            f.partition.get(BucketCol).exists(touched))
-          require(!intruding,
-            s"concurrent commit added rows to merged buckets of $root — " +
-              "rerun merge")
-          Pending(op, curFiles.filterNot(f => affectedPaths(f.path)) ++ files,
-            ddl, Seq(BucketCol), Some(spec), txn, cdcFiles)
-        }
-      }
-    } finally { if (!sourceIsPinned) { src.unpersist(); () } }
-  }
-
-  /** The non-bucketed twin of [[mergeOp]]: row-level MERGE into a flat
-    * or hive-partitioned table, copy-on-write at FILE granularity,
-    * planned like predicate DML instead of bucket routing (Delta's own
-    * merge shape for unclustered tables — the reference merges into
-    * any Delta layout, `resources/spark.py:65-67`). `keys` are the ON
-    * equi-key TABLE columns the source carries under the table names.
-    * Planning narrows in three sound steps:
-    *
-    *  1. ONE bounded aggregation over the pinned source collects, per
-    *     key column, min/max and an approximate distinct count; small
-    *     key sets re-collect exactly and become IN-list constraints
-    *     (which probe per-file Bloom filters), larger ones degrade to
-    *     [min,max] zone-map ranges. Files failing the candidate test
-    *     provably hold no source key.
-    *  2. ONE discovery scan semi-joins the candidate files with the
-    *     distinct source keys — only files ACTUALLY holding matching
-    *     rows become affected (parquet row-group pushdown serves it).
-    *  3. `resolve` sees exactly the affected files' rows; its output
-    *     (replacements + inserts) is rewritten with the table's own
-    *     hive layout. Every other file is carried by reference,
-    *     byte-identical. Cost ∝ |source| + |rows in matching files|.
-    *
-    * CDC capture, schema evolution, and the auto-rebase concurrency
-    * rule mirror [[mergeOp]]; the intruding-file test reuses the same
-    * candidate filter that planned the merge. */
-  private def mergeOpFiles(op: String, source: DataFrame, keys: Seq[String],
-      txn: Option[(String, Long)], sourceIsPinned: Boolean = false,
-      checkSourceSchema: Boolean = true, touchAllFiles: Boolean = false)(
-      resolve: (DataFrame, DataFrame) => DataFrame): Long = {
-    import org.apache.spark.sql.catalyst.expressions.{
-      AttributeReference, GreaterThanOrEqual, In, LessThanOrEqual, Literal}
-    import org.apache.spark.sql.functions.{
-      approx_count_distinct, max => fmax, min => fmin}
-    val v = latestVersion.getOrElse(
-      sys.error(s"$root: merge needs an existing table"))
-    val m = manifest(v)
-    require(m.bucketSpec.isEmpty,
-      s"internal: bucketed $root routes through mergeOp")
-    val schema = StructType.fromDDL(m.schemaDdl)
-    val keyFields = keys.map(k => schema.fields
-      .find(_.name.equalsIgnoreCase(k))
-      .getOrElse(sys.error(s"$root has no merge key column $k")))
-    val keyNames = keyFields.map(_.name)
-    val autoMerge = boolProp(m, TxTable.PropSchemaAutoMerge).getOrElse(false)
-    if (checkSourceSchema)
-      requireCompatible(schema, source.schema, allowNew = autoMerge)
-    // pin ONE evaluation (the mergeOp discipline): the source feeds
-    // candidate pruning, discovery, AND the resolve
-    val src = if (sourceIsPinned) source else source.localCheckpoint(true)
-    try {
-      // step 1: the candidate test (also the rebase intruder test)
-      val candidate: FileEntry => Boolean =
-        if (touchAllFiles) _ => true
-        else {
-          val aggs = keyFields.flatMap { f => Seq(
-            fmin(col(s"`${f.name}`")).as(s"mn_${f.name}"),
-            fmax(col(s"`${f.name}`")).as(s"mx_${f.name}"),
-            approx_count_distinct(col(s"`${f.name}`")).as(s"nd_${f.name}")) }
-          val row = src.agg(aggs.head, aggs.tail: _*).head()
-          // a key whose source values are ALL null (or an empty
-          // source) matches nothing — no file is a candidate, the
-          // merge reduces to its pure-insert branch
-          if (keyFields.exists(f => row.getAs[Any](s"mn_${f.name}") == null))
-            _ => false
-          else {
-            val preds = keyFields.flatMap { f =>
-              val attr = AttributeReference(f.name, f.dataType)()
-              val smallSet: Option[Seq[Any]] =
-                if (row.getAs[Long](s"nd_${f.name}") > TxTable.MergeInListCap)
-                  None
-                else {
-                  val vs = src.select(col(s"`${f.name}`"))
-                    .where(col(s"`${f.name}`").isNotNull).distinct()
-                    .limit(TxTable.MergeInListCap + 1)
-                    .collect().map(_.get(0)).toSeq
-                  if (vs.size > TxTable.MergeInListCap) None else Some(vs)
-                }
-              smallSet match {
-                case Some(vs) =>
-                  Seq(In(attr, vs.map(x => Literal.create(x, f.dataType))))
-                case None => Seq(
-                  GreaterThanOrEqual(attr,
-                    Literal.create(row.getAs[Any](s"mn_${f.name}"), f.dataType)),
-                  LessThanOrEqual(attr,
-                    Literal.create(row.getAs[Any](s"mx_${f.name}"), f.dataType)))
-              }
-            }
-            candidateFilter(schema, preds, physNameOf(m, _))
-          }
-        }
-      val candidates = m.files.filter(candidate)
-      // step 2: discovery — which candidates actually hold source keys
-      val srcFileCol = "__src_file"
-      val affectedPaths: Set[String] =
-        if (touchAllFiles) m.files.map(_.path).toSet
-        else if (candidates.isEmpty) Set.empty
-        else {
-          val keyFrame = src
-            .select(keyNames.map(k => col(s"`$k`")): _*).distinct()
-          readEntriesTagged(m, candidates, Some(srcFileCol))
-            .join(keyFrame, keyNames, "left_semi")
-            .select(col(srcFileCol)).distinct().collect()
-            .map(r => relativize(new Path(new java.net.URI(r.getString(0)))))
-            .toSet
-        }
-      val (affected, untouched) = m.files.partition(f => affectedPaths(f.path))
-      // step 3: resolve over the affected files' rows only
-      val existing = readEntries(m, affected)
-      val resolved = resolve(existing, src)
-      val (files, outSchema) = writeDataFiles(resolved, m.partitionCols)
-      // change-data-feed: identical classification to mergeOp, keyed
-      // on the merge keys; cost ∝ affected files
-      val cdcFiles: Option[Seq[FileEntry]] =
-        if (!effCdf(m)) None
-        else Some {
-          val rewritten = readEntries(m, files)
-          // one evaluation per diff (the mergeOp discipline): the four
-          // branches below otherwise re-read the affected files each
           val del = existing.exceptAll(rewritten).localCheckpoint(true)
           val ins = rewritten.exceptAll(existing).localCheckpoint(true)
           val delK = del.select(keyNames.map(col): _*).distinct()
           val insK = ins.select(keyNames.map(col): _*).distinct()
           val changes = del.join(insK, keyNames, "left_semi")
-            .withColumn(ChangeTypeCol,
-              org.apache.spark.sql.functions.lit("update_preimage"))
+            .withColumn(ChangeTypeCol, lit("update_preimage"))
             .unionByName(del.join(insK, keyNames, "left_anti")
-              .withColumn(ChangeTypeCol,
-                org.apache.spark.sql.functions.lit("delete")))
+              .withColumn(ChangeTypeCol, lit("delete")))
             .unionByName(ins.join(delK, keyNames, "left_semi")
-              .withColumn(ChangeTypeCol,
-                org.apache.spark.sql.functions.lit("update_postimage")))
+              .withColumn(ChangeTypeCol, lit("update_postimage")))
             .unionByName(ins.join(delK, keyNames, "left_anti")
-              .withColumn(ChangeTypeCol,
-                org.apache.spark.sql.functions.lit("insert")))
+              .withColumn(ChangeTypeCol, lit("insert")))
           writeDataFiles(changes, Nil, withStats = false, enforce = false)._1
         }
-      requireCompatible(schema, outSchema, allowNew = autoMerge)
-      if (autoMerge) requireFreshNamesAddressable(m, outSchema)
-      val resolvedNames = outSchema.fieldNames.toSet
-      val dropped = schema.fieldNames
-        .filterNot(n => n == BucketCol || resolvedNames.contains(n))
-      require(dropped.isEmpty,
-        s"merge resolver dropped column(s) ${dropped.mkString(", ")} — " +
-          "resolved rows must keep every table column")
       val ddl = if (autoMerge) mergedDdl(Some(m), outSchema) else m.schemaDdl
-      commit { latest =>
-        val cur = latest.getOrElse(
-          sys.error(s"$root vanished during merge — rerun merge"))
-        if (cur.version == m.version)
-          Pending(op, untouched ++ files, ddl, m.partitionCols, None,
-            txn, cdcFiles)
-        else {
-          // auto-rebase (the mergeOp discipline, file flavor): a
-          // racing commit is harmless iff it left our affected files
-          // untouched AND added nothing the candidate test could
-          // match (an added file passing it might hold source keys —
-          // a serial execution would have merged into it)
-          require(cur.schemaDdl == m.schemaDdl && cur.bucketSpec.isEmpty &&
-              cur.partitionCols == m.partitionCols,
-            s"concurrent schema/layout change during merge into $root — " +
-              "rerun merge")
-          require(affectedPaths.subsetOf(cur.files.map(_.path).toSet),
-            s"concurrent commit rewrote files being merged in $root — " +
-              "rerun merge")
-          val basePaths = m.files.map(_.path).toSet
-          val intruding = cur.files
-            .filter(f => !basePaths(f.path)).filter(candidate)
-          require(intruding.isEmpty,
-            s"concurrent commit added possibly-matching rows to $root — " +
-              "rerun merge")
-          Pending(op, cur.files.filterNot(f => affectedPaths(f.path)) ++ files,
-            ddl, m.partitionCols, None, txn, cdcFiles)
-        }
-      }
+      commitRowLevel(op, m, affected, files, ddl, txn, cdcFiles, mayMatch)
     } finally { if (!sourceIsPinned) { src.unpersist(); () } }
+  }
+
+  /** Pin ONE evaluation of a row-level source (localCheckpoint, the
+    * probeSignatureIndex discipline): it feeds planning AND the
+    * resolve — a non-deterministic source re-evaluated between the two
+    * could hash a key into a bucket the plan didn't rewrite, silently
+    * breaking replace-by-key. On a bucketed table (`spec`) the source
+    * gains its bucket column and the touched-bucket set rides the
+    * checkpoint job as an observed metric — ONE driver-side job before
+    * the write, not two. `sourceIsPinned` callers (foreachBatch
+    * microbatches: already materialized, offset-pinned, deterministic
+    * by the replay contract) skip the checkpoint — one fewer full
+    * write of the batch per commit. Returns (source, observed touched
+    * buckets). */
+  private def pinSource(source: DataFrame, spec: Option[BucketSpec],
+      sourceIsPinned: Boolean): (DataFrame, Option[Set[String]]) = {
+    val routed = spec.fold(source)(withBucket(source, _))
+    if (sourceIsPinned) (routed, None)
+    else if (spec.isEmpty) (routed.localCheckpoint(true), None)
+    else {
+      val obs = org.apache.spark.sql.Observation()
+      val ckpt = routed
+        .observe(obs, org.apache.spark.sql.functions
+          .collect_set(col(BucketCol)).as("touched"))
+        .localCheckpoint(true)
+      (ckpt, Some(obs.get("touched").asInstanceOf[Seq[Int]]
+        .map(_.toString).toSet))
+    }
+  }
+
+  /** Bucket planner of [[mergeOp]] and [[morUpsertBucketed]]: the
+    * files of the buckets a [[pinSource]]-routed source touches are
+    * affected, and a file a racing commit adds may match iff it lands
+    * in one of them. The touched set is the observed one, else one
+    * distinct collect — bounded by nBuckets, a model-sized driver list
+    * (the c10/probe-id discipline). `touchAll` (WHEN NOT MATCHED BY
+    * SOURCE semantics, or batches spanning the keyspace) reads and
+    * rewrites the whole table — the documented price of a by-source
+    * clause, exactly Delta's. Returns (affected entries, may-match
+    * test). */
+  private def planBuckets(m: Manifest, src: DataFrame,
+      observed: Option[Set[String]], touchAll: Boolean)
+      : (Seq[FileEntry], FileEntry => Boolean) =
+    if (touchAll) (m.files, _ => true)
+    else {
+      val touched = observed.getOrElse(src.select(col(BucketCol)).distinct()
+        .collect().map(_.getInt(0).toString).toSet)
+      val inTouched = (f: FileEntry) =>
+        f.partition.get(BucketCol).exists(touched)
+      (m.files.filter(inTouched), inTouched)
+    }
+
+  /** File planner of [[mergeOp]] for a flat or hive-partitioned table
+    * (Delta's own merge shape for unclustered tables — the reference
+    * merges into any Delta layout, `resources/spark.py:65-67`),
+    * narrowing in two sound steps:
+    *
+    *  1. ONE bounded aggregation over the pinned source collects, per
+    *     key column, min/max and an approximate distinct count; small
+    *     key sets re-collect exactly and become IN-list constraints
+    *     (which probe per-file Bloom filters), larger ones degrade to
+    *     [min,max] zone-map ranges. A file failing this candidate test
+    *     provably holds no source key — which makes it the may-match
+    *     test for files a racing commit adds too.
+    *  2. ONE discovery scan ([[filesHolding]]) semi-joins the
+    *     candidates with the distinct source keys — only files
+    *     ACTUALLY holding matching rows become affected (parquet
+    *     row-group pushdown serves it).
+    *
+    * `touchAll` affects every file. Returns (affected entries,
+    * may-match test). */
+  private def planFiles(m: Manifest, keys: Seq[String], src: DataFrame,
+      touchAll: Boolean): (Seq[FileEntry], FileEntry => Boolean) = {
+    if (touchAll) return (m.files, _ => true)
+    import org.apache.spark.sql.catalyst.expressions.{
+      AttributeReference, GreaterThanOrEqual, In, LessThanOrEqual, Literal}
+    import org.apache.spark.sql.functions.{
+      approx_count_distinct, max => fmax, min => fmin}
+    val schema = StructType.fromDDL(m.schemaDdl)
+    val keyFields = keys.map(schema(_))
+    val aggs = keyFields.flatMap { f => Seq(
+      fmin(col(s"`${f.name}`")).as(s"mn_${f.name}"),
+      fmax(col(s"`${f.name}`")).as(s"mx_${f.name}"),
+      approx_count_distinct(col(s"`${f.name}`")).as(s"nd_${f.name}")) }
+    val row = src.agg(aggs.head, aggs.tail: _*).head()
+    // a key whose source values are ALL null (or an empty source)
+    // matches nothing — no file is a candidate, the merge reduces to
+    // its pure-insert branch
+    val candidate: FileEntry => Boolean =
+      if (keyFields.exists(f => row.getAs[Any](s"mn_${f.name}") == null))
+        _ => false
+      else {
+        val preds = keyFields.flatMap { f =>
+          val attr = AttributeReference(f.name, f.dataType)()
+          val smallSet: Option[Seq[Any]] =
+            if (row.getAs[Long](s"nd_${f.name}") > TxTable.MergeInListCap)
+              None
+            else {
+              val vs = src.select(col(s"`${f.name}`"))
+                .where(col(s"`${f.name}`").isNotNull).distinct()
+                .limit(TxTable.MergeInListCap + 1)
+                .collect().map(_.get(0)).toSeq
+              if (vs.size > TxTable.MergeInListCap) None else Some(vs)
+            }
+          smallSet match {
+            case Some(vs) =>
+              Seq(In(attr, vs.map(x => Literal.create(x, f.dataType))))
+            case None => Seq(
+              GreaterThanOrEqual(attr,
+                Literal.create(row.getAs[Any](s"mn_${f.name}"), f.dataType)),
+              LessThanOrEqual(attr,
+                Literal.create(row.getAs[Any](s"mx_${f.name}"), f.dataType)))
+          }
+        }
+        candidateFilter(schema, preds, physNameOf(m, _))
+      }
+    val keyFrame = src.select(keys.map(k => col(s"`$k`")): _*).distinct()
+    (filesHolding(m, m.files.filter(candidate))(
+      _.join(keyFrame, keys, "left_semi")), candidate)
   }
 
   /** MERGE INTO t USING source ON keys WHEN MATCHED THEN UPDATE SET *
@@ -1892,7 +1762,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     * tables rewrite only the buckets containing source keys;
     * non-bucketed tables pass the ON key columns via `keys` and
     * rewrite only the FILES containing source keys (zone-map/Bloom
-    * planned, [[mergeOpFiles]]). */
+    * planned, [[planFiles]]). */
   def upsert(source: DataFrame, txn: Option[(String, Long)] = None,
       sourceIsPinned: Boolean = false, keys: Seq[String] = Nil): Long = {
     val spec = latestVersion.map(manifest).flatMap(_.bucketSpec)
@@ -1910,15 +1780,14 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
           onKeys, "left_anti")
         .unionByName(src, allowMissingColumns = true)
     }
-    if (spec.isDefined) {
-      // deletionVectors handles upsert MERGE-ON-READ: matched rows
-      // fold into a DV, the source appends — O(batch) writes, the
-      // streaming state-table path (see [[morUpsertBucketed]])
-      if (latestVersion.map(v => effDv(manifest(v))).getOrElse(deletionVectors))
-        morUpsertBucketed(source, manifest(latestVersion.get), txn,
-          sourceIsPinned)
-      else merge(source, txn, sourceIsPinned)(resolve)
-    } else mergeOpFiles(OpMerge, source, onKeys, txn, sourceIsPinned)(resolve)
+    // deletionVectors handles upsert a bucketed table MERGE-ON-READ:
+    // matched rows fold into a DV, the source appends — O(batch)
+    // writes, the streaming state-table path (see [[morUpsertBucketed]])
+    if (spec.isDefined &&
+        latestVersion.map(v => effDv(manifest(v))).getOrElse(deletionVectors))
+      morUpsertBucketed(source, manifest(latestVersion.get), txn,
+        sourceIsPinned)
+    else mergeOp(OpMerge, source, onKeys, txn, sourceIsPinned)(resolve)
   }
 
   /** Full-clause MERGE — the complete `MERGE INTO t USING s ON keys
@@ -1957,12 +1826,11 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     import org.apache.spark.sql.functions.{coalesce, count => fcount, lit => flit, raise_error, when}
     val m = latestVersion.map(manifest).getOrElse(
       sys.error(s"$root: merge needs an existing table"))
-    val specOpt = m.bucketSpec
     val tableSchema = StructType.fromDDL(m.schemaDdl)
     // bucketed: the ON keys must cover the bucket keys (routing hashes
     // them). Non-bucketed: the ON conjuncts themselves define the join
-    // keys — any table columns ([[mergeOpFiles]] plans by zone map)
-    val keys = specOpt.map(_.cols).getOrElse(
+    // keys — any table columns ([[planFiles]] plans by zone map)
+    val keys = m.bucketSpec.map(_.cols).getOrElse(
       sourceKeys.keys.toSeq.map(k => tableSchema.fields
         .find(_.name.equalsIgnoreCase(k))
         .getOrElse(sys.error(s"$root has no ON key column $k")).name))
@@ -2079,12 +1947,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       j.where(org.apache.spark.sql.functions.not(coalesce(drop, flit(false))))
         .select(tableCols.map(valueOf): _*)
     }
-    if (specOpt.isDefined)
-      mergeOp(OpMerge, keyed, txn, checkSourceSchema = false,
-        touchAllBuckets = notMatchedBySource.nonEmpty)(resolve)
-    else
-      mergeOpFiles(OpMerge, keyed, keys, txn, checkSourceSchema = false,
-        touchAllFiles = notMatchedBySource.nonEmpty)(resolve)
+    mergeOp(OpMerge, keyed, keys, txn, checkSourceSchema = false,
+      touchAll = notMatchedBySource.nonEmpty)(resolve)
   }
 
   /** Row-level DELETE by key (copy-on-write) — the GDPR/CDC surface:
@@ -2104,8 +1968,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val resolve: (DataFrame, DataFrame) => DataFrame = { (existing, src) =>
       existing.join(src.select(cols.map(col): _*).distinct(), cols, "left_anti")
     }
-    if (spec.isDefined) mergeOp(OpDelete, keys, txn, sourceIsPinned)(resolve)
-    else mergeOpFiles(OpDelete, keys, cols, txn, sourceIsPinned)(resolve)
+    mergeOp(OpDelete, keys, cols, txn, sourceIsPinned)(resolve)
   }
 
   /** Partition-level DELETE: drop every file whose partition values
@@ -2221,7 +2084,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     * as new files. */
   private def morRewrite(op: String, cond: Column,
       replace: Option[DataFrame => DataFrame]): Long = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, count => fcount, first => ffirst, lit => flit}
+    import org.apache.spark.sql.functions.{coalesce, lit => flit}
     val v = latestVersion.getOrElse(
       sys.error(s"$root has no committed snapshots"))
     val m = manifest(v)
@@ -2231,75 +2094,17 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       analyzedPredicate(schema, cond).toSeq, physNameOf(m, _))
     val candidates = m.files.filter(candidate)
     if (candidates.isEmpty) return v
-    // discovery scan over the candidates, position-tagged; rows
-    // already deleted by the candidates' existing DVs are excluded so
-    // re-deleting is a no-op and vectors never hold duplicates. The
-    // full metadata path rides along because the DV key is the RAW
-    // symmetric extraction (possibly URI-encoded) while manifest
-    // entries hold decoded paths — the driver maps between the two
-    // through URI parsing, never by re-encoding.
-    val fullCol = "__dv_file"
-    val tagged0 = spark.read.schema(physSchemaOf(m))
-      .parquet(candidates.map(f => new Path(root, f.path).toString): _*)
-      .withColumn(fullCol, col("_metadata.file_path"))
-      .withColumn(DvPathCol, relDataPath)
-      .withColumn(DvPosCol, col("_metadata.row_index"))
-    val taggedPhys = dvPairs(candidates) match {
-      case None     => tagged0
-      case Some(dv) => tagged0.join(broadcast(dv),
-        Seq(DvPathCol, DvPosCol), "left_anti")
-    }
-    val tagged = toLogicalDf(taggedPhys, m)
-    val matching = tagged.where(hit)
-    // per-file deleted-row counts drive the affected set, the entries'
-    // dvRows bookkeeping, AND the raw↔decoded path mapping — one
-    // driver action, ≤ one row per candidate file
-    val stats = matching.groupBy(col(DvPathCol))
-      .agg(fcount(flit(1)).as("n"), ffirst(col(fullCol)).as("full"))
-      .collect()
-    if (stats.isEmpty) return v // zero matches: no commit at all
-    val rawToRel = stats.map(r => r.getString(0) ->
-      relativize(new Path(new java.net.URI(r.getAs[String]("full"))))).toMap
-    val freshCounts = stats.map(r =>
-      rawToRel(r.getString(0)) -> r.getAs[Long]("n")).toMap
-    val affectedRaw = rawToRel.keySet
-    val affectedPaths = rawToRel.values.toSet
-    val (affected, untouched) = m.files.partition(f => affectedPaths(f.path))
-    val fresh = matching.select(col(DvPathCol), col(DvPosCol))
-    // the new vector: fresh deletions ∪ the affected files' PRIOR
-    // vectors (one DV per entry — later deletes replace, never chain;
-    // [[dvPairs]] scopes each affected file to the sidecar it pins);
-    // prior rows of UNaffected files stay served by their old DV file,
-    // which remains live while any entry references it
-    val dvContent = dvPairs(affected) match {
-      case None        => fresh
-      case Some(prior) => fresh.unionByName(prior)
-    }
-    // one file: a vector is deleted-row-sized metadata, not data
-    val (dvEntries, _) = writeDataFiles(dvContent.coalesce(1), Nil,
-      withStats = false, enforce = false)
-    val dvFile = dvEntries match {
-      case Seq(one) => one.path
-      case other    => sys.error(s"$root: DV write produced ${other.size} files")
-    }
-    val priorRows = affected.map(f => f.path -> f.dvRows).toMap
-    val retagged = affected.map(f => f.copy(
-      dvPath = Some(dvFile),
-      dvRows = priorRows.getOrElse(f.path, 0L) + freshCounts(f.path)))
+    val matching = readPositionTagged(m, candidates).where(hit)
+    val (affected, retagged) = vectorize(m, matching)
+    if (affected.isEmpty) return v // zero matches: no commit at all
     // UPDATE: the SET-applied replacements append as new files with
     // the layout recomputed from the NEW values
-    val cleanMatching = matching.drop(fullCol, DvPathCol, DvPosCol)
+    val cleanMatching = matching.drop(DvFileCol, DvPathCol, DvPosCol)
     val newFiles: Seq[FileEntry] = replace match {
       case None => Nil
       case Some(f) =>
         val replaced = f(cleanMatching.drop(BucketCol))
-        requireCompatible(schema, replaced.schema, allowNew = false)
-        val replacedNames = replaced.schema.fieldNames.toSet
-        val droppedCols = schema.fieldNames.filterNot(n =>
-          n == BucketCol || replacedNames.contains(n))
-        require(droppedCols.isEmpty,
-          s"$op dropped column(s) ${droppedCols.mkString(", ")} — " +
-            "rewritten rows must keep every table column")
+        requireRewriteSchema(op, m, replaced.schema, allowNew = false)
         val data = m.bucketSpec.map(withBucket(replaced, _)).getOrElse(replaced)
         writeDataFiles(data, m.partitionCols)._1
     }
@@ -2321,33 +2126,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
         }
         writeDataFiles(changes, Nil, withStats = false, enforce = false)._1
       }
-    commit { latest =>
-      val cur = latest.getOrElse(sys.error(s"$root vanished during $op — rerun"))
-      if (cur.version == m.version)
-        Pending(op, untouched ++ retagged ++ newFiles, m.schemaDdl,
-          m.partitionCols, m.bucketSpec, None, cdcFiles)
-      else {
-        require(cur.schemaDdl == m.schemaDdl &&
-            cur.bucketSpec == m.bucketSpec &&
-            cur.partitionCols == m.partitionCols,
-          s"concurrent schema/layout change during $op on $root — rerun")
-        val curByPath = cur.files.map(f => f.path -> f).toMap
-        // the affected ENTRIES (path + current DV) must be untouched —
-        // a racing MoR write re-tagging the same file is a genuine
-        // conflict (both built vectors against the same prior state)
-        require(affected.forall(f => curByPath.get(f.path).contains(f)),
-          s"concurrent commit touched files matching the $op predicate " +
-            s"on $root — rerun")
-        val basePaths = m.files.map(_.path).toSet
-        val intruding = cur.files.filter(f => !basePaths(f.path)).filter(candidate)
-        require(intruding.isEmpty,
-          s"concurrent commit added possibly-matching rows during $op " +
-            s"on $root — rerun")
-        Pending(op,
-          cur.files.filterNot(f => affectedPaths(f.path)) ++ retagged ++ newFiles,
-          m.schemaDdl, m.partitionCols, m.bucketSpec, None, cdcFiles)
-      }
-    }
+    commitRowLevel(op, m, affected, retagged ++ newFiles, m.schemaDdl, None,
+      cdcFiles, candidate)
   }
 
   /** Merge-on-read UPSERT into a bucketed table — the
@@ -2362,82 +2142,28 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     * OPTIMIZE/compaction purges the vectors and the superseded rows.
     * CDC (CDF handles): hidden rows capture as update_preimage,
     * matched source rows as update_postimage, unmatched as insert.
-    * Same auto-rebase rule as [[mergeOp]] (touched buckets must be
-    * left alone by racing commits). */
+    * A file a racing commit adds may match iff it lands in a touched
+    * bucket ([[commitRowLevel]]). */
   private def morUpsertBucketed(source: DataFrame, m: Manifest,
       txn: Option[(String, Long)], sourceIsPinned: Boolean): Long = {
-    import org.apache.spark.sql.functions.{broadcast, count => fcount, first => ffirst, lit => flit}
+    import org.apache.spark.sql.functions.{lit => flit}
     val spec = m.bucketSpec.get
     val keys = spec.cols
     val autoMerge = boolProp(m, TxTable.PropSchemaAutoMerge).getOrElse(false)
     requireCompatible(StructType.fromDDL(m.schemaDdl), source.schema,
       allowNew = autoMerge)
-    val bucketed = withBucket(source, spec)
-    val (src, touched0) =
-      if (sourceIsPinned) (bucketed, None)
-      else {
-        val obs = org.apache.spark.sql.Observation()
-        val ckpt = bucketed
-          .observe(obs, org.apache.spark.sql.functions
-            .collect_set(col(BucketCol)).as("touched"))
-          .localCheckpoint(true)
-        (ckpt, Some(obs.get("touched").asInstanceOf[Seq[Int]]
-          .map(_.toString).toSet))
-      }
+    val (src, observed) = pinSource(source, m.bucketSpec, sourceIsPinned)
     try {
-      val touched: Set[String] = touched0.getOrElse(
-        src.select(col(BucketCol)).distinct()
-          .collect().map(_.getInt(0).toString).toSet)
-      val (affected0, _) = m.files.partition(f =>
-        f.partition.get(BucketCol).exists(touched))
-      val srcKeys = src.select(keys.map(col): _*).distinct()
-      // discovery scan over the touched buckets, position-tagged,
-      // prior-DV rows excluded (the morRewrite discipline) — only
-      // rows whose key the source carries become DV entries
-      val fullCol = "__dv_file"
-      val (matchStats, matching) =
-        if (affected0.isEmpty) (Array.empty[org.apache.spark.sql.Row], null)
-        else {
-          val tagged0 = spark.read.schema(physSchemaOf(m))
-            .parquet(affected0.map(f => new Path(root, f.path).toString): _*)
-            .withColumn(fullCol, col("_metadata.file_path"))
-            .withColumn(DvPathCol, relDataPath)
-            .withColumn(DvPosCol, col("_metadata.row_index"))
-          val taggedPhys = dvPairs(affected0) match {
-            case None     => tagged0
-            case Some(dv) => tagged0.join(broadcast(dv),
-              Seq(DvPathCol, DvPosCol), "left_anti")
-          }
-          val matching = toLogicalDf(taggedPhys, m).join(srcKeys, keys,
-            "left_semi").localCheckpoint(true) // matched-rows-sized
-          (matching.groupBy(col(DvPathCol))
-            .agg(fcount(flit(1)).as("n"), ffirst(col(fullCol)).as("full"))
-            .collect(), matching)
-        }
-      val (retagged, affectedPaths) =
-        if (matchStats.isEmpty) (Nil, Set.empty[String])
-        else {
-          val rawToRel = matchStats.map(r => r.getString(0) ->
-            relativize(new Path(new java.net.URI(r.getAs[String]("full"))))).toMap
-          val freshCounts = matchStats.map(r =>
-            rawToRel(r.getString(0)) -> r.getAs[Long]("n")).toMap
-          val affectedRaw = rawToRel.keySet
-          val paths = rawToRel.values.toSet
-          val affected = m.files.filter(f => paths(f.path))
-          val fresh = matching.select(col(DvPathCol), col(DvPosCol))
-          val dvContent = dvPairs(affected) match {
-            case None        => fresh
-            case Some(prior) => fresh.unionByName(prior)
-          }
-          val (dvEntries, _) = writeDataFiles(dvContent.coalesce(1), Nil,
-            withStats = false, enforce = false)
-          val dvFile = dvEntries match {
-            case Seq(one) => one.path
-            case other => sys.error(s"$root: DV write produced ${other.size} files")
-          }
-          (affected.map(f => f.copy(dvPath = Some(dvFile),
-            dvRows = f.dvRows + freshCounts(f.path))), paths)
-        }
+      val (read, inTouched) = planBuckets(m, src, observed, touchAll = false)
+      // discovery over the touched buckets: only rows whose key the
+      // source carries become DV entries
+      val matching =
+        if (read.isEmpty) None
+        else Some(readPositionTagged(m, read)
+          .join(src.select(keys.map(col): _*).distinct(), keys, "left_semi")
+          .localCheckpoint(true)) // matched-rows-sized
+      val (affected, retagged) = matching.fold(
+        (Seq.empty[FileEntry], Seq.empty[FileEntry]))(vectorize(m, _))
       // the WHOLE source appends as new bucket files (batch-sized)
       val (newFiles, outSchema) =
         writeDataFiles(bucketedWriteFrame(src.drop(BucketCol), spec),
@@ -2449,13 +2175,9 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       val cdcFiles: Option[Seq[FileEntry]] =
         if (!effCdf(m)) None
         else Some {
-          val pre =
-            if (matching == null) None
-            else Some(matching.drop(fullCol, DvPathCol, DvPosCol, BucketCol)
-              .withColumn(ChangeTypeCol, flit("update_preimage")))
-          val matchedKeys =
-            if (matching == null) None
-            else Some(matching.select(keys.map(col): _*).distinct())
+          val pre = matching.map(_.drop(DvFileCol, DvPathCol, DvPosCol,
+            BucketCol).withColumn(ChangeTypeCol, flit("update_preimage")))
+          val matchedKeys = matching.map(_.select(keys.map(col): _*).distinct())
           val post = readEntries(m, newFiles).drop(BucketCol)
           val postTagged = matchedKeys match {
             case None => post.withColumn(ChangeTypeCol, flit("insert"))
@@ -2469,30 +2191,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
             p.unionByName(postTagged))
           writeDataFiles(changes, Nil, withStats = false, enforce = false)._1
         }
-      commit { latest =>
-        val cur = latest.getOrElse(
-          sys.error(s"$root vanished during upsert — rerun"))
-        if (cur.version == m.version)
-          Pending(OpMerge,
-            m.files.filterNot(f => affectedPaths(f.path)) ++ retagged ++ newFiles,
-            ddl, m.partitionCols, m.bucketSpec, txn, cdcFiles)
-        else {
-          require(cur.schemaDdl == m.schemaDdl && cur.bucketSpec == m.bucketSpec,
-            s"concurrent schema/layout change during upsert into $root — rerun")
-          val curByPath = cur.files.map(f => f.path -> f).toMap
-          val affected = m.files.filter(f => affectedPaths(f.path))
-          require(affected.forall(f => curByPath.get(f.path).contains(f)),
-            s"concurrent commit touched upserted buckets of $root — rerun")
-          val basePaths = m.files.map(_.path).toSet
-          val intruding = cur.files.exists(f => !basePaths(f.path) &&
-            f.partition.get(BucketCol).exists(touched))
-          require(!intruding,
-            s"concurrent commit added rows to upserted buckets of $root — rerun")
-          Pending(OpMerge,
-            cur.files.filterNot(f => affectedPaths(f.path)) ++ retagged ++ newFiles,
-            ddl, m.partitionCols, m.bucketSpec, txn, cdcFiles)
-        }
-      }
+      commitRowLevel(OpMerge, m, affected, retagged ++ newFiles, ddl, txn,
+        cdcFiles, inTouched)
     } finally { if (!sourceIsPinned) { src.unpersist(); () } }
   }
 
@@ -2523,10 +2223,6 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     }
   }
 
-  /** Shared copy-on-write core of [[deleteWhere]]/[[updateWhere]]:
-    * `replaceMatching` maps the matching rows of the affected files
-    * to their replacement (empty for delete, reassigned for update);
-    * non-matching rows of those files are kept verbatim. */
   /** Selective overwrite (the Delta `replaceWhere`): atomically
     * delete every row matching `cond` and insert `source` — one
     * commit, so readers never see the in-between state. Every
@@ -2553,10 +2249,18 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     } finally { pinned.unpersist(); () }
   }
 
+  /** Shared copy-on-write core of [[deleteWhere]], [[updateWhere]] and
+    * [[replaceWhere]]: `replaceMatching` maps the matching rows of the
+    * affected files to their replacement (empty for delete, reassigned
+    * for update); non-matching rows of those files are kept verbatim,
+    * and `insert` rows land in the same commit. The zone-map candidate
+    * test that plans the rewrite is also its may-match test for files
+    * a racing commit adds (a predicate with no extractable constraints
+    * conservatively matches ANY added file). */
   private def rewriteWhere(op: String, cond: Column,
       insert: Option[DataFrame] = None)(
       replaceMatching: DataFrame => DataFrame): Long = {
-    import org.apache.spark.sql.functions.{coalesce, input_file_name, lit => flit, not}
+    import org.apache.spark.sql.functions.{coalesce, lit => flit, not}
     val v = latestVersion.getOrElse(
       sys.error(s"$root has no committed snapshots"))
     val m = manifest(v)
@@ -2564,34 +2268,20 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val hit = coalesce(cond, flit(false)) // NULL predicate keeps the row
     val candidate = candidateFilter(schema,
       analyzedPredicate(schema, cond).toSeq, physNameOf(m, _))
-    val candidates = m.files.filter(candidate)
-    val srcCol = "__src_file"
-    val affectedPaths: Set[String] =
-      if (candidates.isEmpty) Set.empty
-      else readEntriesTagged(m, candidates, Some(srcCol)).where(hit)
-        .select(col(srcCol)).distinct().collect()
-        .map(r => relativize(new Path(new java.net.URI(r.getString(0))))).toSet
+    val affected = filesHolding(m, m.files.filter(candidate))(_.where(hit))
     // zero matches: no commit at all — unless an insert side makes
     // this a replaceWhere, which must still land its rows
-    if (affectedPaths.isEmpty && insert.isEmpty) return v
+    if (affected.isEmpty && insert.isEmpty) return v
     insert.foreach { i =>
       requireCompatible(schema, i.schema, allowNew = false) }
-    val (affected, untouched) = m.files.partition(f => affectedPaths(f.path))
     val existing = readEntries(m, affected)
     val matching = existing.where(hit)
     val replaced = replaceMatching(matching)
-    requireCompatible(schema, replaced.schema, allowNew = false)
-    val replacedNames = replaced.schema.fieldNames.toSet
-    val droppedCols = schema.fieldNames.filterNot(n =>
-      n == BucketCol || replacedNames.contains(n))
-    require(droppedCols.isEmpty,
-      s"$op dropped column(s) ${droppedCols.mkString(", ")} — " +
-        "rewritten rows must keep every table column")
+    requireRewriteSchema(op, m, replaced.schema, allowNew = false)
     val newRows = insert.foldLeft(
       existing.where(not(hit)).unionByName(replaced))(
       (acc, i) => acc.unionByName(i, allowMissingColumns = true))
-    val spec = m.bucketSpec
-    val data = spec.map(bucketedWriteFrame(newRows, _)).getOrElse(newRows)
+    val data = m.bucketSpec.map(bucketedWriteFrame(newRows, _)).getOrElse(newRows)
     val (files, _) = writeDataFiles(data, m.partitionCols)
     // CDC: deterministic re-reads of immutable parquet — the captured
     // rows are exactly what the rewrite dropped/replaced
@@ -2609,34 +2299,154 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
             allowMissingColumns = true))
         writeDataFiles(changes, Nil, withStats = false, enforce = false)._1
       }
+    commitRowLevel(op, m, affected, files, m.schemaDdl, None, cdcFiles,
+      candidate)
+  }
+
+  /** Commit a row-level rewrite planned against snapshot `m`: the
+    * `affected` entries it read give way to `added` (rewritten files,
+    * re-vectored entries, appended rows). When another commit landed
+    * first, AUTO-REBASE (optimistic concurrency with logical conflict
+    * detection, the Delta discipline) iff that commit provably left
+    * our result unchanged:
+    *
+    *  - schema, bucket spec and partition columns are unchanged;
+    *  - every affected entry is still live and EQUAL to the one read
+    *    (same path, deletion vector and row count — a merge-on-read
+    *    delete re-tags a file in place, and publishing a rewrite of
+    *    the rows read before it would undo that delete);
+    *  - no entry added since `m` passes `mayMatch` (it could hold rows
+    *    a serial execution would have rewritten).
+    *
+    * Then the result is byte-for-byte what a serial execution would
+    * produce: recompose against the new snapshot, keeping everything
+    * the other commit did elsewhere. Anything else is a genuine
+    * conflict — refuse with rerun, which re-plans against the new
+    * snapshot. */
+  private def commitRowLevel(op: String, m: Manifest,
+      affected: Seq[FileEntry], added: Seq[FileEntry], ddl: String,
+      txn: Option[(String, Long)], cdcFiles: Option[Seq[FileEntry]],
+      mayMatch: FileEntry => Boolean): Long = {
+    val affectedPaths = affected.map(_.path).toSet
     commit { latest =>
       val cur = latest.getOrElse(sys.error(s"$root vanished during $op — rerun"))
-      if (cur.version == m.version)
-        Pending(op, untouched ++ files, m.schemaDdl, m.partitionCols, spec,
-          None, cdcFiles)
-      else {
-        // auto-rebase (the merge discipline, predicate flavor): the
-        // racing commit is harmless iff our rewritten files survived
-        // untouched AND nothing it added could match the predicate —
-        // proven by the same zone-map candidate test that planned the
-        // rewrite (a predicate with no extractable constraints
-        // conservatively conflicts with ANY added file)
-        require(cur.schemaDdl == m.schemaDdl && cur.bucketSpec == spec &&
-            cur.partitionCols == m.partitionCols,
-          s"concurrent schema/layout change during $op on $root — rerun")
-        require(affectedPaths.subsetOf(cur.files.map(_.path).toSet),
-          s"concurrent commit rewrote files matching the $op predicate " +
-            s"on $root — rerun")
+      if (cur.version != m.version) {
+        val curByPath = cur.files.map(f => f.path -> f).toMap
         val basePaths = m.files.map(_.path).toSet
-        val intruding = cur.files.filter(f => !basePaths(f.path)).filter(candidate)
-        require(intruding.isEmpty,
-          s"concurrent commit added possibly-matching rows during $op " +
-            s"on $root — rerun")
-        Pending(op, cur.files.filterNot(f => affectedPaths(f.path)) ++ files,
-          m.schemaDdl, m.partitionCols, spec, None, cdcFiles)
+        val conflict =
+          if (cur.schemaDdl != m.schemaDdl || cur.bucketSpec != m.bucketSpec ||
+              cur.partitionCols != m.partitionCols)
+            Some("changed the schema or layout")
+          else if (!affected.forall(f => curByPath.get(f.path).contains(f)))
+            Some("changed a file read by this rewrite")
+          else if (cur.files.exists(f => !basePaths(f.path) && mayMatch(f)))
+            Some("added a file that may hold matching rows")
+          else None
+        require(conflict.isEmpty, s"concurrent commit v${cur.version} " +
+          s"${conflict.getOrElse("")} during $op on $root — rerun")
       }
+      Pending(op, cur.files.filterNot(f => affectedPaths(f.path)) ++ added,
+        ddl, m.partitionCols, m.bucketSpec, txn, cdcFiles)
     }
   }
+
+  /** A row-level rewrite's output schema must fit the table: no
+    * retyped column, new columns only with `allowNew`
+    * (schemaAutoMerge), and EVERY table column kept — the
+    * ⊆-compatibility check alone lets a resolver that DROPS a column
+    * pass, and reads would then null-backfill that column in the
+    * rewritten files while the others keep real values. */
+  private def requireRewriteSchema(op: String, m: Manifest,
+      out: StructType, allowNew: Boolean): Unit = {
+    val schema = StructType.fromDDL(m.schemaDdl)
+    requireCompatible(schema, out, allowNew)
+    if (allowNew) requireFreshNamesAddressable(m, out)
+    val outNames = out.fieldNames.toSet
+    val dropped = schema.fieldNames
+      .filterNot(n => n == BucketCol || outNames.contains(n))
+    require(dropped.isEmpty,
+      s"$op dropped column(s) ${dropped.mkString(", ")} — " +
+        "rewritten rows must keep every table column")
+  }
+
+  /** The `candidates` holding at least one row `select` keeps — ONE
+    * discovery scan over them with every row tagged by its file
+    * ([[readEntriesTagged]]). */
+  private def filesHolding(m: Manifest, candidates: Seq[FileEntry])(
+      select: DataFrame => DataFrame): Seq[FileEntry] =
+    if (candidates.isEmpty) Nil
+    else {
+      val tag = "__src_file"
+      val paths = select(readEntriesTagged(m, candidates, Some(tag)))
+        .select(col(tag)).distinct().collect()
+        .map(r => relativize(new Path(new java.net.URI(r.getString(0)))))
+        .toSet
+      candidates.filter(f => paths(f.path))
+    }
+
+  /** The live rows of `entries` (rows their vectors already delete are
+    * excluded, so re-deleting is a no-op and vectors never hold
+    * duplicates) under logical names, each tagged with its data file's
+    * full metadata path ([[DvFileCol]]), DV key ([[DvPathCol]]) and
+    * row position ([[DvPosCol]]) — the discovery scan of every
+    * merge-on-read write. The full path rides along because the DV key
+    * is the RAW symmetric extraction (possibly URI-encoded) while
+    * manifest entries hold decoded paths; [[vectorize]] maps between
+    * the two through URI parsing, never by re-encoding. */
+  private def readPositionTagged(m: Manifest,
+      entries: Seq[FileEntry]): DataFrame = {
+    val tagged = spark.read.schema(physSchemaOf(m))
+      .parquet(entries.map(f => new Path(root, f.path).toString): _*)
+      .withColumn(DvFileCol, col("_metadata.file_path"))
+      .withColumn(DvPathCol, relDataPath)
+      .withColumn(DvPosCol, col("_metadata.row_index"))
+    val live = dvPairs(entries).fold(tagged)(dv => tagged.join(
+      org.apache.spark.sql.functions.broadcast(dv),
+      Seq(DvPathCol, DvPosCol), "left_anti"))
+    toLogicalDf(live, m)
+  }
+
+  /** Vector the [[readPositionTagged]] rows `matching`: ONE driver
+    * action yields per-file deleted-row counts and the raw↔decoded
+    * path mapping (≤ one row per file), then [[foldDv]]. Returns
+    * (affected entries, their re-tagged replacements), both empty
+    * when nothing matched. */
+  private def vectorize(m: Manifest,
+      matching: DataFrame): (Seq[FileEntry], Seq[FileEntry]) = {
+    import org.apache.spark.sql.functions.{count => fcount, first => ffirst, lit => flit}
+    val freshCounts = matching.groupBy(col(DvPathCol))
+      .agg(fcount(flit(1)).as("n"), ffirst(col(DvFileCol)).as("full"))
+      .collect().map(r => relativize(new Path(new java.net.URI(
+        r.getAs[String]("full")))) -> r.getAs[Long]("n")).toMap
+    val affected = m.files.filter(f => freshCounts.contains(f.path))
+    if (affected.isEmpty) (Nil, Nil)
+    else (affected, foldDv(affected,
+      matching.select(col(DvPathCol), col(DvPosCol)), freshCounts))
+  }
+
+  /** Fold `fresh` deletions (DV pairs) into ONE new deletion vector
+    * for `affected`: fresh ∪ the affected files' PRIOR vectors (one DV
+    * per entry — later deletes replace, never chain; [[dvPairs]]
+    * scopes each file to the sidecar it pins), written as one side
+    * file (a vector is deleted-row-sized metadata, not data). Returns
+    * the entries re-tagged to it, `freshCounts` (new deleted rows per
+    * entry path) added to their counts. Prior rows of UNaffected files
+    * stay served by their old DV file, which remains live while any
+    * entry references it. */
+  private def foldDv(affected: Seq[FileEntry], fresh: DataFrame,
+      freshCounts: Map[String, Long]): Seq[FileEntry] = {
+    val dvFile = writeDvFile(dvPairs(affected).fold(fresh)(fresh.unionByName(_)))
+    affected.map(f => f.copy(dvPath = Some(dvFile),
+      dvRows = f.dvRows + freshCounts(f.path)))
+  }
+
+  /** Land DV `pairs` as ONE side file; returns its root-relative path. */
+  private def writeDvFile(pairs: DataFrame): String =
+    writeDataFiles(pairs.coalesce(1), Nil, withStats = false,
+        enforce = false)._1 match {
+      case Seq(one) => one.path
+      case other    => sys.error(s"$root: DV write produced ${other.size} files")
+    }
 
   /** The condition of `cond` ANALYZED against an empty frame of
     * `schema` — attribute resolution (and Spark's own type coercion)
@@ -3190,13 +3000,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
           nullable = false),
         org.apache.spark.sql.types.StructField(DvPosCol,
           org.apache.spark.sql.types.LongType, nullable = false))))
-    val (es, _) = writeDataFiles(df.coalesce(1), Nil,
-      withStats = false, enforce = false)
-    val dvFile = es match {
-      case Seq(one) => one.path
-      case other => sys.error(s"$root: DV translation produced " +
-        s"${other.size} files")
-    }
+    val dvFile = writeDvFile(df)
     val dvByPath = dved.map(a => a.path -> a.dv.get.cardinality).toMap
     entries.map { e =>
       dvByPath.get(e.path) match {
@@ -4947,34 +4751,19 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
         .parquet(ps.map(p => new Path(root, p).toString): _*)
 
     // -- fold fresh deletions into ONE deletion vector ----------------------
-    val (retaggedPaths, retagged, dvEntryFiles) =
-      if (frags.isEmpty) (Set.empty[String], Nil, Nil)
+    val (retaggedPaths, retagged) =
+      if (frags.isEmpty) (Set.empty[String], Nil)
       else {
         val fresh = readFrags(frags)
-        val counts = fresh.groupBy(col(DvPathCol))
+        val freshCounts = fresh.groupBy(col(DvPathCol))
           .agg(fcount(flit(1)).as("n")).collect()
-        val freshCounts = counts.map(r =>
-          r.getString(0) -> r.getAs[Long]("n")).toMap
+          .map(r => r.getString(0) -> r.getAs[Long]("n")).toMap
         val byPath = m.files.map(f => f.path -> f).toMap
         freshCounts.keys.foreach(p => require(byPath.contains(p),
           s"$root: native $op references unknown data file $p"))
         val affected = m.files.filter(f => freshCounts.contains(f.path))
-        val dvContent = dvPairs(affected) match {
-          case None        => fresh
-          case Some(prior) => fresh.unionByName(prior)
-        }
-        val (dvEntries, _) = writeDataFiles(dvContent.coalesce(1), Nil,
-          withStats = false, enforce = false)
-        val dvFile = dvEntries match {
-          case Seq(one) => one.path
-          case other => sys.error(s"$root: DV write produced ${other.size} files")
-        }
-        (freshCounts.keySet,
-          affected.map(f => f.copy(dvPath = Some(dvFile),
-            dvRows = f.dvRows + freshCounts(f.path))),
-          dvEntries)
+        (freshCounts.keySet, foldDv(affected, fresh, freshCounts))
       }
-    val _ = dvEntryFiles // referenced by the committed retagged entries
 
     // -- new data files → manifest entries with stats ------------------------
     val writeDst = new Path(dataDir, s"w-${ctx.writeId}")
@@ -5148,14 +4937,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     validateNewRows(m, newEntries)
     val candidate = candidateFilter(schema,
       analyzedPredicate(schema, cond).toSeq, physNameOf(m, _))
-    val candidates = m.files.filter(candidate)
-    val srcCol = "__src_file"
-    val affectedPaths: Set[String] =
-      if (candidates.isEmpty) Set.empty
-      else readEntriesTagged(m, candidates, Some(srcCol)).where(hit)
-        .select(col(srcCol)).distinct().collect()
-        .map(r => relativize(new Path(new java.net.URI(r.getString(0))))).toSet
-    val (affected, untouched) = m.files.partition(f => affectedPaths(f.path))
+    val affected = filesHolding(m, m.files.filter(candidate))(_.where(hit))
+    val untouched = m.files.filterNot(affected.toSet)
     val survivorFiles =
       if (affected.isEmpty) Nil
       else {
@@ -5788,6 +5571,9 @@ object TxTable {
   private[core] val DvPathCol = "__dv_path"
   private[core] val DvPosCol = "__dv_pos"
   private[core] val DvSrcCol = "__dv_src"
+  /** A discovery row's full data-file metadata path (the raw URI the
+    * DV key is extracted from). */
+  private val DvFileCol = "__dv_file"
 
   /** Replayed mirror-checkpoint state: live add lines (verbatim,
     * dataChange=false), unexpired tombstones, and the log's latest

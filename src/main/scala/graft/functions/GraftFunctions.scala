@@ -516,7 +516,9 @@ object GraftFunctions {
     col(ShingleHashes(ex(tokens), n))
   def simHash64(tokens: Column): Column = col(SimHash64(ex(tokens)))
   def sortedLongs(a: Column): Column = col(SortedLongs(ex(a)))
-  def packedPairsFrom(rs: Column, i: Column): Column =
+  /** `graft`-internal: the kernel checks only the ends of `rs`, so
+    * unsorted input would silently merge pairs. */
+  private[graft] def packedPairsFrom(rs: Column, i: Column): Column =
     col(PackedPairsFrom(ex(rs), ex(i)))
   def bucketPairs(ids: Column): Column = col(BucketPairs(ex(ids)))
   def spanFingerprints(tokens: Column, k: Int): Column =

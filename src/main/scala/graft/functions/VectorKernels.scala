@@ -358,7 +358,7 @@ object VectorKernels {
     * key (10⁴ ids ⇒ 5·10⁷ pairs) never materializes one 400 MB array:
     * the quadratic mass streams through the generate as |rs| bounded
     * chunks (guide §5: bound per-task state). */
-  def packedPairsFrom(rs: ArrayData, i: Int): ArrayData = {
+  private[graft] def packedPairsFrom(rs: ArrayData, i: Int): ArrayData = {
     val n = rs.numElements()
     if (n > 0 && (rs.getLong(0) < 0L || rs.getLong(n - 1) >= (1L << 31)))
       throw new IllegalArgumentException(
@@ -378,15 +378,16 @@ object VectorKernels {
     * unbounded-id-space pair emission for doc-id bucket lists
     * (c2/c3/c4/c8/c18/c19). ONE Generate node, exactly like the
     * interpreted `transform(ids, (x,i) -> transform(slice(...), y ->
-    * struct(least, greatest)))` spelling it replaces — the suffix
-    * (posexplode + per-position) variant was measured SLOWER on the
-    * sf0.1 battery (c14 1.94→2.40 s, c19 1.73→2.02 s best-of-4 A/B):
-    * the buckets there are tiny and the extra Generate + projection
-    * cost more than the kernel saved. Memory bound unchanged from the
-    * old spelling (both materialize the full pair array per bucket;
-    * the df-cap bounds it — 5000 ids ⇒ 12.5 M pairs); the refusal
-    * below converts the old spelling's silent 2⁶³-element OOM into a
-    * named error. */
+    * struct(least, greatest)))` spelling it replaces, and kept for
+    * that: it matches the HOF node for node (one Generate, no carried
+    * array), and a same-JVM probe measured it 1.61× over the HOF on
+    * the emission span. Suffix (posexplode + per-position) vs this
+    * one-call form stays unmeasured until ROADMAP item 4 re-measures
+    * it: the A/B once cited here was void (both arms ran the same
+    * binaries). Memory bound unchanged from the old spelling (both
+    * materialize the full pair array per bucket; the df-cap bounds it
+    * — 5000 ids ⇒ 12.5 M pairs); the refusal below converts the old
+    * spelling's silent 2⁶³-element OOM into a named error. */
   def bucketPairs(ids0: ArrayData): ArrayData = {
     val ids = ids0.toLongArray()
     java.util.Arrays.sort(ids)

@@ -108,12 +108,12 @@ object Dedup {
     // and allocated a slice + a nested array per position before
     // flatten. The kernel sorts each bucket once so (ids[i], ids[j])
     // i<j IS the canonical a<b pair, and emits the bucket's pairs in
-    // one array — node-for-node the old plan shape (one Generate; a
-    // suffix/posexplode variant was measured SLOWER on sf0.1's tiny
-    // buckets and reverted, see VectorKernels.bucketPairs). Pair set
-    // is provably the old one: both spell {(min(x,y), max(x,y)) :
-    // unordered position pairs} (DedupSimilaritySpec pins the
-    // multiset against the HOF spelling).
+    // one array — node-for-node the old plan shape (one Generate), and
+    // a same-JVM probe measured it 1.61× over the HOF. Suffix vs
+    // one-call stays unmeasured until ROADMAP item 4 (see
+    // VectorKernels.bucketPairs). Pair set is provably the old one:
+    // both spell {(min(x,y), max(x,y)) : unordered position pairs}
+    // (DedupSimilaritySpec pins the multiset against the HOF spelling).
     buckets
       .select(explode(graft.functions.GraftFunctions
         .bucketPairs(col("ids"))).as("p"))

@@ -301,8 +301,9 @@ object GraphOps {
     // instead of running a count() job: ~24 B/row unsafe-row footprint
     // puts the 1 M-node cap at ~24 MB; count() only as the fallback
     // when storage info is unavailable (part of the round-13 trim of
-    // sf0.1 loop constants — ProbeG5 showed the loop SHAPE at parity,
-    // leaving per-call driver actions as the r12 bench residual)
+    // sf0.1 loop constants — the same-JVM A/B (ABProbe g5-loop) showed
+    // the loop SHAPE at parity, leaving per-call driver actions as the
+    // r12 bench residual)
     val bcastShare = graft.core.Parallelism.persistedBytes(outdeg)
       .map(_ <= BroadcastShareCap * 24L)
       .getOrElse(outdeg.count() <= BroadcastShareCap)

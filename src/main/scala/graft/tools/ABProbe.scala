@@ -1,0 +1,178 @@
+package graft.tools
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+import graft.core.{Sessions, Tables}
+import graft.steps.GraphOps
+
+/** Same-JVM interleaved A/B of two named spellings of one computation:
+  * ONE pinned input, the arms alternating which runs first each round,
+  * each timed to a noop sink, so box drift and hypervisor steal hit
+  * both arms alike (box-level A/Bs of identical binaries have measured
+  * ±25 %). Prints per-round walls and the per-arm means; round 0 warms
+  * both arms and stays out of the means. Not a gate.
+  *
+  * Usage: tools/run.sh graft.tools.ABProbe <experiment> [SF_DIR] [ROUNDS]
+  * (SF_DIR defaults to `SPARK_GRAFT_SF_DIR`, as for graft.Bench).
+  *
+  *  - `ids`: g5 PageRank + g4 k-core over STRING ("c…"/"s…") vs packed
+  *    LONG (2k / 2k+1) node ids.
+  *  - `g6-pairs`: `GraphOps.coPairCounts`' join spelling vs its packed
+  *    pair kernel, over the same pruned incidence.
+  *  - `bucket-pairs`: the interpreted nested-`transform` HOF vs the
+  *    `bucketPairs` kernel, over c4's prefix-posting buckets.
+  *  - `g5-loop`: the "fat" PageRank loop (outdeg carried on every edge,
+  *    the formulation before the slim loop) vs `GraphOps.pageRank`.
+  */
+object ABProbe {
+  /** A named spelling; running it writes its result to the noop sink. */
+  private final case class Arm(name: String, run: () => Unit)
+
+  private def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** lineitem ⋈ orders projected to (o_custkey, l_suppkey). */
+  private def custSupp(spark: SparkSession, d: String): DataFrame =
+    Tables.lineitem(spark, d).select("l_orderkey", "l_suppkey")
+      .join(broadcast(Tables.orders(spark, d).select("o_orderkey", "o_custkey")),
+        col("l_orderkey") === col("o_orderkey"))
+      .select("o_custkey", "l_suppkey")
+
+  /** Experiment name → its two arms, built over an input pinned once. */
+  private val experiments
+      : Map[String, (SparkSession, String) => (Arm, Arm)] = Map(
+    "ids" -> { (spark, d) =>
+      val inc = custSupp(spark, d).localCheckpoint(true)
+      def graph(e: DataFrame): Unit = {
+        noop(GraphOps.pageRank(e, 5)); noop(GraphOps.kCorePeel(e, 10, 6))
+      }
+      val str = inc.select(concat(lit("c"), col("o_custkey")).as("src"),
+        concat(lit("s"), col("l_suppkey")).as("dst"))
+      val lng = inc.select((col("o_custkey") * 2).as("src"),
+        (col("l_suppkey") * 2 + 1).as("dst"))
+      (Arm("string-ids", () => graph(str)), Arm("long-ids", () => graph(lng)))
+    },
+    "g6-pairs" -> { (spark, d) =>
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
+      val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val inc = custSupp(spark, d)
+        .select(col("o_custkey").as("left"),
+          col("l_suppkey").cast("long").as("right"))
+        .repartition(n, col("left"))
+        .dropDuplicates("left", "right")
+        .sortWithinPartitions("left")
+        .localCheckpoint(true)
+      val keep = inc.groupBy("left").agg(count(lit(1)).as("cnt"))
+        .where(col("cnt") <= 10000).select("left")
+      val pruned = inc.join(keep, Seq("left"), "left_semi")
+      (Arm("join", () => noop(GraphOps.coPairCounts(pruned, rightIntegral = false))),
+        Arm("kernel", () => noop(GraphOps.coPairCounts(pruned, rightIntegral = true))))
+    },
+    "bucket-pairs" -> { (spark, d) =>
+      val nGram = 3; val threshold = 0.8
+      val withSh = Tables.documents(spark, d)
+        .where(size(split(col("text"), " ")) >= nGram)
+        .select(col("doc_id"),
+          graft.ops.Dedup.hashedShingles(col("text"), nGram).as("sh"))
+      val prefixLen =
+        (size(col("sh")) - ceil(size(col("sh")) * lit(threshold)) + 1).cast("int")
+      val buckets = withSh
+        .select(col("doc_id"), explode(slice(col("sh"), lit(1), prefixLen)).as("s"))
+        .groupBy("s").agg(collect_list(col("doc_id")).as("ids"))
+        .where(size(col("ids")) > 1)
+        .localCheckpoint(true)
+      val hof = buckets
+        .select(explode(flatten(transform(col("ids"), (x, i) =>
+          transform(slice(col("ids"), i + lit(2), size(col("ids")) - i - 1),
+            y => struct(least(x, y).as("a"), greatest(x, y).as("b"))))))
+          .as("p"))
+      val kernel = buckets
+        .select(explode(graft.functions.GraftFunctions
+          .bucketPairs(col("ids"))).as("p"))
+      def pairs(p: DataFrame) =
+        noop(p.select(col("p.a").as("doc_a"), col("p.b").as("doc_b")).distinct())
+      (Arm("hof", () => pairs(hof)), Arm("kernel", () => pairs(kernel)))
+    },
+    "g5-loop" -> { (spark, d) =>
+      val edges = GraphOps.edges(Tables.lineitem(spark, d), Tables.orders(spark, d))
+        .select(concat(lit("c"), col("custkey")).as("src"),
+          concat(lit("s"), col("suppkey")).as("dst"))
+        .localCheckpoint(true)
+      (Arm("fat-loop", () => fatPageRank(spark, edges, 5)),
+        Arm("pageRank", () => noop(GraphOps.pageRank(edges, 5))))
+    })
+
+  /** PageRank with outdeg joined onto every closure edge once and the
+    * loop carrying that fat edge table — the spelling the slim loop of
+    * [[GraphOps.pageRank]] replaced (bare closure + a pinned node-sized
+    * outdeg). Same fixed-point damping, so both arms rank alike. */
+  private def fatPageRank(parent: SparkSession, edges: DataFrame,
+      iters: Int): Unit = {
+    val spark = parent.newSession()
+    spark.conf.set("spark.sql.shuffle.partitions",
+      parent.conf.get("spark.sql.shuffle.partitions"))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val in = org.apache.spark.sql.graft.StreamShims.rebind(spark, edges)
+    val n0 = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val e = graft.core.Parallelism.resizeCheckpoint(
+      in.select(col("src"), col("dst"))
+        .unionAll(in.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct()
+        .repartition(n0, col("src"))
+        .sortWithinPartitions("src")
+        .localCheckpoint(true, level),
+      n0, col("src"), level, sorted = true)
+    val n = e.rdd.getNumPartitions
+    spark.conf.set("spark.sql.shuffle.partitions", n)
+    val withDeg = e
+      .join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
+      .repartition(n, col("src"))
+      .sortWithinPartitions("src")
+      .localCheckpoint(true, level)
+    var pr = e.select(col("src").as("node")).distinct()
+      .withColumn("pr", lit(1000000L))
+      .repartition(n, col("node"))
+      .localCheckpoint(true)
+    for (_ <- 1 to iters) {
+      val s = withDeg
+        .join(pr, withDeg("src") === pr("node"))
+        .select(col("dst"), expr("pr div outdeg").as("c"))
+        .groupBy(col("dst").as("node")).agg(sum(col("c")).as("s"))
+      val next = s.select(col("node"), (lit(150000L) + expr(
+        "(s div 1000000) * 850000 + ((s % 1000000) * 850000) div 1000000"
+      )).as("pr")).localCheckpoint(true)
+      pr.unpersist(); pr = next
+    }
+    noop(pr)
+    Seq(e, withDeg, pr).foreach(_.unpersist(blocking = true))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val usage = "usage: tools/run.sh graft.tools.ABProbe " +
+      s"<${experiments.keys.toSeq.sorted.mkString("|")}> [SF_DIR] [ROUNDS]"
+    val name = args.headOption.getOrElse(sys.error(usage))
+    val setup = experiments.getOrElse(name, sys.error(usage))
+    val d = args.lift(1).orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
+      .getOrElse(sys.error(usage))
+    val rounds = args.lift(2).map(_.toInt).getOrElse(3)
+    require(rounds >= 1, usage)
+    val spark = Sessions.local()
+    val (a, b) = setup(spark, d)
+    val walls = (0 to rounds).map { r =>
+      (if (r % 2 == 0) Seq(a, b) else Seq(b, a)).map { arm =>
+        val t0 = System.nanoTime()
+        arm.run()
+        val s = (System.nanoTime() - t0) / 1e9
+        println(f"[ab] $name ${arm.name} r$r: $s%.2f s")
+        arm.name -> s
+      }.toMap
+    }.drop(1)
+    def mean(arm: Arm): Double = walls.map(_(arm.name)).sum / walls.size
+    println(f"[ab] $name MEAN over $rounds rounds: ${a.name}=${mean(a)}%.2f s " +
+      f"${b.name}=${mean(b)}%.2f s (${a.name}/${b.name} ${mean(a) / mean(b)}%.2fx)")
+    spark.stop()
+  }
+}

@@ -78,6 +78,16 @@ class PlanLintSpec extends SparkSpec {
       s"q25_percentiles plans an ObjectHashAggregate:\n$plan")
   }
 
+  test("c4_ngram_jaccard executes without a checkpoint scan") {
+    // the df-cap folded into the single posting aggregation, so c4
+    // needs no localCheckpoint; one would plan as `Scan ExistingRDD`
+    val df = SparkEntry.queries("c4_ngram_jaccard")(spark, sf)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("Scan ExistingRDD"),
+      s"c4_ngram_jaccard plans a checkpoint scan:\n$plan")
+  }
+
   test("no interpreted python/UDF eval nodes in any gated plan") {
     SparkEntry.queries.foreach { case (name, fn) =>
       if (!streamingGates(name)) {

@@ -607,6 +607,52 @@ class TxTableSpec extends SparkSpec {
       r.where(col("id") === 8L).select("tag").head.getString(0) == null)
   }
 
+  test("copy-on-write merge racing a deletion-vector delete on a bucketed " +
+      "table refuses instead of resurrecting the row") {
+    import spark.implicits._
+    val dir = EventsStream.scratchDir("tx_merge_dv_race_bkt") + "/t"
+    val t = TxTable(spark, dir, deletionVectors = true)
+    t.overwriteBucketed(df(0 until 64), Seq("id"), nBuckets = 4)
+    val other = TxTable(spark, dir, deletionVectors = true)
+    // the racer re-tags a file the merge already read: same path, new
+    // vector — the merge's rewrite of that file would undo the delete
+    var raced = false
+    val e = intercept[IllegalArgumentException] {
+      t.merge(Seq((7L, "UP", -1.0)).toDF("id", "name", "score"),
+          touchAllBuckets = true) { (existing, src) =>
+        if (!raced) { raced = true; other.deleteWhere(col("id") === 20L) }
+        existing.join(src.select("id").distinct(), Seq("id"), "left_anti")
+          .unionByName(src)
+      }
+    }
+    assert(e.getMessage.contains("rerun"), e.getMessage)
+    assert(t.read().where(col("id") === 20L).count() == 0,
+      "the racing delete must stay deleted")
+    assert(t.read().count() == 63)
+  }
+
+  test("copy-on-write merge racing a deletion-vector delete on a flat " +
+      "table refuses instead of resurrecting the row") {
+    import spark.implicits._
+    val (cow, dir) = freshTable("tx_merge_dv_race_flat")
+    cow.overwrite(df(0 until 1000).repartitionByRange(4, col("id")))
+    val dv = TxTable(spark, dir, deletionVectors = true)
+    // ids 6 and 7 share a file: the merge reads it, the racer vectors it
+    var raced = false
+    val e = intercept[IllegalArgumentException] {
+      cow.merge(Seq((7L, "UP", -1.0)).toDF("id", "name", "score"),
+          keys = Seq("id")) { (existing, src) =>
+        if (!raced) { raced = true; dv.deleteWhere(col("id") === 6L) }
+        existing.join(src.select("id").distinct(), Seq("id"), "left_anti")
+          .unionByName(src)
+      }
+    }
+    assert(e.getMessage.contains("rerun"), e.getMessage)
+    assert(cow.read().where(col("id") === 6L).count() == 0,
+      "the racing delete must stay deleted")
+    assert(cow.read().count() == 999)
+  }
+
   test("deleteKeys is copy-on-write; deletePartitions is metadata-only") {
     import spark.implicits._
     val (t, dir) = freshTable("tx_delete")
