@@ -118,95 +118,129 @@ object DeltaLog {
   private val SupportedReaderFeatures =
     Set("deletionVectors", "columnMapping", "timestampNtz", "v2Checkpoint")
 
+  private val Json = new ObjectMapper()
+  private val CommitName = """(\d{20})\.json""".r
+  private val ClassicCheckpointName =
+    """(\d{20})\.checkpoint(?:\.\d{10}\.\d{10})?\.parquet""".r
+  /** V2 checkpoint manifests: `NNN.checkpoint.<uuid>.{parquet|json}`. */
+  private[core] val V2CheckpointName =
+    """(\d{20})\.checkpoint\.[A-Za-z0-9_-]+\.(?:parquet|json)""".r
+
   /** True iff `path` carries a Delta transaction log. */
   def isDeltaTable(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path, LogDir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Reconstruct the latest snapshot — or, with `atVersion`, the
-    * PINNED snapshot as of that version (the streaming batch-0
-    * contract: crash-replay of the initial batch must see the same
-    * rows; a checkpoint NEWER than the pin is ignored and the JSON
-    * commits must then cover 0..atVersion or the call refuses).
-    * Throws with a NAMED reason on any unsupported protocol feature
-    * (never a wrong read). */
-  def snapshot(spark: SparkSession, rootStr: String,
-      atVersion: Option[Long] = None): DeltaSnapshot = {
+  /** The version of a `_delta_log` commit or checkpoint file (classic,
+    * multi-part or v2 manifest), from its name alone. */
+  private[core] def logFileVersion(name: String): Option[Long] = name match {
+    case CommitName(v)            => Some(v.toLong)
+    case ClassicCheckpointName(v) => Some(v.toLong)
+    case V2CheckpointName(v)      => Some(v.toLong)
+    case _                        => None
+  }
+
+  /** The JSON commit versions present in `logDir`, ascending. */
+  private[core] def commitVersions(fs: FileSystem, logDir: Path): Seq[Long] =
+    fs.listStatus(logDir).iterator.map(_.getPath.getName)
+      .collect { case CommitName(v) => v.toLong }.toSeq.sorted
+
+  /** One JSON commit's action nodes, in file order. */
+  private[core] def commitActions(fs: FileSystem, logDir: Path,
+      v: Long): Seq[JsonNode] =
+    jsonLines(fs, new Path(logDir, f"$v%020d.json"))
+
+  /** The `kind` action bodies among `actions`, in order. */
+  private def bodies(actions: Seq[JsonNode], kind: String): Seq[JsonNode] =
+    actions.flatMap(n => Option(n.get(kind)).filterNot(_.isNull))
+
+  private def jsonLines(fs: FileSystem, p: Path): Seq[JsonNode] =
+    new String(readBytes(fs, p), java.nio.charset.StandardCharsets.UTF_8)
+      .split("\n").iterator.map(_.trim).filter(_.nonEmpty)
+      .map(Json.readTree).toSeq
+
+  /** `_last_checkpoint`'s (version, parts), if the pointer exists. */
+  private[core] def checkpointPointer(fs: FileSystem,
+      logDir: Path): Option[(Long, Int)] = {
+    val p = new Path(logDir, "_last_checkpoint")
+    if (!fs.exists(p)) None
+    else {
+      val n = Json.readTree(readBytes(fs, p))
+      Some((n.get("version").asLong(),
+        Option(n.get("parts")).map(_.asInt()).getOrElse(1)))
+    }
+  }
+
+  /** Raw replayed log state: the latest `protocol` and `metaData`
+    * action nodes, every live `add` node keyed by its RAW (log-spelled)
+    * path — the remove/re-add identity key — and the `remove`
+    * tombstones (raw path → deletionTimestamp, dataChange) that no
+    * later add has cleared. */
+  private[core] final case class LogState(version: Long,
+      protocol: Option[JsonNode], metaData: Option[JsonNode],
+      adds: scala.collection.Map[String, JsonNode],
+      tombstones: scala.collection.Map[String, (Long, Boolean)])
+
+  /** THE `_delta_log` replay behind [[snapshot]] and the mirror's
+    * checkpoint writer ([[TxTable.mirrorToDelta]]): checkpoint base
+    * state (`_last_checkpoint` → classic single- or multi-part parquet,
+    * or a v2 parquet/JSON manifest plus its `_sidecars`), then the JSON
+    * commits after it, checked contiguous. `atVersion` pins the state
+    * (a checkpoint NEWER than the pin is ignored and the JSON commits
+    * must then cover 0..atVersion). `files = false` skips every file
+    * action — checkpoint add/remove rows are never collected — for a
+    * caller that needs only the protocol and metaData. */
+  private[core] def replay(spark: SparkSession, rootStr: String,
+      atVersion: Option[Long] = None, files: Boolean = true): LogState = {
+    import org.apache.spark.sql.functions.{col, struct, to_json}
     val root = new Path(rootStr)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val logDir = new Path(root, LogDir)
     require(fs.exists(logDir), s"$rootStr is not a Delta table (no $LogDir)")
-    val om = new ObjectMapper()
-
-    // ---- checkpoint base state -------------------------------------
-    val lastCp = new Path(logDir, "_last_checkpoint")
-    val (cpVersion, cpParts): (Long, Int) =
-      if (fs.exists(lastCp)) {
-        val n = om.readTree(readBytes(fs, lastCp))
-        val v = n.get("version").asLong()
-        if (atVersion.exists(_ < v)) (-1L, 0) // pinned BEFORE the checkpoint
-        else (v, Option(n.get("parts")).map(_.asInt()).getOrElse(1))
-      } else (-1L, 0)
+    val (cpVersion, cpParts) = checkpointPointer(fs, logDir)
+      .filterNot(p => atVersion.exists(_ < p._1)) // pinned BEFORE it
+      .getOrElse((-1L, 0))
 
     var meta: Option[JsonNode] = None
     var protocol: Option[JsonNode] = None
-    // keyed by the log's RAW path spelling (remove/re-add identity)
-    val live = scala.collection.mutable.LinkedHashMap[String, DeltaAdd]()
-
-    // absorb protocol/metaData/add actions from checkpoint-shaped
-    // parquet files (classic parts, a v2 manifest, or v2 sidecars —
-    // the action schema is identical across all three)
-    def absorbParquet(cp: org.apache.spark.sql.DataFrame): Unit = {
-      val cols = cp.columns.toSet
-      // adds: distributed parse, only the live-file list is collected
-      if (cols.contains("add")) {
-        import org.apache.spark.sql.functions.{col, to_json}
-        val addCols = cp.select("add.*").columns.toSet
-        val hasStats = addCols.contains("stats")
-        // checkpoint adds carry their DV descriptors too — parse them
-        // exactly like the JSON path (an ignored checkpoint DV would
-        // silently resurrect deleted rows)
-        val hasDv = addCols.contains("deletionVector")
-        val rows = cp.where(col("add").isNotNull).select(
-          Seq(col("add.path"), col("add.partitionValues"),
-            col("add.size"), col("add.modificationTime")) ++
-          (if (hasStats) Seq(col("add.stats")) else Nil) ++
-          (if (hasDv) Seq(to_json(col("add.deletionVector"))) else Nil): _*)
-          .collect()
-        rows.foreach { r =>
-          val path = r.getString(0)
-          val pv = Option(r.getMap[String, String](1))
-            .map(_.toMap.map { case (k, v) => k -> Option(v) })
-            .getOrElse(Map.empty[String, Option[String]])
-          val stats = if (hasStats && !r.isNullAt(4))
-            Option(r.getString(4)) else None
-          val dvIdx = if (hasStats) 5 else 4
-          val dv = if (hasDv && !r.isNullAt(dvIdx))
-            Some(parseDv(om.readTree(r.getString(dvIdx)), rootStr)) else None
-          live(path) = mkAdd(om, path, pv, r.getLong(2), r.getLong(3), stats, dv)
+    val live = scala.collection.mutable.LinkedHashMap[String, JsonNode]()
+    val tombs = scala.collection.mutable.LinkedHashMap[String, (Long, Boolean)]()
+    // one batch of actions — a commit, or checkpoint rows. Removes
+    // apply before adds: reconciliation is order-independent WITHIN a
+    // version (the DV re-add shape — remove and re-add one path —
+    // resolves to the add whatever order the writer serialized them
+    // in). Checkpoint removes are vacuum tombstones, never state.
+    def absorb(actions: Seq[JsonNode], checkpoint: Boolean): Unit = {
+      bodies(actions, "metaData").foreach(n => meta = Some(n))
+      bodies(actions, "protocol").foreach(n => protocol = Some(n))
+      if (files) {
+        bodies(actions, "remove").foreach { r =>
+          val p = r.get("path").asText()
+          if (!checkpoint) { live.remove(p); () }
+          tombs(p) =
+            (Option(r.get("deletionTimestamp")).map(_.asLong).getOrElse(0L),
+              Option(r.get("dataChange")).exists(_.asBoolean))
+        }
+        bodies(actions, "add").foreach { a =>
+          val p = a.get("path").asText()
+          live(p) = a
+          tombs.remove(p); ()
         }
       }
-      if (cols.contains("metaData")) {
-        import org.apache.spark.sql.functions.{col, to_json}
-        cp.where(col("metaData").isNotNull)
-          .select(to_json(col("metaData"))).collect()
-          .foreach(r => meta = Some(om.readTree(r.getString(0))))
-      }
-      if (cols.contains("protocol")) {
-        import org.apache.spark.sql.functions.{col, to_json}
-        cp.where(col("protocol").isNotNull)
-          .select(to_json(col("protocol"))).collect()
-          .foreach(r => protocol = Some(om.readTree(r.getString(0))))
-      }
     }
-    // v2 sidecar path → file under _delta_log/_sidecars/ (the spec's
-    // layout); absolute/external sidecars refuse rather than misread
-    def sidecarFile(p: String): Path = {
-      require(!p.startsWith("/") && !p.contains("://"),
-        s"$rootStr: v2 checkpoint sidecar references EXTERNAL file $p — " +
-          "refusing rather than misread")
-      new Path(new Path(logDir, "_sidecars"), p)
+    // checkpoint-shaped parquet (classic parts, a v2 manifest, v2
+    // sidecars) as action nodes of the JSON-commit line shape:
+    // distributed parse, only the requested action kinds collected
+    def parquetActions(paths: Seq[Path]): Seq[JsonNode] = {
+      val cp = spark.read.parquet(paths.map(_.toString): _*)
+      val kinds = (Seq("protocol", "metaData", "checkpointMetadata", "sidecar") ++
+        (if (files) Seq("remove", "add") else Nil)).filter(cp.columns.contains)
+      if (kinds.isEmpty) Nil
+      else cp.where(kinds.map(col(_).isNotNull).reduce(_ || _))
+        .select(to_json(struct(kinds.map(col): _*),
+          Map("ignoreNullFields" -> "true")))
+        .collect().toSeq.map(r => Json.readTree(r.getString(0)))
     }
 
     if (cpVersion >= 0) {
@@ -215,91 +249,53 @@ object DeltaLog {
           Seq(new Path(logDir, f"$cpVersion%020d.checkpoint.parquet"))
         else (1 to cpParts).map(i => new Path(logDir,
           f"$cpVersion%020d.checkpoint.$i%010d.$cpParts%010d.parquet"))
-      if (classicFiles.forall(fs.exists)) {
-        absorbParquet(spark.read.parquet(classicFiles.map(_.toString): _*))
-      } else {
+      if (classicFiles.forall(fs.exists))
+        absorb(parquetActions(classicFiles), checkpoint = true)
+      else {
         // ---- V2 checkpoint (the 2024+ DBR default write path): a
-        // UUID-named manifest `NNN.checkpoint.<uuid>.{parquet|json}`
-        // carrying checkpointMetadata/protocol/metaData + either the
-        // file actions inline or `sidecar` references to parquet files
-        // under `_delta_log/_sidecars/` that hold them ----------------
-        val v2Pat =
-          (f"$cpVersion%020d" + "\\.checkpoint\\.[A-Za-z0-9_-]+\\.(parquet|json)").r
-        val manifests = fs.listStatus(logDir).map(_.getPath)
-          .filter(p => v2Pat.pattern.matcher(p.getName).matches).sortBy(_.getName)
+        // UUID-named manifest carrying checkpointMetadata/protocol/
+        // metaData + either the file actions inline or `sidecar`
+        // references to parquet files under `_delta_log/_sidecars/` ----
+        val manifests = fs.listStatus(logDir).map(_.getPath).filter(p =>
+          p.getName match {
+            case V2CheckpointName(v) => v.toLong == cpVersion
+            case _                   => false
+          }).sortBy(_.getName)
         require(manifests.nonEmpty,
           s"$rootStr: _last_checkpoint names version $cpVersion but no " +
             "classic or v2 checkpoint file exists — corrupt log")
         // multiple UUID manifests of one version are each complete —
         // any one serves; pick deterministically
         val mf = manifests.head
-        val sidecarPaths = scala.collection.mutable.ArrayBuffer[String]()
-        if (mf.getName.endsWith(".json")) {
-          val text = new String(readBytes(fs, mf),
-            java.nio.charset.StandardCharsets.UTF_8)
-          text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
-            val n = om.readTree(line)
-            Option(n.get("checkpointMetadata")).foreach { cm =>
-              require(cm.get("version").asLong() == cpVersion,
-                s"$rootStr: v2 checkpoint manifest $mf declares version " +
-                  s"${cm.get("version").asLong()} ≠ $cpVersion — corrupt log")
-            }
-            if (n.has("metaData")) meta = Some(n.get("metaData"))
-            if (n.has("protocol")) protocol = Some(n.get("protocol"))
-            if (n.has("sidecar"))
-              sidecarPaths += n.get("sidecar").get("path").asText()
-            if (n.has("add")) {
-              val a = n.get("add")
-              val dv = Option(a.get("deletionVector")).filterNot(_.isNull)
-                .map(parseDv(_, rootStr))
-              val path = a.get("path").asText()
-              val pv = Option(a.get("partitionValues")).map { m =>
-                m.fields().asScala.map { e =>
-                  e.getKey -> (if (e.getValue.isNull) None
-                               else Some(e.getValue.asText()))
-                }.toMap
-              }.getOrElse(Map.empty[String, Option[String]])
-              live(path) = mkAdd(om, path, pv, a.get("size").asLong(),
-                Option(a.get("modificationTime")).map(_.asLong()).getOrElse(0L),
-                Option(a.get("stats")).filterNot(_.isNull).map(_.asText()), dv)
-            }
-            // checkpoint `remove` rows are vacuum tombstones, not state
-          }
-        } else {
-          val cp = spark.read.parquet(mf.toString)
-          if (cp.columns.contains("sidecar")) {
-            import org.apache.spark.sql.functions.col
-            cp.where(col("sidecar").isNotNull).select(col("sidecar.path"))
-              .collect().foreach(r => sidecarPaths += r.getString(0))
-          }
-          if (cp.columns.contains("checkpointMetadata")) {
-            import org.apache.spark.sql.functions.col
-            cp.where(col("checkpointMetadata").isNotNull)
-              .select(col("checkpointMetadata.version")).collect()
-              .foreach(r => require(r.getLong(0) == cpVersion,
-                s"$rootStr: v2 checkpoint manifest $mf declares version " +
-                  s"${r.getLong(0)} ≠ $cpVersion — corrupt log"))
-          }
-          absorbParquet(cp)
+        val actions =
+          if (mf.getName.endsWith(".json")) jsonLines(fs, mf)
+          else parquetActions(Seq(mf))
+        bodies(actions, "checkpointMetadata").foreach { cm =>
+          require(cm.get("version").asLong() == cpVersion,
+            s"$rootStr: v2 checkpoint manifest $mf declares version " +
+              s"${cm.get("version").asLong()} ≠ $cpVersion — corrupt log")
         }
-        if (sidecarPaths.nonEmpty) {
-          val files = sidecarPaths.toSeq.map(sidecarFile)
-          files.foreach(p => require(fs.exists(p),
-            s"$rootStr: v2 checkpoint names missing sidecar $p — corrupt log"))
-          absorbParquet(spark.read.parquet(files.map(_.toString): _*))
+        absorb(actions, checkpoint = true)
+        // sidecars hold only file actions
+        val sidecars = bodies(actions, "sidecar").map { sc =>
+          val p = sc.get("path").asText()
+          // the spec's layout; absolute/external sidecars refuse
+          // rather than misread
+          require(!p.startsWith("/") && !p.contains("://"),
+            s"$rootStr: v2 checkpoint sidecar references EXTERNAL file $p — " +
+              "refusing rather than misread")
+          new Path(new Path(logDir, "_sidecars"), p)
         }
+        sidecars.foreach(p => require(fs.exists(p),
+          s"$rootStr: v2 checkpoint names missing sidecar $p — corrupt log"))
+        if (files && sidecars.nonEmpty)
+          absorb(parquetActions(sidecars), checkpoint = true)
       }
     }
 
     // ---- JSON commits after the checkpoint ---------------------------
-    val commitName = """(\d{20})\.json""".r
-    val commits = fs.listStatus(logDir).iterator
-      .map(_.getPath.getName)
-      .flatMap {
-        case commitName(v) => Some(v.toLong)
-        case _             => None
-      }
-      .filter(v => v > cpVersion && atVersion.forall(v <= _)).toSeq.sorted
+    val commits = commitVersions(fs, logDir)
+      .filter(v => v > cpVersion && atVersion.forall(v <= _))
     atVersion.foreach(v => require(
       commits.lastOption.contains(v) || cpVersion == v,
       s"$rootStr: pinned version $v is not present in the log " +
@@ -320,87 +316,59 @@ object DeltaLog {
     }
     require(cpVersion >= 0 || commits.nonEmpty,
       s"$rootStr: Delta log holds no commits")
+    commits.foreach(v => absorb(commitActions(fs, logDir, v), checkpoint = false))
+    LogState(commits.lastOption.getOrElse(cpVersion), protocol, meta,
+      live, tombs)
+  }
 
-    commits.foreach { v =>
-      val text = new String(readBytes(fs, new Path(logDir, f"$v%020d.json")),
-        java.nio.charset.StandardCharsets.UTF_8)
-      // reconciliation is order-independent WITHIN a version (the
-      // spec: an add and a remove of the same path in one commit —
-      // the DV re-add shape — resolve to the ADD whatever order the
-      // writer serialized them in): collect per commit, removes
-      // first, adds second
-      val commitRemoves = scala.collection.mutable.ArrayBuffer[String]()
-      val commitAdds = scala.collection.mutable.ArrayBuffer[DeltaAdd]()
-      text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
-        val n = om.readTree(line)
-        if (n.has("metaData")) meta = Some(n.get("metaData"))
-        if (n.has("protocol")) protocol = Some(n.get("protocol"))
-        if (n.has("remove"))
-          commitRemoves += n.get("remove").get("path").asText()
-        if (n.has("add")) {
-          val a = n.get("add")
-          val dv = Option(a.get("deletionVector")).filterNot(_.isNull)
-            .map(parseDv(_, rootStr))
-          val path = a.get("path").asText()
-          val pv = Option(a.get("partitionValues")).map { m =>
-            m.fields().asScala.map { e =>
-              e.getKey -> (if (e.getValue.isNull) None
-                           else Some(e.getValue.asText()))
-            }.toMap
-          }.getOrElse(Map.empty[String, Option[String]])
-          commitAdds += mkAdd(om, path, pv, a.get("size").asLong(),
-            Option(a.get("modificationTime")).map(_.asLong()).getOrElse(0L),
-            Option(a.get("stats")).filterNot(_.isNull).map(_.asText()), dv)
-        }
-      }
-      commitRemoves.foreach { p => live.remove(p); () }
-      commitAdds.foreach(a => live(a.path) = a)
-    }
-
-    // ---- protocol / metadata gate ------------------------------------
-    val md = meta.getOrElse(sys.error(
+  /** Reconstruct the latest snapshot — or, with `atVersion`, the
+    * PINNED snapshot as of that version (the streaming batch-0
+    * contract: crash-replay of the initial batch must see the same
+    * rows). [[replay]] plus validation: throws with a NAMED reason on
+    * any unsupported protocol feature (never a wrong read). */
+  def snapshot(spark: SparkSession, rootStr: String,
+      atVersion: Option[Long] = None): DeltaSnapshot = {
+    val st = replay(spark, rootStr, atVersion)
+    val md = st.metaData.getOrElse(sys.error(
       s"$rootStr: Delta log carries no metaData action — corrupt log"))
-    protocol.foreach { p =>
-      val r = Option(p.get("minReaderVersion")).map(_.asInt()).getOrElse(1)
-      require(r <= 3,
-        s"$rootStr: Delta minReaderVersion $r exceeds 3 — refusing rather " +
-          "than misread a future protocol")
-      if (r == 3) {
-        val feats = Option(p.get("readerFeatures"))
-          .map(_.elements().asScala.map(_.asText()).toSet)
-          .getOrElse(Set.empty[String])
-        val unsupported = feats -- SupportedReaderFeatures
-        require(unsupported.isEmpty,
-          s"$rootStr: Delta readerFeatures ${unsupported.mkString(", ")} " +
-            "not implemented — refusing rather than misread")
-      }
-    }
+    st.protocol.flatMap(beyondReader).foreach(what => throw
+      new IllegalArgumentException(s"$rootStr: Delta protocol needs $what — " +
+        "not implemented; refusing rather than misread"))
     val pm = parseMetaData(md, rootStr)
-    val conf = pm.configuration
-    val cmMode = pm.cmMode
-    val schema = pm.schema
-    val colMap = pm.colMap
-    val partCols = pm.partitionCols
-    live.keys.foreach { p =>
+    st.adds.keys.foreach { p =>
       require(!p.startsWith("/") && !p.contains("://"),
         s"$rootStr: Delta add references EXTERNAL file $p (shallow clone?) " +
           "— zero-copy convert requires table-rooted files")
     }
     // with column mapping, the log keys partition values and stats by
     // PHYSICAL name (per the protocol) — surface LOGICAL keys
-    val physToLogical = colMap.map(_.swap)
-    def logicalKeys(a: DeltaAdd): DeltaAdd =
-      if (colMap.isEmpty) a
-      else a.copy(
-        partition = a.partition.flatMap { case (k, v) =>
-          physToLogical.get(k).map(_ -> v) },
-        min = a.min.flatMap { case (k, v) => physToLogical.get(k).map(_ -> v) },
-        max = a.max.flatMap { case (k, v) => physToLogical.get(k).map(_ -> v) },
-        nulls = a.nulls.flatMap { case (k, v) =>
-          physToLogical.get(k).map(_ -> v) })
-    DeltaSnapshot(rootStr, commits.lastOption.getOrElse(cpVersion),
-      schema, partCols, conf, live.values.map(logicalKeys).toSeq.sortBy(_.path),
-      colMap, cmMode)
+    val physToLogical = pm.colMap.map(_.swap)
+    def logical[V](m: Map[String, V]): Map[String, V] =
+      m.flatMap { case (k, v) => physToLogical.get(k).map(_ -> v) }
+    val adds = st.adds.values.map { n =>
+      val a = parseAdd(n, rootStr)
+      if (pm.colMap.isEmpty) a
+      else a.copy(partition = logical(a.partition), min = logical(a.min),
+        max = logical(a.max), nulls = logical(a.nulls))
+    }.toSeq.sortBy(_.path)
+    DeltaSnapshot(rootStr, st.version, pm.schema, pm.partitionCols,
+      pm.configuration, adds, pm.colMap, pm.cmMode)
+  }
+
+  /** What a `protocol` action demands beyond this reader (a future
+    * minReaderVersion, or unimplemented reader features), or None when
+    * every table it governs reads correctly here. */
+  private def beyondReader(p: JsonNode): Option[String] = {
+    val r = Option(p.get("minReaderVersion")).map(_.asInt()).getOrElse(1)
+    val unsupported =
+      if (r != 3) Nil
+      else Option(p.get("readerFeatures")).filterNot(_.isNull)
+        .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
+        .filterNot(SupportedReaderFeatures).sorted
+    if (r > 3) Some(s"minReaderVersion $r")
+    else if (unsupported.nonEmpty)
+      Some(s"readerFeatures ${unsupported.mkString(", ")}")
+    else None
   }
 
   /** One parsed Delta `metaData` action — schema, mapping, layout,
@@ -469,43 +437,41 @@ object DeltaLog {
           s"$rootStr: deletionVector missing cardinality")))
   }
 
-  /** Decode one add action: percent-decoded path + stats translated
-    * into the manifest's string encoding. */
-  private def mkAdd(om: ObjectMapper, rawPath: String,
-      pv: Map[String, Option[String]], size: Long, mtime: Long,
-      statsJson: Option[String], dv: Option[DeltaDv.Descriptor]): DeltaAdd = {
-    val decoded =
-      try new java.net.URI(rawPath).getPath
-      catch { case _: java.net.URISyntaxException => rawPath }
-    val (rows, mins, maxs, nulls) = statsJson match {
-      case None => (-1L, Map.empty[String, String], Map.empty[String, String],
-        Map.empty[String, Long])
-      case Some(s) =>
-        try {
-          val n = om.readTree(s)
-          val r = Option(n.get("numRecords")).map(_.asLong()).getOrElse(-1L)
-          def strMap(key: String): Map[String, String] =
-            Option(n.get(key)).map { m =>
-              m.fields().asScala.flatMap { e =>
-                // only primitive stats translate (struct columns nest)
-                if (e.getValue.isValueNode && !e.getValue.isNull)
-                  Some(e.getKey -> e.getValue.asText())
-                else None
-              }.toMap
-            }.getOrElse(Map.empty)
-          val nc = Option(n.get("nullCount")).map { m =>
-            m.fields().asScala.flatMap { e =>
-              if (e.getValue.isNumber) Some(e.getKey -> e.getValue.asLong())
-              else None
-            }.toMap
-          }.getOrElse(Map.empty[String, Long])
-          (r, strMap("minValues"), strMap("maxValues"), nc)
-        } catch { case _: Exception =>
-          (-1L, Map.empty[String, String], Map.empty[String, String],
-            Map.empty[String, Long])
-        }
+  private def decodePath(rawPath: String): String =
+    try new java.net.URI(rawPath).getPath
+    catch { case _: java.net.URISyntaxException => rawPath }
+
+  /** THE `add` action parser — JSON commits, v2 JSON manifests and
+    * checkpoint rows alike: percent-decoded path, partition values
+    * (None = null), size/mtime, stats translated into the manifest's
+    * string encoding (physical keys as logged; unparseable stats read
+    * as absent, `rows = -1`), and the deletion-vector descriptor. */
+  private def parseAdd(a: JsonNode, rootStr: String): DeltaAdd = {
+    def fields(n: JsonNode) =
+      Option(n).filterNot(_.isNull).toSeq.flatMap(_.fields().asScala)
+    val pv = fields(a.get("partitionValues")).map { e =>
+      e.getKey -> Option(e.getValue).filterNot(_.isNull).map(_.asText())
+    }.toMap
+    val stats = Option(a.get("stats")).filterNot(_.isNull).flatMap { s =>
+      try Some(Json.readTree(s.asText()))
+      catch { case _: Exception => None }
     }
-    DeltaAdd(decoded, pv, size, mtime, rows, mins, maxs, nulls, dv)
+    // only primitive stats translate (struct columns nest)
+    def strMap(key: String): Map[String, String] =
+      fields(stats.map(_.get(key)).orNull).collect {
+        case e if e.getValue.isValueNode && !e.getValue.isNull =>
+          e.getKey -> e.getValue.asText()
+      }.toMap
+    DeltaAdd(decodePath(a.get("path").asText()), pv, a.get("size").asLong(),
+      Option(a.get("modificationTime")).map(_.asLong()).getOrElse(0L),
+      rows = stats.flatMap(s => Option(s.get("numRecords")))
+        .map(_.asLong()).getOrElse(-1L),
+      min = strMap("minValues"), max = strMap("maxValues"),
+      nulls = fields(stats.map(_.get("nullCount")).orNull).collect {
+        case e if e.getValue.isNumber => e.getKey -> e.getValue.asLong()
+      }.toMap,
+      dv = Option(a.get("deletionVector")).filterNot(_.isNull)
+        .map(parseDv(_, rootStr)))
   }
 
   private def readBytes(fs: FileSystem, p: Path): Array[Byte] = {
@@ -677,16 +643,8 @@ object DeltaLog {
     val logDir = new Path(new Path(rootStr), LogDir)
     val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(logDir)) return None
-    val commitName = """(\d{20})\.json""".r
-    val om = new ObjectMapper()
-    val fromJson = fs.listStatus(logDir).iterator.map(_.getPath.getName)
-      .flatMap { case commitName(v) => Some(v.toLong); case _ => None }
-      .maxOption
-    val lastCp = new Path(logDir, "_last_checkpoint")
-    val fromCp = if (fs.exists(lastCp))
-      Some(om.readTree(readBytes(fs, lastCp)).get("version").asLong())
-    else None
-    (fromJson.toSeq ++ fromCp.toSeq).maxOption
+    (commitVersions(fs, logDir).lastOption.toSeq ++
+      checkpointPointer(fs, logDir).map(_._1)).maxOption
   }
 
   /** Net effect of the commits (from, to] on the file set: the final
@@ -743,7 +701,6 @@ object DeltaLog {
     val root = new Path(snap.root)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val logDir = new Path(root, LogDir)
-    val om = new ObjectMapper()
     val physToLogical = snap.colMap.map(_.swap)
     // final action per path, in first-appearance order (deterministic
     // output layout); None = removed
@@ -751,89 +708,48 @@ object DeltaLog {
     val addedAnywhere = Set.newBuilder[String]
     val metas = scala.collection.mutable.ArrayBuffer[ParsedMeta]()
     val metaIdx = scala.collection.mutable.HashMap[String, Int]()
-    def decode(rawPath: String): String =
-      try new java.net.URI(rawPath).getPath
-      catch { case _: java.net.URISyntaxException => rawPath }
     ((from + 1) to to).foreach { v =>
-      val p = new Path(logDir, f"$v%020d.json")
-      require(fs.exists(p),
+      require(fs.exists(new Path(logDir, f"$v%020d.json")),
         s"${snap.root}: commit $v aged out of the log — the incremental " +
           "window is gone; restart the stream from a fresh snapshot")
-      val text = new String(readBytes(fs, p),
-        java.nio.charset.StandardCharsets.UTF_8)
-      // Delta reconciliation is order-independent WITHIN a version:
-      // an add and a remove of the same path in one commit (the DV
-      // re-add shape — remove the old entry, add it back with a DV)
-      // resolve to the add whatever order the writer serialized them
-      // in. Collect per-commit, apply removes first, adds second.
-      val commitRemoves = scala.collection.mutable.ArrayBuffer[String]()
-      val commitAdds = scala.collection.mutable.ArrayBuffer[DeltaAdd]()
-      text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
-        val n = om.readTree(line)
-        if (n.has("remove")) {
-          require(allowRemoves,
-            s"${snap.root}: commit $v REMOVES files — not append-shaped; " +
-              "an incremental read cannot represent a rewrite: restart " +
-              "the stream from a fresh snapshot")
-          // the remove's DV descriptor (if any) only describes the
-          // departing file — the whole-file drop supersedes it
-          commitRemoves += decode(n.get("remove").get("path").asText())
-        }
-        if (n.has("metaData")) {
-          require(allowMetaData,
-            s"${snap.root}: commit $v changes table metadata — restart " +
-              "the stream from a fresh snapshot")
-          metas += parseMetaData(n.get("metaData"), snap.root)
-        }
-        // a protocol change that stays within this module's reader
-        // capabilities is a pure capability bump (e.g. the upstream's
-        // first DV commit upgrading to table features) — metadata
-        // only, nothing for a file-set delta to carry; anything this
-        // reader could MISREAD refuses with the reset signal
-        if (n.has("protocol")) {
-          val p = n.get("protocol")
-          val r = Option(p.get("minReaderVersion")).map(_.asInt()).getOrElse(1)
-          val unsupported =
-            if (r != 3) Set.empty[String]
-            else Option(p.get("readerFeatures")).filterNot(_.isNull)
-              .map(_.elements().asScala.map(_.asText()).toSet)
-              .getOrElse(Set.empty[String]) -- SupportedReaderFeatures
-          require(r <= 3 && unsupported.isEmpty,
-            s"${snap.root}: commit $v upgrades the protocol past this " +
-              s"reader (minReaderVersion $r" +
-              (if (unsupported.nonEmpty)
-                 s", features ${unsupported.mkString(", ")}" else "") +
-              ") — restart the stream from a fresh snapshot")
-        }
-        if (n.has("add")) {
-          val a = n.get("add")
-          val dvNode = Option(a.get("deletionVector")).filterNot(_.isNull)
-          require(dvNode.isEmpty || allowDvAdds,
-            s"${snap.root}: commit $v adds a DELETION-VECTOR'd file — a " +
-              "merge-on-read rewrite, not an append; restart the stream " +
-              "from a fresh snapshot")
-          val path = a.get("path").asText()
-          val pv = Option(a.get("partitionValues")).map { m =>
-            m.fields().asScala.map { e =>
-              e.getKey -> (if (e.getValue.isNull) None
-                           else Some(e.getValue.asText()))
-            }.toMap
-          }.getOrElse(Map.empty[String, Option[String]])
-          val add = mkAdd(om, path, pv, a.get("size").asLong(),
-            Option(a.get("modificationTime")).map(_.asLong()).getOrElse(0L),
-            Option(a.get("stats")).filterNot(_.isNull).map(_.asText()),
-            dvNode.map(parseDv(_, snap.root)))
-          val mapped = if (snap.colMap.isEmpty) add
+      val actions = commitActions(fs, logDir, v)
+      bodies(actions, "metaData").foreach { md =>
+        require(allowMetaData,
+          s"${snap.root}: commit $v changes table metadata — restart " +
+            "the stream from a fresh snapshot")
+        metas += parseMetaData(md, snap.root)
+      }
+      // a protocol change that stays within this module's reader
+      // capabilities is a pure capability bump (e.g. the upstream's
+      // first DV commit upgrading to table features) — metadata only,
+      // nothing for a file-set delta to carry; anything this reader
+      // could MISREAD refuses with the reset signal
+      bodies(actions, "protocol").foreach(p => beyondReader(p).foreach(what => throw
+        new IllegalArgumentException(s"${snap.root}: commit $v upgrades " +
+          s"the protocol past this reader ($what) — restart the stream " +
+          "from a fresh snapshot")))
+      // removes first, adds second — the same within-version
+      // reconciliation as [[replay]]; a remove's DV descriptor only
+      // describes the departing file, the whole-file drop supersedes it
+      bodies(actions, "remove").foreach { r =>
+        require(allowRemoves,
+          s"${snap.root}: commit $v REMOVES files — not append-shaped; " +
+            "an incremental read cannot represent a rewrite: restart " +
+            "the stream from a fresh snapshot")
+        state(decodePath(r.get("path").asText())) = None
+      }
+      bodies(actions, "add").foreach { a =>
+        val add = parseAdd(a, snap.root)
+        require(add.dv.isEmpty || allowDvAdds,
+          s"${snap.root}: commit $v adds a DELETION-VECTOR'd file — a " +
+            "merge-on-read rewrite, not an append; restart the stream " +
+            "from a fresh snapshot")
+        val mapped = if (snap.colMap.isEmpty) add
           else add.copy(partition = add.partition.flatMap { case (k, vv) =>
             physToLogical.get(k).map(_ -> vv) })
-          commitAdds += mapped
-        }
-      }
-      commitRemoves.foreach(p => state(p) = None)
-      commitAdds.foreach { a =>
-        state(a.path) = Some(a)
-        addedAnywhere += a.path
-        metaIdx(a.path) = metas.length
+        state(mapped.path) = Some(mapped)
+        addedAnywhere += mapped.path
+        metaIdx(mapped.path) = metas.length
       }
     }
     WindowDelta(

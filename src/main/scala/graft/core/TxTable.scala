@@ -3147,63 +3147,14 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
           if (wOpt.isEmpty) return followCatchUp(m, anchor)
           val w = wOpt.get
           // ADDITIVE SCHEMA EVOLUTION: each foreign metaData change in
-          // the window must WIDEN the running schema — every existing
-          // logical field kept with an identical type and physical
-          // name, new fields nullable, partition layout untouched —
-          // exactly the widening this engine's own append allows; the
-          // window then publishes under the widened schema (old files
-          // read the new columns as null, the widening semantic).
-          // Anything else (drop, retype, rename, re-partition) refuses
-          // with the reset signal.
+          // the window must WIDEN the running schema ([[requireWidening]]);
+          // the window then publishes under the widened schema (old
+          // files read the new columns as null, the widening semantic)
           val metaStates =
             w.metas.scanLeft((schema, m.colMap)) {
               case ((ps, pMap), meta) =>
-                require(meta.partitionCols == m.partitionCols,
-                  s"$root: foreign metaData changes partition columns " +
-                    s"(${m.partitionCols.mkString(",")} → " +
-                    s"${meta.partitionCols.mkString(",")}) — a follower " +
-                    "cannot re-layout; followDelta(reset = true)")
-                val renamedTo = scala.collection.mutable.Set[String]()
-                ps.fields.foreach { f =>
-                  val physOld = pMap.getOrElse(f.name, f.name)
-                  val nf = meta.schema.fields.find(_.name == f.name)
-                    .orElse {
-                      // FOREIGN RENAME adoption (mapping mode only):
-                      // physical names are frozen at column birth, so
-                      // the field still pointing at f's physical name
-                      // IS f under a new logical name — the same
-                      // metadata-only commit the engine's own RENAME
-                      // COLUMN produces. Without mapping a rename is
-                      // indistinguishable from drop+add — refuse.
-                      val r =
-                        if (meta.colMap.isEmpty) None
-                        else meta.schema.fields.find(g =>
-                          meta.colMap.getOrElse(g.name, g.name) == physOld)
-                      r.foreach { g => renamedTo += g.name; () }
-                      r
-                    }
-                    .getOrElse(sys.error(
-                      s"$root: foreign metaData DROPS column " +
-                        s"${f.name} (no field keeps its physical name; " +
-                        "a rename adopts only under column mapping) — " +
-                        "not an additive widening; " +
-                        "followDelta(reset = true) re-snapshots"))
-                  require(nf.dataType == f.dataType,
-                    s"$root: foreign metaData retypes ${f.name} " +
-                      s"(${f.dataType.simpleString} → " +
-                      s"${nf.dataType.simpleString}) — " +
-                      "followDelta(reset = true) re-snapshots")
-                  require(meta.colMap.getOrElse(nf.name, nf.name) == physOld,
-                    s"$root: foreign metaData moves ${f.name}'s physical " +
-                      "column — followDelta(reset = true) re-snapshots")
-                }
-                meta.schema.fields
-                  .filterNot(f => ps.fieldNames.contains(f.name) ||
-                    renamedTo.contains(f.name))
-                  .foreach(f => require(f.nullable,
-                    s"$root: foreign metaData adds NON-NULLABLE column " +
-                      s"${f.name} — files written before it cannot " +
-                      "satisfy the constraint; followDelta(reset = true)"))
+                requireWidening(ps, pMap, m.partitionCols, meta,
+                  "foreign metaData")
                 (meta.schema, meta.colMap)
             }
           val (finalSchema, finalColMap) = metaStates.last
@@ -3243,11 +3194,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
           val anyDv = w.adds.exists(_.dv.isDefined)
           val byPath = entries.map(e => e.path -> e).toMap
           val removed = w.removedPaths.toSet
-          commit { latest =>
-            val l = latest.getOrElse(sys.error(s"$root: log vanished"))
-            require(l.txns.get(TxTable.FollowTxnId).contains(anchor),
-              s"$root: a racing follower advanced the anchor past $anchor " +
-                "— rerun followDelta() to resume from the new one")
+          commitFollow(anchor) { l =>
             // a net-removed path must be a file this follower KNOWS —
             // in the manifest or added earlier in this same window; an
             // unknown path means the two logs' path spellings drifted,
@@ -3282,11 +3229,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
         } else {
           val snap = DeltaLog.snapshot(spark, root.toString)
           val entries = deltaSnapshotEntries(snap)
-          commit { latest =>
-            val l = latest.getOrElse(sys.error(s"$root: log vanished"))
-            require(l.txns.get(TxTable.FollowTxnId).contains(anchor),
-              s"$root: a racing follower advanced the anchor past $anchor " +
-                "— rerun followDelta() to resume from the new one")
+          commitFollow(anchor) { l =>
             Pending(OpOverwrite, entries, schemaDdlOf(snap.schema), Nil,
               None, Some(TxTable.FollowTxnId -> snap.version),
               // re-stamp (or clear) the id-mode marker from the head's
@@ -3301,6 +3244,62 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
         }
     }
   }
+
+  /** THE follow rule for a foreign schema change — in-window metaData
+    * ([[followDelta]]) and across a lapse ([[followCatchUp]]) alike:
+    * an ADDITIVE WIDENING follows, anything else refuses toward
+    * `followDelta(reset = true)`. The partition columns stay the same;
+    * every existing field keeps its type and physical name; a RENAME
+    * is adopted only under column mapping, where physical names are
+    * frozen at column birth, so the field still holding f's physical
+    * name IS f under a new logical name (the same metadata-only commit
+    * the engine's own RENAME COLUMN produces) — without mapping a
+    * rename is indistinguishable from drop+add; new fields are
+    * nullable (files written before them cannot satisfy NOT NULL).
+    * `what` names the change in the refusals. */
+  private def requireWidening(schema: StructType, colMap: Map[String, String],
+      partitionCols: Seq[String], next: DeltaLog.ParsedMeta,
+      what: String): Unit = {
+    val reset = "followDelta(reset = true) re-snapshots"
+    require(next.partitionCols == partitionCols,
+      s"$root: $what changes partition columns " +
+        s"(${partitionCols.mkString(",")} → ${next.partitionCols.mkString(",")})" +
+        s" — a follower cannot re-layout; $reset")
+    def phys(cm: Map[String, String], name: String) = cm.getOrElse(name, name)
+    val kept = schema.fields.map { f =>
+      val physOld = phys(colMap, f.name)
+      val nf = next.schema.fields.find(_.name == f.name)
+        .orElse(if (next.colMap.isEmpty) None
+          else next.schema.fields.find(g => phys(next.colMap, g.name) == physOld))
+        .getOrElse(sys.error(
+          s"$root: $what DROPS column ${f.name} (no field keeps its " +
+            "physical name; a rename adopts only under column mapping) — " +
+            s"not an additive widening; $reset"))
+      require(nf.dataType == f.dataType,
+        s"$root: $what retypes ${f.name} (${f.dataType.simpleString} → " +
+          s"${nf.dataType.simpleString}) — $reset")
+      require(phys(next.colMap, nf.name) == physOld,
+        s"$root: $what moves ${f.name}'s physical column — $reset")
+      nf.name
+    }.toSet
+    next.schema.fields.filterNot(f => kept(f.name)).foreach(f => require(
+      f.nullable, s"$root: $what adds NON-NULLABLE column ${f.name} — files " +
+        s"written before it cannot satisfy the constraint; $reset"))
+  }
+
+  /** The follower's one commit step (window, reset and catch-up):
+    * `body` composes the commit from the latest manifest once the
+    * [[TxTable.FollowTxnId]] anchor is confirmed to still be the one
+    * this follow started from — a racing follower that advanced it
+    * wins, and this one raises instead of double-ingesting. */
+  private def commitFollow(anchor: Long)(body: Manifest => Pending): Long =
+    commit { latest =>
+      val l = latest.getOrElse(sys.error(s"$root: log vanished"))
+      require(l.txns.get(TxTable.FollowTxnId).contains(anchor),
+        s"$root: a racing follower advanced the anchor past $anchor " +
+          "— rerun followDelta() to resume from the new one")
+      body(l)
+    }
 
   /** Long-lapse follower catch-up: the incremental window aged out of
     * the upstream log (pause > upstream retention), so the head is
@@ -3325,44 +3324,10 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     require(snap.version > anchor,
       s"$root: upstream head ${snap.version} behind anchor $anchor after " +
         "retention cleaning — upstream log rewound; followDelta(reset = true)")
-    val schema = StructType.fromDDL(m.schemaDdl)
-    require(snap.partitionCols == m.partitionCols,
-      s"$root: upstream partition columns changed across the lapse " +
-        s"(${m.partitionCols.mkString(",")} → " +
-        s"${snap.partitionCols.mkString(",")}) — a follower cannot " +
-        "re-layout; followDelta(reset = true)")
-    val renamedTo = scala.collection.mutable.Set[String]()
-    schema.fields.foreach { f =>
-      val physOld = m.colMap.getOrElse(f.name, f.name)
-      val nf = snap.schema.fields.find(_.name == f.name)
-        .orElse {
-          // rename adoption across the lapse — the same mapping-mode
-          // rule as in-window metaData (physical names frozen)
-          val r =
-            if (snap.colMap.isEmpty) None
-            else snap.schema.fields.find(g =>
-              snap.colMap.getOrElse(g.name, g.name) == physOld)
-          r.foreach { g => renamedTo += g.name; () }
-          r
-        }
-        .getOrElse(sys.error(
-          s"$root: upstream DROPS column ${f.name} across the lapse (no " +
-            "field keeps its physical name; a rename adopts only under " +
-            "column mapping) — not an additive widening; " +
-            "followDelta(reset = true)"))
-      require(nf.dataType == f.dataType,
-        s"$root: upstream retypes ${f.name} (${f.dataType.simpleString} → " +
-          s"${nf.dataType.simpleString}) — followDelta(reset = true)")
-      require(snap.colMap.getOrElse(nf.name, nf.name) == physOld,
-        s"$root: upstream moves ${f.name}'s physical column — " +
-          "followDelta(reset = true)")
-    }
-    snap.schema.fields.filterNot(f => schema.fieldNames.contains(f.name) ||
-        renamedTo.contains(f.name))
-      .foreach(f => require(f.nullable,
-        s"$root: upstream adds NON-NULLABLE column ${f.name} — files " +
-          "written before it cannot satisfy the constraint; " +
-          "followDelta(reset = true)"))
+    requireWidening(StructType.fromDDL(m.schemaDdl), m.colMap,
+      m.partitionCols, DeltaLog.ParsedMeta(snap.schema, snap.colMap,
+        snap.cmMode, snap.partitionCols, snap.configuration),
+      "the upstream head (across the lapse)")
     val byPathM = m.files.map(f => f.path -> f).toMap
     def dvDrifted(pf: FileEntry, a: DeltaLog.DeltaAdd): Boolean = {
       val upCard = a.dv.map(_.cardinality).getOrElse(0L)
@@ -3401,11 +3366,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val byPath = entries.map(e => e.path -> e).toMap
     val appendShaped = removed.isEmpty &&
       changed.forall(a => !byPathM.contains(a.path) && a.dv.isEmpty)
-    commit { latest =>
-      val l = latest.getOrElse(sys.error(s"$root: log vanished"))
-      require(l.txns.get(TxTable.FollowTxnId).contains(anchor),
-        s"$root: a racing follower advanced the anchor past $anchor " +
-          "— rerun followDelta() to resume from the new one")
+    commitFollow(anchor) { l =>
       val kept = l.files.filterNot(f =>
         byPath.contains(f.path) || removed(f.path))
       val op =
@@ -3746,22 +3707,10 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val dLogDir = new Path(root, "_delta_log")
     if (!fs.exists(dLogDir)) { exportToDelta(); return 0L }
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val deltaVersions = fs.listStatus(dLogDir).toSeq
-      .map(_.getPath.getName).filter(_.matches("\\d{20}\\.json"))
-      .map(_.stripSuffix(".json").toLong).sorted
-    require(deltaVersions.nonEmpty,
-      s"$root: _delta_log holds no commits — not a mirror; remove it or " +
-        "export into a fresh directory")
-    def linesOf(dv: Long): Seq[String] = {
-      val in = fs.open(new Path(dLogDir, f"$dv%020d.json"))
-      val text = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-      text.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-    }
-    val anchor = linesOf(deltaVersions.last).reverseIterator
-      .map(om.readTree)
+    val deltaHead = DeltaLog.commitVersions(fs, dLogDir).lastOption.getOrElse(
+      sys.error(s"$root: _delta_log holds no commits — not a mirror; remove " +
+        "it or export into a fresh directory"))
+    val anchor = DeltaLog.commitActions(fs, dLogDir, deltaHead).reverseIterator
       .collectFirst(Function.unlift { n =>
         Option(n.get("commitInfo"))
           .flatMap(ci => Option(ci.get("operationParameters")))
@@ -3772,73 +3721,25 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
         s"$root: _delta_log was not written by this engine's mirror (its " +
           "last commit carries no graft anchor) — refusing to append to a " +
           "foreign Delta log"))
-    if (anchor >= latest) return deltaVersions.last
+    if (anchor >= latest) return deltaHead
     require(versions.contains(anchor),
       s"$root: last-mirrored graft version $anchor has aged out of the " +
         "graft log — export into a fresh mirror instead")
-    // the mirror's stable metaData id: the newest metaData action in
-    // the JSON commits — falling back to the newest checkpoint parquet
-    // when log retention has cleaned the metaData-bearing commit away
-    val tableId = deltaVersions.reverseIterator
-      .flatMap(v => linesOf(v).reverseIterator.map(om.readTree)
-        .collectFirst(Function.unlift(n => Option(n.get("metaData"))
-          .map(_.get("id").asText()))))
-      .nextOption()
-      .orElse {
-        // classic or v2 manifest — either carries the metaData action
-        val cpName = """(\d{20})\.checkpoint(?:\.[A-Za-z0-9-]+)?\.parquet""".r
-        fs.listStatus(dLogDir).toSeq.map(_.getPath.getName)
-          .collect { case cpName(v) => v.toLong }.maxOption
-          .flatMap { cv =>
-            import org.apache.spark.sql.functions.{col, to_json}
-            checkpointParquets(dLogDir, cv).iterator.flatMap { p =>
-              val cp = spark.read.parquet(p.toString)
-              if (!cp.columns.contains("metaData")) Nil
-              else cp.where(col("metaData").isNotNull)
-                .select(to_json(col("metaData"))).collect().toSeq
-                .map(r => om.readTree(r.getString(0)).get("id").asText())
-            }.nextOption()
-          }
-      }
-      .getOrElse(sys.error(s"$root: mirror log carries no metaData"))
-    // the log's CURRENT protocol action — a protocol never drops a
-    // feature, so every later emission carries at least its
+    // the mirror's stable metaData id and its CURRENT protocol action,
+    // from the log replay (no file actions collected). A protocol never
+    // drops a feature, so every later emission carries at least its
     // readerFeatures (a purge must not downgrade deletionVectors away
     // from readers), and an IDENTICAL protocol is never re-emitted
-    var lastProtocolJson: Option[String] = deltaVersions.reverseIterator
-      .flatMap(v => linesOf(v).reverseIterator.map(om.readTree)
-        .collectFirst(Function.unlift(n =>
-          Option(n.get("protocol")).map { p =>
-            val w = om.createObjectNode(); w.set("protocol", p)
-            om.writeValueAsString(w): String
-          })))
-      .nextOption()
-      .orElse {
-        val cpName = """(\d{20})\.checkpoint(?:\.[A-Za-z0-9-]+)?\.parquet""".r
-        fs.listStatus(dLogDir).toSeq.map(_.getPath.getName)
-          .collect { case cpName(v) => v.toLong }.maxOption
-          .flatMap { cv =>
-            import org.apache.spark.sql.functions.{col, to_json}
-            checkpointParquets(dLogDir, cv).iterator.flatMap { p =>
-              val cp = spark.read.parquet(p.toString)
-              if (!cp.columns.contains("protocol")) Nil
-              else cp.where(col("protocol").isNotNull)
-                .select(to_json(col("protocol"))).collect().toSeq
-                .map { r =>
-                  val w = om.createObjectNode()
-                  w.set("protocol", om.readTree(r.getString(0)))
-                  om.writeValueAsString(w): String
-                }
-            }.nextOption()
-          }
-      }
+    val st = DeltaLog.replay(spark, root.toString, files = false)
+    val tableId = st.metaData.map(_.get("id").asText())
+      .getOrElse(sys.error(s"$root: mirror log carries no metaData"))
+    var lastProtocolJson: Option[String] =
+      st.protocol.map(actionLine(om, "protocol", _))
     var carriedFeatures: Set[String] = {
       import scala.jdk.CollectionConverters._
-      lastProtocolJson
-        .map(s => Option(om.readTree(s).get("protocol").get("readerFeatures"))
-          .filterNot(_.isNull)
-          .map(_.elements().asScala.map(_.asText()).toSet)
-          .getOrElse(Set.empty[String]))
+      st.protocol.flatMap(p => Option(p.get("readerFeatures")))
+        .filterNot(_.isNull)
+        .map(_.elements().asScala.map(_.asText()).toSet)
         .getOrElse(Set.empty[String])
     }
     val store = LogStore.forRoot(fs, root,
@@ -3847,7 +3748,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       if (coalesce) Seq(latest)
       else versions.filter(v => v > anchor && v <= latest).sorted
     var prev = manifest(anchor)
-    var nextDelta = deltaVersions.last + 1
+    var nextDelta = deltaHead + 1
     targets.foreach { gv =>
       val cur = manifest(gv)
       require(cur.partitionCols == prev.partitionCols,
@@ -3917,54 +3818,53 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       // commits, one parquet checkpoint + _last_checkpoint pointer, so
       // a long-lived auto-mirrored table hands external Delta readers
       // a bounded JSON replay — then retention-expired pre-checkpoint
-      // commits are cleaned (delta.logRetentionDuration-equivalent)
-      if (nextDelta > 0 && nextDelta % CheckpointInterval == 0) {
-        writeMirrorCheckpoint(dLogDir, nextDelta, cur, tableId)
+      // commits are cleaned (delta.logRetentionDuration-equivalent) —
+      // only once the checkpoint has landed, or cleaning would leave
+      // readers a truncated log
+      if (nextDelta % CheckpointInterval == 0 &&
+          writeMirrorCheckpoint(dLogDir, nextDelta, cur))
         cleanMirrorLog(dLogDir, nextDelta,
           manifest(latest).properties.get(TxTable.PropMirrorLogRetention)
             .flatMap(_.toLongOption)
             .getOrElse(TxTable.MirrorLogRetentionDefaultMs))
-      }
       nextDelta += 1
       prev = cur
     }
     nextDelta - 1
   }
 
-  /** Delta-side checkpoint of the mirror at `deltaVersion`: ONE
-    * parquet file `NNN.checkpoint.parquet` carrying the compacted
-    * action state (protocol / metaData / one `add` per live file — the
-    * classic single-part checkpoint layout every Delta reader,
-    * including [[DeltaLog]], parses) + the `_last_checkpoint` pointer.
-    * The action JSON is produced by the SAME emitters as the commit
-    * path ([[deltaProtocolJson]]/[[deltaMetaDataJson]]/[[deltaAddJson]])
-    * and parsed into parquet rows through an explicit checkpoint
-    * schema, so checkpointed and replayed state cannot drift.
-    * Unexpired `remove` tombstones are CARRIED FORWARD (Delta spec:
-    * checkpoint state includes tombstones younger than
+  /** Delta-side checkpoint of the mirror at `deltaVersion`: the
+    * replayed log state ([[DeltaLog.replay]] pinned at that version)
+    * written as ONE classic `NNN.checkpoint.parquet` — the single-part
+    * layout every Delta reader parses — or, per
+    * [[TxTable.PropMirrorCheckpointFormat]], a v2 UUID manifest plus
+    * one `_sidecars/` parquet. Live `add` actions go in VERBATIM from
+    * the log with `dataChange=false` (their deletion-vector
+    * descriptors exist only there — the manifest holds native
+    * sidecars), next to the log's latest protocol (feature-monotone)
+    * and metaData. Unexpired `remove` tombstones are CARRIED FORWARD
+    * (Delta spec: checkpoint state includes tombstones younger than
+    * [[TxTable.PropMirrorTombstoneRetention]], default Delta's 7-day
     * `deletedFileRetentionDuration`, so a spec-strict reader's VACUUM
     * sees just-removed files even after pre-checkpoint commits are
-    * cleaned) — merged from the previous checkpoint's remove rows
-    * plus the JSON commits since it, minus expired and re-added paths
-    * ([[collectMirrorTombstones]]).
-    * Best-effort like the graft log's own [[writeCheckpoint]]: a
-    * failure only means readers replay more JSON commits — and since
-    * the Delta commit this checkpoint trails is already durably
-    * published, ANY failure here (not just IO: AnalysisException from
-    * the parquet write, the missing-part sys.error) must not fail
-    * mirrorToDelta → catch NonFatal, next call resumes from the
-    * anchor. */
+    * cleaned); a re-added path clears its tombstone in the replay.
+    *
+    * Returns true iff a readable checkpoint for `deltaVersion` exists
+    * afterwards (written here or by a racing mirror); only then does
+    * the `_last_checkpoint` pointer advance, and only then may the
+    * caller clean the log. Best-effort otherwise: the Delta commit
+    * this checkpoint trails is already durably published, so ANY
+    * failure here returns false — readers replay more JSON commits
+    * and the next interval tries again. */
   private def writeMirrorCheckpoint(dLogDir: Path, deltaVersion: Long,
-      m: Manifest, tableId: String): Unit = try {
+      m: Manifest): Boolean = try {
     import org.apache.spark.sql.types.{ArrayType, BooleanType, IntegerType,
       LongType, MapType, StringType => SStringType, StructField}
-    val st = replayMirrorState(dLogDir, deltaVersion, m)
+    val st = DeltaLog.replay(spark, root.toString, atVersion = Some(deltaVersion))
     // classic single-part (every reader, the default) or V2 (the
-    // 2024+ DBR writer default: UUID-named manifest + one sidecar
-    // under _sidecars/) per table property — a misconfigured value
-    // falls back to classic WITH a warning rather than silently never
-    // checkpointing (this whole method is best-effort; a raise here
-    // would be swallowed)
+    // 2024+ DBR writer default) per table property — a misconfigured
+    // value falls back to classic WITH a warning rather than silently
+    // never checkpointing
     val format = m.properties
       .getOrElse(TxTable.PropMirrorCheckpointFormat, "classic") match {
       case f @ ("classic" | "v2") => f
@@ -3975,24 +3875,29 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
         "classic"
     }
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    // file actions come VERBATIM from the log replay — an add's
-    // deletion-vector descriptor exists only there, never re-derivable
-    // from the manifest (which holds the native sidecar instead)
-    def fileActionLines: Seq[String] =
-      st.addLines ++
-        st.tombstones.map { case (p, ts, dc) =>
-          val n = om.createObjectNode()
-          val r = n.putObject("remove")
-          r.put("path", p) // already URL-encoded in the source action
-          r.put("deletionTimestamp", ts)
-          r.put("dataChange", dc)
-          om.writeValueAsString(n)
-        }
-    // likewise the checkpointed protocol is the log's LATEST protocol
-    // action (feature-monotone), not one re-implied from the manifest
-    val protocolLine = st.protocolJson.getOrElse(deltaProtocolJson(om, m))
-    val metaDataLine =
-      st.metaDataJson.getOrElse(deltaMetaDataJson(om, m, tableId))
+    val horizon = System.currentTimeMillis() -
+      m.properties.get(TxTable.PropMirrorTombstoneRetention)
+        .flatMap(_.toLongOption)
+        .getOrElse(TxTable.MirrorTombstoneRetentionDefaultMs)
+    val addLines = st.adds.values.map { a =>
+      val c = a.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+      c.put("dataChange", false)
+      actionLine(om, "add", c)
+    }.toSeq
+    val tombstoneLines = st.tombstones.collect {
+      case (p, (ts, dc)) if ts >= horizon =>
+        val n = om.createObjectNode()
+        val r = n.putObject("remove")
+        r.put("path", p) // already URL-encoded in the source action
+        r.put("deletionTimestamp", ts)
+        r.put("dataChange", dc)
+        om.writeValueAsString(n)
+    }.toSeq
+    val fileActionLines = addLines ++ tombstoneLines
+    val protocolLine = actionLine(om, "protocol", st.protocol.getOrElse(
+      sys.error(s"$root: mirror log carries no protocol")))
+    val metaDataLine = actionLine(om, "metaData", st.metaData.getOrElse(
+      sys.error(s"$root: mirror log carries no metaData")))
     val strMap = MapType(SStringType, SStringType, valueContainsNull = true)
     val protocolField = StructField("protocol", StructType(Seq(
       StructField("minReaderVersion", IntegerType),
@@ -4027,55 +3932,50 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
         StructField("deletionTimestamp", LongType),
         StructField("dataChange", BooleanType)))))
     // JSON-lines → explicit schema → ONE parquet file, renamed into
-    // place (UUID tmp dir; a racing writer's rename loses harmlessly)
+    // place (UUID tmp dir; a racing writer's rename loses harmlessly);
+    // true iff the file landed at `dst`
     def writeOneParquet(lines: Seq[String], schema: StructType,
         dst: Path): Boolean = {
       val ds = spark.createDataset(lines)(
         org.apache.spark.sql.Encoders.STRING)
       val tmpDir = new Path(root,
         s".tmp-delta-ckpt-${java.util.UUID.randomUUID()}")
-      spark.read.schema(schema).json(ds).coalesce(1)
-        .write.parquet(tmpDir.toString)
-      val part = fs.listStatus(tmpDir).map(_.getPath)
-        .find(p => p.getName.startsWith("part-") &&
-          p.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"$root: mirror checkpoint write produced " +
-          "no parquet part"))
-      val ok = fs.rename(part, dst)
-      fs.delete(tmpDir, true)
-      ok
+      try {
+        spark.read.schema(schema).json(ds).coalesce(1)
+          .write.parquet(tmpDir.toString)
+        fs.listStatus(tmpDir).map(_.getPath)
+          .find(p => p.getName.startsWith("part-") &&
+            p.getName.endsWith(".parquet"))
+          .exists(fs.rename(_, dst))
+      } finally { fs.delete(tmpDir, true); () }
     }
-    if (format == "classic") {
-      val dst = new Path(dLogDir, f"$deltaVersion%020d.checkpoint.parquet")
-      if (!fs.exists(dst)) {
-        writeOneParquet(
-          Seq(protocolLine, metaDataLine) ++
-            fileActionLines,
+    val landed =
+      if (format == "classic") {
+        val dst = new Path(dLogDir, f"$deltaVersion%020d.checkpoint.parquet")
+        fs.exists(dst) || writeOneParquet(
+          Seq(protocolLine, metaDataLine) ++ fileActionLines,
           StructType(Seq(protocolField, metaDataField) ++ fileActionFields),
           dst)
-        ()
-      }
-    } else {
-      // V2: file actions go to ONE sidecar parquet under _sidecars/
-      // (version-prefixed name so log cleaning can match it without
-      // reading the manifest back); the UUID-named manifest carries
-      // checkpointMetadata + protocol + metaData + the sidecar
-      // pointer. Sidecar lands BEFORE the manifest that names it —
-      // a crash between the two leaves an orphan sidecar (cleaned by
-      // retention), never a manifest naming a missing file.
-      val v2Pat = (f"$deltaVersion%020d" +
-        "\\.checkpoint\\.[A-Za-z0-9-]+\\.(parquet|json)").r
-      val already = fs.listStatus(dLogDir)
-        .exists(st => v2Pat.pattern.matcher(st.getPath.getName).matches)
-      if (!already) {
-        val uuid = java.util.UUID.randomUUID().toString
-        val scDir = new Path(dLogDir, "_sidecars")
-        fs.mkdirs(scDir)
-        val scName = f"$deltaVersion%020d-$uuid.parquet"
-        val scDst = new Path(scDir, scName)
-        if (writeOneParquet(fileActionLines,
-            StructType(fileActionFields), scDst)) {
-          val mfLines = {
+      } else {
+        // V2: file actions go to ONE sidecar parquet under _sidecars/
+        // (version-prefixed name so log cleaning can match it without
+        // reading the manifest back); the UUID-named manifest carries
+        // checkpointMetadata + protocol + metaData + the sidecar
+        // pointer. The sidecar lands BEFORE the manifest that names it
+        // — a crash between the two leaves an orphan sidecar (cleaned
+        // by retention), never a manifest naming a missing file.
+        val already = fs.listStatus(dLogDir).exists(s =>
+          s.getPath.getName match {
+            case DeltaLog.V2CheckpointName(v) => v.toLong == deltaVersion
+            case _                            => false
+          })
+        already || {
+          val uuid = java.util.UUID.randomUUID().toString
+          val scDir = new Path(dLogDir, "_sidecars")
+          val scName = f"$deltaVersion%020d-$uuid.parquet"
+          val scDst = new Path(scDir, scName)
+          fs.mkdirs(scDir) && writeOneParquet(fileActionLines,
+            StructType(fileActionFields), scDst) && {
             val cm = om.createObjectNode()
             cm.putObject("checkpointMetadata").put("version", deltaVersion)
             val sc = om.createObjectNode()
@@ -4084,202 +3984,69 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
             val scStatus = fs.getFileStatus(scDst)
             scN.put("sizeInBytes", scStatus.getLen)
             scN.put("modificationTime", scStatus.getModificationTime)
-            Seq(om.writeValueAsString(cm), protocolLine,
-              metaDataLine, om.writeValueAsString(sc))
+            val mfSchema = StructType(Seq(
+              StructField("checkpointMetadata", StructType(Seq(
+                StructField("version", LongType)))),
+              protocolField, metaDataField,
+              StructField("sidecar", StructType(Seq(
+                StructField("path", SStringType),
+                StructField("sizeInBytes", LongType),
+                StructField("modificationTime", LongType))))))
+            writeOneParquet(Seq(om.writeValueAsString(cm), protocolLine,
+                metaDataLine, om.writeValueAsString(sc)), mfSchema,
+              new Path(dLogDir, f"$deltaVersion%020d.checkpoint.$uuid.parquet"))
           }
-          val mfSchema = StructType(Seq(
-            StructField("checkpointMetadata", StructType(Seq(
-              StructField("version", LongType)))),
-            protocolField, metaDataField,
-            StructField("sidecar", StructType(Seq(
-              StructField("path", SStringType),
-              StructField("sizeInBytes", LongType),
-              StructField("modificationTime", LongType))))))
-          writeOneParquet(mfLines, mfSchema, new Path(dLogDir,
-            f"$deltaVersion%020d.checkpoint.$uuid.parquet"))
-          ()
         }
       }
-    }
     // the pointer advances monotonically, never regresses to an older
-    // checkpoint (two racing mirrors may checkpoint out of order)
-    val lastCp = new Path(dLogDir, "_last_checkpoint")
-    val om2 = new com.fasterxml.jackson.databind.ObjectMapper()
-    val existing: Long =
-      if (!fs.exists(lastCp)) -1L
-      else try {
-        val in = fs.open(lastCp)
-        val bytes = try org.apache.commons.io.IOUtils.toByteArray(in)
-          finally in.close()
-        om2.readTree(bytes).get("version").asLong()
-      } catch { case _: Exception => -1L }
-    if (deltaVersion > existing) {
-      val n = om2.createObjectNode()
+    // checkpoint (two racing mirrors may checkpoint out of order); an
+    // unreadable pointer is overwritten
+    if (landed && scala.util.Try(DeltaLog.checkpointPointer(fs, dLogDir))
+        .toOption.flatten.forall(_._1 < deltaVersion)) {
+      val n = om.createObjectNode()
       n.put("version", deltaVersion)
-      n.put("size", 2L + st.addLines.size + st.tombstones.size)
-      val out = fs.create(lastCp, true)
-      try out.write(om2.writeValueAsString(n)
+      n.put("size", 2L + fileActionLines.size)
+      val out = fs.create(new Path(dLogDir, "_last_checkpoint"), true)
+      try out.write(om.writeValueAsString(n)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
     }
-  } catch { case scala.util.control.NonFatal(_) => () }
+    landed
+  } catch { case scala.util.control.NonFatal(_) => false }
 
-  /** Log-REPLAYED checkpoint state of the mirror at `deltaVersion`:
-    * live `add` actions verbatim from the Delta log itself
-    * (`dataChange` normalized to false per the checkpoint spec),
-    * the latest `protocol`/`metaData` actions seen, and unexpired
-    * `remove` tombstones. Verbatim replay (previous checkpoint rows
-    * via `toJSON`, then the JSON commits since) instead of
-    * re-deriving adds from the manifest matters for two reasons: the
-    * adds now carry DELETION-VECTOR descriptors only the log knows
-    * (the manifest holds native sidecars, not the mirrored Delta
-    * descriptors), and the checkpointed protocol must be the log's
-    * ACTUAL protocol — feature-monotone — not one re-implied from a
-    * possibly-purged manifest. Tombstone semantics: a later `remove`
-    * supersedes, a later `add` (re-added file) clears the tombstone
-    * so VACUUM can never delete a live file; expired entries (older
-    * than [[TxTable.PropMirrorTombstoneRetention]], default Delta's
-    * 7-day `deletedFileRetentionDuration`) drop. Cost: one
-    * checkpoint-sized parquet read + at most
-    * [[TxTable.CheckpointInterval]] small JSON commits — bounded,
-    * driver-side. */
-  private def replayMirrorState(dLogDir: Path, deltaVersion: Long,
-      m: Manifest): TxTable.MirrorReplay = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    // classic `NNN.checkpoint.parquet` or v2 `NNN.checkpoint.<uuid>.parquet`
-    val cpName = """(\d{20})\.checkpoint(?:\.[A-Za-z0-9-]+)?\.parquet""".r
-    val prevCp: Long = fs.listStatus(dLogDir).map(_.getPath.getName)
-      .collect { case cpName(v) if v.toLong < deltaVersion => v.toLong }
-      .sorted.lastOption.getOrElse(-1L)
-    val liveAdds = scala.collection.mutable.LinkedHashMap[
-      String, com.fasterxml.jackson.databind.JsonNode]()
-    val acc = scala.collection.mutable.LinkedHashMap[String, (Long, Boolean)]()
-    var proto: Option[com.fasterxml.jackson.databind.JsonNode] = None
-    var meta: Option[com.fasterxml.jackson.databind.JsonNode] = None
-    // reconciliation is order-independent WITHIN a version: collect
-    // per batch, apply removes first, adds second (the DV re-add
-    // shape must resolve to the add whatever the writer's line order)
-    def applyBatch(ls: Seq[com.fasterxml.jackson.databind.JsonNode],
-        fromCheckpoint: Boolean): Unit = {
-      ls.foreach { n =>
-        Option(n.get("protocol")).filterNot(_.isNull)
-          .foreach(p => proto = Some(p))
-        Option(n.get("metaData")).filterNot(_.isNull)
-          .foreach(p => meta = Some(p))
-      }
-      ls.foreach(n => Option(n.get("remove")).filterNot(_.isNull).foreach { r =>
-        val p = r.get("path").asText()
-        // checkpoint remove rows are vacuum TOMBSTONES, not state —
-        // they never drop a live add absorbed from the same checkpoint
-        if (!fromCheckpoint) { liveAdds.remove(p); () }
-        acc(p) =
-          (Option(r.get("deletionTimestamp")).map(_.asLong).getOrElse(0L),
-            Option(r.get("dataChange")).exists(_.asBoolean))
-      })
-      ls.foreach(n => Option(n.get("add")).filterNot(_.isNull).foreach { a =>
-        liveAdds(a.get("path").asText()) = a
-        acc.remove(a.get("path").asText()); ()
-      })
-    }
-    if (prevCp >= 0) checkpointParquets(dLogDir, prevCp).foreach { p =>
-      applyBatch(spark.read.parquet(p.toString).toJSON.collect()
-        .toIndexedSeq.map(om.readTree), fromCheckpoint = true)
-    }
-    ((prevCp max 0L) to deltaVersion).foreach { v =>
-      val p = new Path(dLogDir, f"$v%020d.json")
-      if (fs.exists(p)) {
-        val in = fs.open(p)
-        val txt = try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-        applyBatch(txt.split('\n').iterator.filter(_.nonEmpty)
-          .map(om.readTree).toIndexedSeq, fromCheckpoint = false)
-      }
-    }
-    val horizon = System.currentTimeMillis() -
-      m.properties.get(TxTable.PropMirrorTombstoneRetention)
-        .flatMap(_.toLongOption)
-        .getOrElse(TxTable.MirrorTombstoneRetentionDefaultMs)
-    val addLines = liveAdds.values.map { a =>
-      val c = a.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-      c.put("dataChange", false)
-      val w = om.createObjectNode(); w.set("add", c)
-      om.writeValueAsString(w): String
-    }.toSeq
-    def wrap(key: String,
-        n: Option[com.fasterxml.jackson.databind.JsonNode]): Option[String] =
-      n.map { v =>
-        val w = om.createObjectNode(); w.set(key, v)
-        om.writeValueAsString(w)
-      }
-    TxTable.MirrorReplay(addLines,
-      acc.iterator.collect {
-        case (p, (ts, dc)) if ts >= horizon && !liveAdds.contains(p) =>
-          (p, ts, dc)
-      }.toSeq,
-      wrap("protocol", proto), wrap("metaData", meta))
+  /** One Delta log line wrapping an action body: `{"<kind>": body}`. */
+  private def actionLine(om: com.fasterxml.jackson.databind.ObjectMapper,
+      kind: String, body: com.fasterxml.jackson.databind.JsonNode): String = {
+    val w = om.createObjectNode(); w.set(kind, body)
+    om.writeValueAsString(w)
   }
 
   /** Mirror-log retention (the `delta.logRetentionDuration`
     * equivalent): delete pre-checkpoint commits and superseded
     * checkpoints older than the horizon. Only versions STRICTLY below
-    * the just-written checkpoint are candidates, so the reader's
+    * the just-landed checkpoint are candidates, so the reader's
     * contiguity invariant (first post-checkpoint commit =
     * checkpoint + 1) and the mirror's own anchor discovery (the
     * newest JSON commit) survive any cleaning schedule. */
   private def cleanMirrorLog(dLogDir: Path, cpVersion: Long,
       retentionMs: Long): Unit = try {
     val horizon = System.currentTimeMillis() - retentionMs
-    val cleanable =
-      """(\d{20})\.(?:json|checkpoint\.parquet|checkpoint\.[A-Za-z0-9-]+\.(?:parquet|json))""".r
-    fs.listStatus(dLogDir).foreach { st =>
-      st.getPath.getName match {
-        case cleanable(v) if v.toLong < cpVersion &&
-            st.getModificationTime < horizon =>
+    def clean(dir: Path, versionOf: String => Option[Long]): Unit =
+      fs.listStatus(dir).foreach { st =>
+        if (versionOf(st.getPath.getName).exists(_ < cpVersion) &&
+            st.getModificationTime < horizon) {
           fs.delete(st.getPath, false); ()
-        case _ => ()
+        }
       }
-    }
+    clean(dLogDir, DeltaLog.logFileVersion)
     // v2 sidecars carry their version as a name prefix precisely so
     // retention can clean them without reading superseded manifests
     val scDir = new Path(dLogDir, "_sidecars")
     if (fs.exists(scDir)) {
-      val scCleanable = """(\d{20})-.*\.parquet""".r
-      fs.listStatus(scDir).foreach { st =>
-        st.getPath.getName match {
-          case scCleanable(v) if v.toLong < cpVersion &&
-              st.getModificationTime < horizon =>
-            fs.delete(st.getPath, false); ()
-          case _ => ()
-        }
-      }
+      val scName = """(\d{20})-.*\.parquet""".r
+      clean(scDir, { case scName(v) => Some(v.toLong); case _ => None })
     }
   } catch { case scala.util.control.NonFatal(_) => () }
-
-  /** The parquet file(s) holding checkpoint `version`'s action rows:
-    * the classic single-part file, or (v2) the first UUID manifest
-    * plus the sidecars it names — the same resolution order as
-    * [[DeltaLog.snapshot]]. */
-  private def checkpointParquets(dLogDir: Path, version: Long): Seq[Path] = {
-    val classic = new Path(dLogDir, f"$version%020d.checkpoint.parquet")
-    if (fs.exists(classic)) Seq(classic)
-    else {
-      val v2Pat = (f"$version%020d" +
-        "\\.checkpoint\\.[A-Za-z0-9-]+\\.parquet").r
-      fs.listStatus(dLogDir).map(_.getPath)
-        .filter(p => v2Pat.pattern.matcher(p.getName).matches)
-        .sortBy(_.getName).headOption.toSeq.flatMap { mf =>
-          val cp = spark.read.parquet(mf.toString)
-          val sidecars =
-            if (!cp.columns.contains("sidecar")) Nil
-            else cp.where(col("sidecar").isNotNull)
-              .select(col("sidecar.path")).collect()
-              .map(r => new Path(new Path(dLogDir, "_sidecars"),
-                r.getString(0))).toSeq
-          mf +: sidecars
-        }
-    }
-  }
 
   private def commitClone(src: Manifest, files: Seq[FileEntry]): Long =
     commit { latest =>
@@ -5574,13 +5341,6 @@ object TxTable {
   /** A discovery row's full data-file metadata path (the raw URI the
     * DV key is extracted from). */
   private val DvFileCol = "__dv_file"
-
-  /** Replayed mirror-checkpoint state: live add lines (verbatim,
-    * dataChange=false), unexpired tombstones, and the log's latest
-    * protocol/metaData action lines. */
-  private[core] final case class MirrorReplay(addLines: Seq[String],
-      tombstones: Seq[(String, Long, Boolean)],
-      protocolJson: Option[String], metaDataJson: Option[String])
 
   /** Clause-merge source namespace: inside [[TxTable.mergeClauses]]
     * the source's columns are renamed under this prefix before the

@@ -90,18 +90,7 @@ object Dedup {
   private[ops] def cappedBucketPairs(buckets0: DataFrame,
       maxBucket: Option[Int], metric: String,
       aName: String, bName: String): DataFrame = {
-    val buckets = maxBucket match {
-      case Some(cap) =>
-        buckets0
-          .observe(s"${metric}_gt$cap",
-            sum(when(size(col("ids")) > cap, 1L).otherwise(0L))
-              .as("dropped_buckets"),
-            coalesce(sum(when(size(col("ids")) > cap,
-              size(col("ids")).cast("long"))), lit(0L))
-              .as("dropped_postings"))
-          .where(size(col("ids")) <= cap)
-      case None => buckets0
-    }
+    val buckets = capBuckets(buckets0, maxBucket, metric)
     // pair emission via the codegen'd one-call kernel (round 16): the
     // nested `transform(ids, (x, i) -> transform(slice(...), y ->
     // struct(least, greatest)))` ran INTERPRETED (HOFs don't codegen)
@@ -119,6 +108,40 @@ object Dedup {
         .bucketPairs(col("ids"))).as("p"))
       .select(col("p.a").as(aName), col("p.b").as(bName))
       .distinct()
+  }
+
+  /** The df-cap on a posting-list frame (`ids` per bucket): buckets
+    * above the cap are dropped with an observe()d count of the
+    * dropped buckets and postings (no silent caps). */
+  private def capBuckets(buckets0: DataFrame, maxBucket: Option[Int],
+      metric: String): DataFrame = maxBucket match {
+    case Some(cap) =>
+      buckets0
+        .observe(s"${metric}_gt$cap",
+          sum(when(size(col("ids")) > cap, 1L).otherwise(0L))
+            .as("dropped_buckets"),
+          coalesce(sum(when(size(col("ids")) > cap,
+            size(col("ids")).cast("long"))), lit(0L))
+            .as("dropped_postings"))
+        .where(size(col("ids")) <= cap)
+    case None => buckets0
+  }
+
+  /** The df-cap on (band, band_hash) signature postings — shared by
+    * the index build and the probe's own batch: bands held by more
+    * than the cap's docs are anti-joined away with an observe()d count
+    * of the dropped bands and postings. */
+  private def dropHotBands(banded: DataFrame, maxBucket: Option[Int],
+      metric: String): DataFrame = maxBucket match {
+    case Some(cap) =>
+      val hot = banded.groupBy("band", "band_hash")
+        .agg(count(lit(1)).as("df")).where(col("df") > cap)
+        .observe(s"${metric}_gt$cap",
+          count(lit(1)).as("dropped_bands"),
+          coalesce(sum(col("df")), lit(0L)).as("dropped_postings"))
+        .select("band", "band_hash")
+      banded.join(hot, Seq("band", "band_hash"), "left_anti")
+    case None => banded
   }
 
   private def jaccardVerify(cand: DataFrame, withSh: DataFrame,
@@ -266,18 +289,8 @@ object Dedup {
     val withSh = docs
       .where(size(split(col("text"), " ")) >= n)
       .select(col("doc_id"), hashedShingles(col("text"), n).as("sh"))
-    val banded0 = signatureRows(withSh, numHashes, bands, nBuckets)
-    val banded = maxBucket match {
-      case Some(cap) =>
-        val hot = banded0.groupBy("band", "band_hash")
-          .agg(count(lit(1)).as("df")).where(col("df") > cap)
-          .observe(s"graft_sigindex_hot_bands_gt$cap",
-            count(lit(1)).as("dropped_bands"),
-            coalesce(sum(col("df")), lit(0L)).as("dropped_postings"))
-          .select("band", "band_hash")
-        banded0.join(hot, Seq("band", "band_hash"), "left_anti")
-      case None => banded0
-    }
+    val banded = dropHotBands(signatureRows(withSh, numHashes, bands, nBuckets),
+      maxBucket, "graft_sigindex_hot_bands")
     banded.repartition(nBuckets, col("bucket"))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$dir/sigs")
@@ -321,17 +334,8 @@ object Dedup {
     // the new×new side exactly the quadratic candidate blow-up the cap
     // prevents at build time — and make incremental results diverge
     // from a capped full recompute
-    val probe = (idx.maxBucket match {
-      case Some(cap) =>
-        val hot = probe0.groupBy("band", "band_hash")
-          .agg(count(lit(1)).as("df")).where(col("df") > cap)
-          .observe(s"graft_sigprobe_hot_bands_gt$cap",
-            count(lit(1)).as("dropped_bands"),
-            coalesce(sum(col("df")), lit(0L)).as("dropped_postings"))
-          .select("band", "band_hash")
-        probe0.join(hot, Seq("band", "band_hash"), "left_anti")
-      case None => probe0
-    }).localCheckpoint(true) // reused: bucket collect + two join sides
+    val probe = dropHotBands(probe0, idx.maxBucket, "graft_sigprobe_hot_bands")
+      .localCheckpoint(true) // reused: bucket collect + two join sides
     val probedBuckets = probe.select("bucket").distinct()
       .collect().map(_.getInt(0)).toSeq // bounded by nBuckets
     val indexed = spark.read
@@ -393,19 +397,11 @@ object Dedup {
     // fingerprint pipeline on both sides and shuffle doc rows twice).
     // The 8-byte fingerprint rides along in the bucket, so exact
     // Hamming verification happens inline with no re-join.
-    val buckets0 = banded
-      .groupBy("chunk", "chunk_val")
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("fp")))).as("ids"))
-      .where(size(col("ids")) > 1)
-    val buckets = maxBucket match { // df-cap, see [[DefaultMaxDocFreq]]
-      case Some(cap) =>
-        buckets0
-          .observe(s"graft_c3_hot_buckets_gt$cap",
-            sum(when(size(col("ids")) > cap, 1L).otherwise(0L))
-              .as("dropped_buckets"))
-          .where(size(col("ids")) <= cap)
-      case None => buckets0
-    }
+    val buckets = capBuckets( // df-cap, see [[DefaultMaxDocFreq]]
+      banded.groupBy("chunk", "chunk_val")
+        .agg(sort_array(collect_list(struct(col("doc_id"), col("fp")))).as("ids"))
+        .where(size(col("ids")) > 1),
+      maxBucket, "graft_c3_hot_buckets")
     buckets
       .select(explode(flatten(transform(col("ids"), (x, i) =>
         transform(slice(col("ids"), i + lit(2), size(col("ids")) - i - 1),

@@ -154,8 +154,9 @@ object Sketches {
     * q25 — the guide-§5 whole-column-in-one-buffer shape: at scale
     * each group's aggregation buffer IS the group's column).
     *
-    * Returns one row per (group, quantile): `(groupCol, quantile,
-    * exact)`. Same mechanics as the t18 twin, with every table keyed
+    * Returns one row per (group, distinct quantile): `(groupCol,
+    * quantile, exact)`, `exact` null for a group whose values are all
+    * null (as `percentile()` returns). Same mechanics as the t18 twin, with every table keyed
     * by the group:
     *   1. log-γ bins per (group, value) — one map-side-partial pass;
     *      the FULL real line is covered (monotone encoding: negatives
@@ -192,17 +193,22 @@ object Sketches {
       when(x > 0.0, ceil(log(x) / lit(lgGamma)).cast("long"))
         .when(x === 0.0, lit(zeroBin))
         .otherwise(lit(negBase) - ceil(log(-x) / lit(lgGamma)).cast("long"))
-    // percentile() ignores nulls — the population here must too
+    // percentile() ignores nulls — the population here must too; a
+    // null value bins as null, so a group with ONLY nulls keeps one
+    // (group, null) bin and leaves the total with a null count
     val pop = df.where(v.isNotNull).select(g.as("__g"), v.as("__x"))
-    val bins = pop.select(col("__g"), binOf(col("__x")).as("__bin"))
+    val bins = df.select(g.as("__g"), binOf(v).as("__bin"))
       .groupBy("__g", "__bin").agg(count(lit(1)).as("__cnt"))
-    val cum = bins.withColumn("__cum",
+    val cum = bins.where(col("__bin").isNotNull).withColumn("__cum",
       sum("__cnt").over(Window.partitionBy("__g").orderBy("__bin")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val total = bins.groupBy("__g").agg(sum("__cnt").as("__n"))
+    val total = bins.groupBy("__g")
+      .agg(sum(when(col("__bin").isNotNull, col("__cnt"))).as("__n"))
+    // each quantile ranked once: a repeated q would double the
+    // candidate rows of its bin and shift the in-bin pick
     val qdf = df.sparkSession.range(1).select(
-      explode(array(qs.map(lit): _*)).as("__q"))
-    val ranks = total.crossJoin(broadcast(qdf))
+      explode(array(qs.distinct.map(lit): _*)).as("__q"))
+    val ranks = total.where(col("__n").isNotNull).crossJoin(broadcast(qdf))
       .select(col("__g"), col("__q"),
         (col("__q") * (col("__n") - 1).cast("double")).as("__pos"))
       .select(col("__g"), col("__q"), col("__pos"),
@@ -228,10 +234,15 @@ object Sketches {
       .groupBy("__g", "__q", "__pos")
       .agg(min(when(col("__side") === 0, col("__x"))).as("__xlo"),
         min(when(col("__side") === 1, col("__x"))).as("__xhi"))
+    // all-null groups: percentile() returns null for them
+    val allNull = total.where(col("__n").isNull).crossJoin(broadcast(qdf))
+      .select(col("__g").as(groupCol), col("__q").as("quantile"),
+        lit(null).cast("double").as("exact"))
     picked.select(col("__g").as(groupCol), col("__q").as("quantile"),
       when(ceil(col("__pos")) === floor(col("__pos")), col("__xlo"))
         .otherwise((ceil(col("__pos")) - col("__pos")) * col("__xlo") +
           (col("__pos") - floor(col("__pos"))) * col("__xhi")).as("exact"))
+      .unionByName(allNull)
   }
 
   /** Raw DDSketch (bin → count) for a column — the mergeable state

@@ -79,6 +79,17 @@ class DeltaInteropSpec extends SparkSpec {
     val want = orders.where(col("o_orderkey") % 3 =!= 1)
     assert(got.count() == want.count())
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    // the log's URL-encoded path spelling is the one identity across
+    // add and remove: removing "part%20d.parquet" drops the file
+    val d = DeltaFixture.writeData(spark, orders.limit(5), dir, "part d.parquet")
+    DeltaFixture.commit(spark, dir, 2,
+      Seq(DeltaFixture.addJson(d.copy(relPath = "part%20d.parquet"))))
+    assert(DeltaLog.snapshot(spark, dir).adds.map(_.path) ==
+      Seq("part d.parquet", "part-a.parquet", "part-c.parquet"))
+    DeltaFixture.commit(spark, dir, 3,
+      Seq(DeltaFixture.removeJson("part%20d.parquet")))
+    assert(DeltaLog.snapshot(spark, dir).adds.map(_.path) ==
+      Seq("part-a.parquet", "part-c.parquet"))
   }
 
   test("checkpointed log: base state from parquet, JSON commits replay on top; aged-out JSON tolerated") {
@@ -1621,6 +1632,34 @@ class DeltaInteropSpec extends SparkSpec {
       protoRow(0).getSeq[String](1).contains("v2Checkpoint"),
       s"checkpointed protocol must advertise v2Checkpoint: " +
         s"${protoRow.toSeq}")
+  }
+
+  test("a mirror checkpoint that fails to land neither moves " +
+      "_last_checkpoint nor lets retention clean the commits it would " +
+      "have replaced") {
+    val fs = new org.apache.hadoop.fs.Path("/tmp")
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val d = scratch("mirror_cpfail")
+    val t = TxTable(spark, d)
+    t.overwrite(orders.where(col("o_orderkey") % 4 === 0))       // g0
+    t.setProperties(Map(
+      TxTable.PropMirrorCheckpointFormat -> "v2",
+      TxTable.PropMirrorLogRetention -> "0"))                    // g1
+    assert(t.mirrorToDelta() == 0L)
+    // a plain file where the sidecar directory belongs: the v2
+    // checkpoint at Delta v10 cannot write its sidecar
+    val out = fs.create(new org.apache.hadoop.fs.Path(d, "_delta_log/_sidecars"))
+    out.close()
+    for (i <- 1 to 10) {                                         // v1..v10
+      t.append(orders.where(col("o_orderkey") % 97 === i))
+      t.mirrorToDelta()
+    }
+    assert(t.mirrorToDelta() == 10L)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(d, "_delta_log/_last_checkpoint")))
+    val snap = DeltaLog.snapshot(spark, d)
+    assert(snap.version == 10L)
+    val got = DeltaLog.read(spark, d)
+    assert(got.exceptAll(t.read()).isEmpty && t.read().exceptAll(got).isEmpty)
   }
 
   test("late v2-checkpoint opt-in on a live classic mirror: the NEXT " +

@@ -82,14 +82,21 @@ class SketchesSpec extends SparkSpec {
   test("groupedPercentiles ≡ percentile() per group bit-for-bit " +
       "(round-16 grouped bin-bounded order statistics — the q25 rewrite)") {
     import spark.implicits._
-    val qs = Seq(0.1, 0.25, 0.5, 0.9, 0.99)
-    def check(df: org.apache.spark.sql.DataFrame, label: String): Unit = {
-      val got = Sketches.groupedPercentiles(df, "g", "x", qs).collect()
-        .map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
-      val want = df.where(col("x").isNotNull).groupBy("g")
-        .agg(expr(s"percentile(x, array(${qs.mkString(", ")}))").as("ex"))
+    def check(df: org.apache.spark.sql.DataFrame, label: String,
+        qs: Seq[Double] = Seq(0.1, 0.25, 0.5, 0.9, 0.99)): Unit = {
+      val rows = Sketches.groupedPercentiles(df, "g", "x", qs).collect()
+      val got = rows.map(r => (r.getString(0), r.getDouble(1)) ->
+        Option(r.get(2)).map(_.asInstanceOf[Double])).toMap
+      assert(got.size == rows.length, s"$label: one row per (group, q)")
+      // percentile() per scalar q, nulls included: an all-null group
+      // yields null
+      val dq = qs.distinct
+      val want = df.groupBy("g")
+        .agg(expr(s"array(${dq.map(q => s"percentile(x, $q)").mkString(", ")})")
+          .as("ex"))
         .select(col("g"), posexplode(col("ex"))).collect()
-        .map(r => (r.getString(0), qs(r.getInt(1))) -> r.getDouble(2)).toMap
+        .map(r => (r.getString(0), dq(r.getInt(1))) ->
+          Option(r.get(2)).map(_.asInstanceOf[Double])).toMap
       assert(got == want, s"$label: $got vs $want")
     }
     // shapes per group: long tail, duplicate masses, NEGATIVES and
@@ -104,6 +111,11 @@ class SketchesSpec extends SparkSpec {
         ("three", 3.0), ("three", 1.0), ("three", 2.0)) ++
       (0 until 11).map(i => ("intpos", i + 0.5))
     check(planted.toDF("g", "x"), "planted")
+    // a repeated quantile and an all-null group
+    val edge = (0 to 10).map(i => ("a", Option(100.0 + i / 100.0))) ++
+      Seq.fill(4)(("b", Option.empty[Double]))
+    check(edge.toDF("g", "x"), "duplicate q, all-null group",
+      Seq(0.3, 0.5, 0.5))
     // the q25 fixture shape itself
     val base = graft.core.Tables.orders(spark, sf)
       .join(broadcast(graft.core.Tables.customer(spark, sf)
