@@ -506,11 +506,21 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
 
   /** The table's CHECK constraints (name → SQL condition), persisted
     * as `graft.constraints.<name>` properties. */
-  def constraints: Map[String, String] =
-    properties.collect {
+  def constraints: Map[String, String] = invariantsOf(properties)._1
+
+  /** The write invariants `props` carries: CHECK constraints (name →
+    * condition, `graft.constraints.*`) and NOT NULL columns
+    * (`graft.notNull.*`) — what every write enforces, and what a
+    * racing commit may not change under a rebased one. */
+  private def invariantsOf(props: Map[String, String])
+      : (Map[String, String], Set[String]) =
+    (props.collect {
       case (k, v) if k.startsWith(TxTable.PropConstraintPrefix) =>
         k.stripPrefix(TxTable.PropConstraintPrefix) -> v
-    }
+    }, props.keySet.collect {
+      case k if k.startsWith(TxTable.PropNotNullPrefix) =>
+        k.stripPrefix(TxTable.PropNotNullPrefix)
+    })
 
   /** `ALTER TABLE ... ADD CONSTRAINT name CHECK (cond)` — persists the
     * condition as a table property after verifying EVERY existing row
@@ -544,11 +554,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
 
   /** Columns carrying a NOT NULL invariant (persisted as
     * `graft.notNull.<col>` properties — the CHECK discipline). */
-  def notNullColumns: Seq[String] =
-    properties.keys.collect {
-      case k if k.startsWith(TxTable.PropNotNullPrefix) =>
-        k.stripPrefix(TxTable.PropNotNullPrefix)
-    }.toSeq.sorted
+  def notNullColumns: Seq[String] = invariantsOf(properties)._2.toSeq.sorted
 
   /** `ALTER TABLE ... ALTER COLUMN col SET NOT NULL` — verifies no
     * existing row is null (one scan, refused otherwise — the Delta
@@ -1985,35 +1991,21 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     * handle when the feed may reset instead). */
   def deletePartitions(pred: Map[String, String] => Boolean,
       txn: Option[(String, Long)] = None): Long = {
-    val v = latestVersion.getOrElse(sys.error(s"$root has no committed snapshots"))
-    val m = manifest(v)
+    val m = latestManifest
     require(m.partitionCols.nonEmpty, s"$root is not partitioned")
-    val matching = m.files.filter(f => pred(f.partition)).map(_.path).toSet
+    val dropped = m.files.filter(f => pred(f.partition))
     val cdcFiles: Option[Seq[FileEntry]] =
       if (!effCdf(m)) None
-      else {
-        val dropped = m.files.filter(f => pred(f.partition))
-        if (dropped.isEmpty) Some(Nil) // CDF commit that changed nothing
-        else Some(writeDataFiles(
-          readEntries(m, dropped).withColumn(ChangeTypeCol,
-            org.apache.spark.sql.functions.lit("delete")),
-          Nil, withStats = false, enforce = false)._1)
-      }
-    commit { latest =>
-      val cur = latest.getOrElse(
-        sys.error(s"$root vanished during deletePartitions — rerun"))
-      // auto-rebase like merge: a racing commit is harmless iff the
-      // MATCHING file set is unchanged (same files drop, the CDC
-      // capture stays exact) — re-apply the predicate to the current
-      // snapshot and publish; a changed match set is a real conflict
-      val curMatching = cur.files.filter(f => pred(f.partition)).map(_.path).toSet
-      require(cur.version == m.version ||
-        (cur.schemaDdl == m.schemaDdl && curMatching == matching),
-        s"concurrent commit changed partitions being deleted from $root — " +
-          "rerun deletePartitions")
-      Pending(OpDelete, cur.files.filterNot(f => pred(f.partition)),
-        m.schemaDdl, m.partitionCols, m.bucketSpec, txn, cdcFiles)
-    }
+      else if (dropped.isEmpty) Some(Nil) // CDF commit that changed nothing
+      else Some(writeDataFiles(
+        readEntries(m, dropped).withColumn(ChangeTypeCol,
+          org.apache.spark.sql.functions.lit("delete")),
+        Nil, withStats = false, enforce = false)._1)
+    // a racing commit rebases iff the dropped entries are unchanged (a
+    // re-tag would make the CDC capture count its rows twice) and it
+    // added nothing to a matching partition
+    commitRowLevel(OpDelete, m, dropped, Nil, m.schemaDdl, txn, cdcFiles,
+      f => pred(f.partition))
   }
 
   /** Row-level DELETE by PREDICATE, copy-on-write at file granularity
@@ -2040,7 +2032,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
   def deleteWhere(cond: Column): Long =
     if (latestVersion.map(v => effDv(manifest(v))).getOrElse(deletionVectors))
       deleteWhereMoR(cond)
-    else rewriteWhere(OpDelete, cond)(matching => matching.limit(0))
+    else rewriteWhere(OpDelete, latestManifest, cond)(_.limit(0))
 
   /** Merge-on-read DELETE (the `deletionVectors=true` handle path):
     * the same three-step planning as the copy-on-write delete, but
@@ -2210,7 +2202,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     require(set.nonEmpty, "updateWhere needs at least one SET column")
     if (latestVersion.map(v => effDv(manifest(v))).getOrElse(deletionVectors))
       return updateWhereMoR(cond, set)
-    rewriteWhere(OpUpdate, cond) { matching =>
+    rewriteWhere(OpUpdate, latestManifest, cond) { matching =>
       val fields = matching.schema.fieldNames
       val resolved = set.map { case (k, v) =>
         fields.find(_.equalsIgnoreCase(k)).getOrElse(
@@ -2228,63 +2220,70 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     * commit, so readers never see the in-between state. Every
     * incoming row is REQUIRED to satisfy the predicate (the Delta
     * rule: otherwise "replace partition X" could silently write into
-    * partition Y); subset-schema sources null-fill like append. The
+    * partition Y); subset-schema sources null-fill like append, and
+    * an omitted identity column mints. The source lands as its own
+    * files in the table's layout — the ONE evaluation the predicate
+    * guard, the commit and the CDC insert images all read. The
     * planning, zone-map candidate pruning, CDC capture (delete +
     * insert images), and auto-rebase all come from the shared
     * predicate-rewrite core. */
   def replaceWhere(source: DataFrame, cond: Column): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit => flit, not}
-    // pin ONE evaluation (the merge discipline): the source feeds the
-    // predicate guard, the data write, AND the CDC insert images — a
-    // non-deterministic source re-evaluated between them could commit
-    // rows outside the predicate or CDC images that mismatch the data
-    val pinned = source.localCheckpoint(true)
-    try {
-      val offending = pinned.where(not(coalesce(cond, flit(false))))
-        .limit(1).count()
-      require(offending == 0,
-        s"$root: every replaceWhere source row must satisfy the " +
-          "predicate — found rows outside it (write them with append)")
-      rewriteWhere(OpReplace, cond, Some(pinned))(matching => matching.limit(0))
-    } finally { pinned.unpersist(); () }
+    val m = latestManifest
+    requireCompatible(StructType.fromDDL(m.schemaDdl), source.schema,
+      allowNew = false)
+    rewriteWhere(OpReplace, m, cond, writeDataFiles(
+      m.bucketSpec.map(bucketedWriteFrame(source, _)).getOrElse(source),
+      m.partitionCols)._1)(_.limit(0))
   }
 
+  private def latestManifest: Manifest =
+    manifest(latestVersion.getOrElse(
+      sys.error(s"$root has no committed snapshots")))
+
   /** Shared copy-on-write core of [[deleteWhere]], [[updateWhere]] and
-    * [[replaceWhere]]: `replaceMatching` maps the matching rows of the
+    * [[replaceWhere]] (driver-side and native), planned against
+    * snapshot `m`: `replaceMatching` maps the matching rows of the
     * affected files to their replacement (empty for delete, reassigned
-    * for update); non-matching rows of those files are kept verbatim,
-    * and `insert` rows land in the same commit. The zone-map candidate
+    * for update); non-matching rows of those files are kept verbatim.
+    * A replace lands the already-written `insert` entries in the same
+    * commit, every row of which must satisfy `cond`. `insert` is
+    * produced AFTER the survivor rewrite: a write that mints identity
+    * values must be the last enforcing write before the commit, whose
+    * concurrent-identity check reads that mint. The zone-map candidate
     * test that plans the rewrite is also its may-match test for files
     * a racing commit adds (a predicate with no extractable constraints
     * conservatively matches ANY added file). */
-  private def rewriteWhere(op: String, cond: Column,
-      insert: Option[DataFrame] = None)(
+  private def rewriteWhere(op: String, m: Manifest, cond: Column,
+      insert: => Seq[FileEntry] = Nil)(
       replaceMatching: DataFrame => DataFrame): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit => flit, not}
-    val v = latestVersion.getOrElse(
-      sys.error(s"$root has no committed snapshots"))
-    val m = manifest(v)
     val schema = StructType.fromDDL(m.schemaDdl)
     val hit = coalesce(cond, flit(false)) // NULL predicate keeps the row
     val candidate = candidateFilter(schema,
       analyzedPredicate(schema, cond).toSeq, physNameOf(m, _))
     val affected = filesHolding(m, m.files.filter(candidate))(_.where(hit))
-    // zero matches: no commit at all — unless an insert side makes
-    // this a replaceWhere, which must still land its rows
-    if (affected.isEmpty && insert.isEmpty) return v
-    insert.foreach { i =>
-      requireCompatible(schema, i.schema, allowNew = false) }
+    // zero matches: no commit at all — unless this is a replace,
+    // which must still land its rows
+    if (affected.isEmpty && op != OpReplace) return m.version
     val existing = readEntries(m, affected)
     val matching = existing.where(hit)
     val replaced = replaceMatching(matching)
     requireRewriteSchema(op, m, replaced.schema, allowNew = false)
-    val newRows = insert.foldLeft(
-      existing.where(not(hit)).unionByName(replaced))(
-      (acc, i) => acc.unionByName(i, allowMissingColumns = true))
-    val data = m.bucketSpec.map(bucketedWriteFrame(newRows, _)).getOrElse(newRows)
-    val (files, _) = writeDataFiles(data, m.partitionCols)
+    val files =
+      if (affected.isEmpty) Nil
+      else {
+        val newRows = existing.where(not(hit)).unionByName(replaced)
+        writeDataFiles(m.bucketSpec.map(bucketedWriteFrame(newRows, _))
+          .getOrElse(newRows), m.partitionCols)._1
+      }
+    val inserted = insert
+    val insertedRows = readEntries(m, inserted)
+    require(inserted.isEmpty ||
+      insertedRows.where(not(hit)).limit(1).count() == 0,
+      s"$root: every replaceWhere source row must satisfy the " +
+        "predicate — found rows outside it (write them with append)")
     // CDC: deterministic re-reads of immutable parquet — the captured
-    // rows are exactly what the rewrite dropped/replaced
+    // rows are exactly what the rewrite dropped/replaced/inserted
     val cdcFiles: Option[Seq[FileEntry]] =
       if (!effCdf(m)) None
       else Some {
@@ -2294,23 +2293,28 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
             .unionByName(
               replaced.withColumn(ChangeTypeCol, flit("update_postimage")))
           else matching.withColumn(ChangeTypeCol, flit("delete"))
-        val changes = insert.foldLeft(base)((acc, i) =>
-          acc.unionByName(i.withColumn(ChangeTypeCol, flit("insert")),
-            allowMissingColumns = true))
+        val changes =
+          if (inserted.isEmpty) base
+          else base.unionByName(
+            insertedRows.withColumn(ChangeTypeCol, flit("insert")))
         writeDataFiles(changes, Nil, withStats = false, enforce = false)._1
       }
-    commitRowLevel(op, m, affected, files, m.schemaDdl, None, cdcFiles,
-      candidate)
+    commitRowLevel(op, m, affected, files ++ inserted, m.schemaDdl, None,
+      cdcFiles, candidate)
   }
 
-  /** Commit a row-level rewrite planned against snapshot `m`: the
-    * `affected` entries it read give way to `added` (rewritten files,
-    * re-vectored entries, appended rows). When another commit landed
-    * first, AUTO-REBASE (optimistic concurrency with logical conflict
-    * detection, the Delta discipline) iff that commit provably left
-    * our result unchanged:
+  /** Commit a rewrite planned against snapshot `m` — the one conflict
+    * rule for every commit that replaces files (row-level DML, partition
+    * deletes, compaction, native V2 writes): the `affected` entries it
+    * read give way to `added` (rewritten files, re-vectored entries,
+    * appended rows). When another commit landed first, AUTO-REBASE
+    * (optimistic concurrency with logical conflict detection, the Delta
+    * discipline) iff that commit provably left our result unchanged:
     *
     *  - schema, bucket spec and partition columns are unchanged;
+    *  - the write invariants ([[invariantsOf]]) are unchanged — new
+    *    rows were checked against `m`'s, and a racing ADD CONSTRAINT
+    *    must not see rows it forbids publish after it;
     *  - every affected entry is still live and EQUAL to the one read
     *    (same path, deletion vector and row count — a merge-on-read
     *    delete re-tags a file in place, and publishing a rewrite of
@@ -2337,6 +2341,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
           if (cur.schemaDdl != m.schemaDdl || cur.bucketSpec != m.bucketSpec ||
               cur.partitionCols != m.partitionCols)
             Some("changed the schema or layout")
+          else if (invariantsOf(cur.properties) != invariantsOf(m.properties))
+            Some("changed the write invariants")
           else if (!affected.forall(f => curByPath.get(f.path).contains(f)))
             Some("changed a file read by this rewrite")
           else if (cur.files.exists(f => !basePaths(f.path) && mayMatch(f)))
@@ -4065,7 +4071,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
   def compact(targetFileBytes: Long = DefaultTargetFileBytes): Long = {
     val v = latestVersion.getOrElse(sys.error(s"$root: nothing to compact"))
     val m = manifest(v)
-    rewriteFiles("compact", m, m.files, Nil, targetFileBytes)()
+    rewriteFiles(m, m.files, targetFileBytes)()
   }
 
   /** Purge deletion vectors: rewrite ONLY the files whose deleted
@@ -4085,10 +4091,10 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       "minDeletedFraction must be in [0, 1]")
     val v = latestVersion.getOrElse(sys.error(s"$root: nothing to purge"))
     val m = manifest(v)
-    val (purge, keep) = m.files.partition(f => f.dvPath.isDefined &&
+    val purge = m.files.filter(f => f.dvPath.isDefined &&
       (f.rows <= 0 || f.dvRows.toDouble / f.rows >= minDeletedFraction))
     if (purge.isEmpty) return v
-    rewriteFiles("purgeDeletes", m, purge, keep, DefaultTargetFileBytes)()
+    rewriteFiles(m, purge, DefaultTargetFileBytes)()
   }
 
   /** The OPTIMIZE entry point: z-order along the table's
@@ -4154,10 +4160,10 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     // a nightly per-partition OPTIMIZE on a date-partitioned table
     // touches yesterday's dir only, never the historical tail
     val scope = resolvePartitionScope(m, partitionEq)
-    val (small, keep) = m.files.partition(f =>
+    val small = m.files.filter(f =>
       inScope(f, scope) && (fileBytes(f) < cutoff || f.dvPath.isDefined))
     if (small.size < minFiles) return v
-    rewriteFiles("compactSmall", m, small, keep, targetFileBytes)()
+    rewriteFiles(m, small, targetFileBytes)()
   }
 
   /** Z-order clustering compaction: rewrite the current snapshot
@@ -4200,7 +4206,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     // re-cluster (curve bounds come from their own values — the curve
     // is per-partition anyway); everything else carries by reference
     val scope = resolvePartitionScope(m, partitionEq)
-    val (scoped, carried) = m.files.partition(inScope(_, scope))
+    val scoped = m.files.filter(inScope(_, scope))
     // a bare OPTIMIZE of an empty z-ordered table (zero files, or only
     // empty files — an empty overwrite still lands one) is a clean
     // no-op; the error is reserved for an explicit WHERE that matches
@@ -4277,21 +4283,23 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
         .sortWithinPartitions(clusterKeys: _*)
         .drop(ZTmpCol)
     }
-    rewriteFiles("z-order compact", m, scoped, carried, targetFileBytes)(zLayout)
+    rewriteFiles(m, scoped, targetFileBytes)(zLayout)
   }
 
   /** The one file-rewrite step behind [[compact]], [[compactSmall]],
     * [[purgeDeletes]] and [[compactZOrder]]: each verb only picks the
-    * files to `rewrite` and the files `carried` by reference. Reads
+    * files to `rewrite`; every other file carries by reference. Reads
     * the rewritten files with their deletion vectors applied
     * (survivors only), recomputes buckets, lays the rows out into
     * ~`targetFileBytes` outputs (`layout` gets the frame and the
     * output count; by default a hash on the partition columns), and
-    * commits `carried ++ outputs` as a compact of snapshot `m` —
+    * commits the outputs in their place as a compact of snapshot `m` —
     * dataChange=false, so change feeds skip it. The commit keeps the
-    * snapshot's schema: a rewrite changes no column. */
-  private def rewriteFiles(verb: String, m: Manifest, rewrite: Seq[FileEntry],
-      carried: Seq[FileEntry], targetFileBytes: Long)(
+    * snapshot's schema: a rewrite changes no column. The outputs hold
+    * exactly the rewritten rows, so a racing commit that left those
+    * files untouched rebases ([[commitRowLevel]]). */
+  private def rewriteFiles(m: Manifest, rewrite: Seq[FileEntry],
+      targetFileBytes: Long)(
       layout: (DataFrame, Int) => DataFrame = (df, n) =>
         if (m.partitionCols.isEmpty) df.repartition(n)
         else df.repartition(n, m.partitionCols.map(col): _*)): Long = {
@@ -4300,12 +4308,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val n = math.max(1, math.ceil(
       rewrite.map(fileBytes).sum.toDouble / targetFileBytes).toInt)
     val (files, _) = writeDataFiles(layout(laid, n), m.partitionCols)
-    commit { latest =>
-      require(latest.exists(_.version == m.version),
-        s"concurrent commit during $verb of $root — rerun")
-      Pending(OpCompact, carried ++ files, m.schemaDdl, m.partitionCols,
-        m.bucketSpec, None)
-    }
+    commitRowLevel(OpCompact, m, rewrite, files, m.schemaDdl, None, None,
+      _ => false)
   }
 
   /** A file's recorded size; a stat for entries that predate it. */
@@ -4495,12 +4499,15 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     * files from aborted attempts never enter the manifest
     * ([[entriesOfDir]]'s `only` filter).
     *
-    * Concurrency: strict first-writer-wins against the scanned base
-    * version — unlike the seam's predicate DML, the native plan's
-    * matched set is Spark's, so there is no predicate to replay a
-    * rebase check against; any racing commit conflicts. DV keys are
-    * manifest entry paths (agreeing with the raw `_metadata` extraction
-    * for un-encoded paths, the same assumption [[morRewrite]] makes). */
+    * Concurrency is [[commitRowLevel]]'s rule. An append reads
+    * nothing, so it rebases over any racing commit that kept the
+    * schema, layout and invariants. DELETE / UPDATE / MERGE count
+    * EVERY base file as read: Spark's plan does not say which files
+    * it scanned (an insert-only MERGE decides NOT MATCHED from files
+    * it never re-tags), so a racing commit that changed or added any
+    * file refuses. DV keys are manifest entry paths (agreeing with the
+    * raw `_metadata` extraction for un-encoded paths, the same
+    * assumption [[morRewrite]] makes). */
   private[graft] def commitDeltaNative(ctx: TxTable.DeltaWriteContext,
       op: String, insertFiles: Seq[String], updateFiles: Seq[String],
       deleteFrags: Seq[String], updateFrags: Seq[String]): Long = {
@@ -4532,17 +4539,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
         (freshCounts.keySet, foldDv(affected, fresh, freshCounts))
       }
 
-    // -- new data files → manifest entries with stats ------------------------
-    val writeDst = new Path(dataDir, s"w-${ctx.writeId}")
-    val newEntries =
-      if (newPaths.isEmpty) Nil
-      else entriesOfDir(writeDst, ctx.physWriteSchema, withStats = true,
-        only = Some(newPaths.toSet))
-    require(newEntries.map(_.path).toSet == newPaths.toSet,
-      s"$root: native $op task-committed files missing on disk — " +
-        s"expected ${newPaths.size}, found ${newEntries.size}")
-
-    // -- invariant re-validation over exactly the new rows -------------------
+    // -- new data files → manifest entries with stats, invariants ----------
+    val newEntries = nativeEntries(ctx, newPaths)
     validateNewRows(m, newEntries)
 
     // -- CDF capture ----------------------------------------------------------
@@ -4566,8 +4564,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
           }
         def images(es: Seq[FileEntry], tag: String): Option[DataFrame] =
           if (es.isEmpty) None
-          else Some(readEntries(m, es).drop(BucketCol)
-            .withColumn(ChangeTypeCol, flit(tag)))
+          else Some(readEntries(m, es).withColumn(ChangeTypeCol, flit(tag)))
         val newByPath = newEntries.map(e => e.path -> e).toMap
         val parts = Seq(
           preimages(deleteFrags, "delete"),
@@ -4579,15 +4576,14 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
           withStats = false, enforce = false)._1
       }
 
-    val untouched = m.files.filterNot(f => retaggedPaths(f.path))
-    val out = commit { latest =>
-      val cur = latest.getOrElse(
-        sys.error(s"$root vanished during native $op — rerun"))
-      require(cur.version == ctx.baseVersion,
-        s"concurrent commit during native row-level $op on $root — rerun")
-      Pending(op, untouched ++ retagged ++ newEntries, m.schemaDdl,
-        m.partitionCols, m.bucketSpec, None, cdcFiles)
-    }
+    val out =
+      if (op == OpAppend)
+        commitRowLevel(op, m, Nil, newEntries, m.schemaDdl, None, cdcFiles,
+          _ => false)
+      else
+        commitRowLevel(op, m, m.files,
+          m.files.filterNot(f => retaggedPaths(f.path)) ++ retagged ++
+            newEntries, m.schemaDdl, None, cdcFiles, _ => true)
     fs.delete(fragTmp, true)
     out
   }
@@ -4603,13 +4599,14 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     *
     *  - append: delegates to [[commitDeltaNative]] with only inserts —
     *    an append IS a delta write with an empty removal set (same
-    *    entry building, invariant re-validation, CDF insert images,
-    *    first-writer-wins against the scanned base).
+    *    entry building, invariant re-validation, CDF insert images;
+    *    it rebases over racing commits like the driver-side append).
     *  - replaceAll: the new files REPLACE the snapshot (the
     *    `INSERT OVERWRITE` / truncate-overwrite semantics); CDF is not
     *    captured, matching the driver-side overwrite (a rewrite is the
     *    change feed's documented reset point). An empty task output is
-    *    a legitimate truncate. */
+    *    a legitimate truncate. Every base file is replaced, so any
+    *    racing commit that changed or added a file refuses. */
   private[graft] def commitBatchNative(ctx: TxTable.DeltaWriteContext,
       files: Seq[String], replaceAll: Boolean): Long = {
     if (!replaceAll)
@@ -4617,24 +4614,14 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val m = manifest(ctx.baseVersion)
     val newEntries = nativeEntries(ctx, files)
     validateNewRows(m, newEntries)
-    commit { latest =>
-      val cur = latest.getOrElse(
-        sys.error(s"$root vanished during native overwrite — rerun"))
-      require(cur.version == ctx.baseVersion,
-        s"concurrent commit during native overwrite of $root — rerun")
-      Pending(OpOverwrite, newEntries, m.schemaDdl, m.partitionCols,
-        m.bucketSpec, None)
-    }
+    commitRowLevel(OpOverwrite, m, m.files, newEntries, m.schemaDdl, None,
+      None, _ => true)
   }
 
-  /** Native `OverwriteByExpression(cond)` — the replaceWhere
-    * semantics with the SOURCE already on disk as task-written files:
-    * the predicate guard re-reads the immutable new files (every
-    * inserted row must satisfy `cond`, the Delta rule), existing
-    * files are planned through the same zone-map candidate filter +
-    * tagged-scan discovery as [[rewriteWhere]], survivors of affected
-    * files rewrite copy-on-write, untouched files carry by reference,
-    * and CDC captures delete + insert images. */
+  /** Native `OverwriteByExpression(cond)` — [[rewriteWhere]]'s replace
+    * against the operation's base snapshot, with the SOURCE already on
+    * disk as task-written files (the invariants re-validate over
+    * exactly those rows). */
   private[graft] def commitReplaceWhereNative(ctx: TxTable.DeltaWriteContext,
       filters: Seq[org.apache.spark.sql.sources.Filter],
       files: Seq[String]): Long = {
@@ -4646,7 +4633,11 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val cond = preds.map(org.apache.spark.sql.graft.StreamShims.columnOf)
       .reduceOption(_ && _)
       .getOrElse(org.apache.spark.sql.functions.lit(true))
-    condOverwriteNative(ctx, m, cond, files, guardSource = true)
+    rewriteWhere(OpReplace, m, cond, {
+      val entries = nativeEntries(ctx, files)
+      validateNewRows(m, entries)
+      entries
+    })(_.limit(0))
   }
 
   /** Native dynamic partition overwrite: replace exactly the hive
@@ -4654,7 +4645,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     * values come from the shadow-dir parse — the same source of truth
     * as the manifest). Flat/bucketed layouts degenerate to a full
     * overwrite, Spark's own dynamic-mode behavior; an empty source
-    * touches nothing and commits nothing. */
+    * touches nothing and commits nothing. A racing commit rebases iff
+    * it left the touched partitions alone. */
   private[graft] def commitDynamicNative(ctx: TxTable.DeltaWriteContext,
       files: Seq[String]): Long = {
     val m = manifest(ctx.baseVersion)
@@ -4664,74 +4656,20 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val newEntries = nativeEntries(ctx, files)
     validateNewRows(m, newEntries)
     val touched = newEntries.map(_.partition).toSet
-    val (replaced, untouched) =
-      m.files.partition(f => touched.contains(f.partition))
+    val replaced = m.files.filter(f => touched.contains(f.partition))
     val cdcFiles: Option[Seq[FileEntry]] =
       if (!effCdf(m)) None
       else Some {
         import org.apache.spark.sql.functions.lit
-        val del = readEntries(m, replaced).drop(BucketCol)
+        val del = readEntries(m, replaced)
           .withColumn(ChangeTypeCol, lit("delete"))
-        val ins = readEntries(m, newEntries).drop(BucketCol)
+        val ins = readEntries(m, newEntries)
           .withColumn(ChangeTypeCol, lit("insert"))
         writeDataFiles(del.unionByName(ins), Nil,
           withStats = false, enforce = false)._1
       }
-    commit { latest =>
-      val cur = latest.getOrElse(
-        sys.error(s"$root vanished during native dynamic overwrite — rerun"))
-      require(cur.version == ctx.baseVersion,
-        s"concurrent commit during native dynamic overwrite of $root — rerun")
-      Pending(OpReplace, untouched ++ newEntries, m.schemaDdl,
-        m.partitionCols, m.bucketSpec, None, cdcFiles)
-    }
-  }
-
-  private def condOverwriteNative(ctx: TxTable.DeltaWriteContext,
-      m: Manifest, cond: Column, files: Seq[String],
-      guardSource: Boolean): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit => flit, not}
-    val schema = StructType.fromDDL(m.schemaDdl)
-    val newEntries = nativeEntries(ctx, files)
-    val hit = coalesce(cond, flit(false))
-    if (guardSource && newEntries.nonEmpty) {
-      val offending = readEntries(m, newEntries).where(not(hit))
-        .limit(1).count()
-      require(offending == 0,
-        s"$root: every overwrite-by-expression source row must satisfy " +
-          "the predicate — found rows outside it (append them instead)")
-    }
-    validateNewRows(m, newEntries)
-    val candidate = candidateFilter(schema,
-      analyzedPredicate(schema, cond).toSeq, physNameOf(m, _))
-    val affected = filesHolding(m, m.files.filter(candidate))(_.where(hit))
-    val untouched = m.files.filterNot(affected.toSet)
-    val survivorFiles =
-      if (affected.isEmpty) Nil
-      else {
-        val survivors = readEntries(m, affected).where(not(hit))
-        val data = m.bucketSpec.map(bucketedWriteFrame(survivors, _))
-          .getOrElse(survivors)
-        writeDataFiles(data, m.partitionCols)._1
-      }
-    val cdcFiles: Option[Seq[FileEntry]] =
-      if (!effCdf(m)) None
-      else Some {
-        val del = readEntries(m, affected).where(hit).drop(BucketCol)
-          .withColumn(ChangeTypeCol, flit("delete"))
-        val ins = readEntries(m, newEntries).drop(BucketCol)
-          .withColumn(ChangeTypeCol, flit("insert"))
-        writeDataFiles(del.unionByName(ins), Nil,
-          withStats = false, enforce = false)._1
-      }
-    commit { latest =>
-      val cur = latest.getOrElse(
-        sys.error(s"$root vanished during native overwrite — rerun"))
-      require(cur.version == ctx.baseVersion,
-        s"concurrent commit during native overwrite of $root — rerun")
-      Pending(OpReplace, untouched ++ survivorFiles ++ newEntries,
-        m.schemaDdl, m.partitionCols, m.bucketSpec, None, cdcFiles)
-    }
+    commitRowLevel(OpReplace, m, replaced, newEntries, m.schemaDdl, None,
+      cdcFiles, f => touched.contains(f.partition))
   }
 
   /** Task-written files → manifest entries (stats + layout values
@@ -4753,14 +4691,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     * rows of a native write (shared by every native commit shape). */
   private def validateNewRows(m: Manifest, newEntries: Seq[FileEntry]): Unit = {
     if (newEntries.isEmpty) return
-    val constraints = m.properties.collect {
-      case (k, v) if k.startsWith(TxTable.PropConstraintPrefix) =>
-        k.stripPrefix(TxTable.PropConstraintPrefix) -> v
-    }
-    val notNull = m.properties.keys.collect {
-      case k if k.startsWith(TxTable.PropNotNullPrefix) =>
-        k.stripPrefix(TxTable.PropNotNullPrefix)
-    }
+    val (constraints, notNull) = invariantsOf(m.properties)
     if (constraints.nonEmpty || notNull.nonEmpty)
       withNotNull(withInvariants(readEntries(m, newEntries), constraints),
         notNull).foreach(_ => ())
@@ -4866,14 +4797,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
           case (k, v) if k.startsWith(TxTable.PropGeneratedPrefix) =>
             k.stripPrefix(TxTable.PropGeneratedPrefix) -> v
         })
-        val inv = withInvariants(gen, props.collect {
-          case (k, v) if k.startsWith(TxTable.PropConstraintPrefix) =>
-            k.stripPrefix(TxTable.PropConstraintPrefix) -> v
-        })
-        withNotNull(inv, props.keys.collect {
-          case k if k.startsWith(TxTable.PropNotNullPrefix) =>
-            k.stripPrefix(TxTable.PropNotNullPrefix)
-        })
+        val (constraints, notNull) = invariantsOf(props)
+        withNotNull(withInvariants(gen, constraints), notNull)
       }
     // data files carry PHYSICAL column names (the column-mapping
     // boundary — incoming frames are logical; columns outside the map,
@@ -5172,16 +5097,6 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
         latest.map(_.properties).getOrElse(Map.empty))
       val colMap = p.colMap.getOrElse(
         latest.map(_.colMap).getOrElse(Map.empty))
-      val addedEntries = {
-        val prevByPath0 = latest.map(_.files).getOrElse(Nil)
-          .map(f => f.path -> f).toMap
-        p.files.filterNot(f => prevByPath0.get(f.path).contains(f))
-      }
-      val props = advanceIdentity(props0, addedEntries, colMap, p.schemaDdl)
-      val retired = p.retired.getOrElse(
-        latest.map(_.retired).getOrElse(Nil))
-      val m = Manifest(v, p.operation, p.schemaDdl, p.files,
-        p.partitionCols, p.bucketSpec, txns, props, colMap, retired)
       // the delta: composed files vs the previous snapshot — entries
       // carried by reference (identical ENTRY, not just path: a MoR
       // delete re-tags an unchanged path with a new deletion vector)
@@ -5190,10 +5105,16 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       // ∝ files CHANGED, never ∝ table.
       val prevFiles = latest.map(_.files).getOrElse(Nil)
       val prevByPath = prevFiles.map(f => f.path -> f).toMap
+      val added = p.files.filterNot(f => prevByPath.get(f.path).contains(f))
+      val props = advanceIdentity(props0, added, colMap, p.schemaDdl)
+      val retired = p.retired.getOrElse(
+        latest.map(_.retired).getOrElse(Nil))
+      val m = Manifest(v, p.operation, p.schemaDdl, p.files,
+        p.partitionCols, p.bucketSpec, txns, props, colMap, retired)
       val newByPath = p.files.map(f => f.path -> f).toMap
       val delta = CommitDelta(v, p.operation, p.schemaDdl, p.partitionCols,
         p.bucketSpec, p.txn,
-        add = p.files.filterNot(f => prevByPath.get(f.path).contains(f)),
+        add = added,
         remove = prevFiles.filterNot(f =>
           newByPath.get(f.path).contains(f)).map(_.path),
         cdc = p.cdcFiles,

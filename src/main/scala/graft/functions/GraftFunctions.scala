@@ -366,7 +366,8 @@ case class PackedPairsFrom(left: Expression, right: Expression)
       i.asInstanceOf[Int])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev,
-      (rs, i) => s"graft.functions.VectorKernels.packedPairsFrom($rs, $i)")
+      // a private[graft] method gets no static forwarder: call the module
+      (rs, i) => s"graft.functions.VectorKernels$$.MODULE$$.packedPairsFrom($rs, $i)")
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)

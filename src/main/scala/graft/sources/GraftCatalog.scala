@@ -372,7 +372,7 @@ final class GraftTable(spark: SparkSession, location: String,
 
   /** NATIVE V2 row-level UPDATE / MERGE / non-pushable DELETE — see
     * [[GraftRowLevelOperation]]. Pinned at THIS load's snapshot; the
-    * commit refuses any racing writer against it. */
+    * commit refuses any racing writer that changed or added a file. */
   override def newRowLevelOperationBuilder(info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
     require(pinned.isEmpty,

@@ -33,7 +33,9 @@ import graft.core.TxTable
   * [[org.apache.spark.sql.graft.V2Shims.PosMetaCol]]); the write half
   * runs executor-side parquet writers (partition-dir / bucket routing
   * per row) and commits once on the driver
-  * ([[graft.core.TxTable.commitDeltaNative]]).
+  * ([[graft.core.TxTable.commitDeltaNative]]) under the table's one
+  * conflict rule: every base file counts as read, so a racing commit
+  * that changed or added a file refuses.
   *
   * Reference surface: resources/spark.py:65-67 (Delta session) — the
   * reference's users run exactly these statements through Delta's
@@ -53,7 +55,7 @@ final class GraftRowLevelOperation(location: String, tableName: String,
   /** The discovery scan: the SAME manifest-planned scan as a plain
     * read (zone-map file skipping from the pushed WHERE), pinned at
     * the operation's base version — the write's conflict check
-    * refuses any racing commit against it. Metadata columns requested
+    * refuses any racing commit that changed or added a file. Metadata columns requested
     * by the rewrite switch it onto per-file row-id partitions. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftScanBuilder(spark,

@@ -300,4 +300,98 @@ class GraftRowLevelSpec extends SparkSpec {
     // failed native write must not commit: table unchanged
     assert(spark.sql(s"SELECT sum(grp) FROM $t").head.getLong(0) == before)
   }
+
+  // -- the native commits, driven directly: a write context taken at the
+  // base version, then a racing commit, then the task files publish ---
+
+  private def base(tag: String, n: Int): (TxTable, String) = {
+    import spark.implicits._
+    val d = dir(tag)
+    val t = TxTable(spark, d)
+    t.overwrite((0 until n).map(i => (i.toLong, s"name_$i", i % 10))
+      .toDF("k", "name", "grp").coalesce(1))
+    (t, d)
+  }
+
+  /** `rows` landed as one task-written data file of `ctx` — what an
+    * executor writer commits; returns its root-relative path. */
+  private def taskFile(ctx: TxTable.DeltaWriteContext, d: String,
+      rows: Seq[(Long, String, Int)], name: String): String = {
+    import spark.implicits._
+    landAs(d, s"data/w-${ctx.writeId}/$name.parquet",
+      rows.toDF("k", "name", "grp"))
+  }
+
+  /** A deletion-vector fragment of `ctx` naming (entry path, row). */
+  private def fragFile(ctx: TxTable.DeltaWriteContext, d: String,
+      ids: Seq[(String, Long)]): String =
+    landAs(d, s"tmp/dvfrag-${ctx.writeId}/d-0.parquet",
+      spark.createDataFrame(spark.sparkContext.parallelize(
+        ids.map { case (p, pos) => org.apache.spark.sql.Row(p, pos) }),
+        TxTable.dvFragSchema))
+
+  private def landAs(d: String, rel: String,
+      df: org.apache.spark.sql.DataFrame): String = {
+    val tmp = EventsStream.scratchDir("rowlevel_task")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    val dst = new java.io.File(d, rel)
+    dst.getParentFile.mkdirs()
+    java.nio.file.Files.move(part.toPath, dst.toPath)
+    rel
+  }
+
+  test("native appends rebase over racing appends: every row lands") {
+    import spark.implicits._
+    val (t, d) = base("race_app", 10)
+    val a = t.deltaWriteContext(0)
+    val b = t.deltaWriteContext(0)
+    TxTable(spark, d).append(Seq((100L, "racer", 1)).toDF("k", "name", "grp"))
+    val fa = taskFile(a, d, Seq((200L, "native_a", 2)), "i-a")
+    val fb = taskFile(b, d, Seq((300L, "native_b", 3)), "i-b")
+    assert(t.commitBatchNative(a, Seq(fa), replaceAll = false) == 2)
+    assert(t.commitBatchNative(b, Seq(fb), replaceAll = false) == 3)
+    assert(t.read().select("k").as[Long].collect().sorted.toSeq ==
+      ((0L until 10L) ++ Seq(100L, 200L, 300L)))
+  }
+
+  test("a native DELETE after a racing append refuses by name") {
+    import spark.implicits._
+    val (t, d) = base("race_del", 10)
+    val ctx = t.deltaWriteContext(0)
+    val target = t.fileEntries(0).head.path
+    TxTable(spark, d).append(Seq((100L, "racer", 1)).toDF("k", "name", "grp"))
+    val frag = fragFile(ctx, d, Seq((target, 0L)))
+    val e = intercept[IllegalArgumentException](
+      t.commitDeltaNative(ctx, "delete", Nil, Nil, Seq(frag), Nil))
+    assert(e.getMessage.contains("concurrent commit v1") &&
+      e.getMessage.contains("rerun"), e.getMessage)
+    assert(t.read().count() == 11)
+  }
+
+  test("a native insert-only MERGE after a racing merge-on-read delete refuses") {
+    val (t, d) = base("race_merge", 10)
+    val ctx = t.deltaWriteContext(0)
+    // the racer re-tags the one base file the MERGE decided NOT
+    // MATCHED against, without the MERGE re-tagging anything itself
+    TxTable(spark, d, deletionVectors = true).deleteWhere(col("k") === 3L)
+    val f = taskFile(ctx, d, Seq((500L, "inserted", 0)), "i-0")
+    val e = intercept[IllegalArgumentException](
+      t.commitDeltaNative(ctx, "merge", Seq(f), Nil, Nil, Nil))
+    assert(e.getMessage.contains("changed a file read"), e.getMessage)
+    assert(t.read().count() == 9)
+    assert(t.read().where(col("k") === 500L).count() == 0)
+  }
+
+  test("a native append after a racing ADD CONSTRAINT refuses") {
+    val (t, d) = base("race_check", 10)
+    val ctx = t.deltaWriteContext(0)
+    TxTable(spark, d).addCheckConstraint("k_small", "k < 1000")
+    val f = taskFile(ctx, d, Seq((5000L, "violator", 0)), "i-0")
+    val e = intercept[IllegalArgumentException](
+      t.commitBatchNative(ctx, Seq(f), replaceAll = false))
+    assert(e.getMessage.contains("changed the write invariants"), e.getMessage)
+    assert(t.read().where(col("k") === 5000L).count() == 0)
+  }
 }

@@ -212,6 +212,22 @@ class GraphPipelineSpec extends SparkSpec {
       "the refusal must name the wide-id kernel that exists")
   }
 
+  test("coPairCounts' packed-pair kernel compiles: no interpreted fallback") {
+    import spark.implicits._
+    // with fallback off, generated Java that does not compile fails the
+    // query instead of silently running the stage interpreted
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val pruned = Seq((0L, 1L), (0L, 2L), (0L, 3L), (1L, 1L), (1L, 2L))
+        .toDF("left", "right")
+      val got = GraphOps.coPairCounts(pruned, rightIntegral = true)
+        .as[(Long, Long, Long)].collect().toSet
+      assert(got == Set((1L, 2L, 2L), (1L, 3L, 1L), (2L, 3L, 1L)))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("triangleCensus: sparse hand graph, hot-left df-cap") {
     import spark.implicits._
     // co-edges: AB (l1), BC (l2), AC (l3), CD (l4) → one triangle ABC

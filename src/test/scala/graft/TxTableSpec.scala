@@ -1057,6 +1057,27 @@ class TxTableSpec extends SparkSpec {
     assert(t.read().count() == 20)
   }
 
+  test("a partition delete racing a merge-on-read delete refuses instead " +
+      "of capturing its rows twice") {
+    import spark.implicits._
+    val dir = EventsStream.scratchDir("tx_cdf_part_race") + "/t"
+    val t = TxTable(spark, dir, changeDataFeed = true)
+    t.overwrite((0 until 30).map(i => (i.toLong, if (i % 3 == 0) "a" else "b",
+      i * 1.0)).toDF("id", "grp", "value"), partitionBy = Seq("grp"))
+    val racer = TxTable(spark, dir, changeDataFeed = true, deletionVectors = true)
+    // the racer re-tags a file of partition a after the delete planned
+    var raced = false
+    val e = intercept[IllegalArgumentException] {
+      t.deletePartitions { p =>
+        if (!raced) { raced = true; racer.deleteWhere(col("id") === 3L) }
+        p.get("grp").contains("a")
+      }
+    }
+    assert(e.getMessage.contains("rerun"), e.getMessage)
+    assert(t.changeFeed(0).where(col("id") === 3L).count() == 1)
+    assert(t.read().count() == 29)
+  }
+
   test("partition delete through a CDF handle captures the dropped rows") {
     import spark.implicits._
     val dir = EventsStream.scratchDir("tx_cdf_part") + "/t"
@@ -1971,6 +1992,19 @@ class TxTableSpec extends SparkSpec {
     val byType = changes.groupBy("_change_type").count().collect()
       .map(x => x.getString(0) -> x.getLong(1)).toMap
     assert(byType == Map("delete" -> 3, "insert" -> 2), s"got $byType")
+  }
+
+  test("replaceWhere mints identity values for a source that omits the column") {
+    import spark.implicits._
+    val (t, _) = freshTable("tx_replw_ident")
+    t.overwrite(Seq((1L, "b", 1.0)).toDF("id", "grp", "v"))
+    t.addIdentityColumn("id", start = 100, step = 1)
+    t.append(Seq(("a", 5.0)).toDF("grp", "v"))
+    t.replaceWhere(Seq(("a", 9.0)).toDF("grp", "v"), col("grp") === "a")
+    assert(t.read().select("v").as[Double].collect().sorted.toSeq == Seq(1.0, 9.0))
+    val a = t.read().where(col("grp") === "a").select("id").head
+    assert(!a.isNullAt(0), "an omitted identity column must mint, not null-fill")
+    assert(a.getLong(0) >= 100L && a.getLong(0) == t.identityColumns("id")._3)
   }
 
   test("autoCompact property: appends fold their own small-file debt") {
