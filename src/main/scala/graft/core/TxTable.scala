@@ -274,8 +274,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
                 k -= 1
               }
             }
-            var s = if (base != null) base
-              else Manifest(-1L, "none", "", Nil) // replay from empty
+            var s = if (base != null) base else emptyState
             pending.reverseIterator.foreach(d => s = applyDelta(s, d))
             s
         }
@@ -286,9 +285,15 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     state
   }
 
+  /** The state before version 0 — what replay of a whole log starts
+    * from. */
+  private val emptyState = Manifest(-1L, "none", "", Nil)
+
   /** One replay step: the delta's add/remove against the previous file
     * list; layout/schema/operation come from the delta (each commit
-    * records its full — small — header), txn tags accumulate. */
+    * records its full — small — header), txn tags accumulate (the
+    * exactly-once bookkeeping: every app's latest batchId carries
+    * forward, this commit's tag folds in). */
   private def applyDelta(prev: Manifest, d: CommitDelta): Manifest = {
     val removed = d.remove.toSet
     Manifest(d.version, d.operation, d.schemaDdl,
@@ -314,11 +319,14 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
   private[graft] def commitSynthetic(op: String, add: Seq[FileEntry],
       remove: Set[String] = Set.empty, schemaDdl: String): Long =
     commit { latest =>
-      Pending(op,
-        latest.map(_.files).getOrElse(Nil).filterNot(f => remove(f.path)) ++ add,
-        schemaDdl, latest.map(_.partitionCols).getOrElse(Nil),
-        latest.flatMap(_.bucketSpec), None)
+      Pending(op, schemaDdl, latest.map(_.partitionCols).getOrElse(Nil),
+        latest.flatMap(_.bucketSpec), None, add, remove)
     }
+
+  /** Every live path of `latest` — the remove set of a verb that
+    * replaces the whole file list. */
+  private def livePaths(latest: Option[Manifest]): Set[String] =
+    latest.map(_.files.iterator.map(_.path).toSet).getOrElse(Set.empty)
 
   /** The table's root directory as given to [[TxTable.apply]]. */
   def location: String = root.toString
@@ -361,18 +369,16 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     * explicit property outranks the handle flag; unset falls back. */
   def setProperties(kv: Map[String, String]): Long = commit { latest =>
     val cur = latest.getOrElse(sys.error(s"$root has no committed snapshots"))
-    Pending(TxTable.OpSetProperties, cur.files, cur.schemaDdl,
-      cur.partitionCols, cur.bucketSpec, None, None,
-      Some(cur.properties ++ kv))
+    Pending(TxTable.OpSetProperties, cur.schemaDdl, cur.partitionCols,
+      cur.bucketSpec, None, properties = Some(cur.properties ++ kv))
   }
 
   /** Remove property keys (missing keys are ignored) — metadata-only
     * commit like [[setProperties]]. */
   def unsetProperties(keys: Seq[String]): Long = commit { latest =>
     val cur = latest.getOrElse(sys.error(s"$root has no committed snapshots"))
-    Pending(TxTable.OpSetProperties, cur.files, cur.schemaDdl,
-      cur.partitionCols, cur.bucketSpec, None, None,
-      Some(cur.properties -- keys))
+    Pending(TxTable.OpSetProperties, cur.schemaDdl, cur.partitionCols,
+      cur.bucketSpec, None, properties = Some(cur.properties -- keys))
   }
 
   // ---- schema evolution verbs (column mapping) ----------------------------
@@ -424,9 +430,9 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val newMap = (cur.colMap - field.name) ++
       (if (newName == phys) Map.empty[String, String]
        else Map(newName -> phys))
-    Pending(TxTable.OpAlterColumn, cur.files, newSchema.toDDL,
-      cur.partitionCols, cur.bucketSpec, None,
-      colMap = Some(newMap), retired = Some(cur.retired))
+    Pending(TxTable.OpAlterColumn, newSchema.toDDL, cur.partitionCols,
+      cur.bucketSpec, None, colMap = Some(newMap),
+      retired = Some(cur.retired))
   }
 
   /** `ALTER TABLE ... DROP COLUMN` — METADATA-ONLY: the column leaves
@@ -450,9 +456,9 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     require(remaining.exists(_.name != BucketCol),
       s"$root: cannot drop the last data column")
     val phys = cur.colMap.getOrElse(field.name, field.name)
-    Pending(TxTable.OpAlterColumn, cur.files,
-      StructType(remaining.toSeq).toDDL, cur.partitionCols, cur.bucketSpec,
-      None, colMap = Some(cur.colMap - field.name),
+    Pending(TxTable.OpAlterColumn, StructType(remaining.toSeq).toDDL,
+      cur.partitionCols, cur.bucketSpec, None,
+      colMap = Some(cur.colMap - field.name),
       retired = Some((cur.retired :+ phys).distinct))
   }
 
@@ -479,9 +485,9 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       org.apache.spark.sql.types.StructField(name, dataType, nullable = true))
     val newMap = cur.colMap ++
       (if (phys == name) Map.empty[String, String] else Map(name -> phys))
-    Pending(TxTable.OpAlterColumn, cur.files, newSchema.toDDL,
-      cur.partitionCols, cur.bucketSpec, None,
-      colMap = Some(newMap), retired = Some(cur.retired))
+    Pending(TxTable.OpAlterColumn, newSchema.toDDL, cur.partitionCols,
+      cur.bucketSpec, None, colMap = Some(newMap),
+      retired = Some(cur.retired))
   }
 
   /** Append/overwrite widening guard under column mapping: a NEW
@@ -894,6 +900,29 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
         col(name) <= org.apache.spark.sql.functions.lit(bhi))
   }
 
+  /** True iff snapshot `v` carries any deletion vector — such a
+    * snapshot's live rows are scan-minus-DV, which no bare file list
+    * can express (the format/streaming seams branch on this). */
+  private[graft] def snapshotHasDv(v: Long): Boolean =
+    manifest(v).files.exists(_.dvPath.isDefined)
+
+  /** The user-visible columns of a snapshot schema: the bucket column
+    * and hive-shadow layout columns are plumbing, not data. */
+  private def visibleSchema(full: StructType): StructType =
+    StructType(full.fields.filterNot(f =>
+      f.name == BucketCol || f.name.startsWith(PartShadowPrefix)).toSeq)
+
+  /** An entry's file status from its commit-time size/mtime (zero
+    * filesystem calls); a legacy entry with no recorded size is
+    * stat-ed. */
+  private def fileStatus(f: FileEntry): org.apache.hadoop.fs.FileStatus = {
+    val p = new Path(root, f.path)
+    if (f.bytes >= 0)
+      new org.apache.hadoop.fs.FileStatus(
+        f.bytes, false, 1, 134217728L, f.mtimeMs, fs.makeQualified(p))
+    else fs.getFileStatus(p)
+  }
+
   /** Snapshot `v` as a scan-time-pruned parquet relation — the read
     * path of the txtable format and SQL seam. Two properties the
     * plain [[readVersion]] frame lacks, both load-bearing at 10⁶
@@ -905,12 +934,6 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     * [[readWhereRange]] does, with no special API). Split planning,
     * row-group pushdown, column pruning, and vectorized decode are
     * the stock parquet source's own over the pruned list. */
-  /** True iff snapshot `v` carries any deletion vector — such a
-    * snapshot's live rows are scan-minus-DV, which no bare file list
-    * can express (the format/streaming seams branch on this). */
-  private[graft] def snapshotHasDv(v: Long): Boolean =
-    manifest(v).files.exists(_.dvPath.isDefined)
-
   private[graft] def scanRelation(v: Long): org.apache.spark.sql.sources.BaseRelation = {
     if (snapshotHasDv(v) || manifest(v).colMap.nonEmpty) {
       // deletion-vector snapshots cannot be a bare parquet file list
@@ -922,10 +945,9 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       // before the plan is even constructed
       val m = manifest(v)
       val schema = StructType.fromDDL(m.schemaDdl)
-      val visible = StructType(schema.fields.filterNot(f =>
-        f.name == BucketCol || f.name.startsWith(PartShadowPrefix)).toSeq)
       return org.apache.spark.sql.graft.StreamShims.dataFrameRelation(
-        StructType(visible.fields.map(_.copy(nullable = true)).toSeq),
+        StructType(visibleSchema(schema).fields
+          .map(_.copy(nullable = true)).toSeq),
         spark,
         filters => {
           val keep = candidateFilter(schema,
@@ -935,15 +957,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     }
     val m = manifest(v)
     val full = StructType.fromDDL(m.schemaDdl)
-    val visible = StructType(full.fields.filterNot(f =>
-      f.name == BucketCol || f.name.startsWith(PartShadowPrefix)).toSeq)
-    val statuses = m.files.map { f =>
-      val p = new Path(root, f.path)
-      if (f.bytes >= 0)
-        new org.apache.hadoop.fs.FileStatus(
-          f.bytes, false, 1, 134217728L, f.mtimeMs, fs.makeQualified(p))
-      else fs.getFileStatus(p) // legacy entry: size not recorded
-    }
+    val visible = visibleSchema(full)
+    val statuses = m.files.map(fileStatus)
     org.apache.spark.sql.graft.StreamShims.manifestScanRelation(
       spark, root, visible, statuses,
       preds => {
@@ -996,16 +1011,9 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
   private[graft] def v2ScanInfo(v: Long): TxTable.V2ScanInfo = {
     val m = manifest(v)
     val full = StructType.fromDDL(m.schemaDdl)
-    val visible = StructType(full.fields.filterNot(f =>
-      f.name == BucketCol || f.name.startsWith(PartShadowPrefix))
+    val visible = StructType(visibleSchema(full).fields
       .map(_.copy(nullable = true)).toSeq)
-    val statuses = m.files.map { f =>
-      val p = new Path(root, f.path)
-      if (f.bytes >= 0)
-        new org.apache.hadoop.fs.FileStatus(
-          f.bytes, false, 1, 134217728L, f.mtimeMs, fs.makeQualified(p))
-      else fs.getFileStatus(p)
-    }
+    val statuses = m.files.map(fileStatus)
     TxTable.V2ScanInfo(v, visible, m.files.zip(statuses),
       f => f.partition.get(BucketCol).map(_.toInt),
       m.bucketSpec.map(s => (s.cols, s.n)),
@@ -1310,6 +1318,19 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     if (m.bucketSpec.isDefined) df.drop(BucketCol) else df
   }
 
+  /** Log entry `v` for a change-feed read. Retention interacts with
+    * change feeds: an expired log entry in the polled range is the
+    * same invalidation as a rewrite — always surface the reset signal,
+    * never a raw missing-file error (the read itself races concurrent
+    * expiry, so the catch — not a pre-scan — is what makes the
+    * contract airtight). */
+  private def entryOrReset(v: Long): CommitDelta =
+    try logEntry(v)
+    catch { case _: IllegalArgumentException => sys.error(
+      s"$root version $v expired (snapshot retention) — " +
+        "reset the change-feed consumer from a full snapshot read")
+    }
+
   /** Rows ADDED after snapshot `fromVersion` up to `toVersion`
     * (default latest) — the incremental-consumption surface (change
     * feed): a downstream job checkpoints the version it has seen and
@@ -1323,17 +1344,6 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val to = toVersion.orElse(latestVersion).getOrElse(
       sys.error(s"$root has no committed snapshots"))
     require(to >= fromVersion, s"$root: changesSince($fromVersion) > latest $to")
-    // retention interacts with change feeds: an expired log entry in
-    // the polled range is the same invalidation as a rewrite — always
-    // surface the reset signal, never a raw missing-file error (the
-    // read itself races concurrent expiry, so the catch — not a
-    // pre-scan — is what makes the contract airtight)
-    def entryOrReset(v: Long): CommitDelta =
-      try logEntry(v)
-      catch { case _: IllegalArgumentException => sys.error(
-        s"$root version $v expired (snapshot retention) — " +
-          "reset the change-feed consumer from a full snapshot read")
-      }
     // the polled range reads ONLY the deltas: each append's change set
     // IS its add list, so the scan is O(files appended), never
     // O(table) — no snapshot reconstruction at all on the happy path.
@@ -1384,12 +1394,6 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val to = toVersion.orElse(latestVersion).getOrElse(
       sys.error(s"$root has no committed snapshots"))
     require(to >= fromVersion, s"$root: changeFeed($fromVersion) > latest $to")
-    def entryOrReset(v: Long): CommitDelta =
-      try logEntry(v)
-      catch { case _: IllegalArgumentException => sys.error(
-        s"$root version $v expired (snapshot retention) — " +
-          "reset the change-feed consumer from a full snapshot read")
-      }
     val parts: Seq[DataFrame] =
       (fromVersion + 1 to to).iterator.flatMap { v =>
         entryOrReset(v) match {
@@ -1450,9 +1454,9 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
         StructType.fromDDL(m.schemaDdl), schema, allowNew = true))
       latest.foreach(m => requireFreshNamesAddressable(m, schema))
       requireMappingStable(latest, mapAtWrite, "overwrite")
-      Pending(OpOverwrite, files, mergedDdl(latest, schema), partitionBy,
+      Pending(OpOverwrite, mergedDdl(latest, schema), partitionBy,
         latest.flatMap(_.bucketSpec).filter(_ => partitionBy == Seq(BucketCol)),
-        txn)
+        txn, files, livePaths(latest))
     }
   }
 
@@ -1483,8 +1487,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     val (files, schema) = writeDataFiles(bucketedWriteFrame(df, spec), Seq(BucketCol))
     commit { latest =>
       requireMappingStable(latest, mapAtWrite, "overwriteBucketed")
-      Pending(OpOverwrite, files, schemaDdlOf(schema), Seq(BucketCol),
-        Some(spec), txn)
+      Pending(OpOverwrite, schemaDdlOf(schema), Seq(BucketCol),
+        Some(spec), txn, files, livePaths(latest))
     }
   }
 
@@ -1509,8 +1513,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       require(latest.map(_.partitionCols).getOrElse(Nil) == parts &&
           latest.flatMap(_.bucketSpec) == spec,
         s"concurrent layout change during append to $root — retry append")
-      Pending(OpAppend, latest.map(_.files).getOrElse(Nil) ++ files,
-        mergedDdl(latest, schema), parts, spec, txn)
+      Pending(OpAppend, mergedDdl(latest, schema), parts, spec, txn, files)
     }
   } match { case v => maybeAutoCompact(); v }
 
@@ -2351,8 +2354,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
         require(conflict.isEmpty, s"concurrent commit v${cur.version} " +
           s"${conflict.getOrElse("")} during $op on $root — rerun")
       }
-      Pending(op, cur.files.filterNot(f => affectedPaths(f.path)) ++ added,
-        ddl, m.partitionCols, m.bucketSpec, txn, cdcFiles)
+      Pending(op, ddl, m.partitionCols, m.bucketSpec, txn, added,
+        affectedPaths, cdcFiles)
     }
   }
 
@@ -2768,8 +2771,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       // the restored files read with the TARGET's column mapping;
       // retired names stay the UNION (never resurrect a physical name
       // any retained history ever dropped)
-      Pending(OpRestore, target.files, target.schemaDdl,
-        target.partitionCols, target.bucketSpec, None,
+      Pending(OpRestore, target.schemaDdl, target.partitionCols,
+        target.bucketSpec, None, target.files, livePaths(latest),
         colMap = Some(target.colMap),
         retired = Some((cur.retired ++ target.retired).distinct))
     }
@@ -2894,7 +2897,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       require(latest.isEmpty,
         s"$root: a commit raced the CONVERT — the directory is " +
           "already a TxTable")
-      Pending(OpConvert, entries, schemaDdlOf(schema), Nil, None, None)
+      Pending(OpConvert, schemaDdlOf(schema), Nil, None, None, entries)
     }
   }
 
@@ -2927,11 +2930,11 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     commit { latest =>
       require(latest.isEmpty,
         s"$root: a commit raced the CONVERT FROM DELTA")
-      Pending(OpConvert, entries, schemaDdlOf(snap.schema), Nil, None,
+      Pending(OpConvert, schemaDdlOf(snap.schema), Nil, None,
         // the follow anchor: the Delta version this snapshot reflects,
         // recorded as an app-level txn so [[followDelta]] resumes
         // EXACTLY-ONCE from here without rescanning the foreign log
-        Some(TxTable.FollowTxnId -> snap.version),
+        Some(TxTable.FollowTxnId -> snap.version), entries,
         // id-mode upstream recorded in the manifest so every LATER
         // incremental window footer-verifies its new files too — the
         // convert-time check alone would leave window adds unverified
@@ -3198,7 +3201,6 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
           val entries = withDvSidecar(w.adds,
             w.adds.map(deltaAddEntry(_, statOk, identity)))
           val anyDv = w.adds.exists(_.dv.isDefined)
-          val byPath = entries.map(e => e.path -> e).toMap
           val removed = w.removedPaths.toSet
           commitFollow(anchor) { l =>
             // a net-removed path must be a file this follower KNOWS —
@@ -3206,8 +3208,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
             // unknown path means the two logs' path spellings drifted,
             // and silently keeping the file would serve rows upstream
             // deleted (until its VACUUM turns them into read errors)
-            removed.foreach(p => require(
-              l.files.exists(_.path == p) || w.addedAnywhere(p),
+            val live = livePaths(Some(l))
+            removed.foreach(p => require(live(p) || w.addedAnywhere(p),
               s"$root: foreign commit removes unknown file $p — " +
                 "path-encoding drift between the logs; followDelta" +
                 "(reset = true) re-snapshots the head"))
@@ -3223,11 +3225,9 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
               else if (entries.isEmpty) OpDelete
               else OpReplace
             Pending(op,
-              l.files.filterNot(f =>
-                byPath.contains(f.path) || removed(f.path)) ++ entries,
               if (w.metas.isEmpty) l.schemaDdl else schemaDdlOf(finalSchema),
               l.partitionCols, l.bucketSpec,
-              Some(TxTable.FollowTxnId -> head),
+              Some(TxTable.FollowTxnId -> head), entries, removed,
               colMap =
                 if (w.metas.isEmpty || finalColMap.isEmpty) None
                 else Some(finalColMap))
@@ -3236,8 +3236,9 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
           val snap = DeltaLog.snapshot(spark, root.toString)
           val entries = deltaSnapshotEntries(snap)
           commitFollow(anchor) { l =>
-            Pending(OpOverwrite, entries, schemaDdlOf(snap.schema), Nil,
-              None, Some(TxTable.FollowTxnId -> snap.version),
+            Pending(OpOverwrite, schemaDdlOf(snap.schema), Nil, None,
+              Some(TxTable.FollowTxnId -> snap.version), entries,
+              livePaths(Some(l)),
               // re-stamp (or clear) the id-mode marker from the head's
               // own metadata, preserving unrelated table properties
               properties = {
@@ -3369,19 +3370,16 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     def toPhys(k: String): String = snap.colMap.getOrElse(k, k)
     val entries = withDvSidecar(changed,
       changed.map(deltaAddEntry(_, statOk, toPhys)))
-    val byPath = entries.map(e => e.path -> e).toMap
     val appendShaped = removed.isEmpty &&
       changed.forall(a => !byPathM.contains(a.path) && a.dv.isEmpty)
     commitFollow(anchor) { l =>
-      val kept = l.files.filterNot(f =>
-        byPath.contains(f.path) || removed(f.path))
       val op =
         if (appendShaped) OpAppend
-        else if (kept.isEmpty && entries.isEmpty) OpDelete
+        else if (entries.isEmpty && l.files.forall(f => removed(f.path)))
+          OpDelete
         else OpReplace
-      Pending(op, kept ++ entries,
-        schemaDdlOf(snap.schema), l.partitionCols, l.bucketSpec,
-        Some(TxTable.FollowTxnId -> snap.version),
+      Pending(op, schemaDdlOf(snap.schema), l.partitionCols, l.bucketSpec,
+        Some(TxTable.FollowTxnId -> snap.version), entries, removed,
         colMap = if (snap.colMap == m.colMap) None else Some(snap.colMap))
     }
   }
@@ -4058,8 +4056,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     commit { latest =>
       require(latest.isEmpty,
         s"$root gained a snapshot during clone — clone into a fresh directory")
-      Pending(TxTable.OpClone, files, src.schemaDdl, src.partitionCols,
-        src.bucketSpec, None, None, Some(src.properties),
+      Pending(TxTable.OpClone, src.schemaDdl, src.partitionCols,
+        src.bucketSpec, None, files, properties = Some(src.properties),
         colMap = Some(src.colMap), retired = Some(src.retired))
     }
 
@@ -5090,37 +5088,37 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       val latest = latestVersion.map(manifest)
       val v = latest.map(_.version + 1).getOrElse(0L)
       val p = compose(latest)
-      // exactly-once bookkeeping: carry every app's latest batchId
-      // forward, then fold in this commit's tag
-      val txns = latest.map(_.txns).getOrElse(Map.empty) ++ p.txn
       val props0 = p.properties.getOrElse(
         latest.map(_.properties).getOrElse(Map.empty))
       val colMap = p.colMap.getOrElse(
         latest.map(_.colMap).getOrElse(Map.empty))
-      // the delta: composed files vs the previous snapshot — entries
-      // carried by reference (identical ENTRY, not just path: a MoR
-      // delete re-tags an unchanged path with a new deletion vector)
-      // drop out of both sides; a changed entry appears in add AND its
-      // path in remove, so replay replaces it. The log write is
-      // ∝ files CHANGED, never ∝ table.
-      val prevFiles = latest.map(_.files).getOrElse(Nil)
-      val prevByPath = prevFiles.map(f => f.path -> f).toMap
-      val added = p.files.filterNot(f => prevByPath.get(f.path).contains(f))
+      // the delta, normalized against the live entries: re-adding the
+      // identical ENTRY (not just path — a MoR delete re-tags an
+      // unchanged path with a new deletion vector) is a no-op, a
+      // changed entry appears in add AND its path in remove so replay
+      // replaces it, and removes of paths not live drop out. The log
+      // write is ∝ files CHANGED, never ∝ table.
+      val addByPath = p.add.map(f => f.path -> f).toMap
+      val touched = latest.map(_.files).getOrElse(Nil)
+        .filter(f => p.remove(f.path) || addByPath.contains(f.path))
+      val unchanged = touched.filter(f => addByPath.get(f.path).contains(f))
+        .map(_.path).toSet
+      val added = p.add.filterNot(f => unchanged(f.path))
       val props = advanceIdentity(props0, added, colMap, p.schemaDdl)
       val retired = p.retired.getOrElse(
         latest.map(_.retired).getOrElse(Nil))
-      val m = Manifest(v, p.operation, p.schemaDdl, p.files,
-        p.partitionCols, p.bucketSpec, txns, props, colMap, retired)
-      val newByPath = p.files.map(f => f.path -> f).toMap
       val delta = CommitDelta(v, p.operation, p.schemaDdl, p.partitionCols,
         p.bucketSpec, p.txn,
         add = added,
-        remove = prevFiles.filterNot(f =>
-          newByPath.get(f.path).contains(f)).map(_.path),
+        remove = touched.map(_.path).filterNot(unchanged),
         cdc = p.cdcFiles,
         properties = props,
         colMap = colMap,
         retired = retired)
+      // the writer's new state is the replay step itself — the cached
+      // snapshot and every checkpoint equal a cold replay, file order
+      // included
+      val m = applyDelta(latest.getOrElse(emptyState), delta)
       val deltaBytes = delta.toJson.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       val tmp = new Path(logDir, s".tmp-${java.util.UUID.randomUUID()}.json")
       val out = fs.create(tmp, false)
@@ -5726,21 +5724,23 @@ object TxTable {
         * are positional, the rename is pure metadata. */
       physNameOf: String => String)
 
-  /** What a write operation asks the commit loop to publish.
+  /** What a write operation asks the commit loop to publish: its delta,
+    * the entries it `add`s and the live paths it `remove`s. The commit
+    * normalizes both against the live entries: an added entry EQUAL to
+    * the live one at its path is a no-op (it and that path's remove
+    * drop out), one that differs replaces it (its path is removed
+    * too), and a remove of a path that is not live drops out.
     * `cdcFiles`: row-level change files (written out-of-line, referenced
     * only by this commit's delta — never part of the snapshot's file
     * list, so plain reads don't see them). `Some(Nil)` ≠ `None`: a
     * CDF-enabled commit that changed no rows serves an EMPTY change
-    * set, while a commit with no CDC recording resets the feed. */
-  /** `properties = None` inherits the previous snapshot's map
-    * verbatim (the normal case — only [[TxTable.setProperties]]/
-    * [[TxTable.unsetProperties]] pass a replacement). */
-  /** `colMap`/`retired = None` inherit the previous snapshot's values
-    * (the normal case — only the ALTER COLUMN verbs and [[TxTable.restore]]
-    * pass replacements). */
-  private final case class Pending(operation: String, files: Seq[FileEntry],
+    * set, while a commit with no CDC recording resets the feed.
+    * `properties`/`colMap`/`retired = None` inherit the previous
+    * snapshot's values (the normal case). */
+  private final case class Pending(operation: String,
       schemaDdl: String, partitionCols: Seq[String],
       bucketSpec: Option[BucketSpec], txn: Option[(String, Long)],
+      add: Seq[FileEntry] = Nil, remove: Set[String] = Set.empty,
       cdcFiles: Option[Seq[FileEntry]] = None,
       properties: Option[Map[String, String]] = None,
       colMap: Option[Map[String, String]] = None,

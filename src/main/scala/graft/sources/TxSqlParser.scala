@@ -36,10 +36,13 @@ import graft.core.TxTable
   * (the DESCRIBE HISTORY discipline — each returns a one-row result
   * relation). Spark's own grammar parses the DML shapes; this parser
   * intercepts them when (and only when) the target is a
-  * `txtable.`dir`` identifier and routes them onto the transactional
-  * Scala API — the pragmatic alternative to a V2
-  * SupportsRowLevelOperations catalog, which is the only other way
-  * Spark will resolve MERGE/UPDATE/DELETE:
+  * `txtable.`dir`` identifier or a registered bare `[db.]name` and
+  * routes them onto the transactional Scala API. Spark itself plans
+  * MERGE/UPDATE/DELETE only against a V2 catalog table that supports
+  * row-level operations, and these two spellings name no such table.
+  * The graft-catalog spelling (`graft.default.t`) does
+  * ([[GraftCatalog]]), so its row-level DML plans through Spark's own
+  * analyzer instead of the seam:
   *
   * {{{
   *   DELETE FROM txtable.`/t` WHERE o_totalprice < 1000
@@ -91,12 +94,13 @@ final class TxSqlParser(session: SparkSession, delegate: ParserInterface)
     else None
 
   /** Registry location for a graft-CATALOG qualified identifier
-    * (`graft[.ns].name`) — INSERT verbs through the V2 catalog route
-    * onto the commit-log API exactly like bare names (Spark's V1
-    * write fallback has no dynamic-overwrite exec, and dynamic
-    * `partitionOverwriteMode` is a common session policy); SELECTs
-    * are NOT re-routed — they stay on the V2 relation so bucketed
-    * joins keep their storage-partitioned plans. */
+    * (`graft[.ns].name`) — what lets the verbs Spark's grammar lacks
+    * (OPTIMIZE, VACUUM, RESTORE, `INSERT … REPLACE WHERE`, …) and the
+    * table verbs (ALTER, SHOW) take the catalog spelling, routing onto
+    * the commit-log API exactly like bare names. Plain INSERT and
+    * SELECT are NOT re-routed: INSERT plans through Spark's V2 write
+    * onto the table's native `BatchWrite`, and SELECT stays on the V2
+    * relation so bucketed joins keep their storage-partitioned plans. */
   private def resolveGraftCatalog(id: Seq[String]): Option[String] = {
     val key = id match {
       case Seq(c, n) if c.equalsIgnoreCase("graft")      => Some(n)
@@ -138,26 +142,18 @@ final class TxSqlParser(session: SparkSession, delegate: ParserInterface)
       t.manifestColumnStats(v))
   }
 
-  /** The `txtable.`dir`` path (or catalog-resolved name) of a DML
-    * target, unwrapping an alias. */
+  /** The `txtable.`dir`` path (or registered bare name) of a DML
+    * target, unwrapping an alias. UPDATE/MERGE/DELETE targets spelled
+    * through the graft CATALOG (`UPDATE graft.default.t SET …`)
+    * deliberately do NOT take the seam: the V2 table implements
+    * `SupportsRowLevelOperations` (delta-based) + `SupportsDelete`, so
+    * Spark's OWN analyzer rewrites plan them end-to-end
+    * ([[GraftRowLevelOperation]]) — a session without GraftExtensions
+    * writes identically. */
   private def txPath(plan: LogicalPlan): Option[String] = plan match {
     case u: UnresolvedRelation => resolveTx(u.multipartIdentifier)
     case s: SubqueryAlias => txPath(s.child)
     case _                => None
-  }
-
-  /** UPDATE/MERGE/DELETE targets spelled through the graft CATALOG
-    * (`UPDATE graft.default.t SET …`) deliberately do NOT take the
-    * seam: the V2 table implements `SupportsRowLevelOperations`
-    * (delta-based) + `SupportsDelete`, so Spark's OWN analyzer
-    * rewrites plan them end-to-end ([[GraftRowLevelOperation]]) — a
-    * session without GraftExtensions writes identically. Bare-name /
-    * `txtable.`dir`` spellings keep the seam (no catalog resolution
-    * exists for them). */
-  private def txDmlPath(plan: LogicalPlan): Option[String] = plan match {
-    case u: UnresolvedRelation => resolveTx(u.multipartIdentifier)
-    case s: SubqueryAlias      => txDmlPath(s.child)
-    case _                     => None
   }
 
   /** Same for table-verb targets, which parse as `UnresolvedTable`
@@ -311,6 +307,32 @@ final class TxSqlParser(session: SparkSession, delegate: ParserInterface)
   private def column(e: Expression) =
     org.apache.spark.sql.graft.StreamShims.columnOf(e)
 
+  /** The column names of a CREATE TABLE's `PARTITIONED BY (col, …)`;
+    * any other transform is refused, named with the `verb` spelling. */
+  private def partitionColumns(
+      partitioning: Seq[org.apache.spark.sql.connector.expressions.Transform],
+      verb: String): Seq[String] =
+    partitioning.map { tr =>
+      require(tr.name == "identity" && tr.references.length == 1 &&
+          tr.references.head.fieldNames.length == 1,
+        s"$verb supports PARTITIONED BY (col, ...) only — got $tr")
+      tr.references.head.fieldNames.head
+    }
+
+  /** An INSERT's query aligned BY POSITION to the table's columns (the
+    * SQL rule): each output column cast to its target's type and
+    * renamed to its name. */
+  private def byPosition(q: org.apache.spark.sql.DataFrame,
+      target: Seq[org.apache.spark.sql.types.StructField],
+      what: String): org.apache.spark.sql.DataFrame = {
+    require(q.columns.length == target.length,
+      s"$what by position needs ${target.length} columns, query " +
+        s"produces ${q.columns.length}")
+    q.select(q.columns.zip(target).map { case (src, f) =>
+      q.col(s"`$src`").cast(f.dataType).as(f.name)
+    }.toIndexedSeq: _*)
+  }
+
   private def rewrite(plan: LogicalPlan): LogicalPlan = plan match {
     // INSERT over the spliced relation would become a direct
     // parquet-location write BYPASSING the commit log (the files
@@ -449,14 +471,7 @@ final class TxSqlParser(session: SparkSession, delegate: ParserInterface)
                 .cast(f.dataType).as(f.name))
             }
           }.toIndexedSeq: _*)
-        } else {
-          require(q.columns.length == target.length,
-            s"INSERT INTO txtable.`$path` by position needs " +
-              s"${target.length} columns, query produces ${q.columns.length}")
-          q.select(q.columns.zip(target).map { case (src, f) =>
-            q.col(s"`$src`").cast(f.dataType).as(f.name)
-          }.toIndexedSeq: _*)
-        }
+        } else byPosition(q, target.toSeq, s"INSERT INTO txtable.`$path`")
       if (i.overwrite) {
         require(t.bucketKeys.isEmpty,
           "INSERT OVERWRITE a key-bucketed txtable is not supported — " +
@@ -486,13 +501,8 @@ final class TxSqlParser(session: SparkSession, delegate: ParserInterface)
       else {
         require(!exists, s"$path is already a TxTable — " +
           "use INSERT OVERWRITE or CREATE TABLE IF NOT EXISTS")
-        val partitionBy = c.partitioning.map { tr =>
-          require(tr.name == "identity" && tr.references.length == 1 &&
-              tr.references.head.fieldNames.length == 1,
-            s"CREATE TABLE txtable supports PARTITIONED BY (col, ...) " +
-              s"only — got $tr")
-          tr.references.head.fieldNames.head
-        }
+        val partitionBy = partitionColumns(c.partitioning,
+          "CREATE TABLE txtable")
         val q = org.apache.spark.sql.graft.StreamShims.ofRows(session, c.query)
         dmlResult("createtable",
           TxTable(session, path).overwrite(q, partitionBy))
@@ -519,13 +529,8 @@ final class TxSqlParser(session: SparkSession, delegate: ParserInterface)
             "a column list (or point LOCATION at an existing txtable)")
         val schema = StructType(c.columns.map(cd =>
           org.apache.spark.sql.types.StructField(cd.name, cd.dataType)))
-        val partitionBy = c.partitioning.map { tr =>
-          require(tr.name == "identity" && tr.references.length == 1 &&
-              tr.references.head.fieldNames.length == 1,
-            s"CREATE TABLE USING txtable supports PARTITIONED BY " +
-              s"(col, ...) only — got $tr")
-          tr.references.head.fieldNames.head
-        }
+        val partitionBy = partitionColumns(c.partitioning,
+          "CREATE TABLE USING txtable")
         val empty = session.createDataFrame(
           session.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
         val v = TxTable(session, loc).overwrite(empty, partitionBy)
@@ -553,13 +558,8 @@ final class TxSqlParser(session: SparkSession, delegate: ParserInterface)
       } else {
         require(!exists, s"$name / $loc already exists — " +
           "use INSERT OVERWRITE or CREATE TABLE IF NOT EXISTS")
-        val partitionBy = c.partitioning.map { tr =>
-          require(tr.name == "identity" && tr.references.length == 1 &&
-              tr.references.head.fieldNames.length == 1,
-            s"CREATE TABLE USING txtable supports PARTITIONED BY " +
-              s"(col, ...) only — got $tr")
-          tr.references.head.fieldNames.head
-        }
+        val partitionBy = partitionColumns(c.partitioning,
+          "CREATE TABLE USING txtable")
         val q = org.apache.spark.sql.graft.StreamShims.ofRows(session, c.query)
         val v = TxTable(session, loc).overwrite(q, partitionBy)
         catalog.register(name, loc, managed = explicitLoc.isEmpty)
@@ -574,7 +574,7 @@ final class TxSqlParser(session: SparkSession, delegate: ParserInterface)
     case DeleteFromTable(t, cond) if txPath(t).isDefined =>
       dmlResult("delete",
         TxTable(session, txPath(t).get).deleteWhere(column(cond)))
-    case UpdateTable(t, assignments, cond) if txDmlPath(t).isDefined =>
+    case UpdateTable(t, assignments, cond) if txPath(t).isDefined =>
       val set = assignments.map {
         case Assignment(key: UnresolvedAttribute, value) =>
           require(key.nameParts.length == 1,
@@ -584,12 +584,12 @@ final class TxSqlParser(session: SparkSession, delegate: ParserInterface)
         case a => sys.error(s"unsupported SET target ${a.key.sql}")
       }.toMap
       dmlResult("update",
-        TxTable(session, txDmlPath(t).get).updateWhere(
+        TxTable(session, txPath(t).get).updateWhere(
           cond.map(column).getOrElse(
             column(Literal.TrueLiteral)), set))
     case MergeIntoTable(t, source, onCond, matched, notMatched,
-        notMatchedBySource, _) if txDmlPath(t).isDefined =>
-      val tx = TxTable(session, txDmlPath(t).get)
+        notMatchedBySource, _) if txPath(t).isDefined =>
+      val tx = TxTable(session, txPath(t).get)
       // bucketed: ON must equate the bucket keys (routing hashes
       // them). Non-bucketed: ANY table columns may key the merge —
       // the file-granular core plans by zone map/Bloom instead
@@ -865,13 +865,8 @@ final class TxSqlParser(session: SparkSession, delegate: ParserInterface)
       val t = TxTable(session, path)
       val q = org.apache.spark.sql.graft.StreamShims.ofRows(
         session, delegate.parsePlan(selectSql))
-      val target = t.read().schema.fields
-      require(q.columns.length == target.length,
-        s"INSERT INTO txtable.`$path` REPLACE WHERE by position needs " +
-          s"${target.length} columns, query produces ${q.columns.length}")
-      val aligned = q.select(q.columns.zip(target).map { case (src, f) =>
-        q.col(s"`$src`").cast(f.dataType).as(f.name)
-      }.toIndexedSeq: _*)
+      val aligned = byPosition(q, t.read().schema.fields.toSeq,
+        s"INSERT INTO txtable.`$path` REPLACE WHERE")
       dmlResult("replace",
         t.replaceWhere(aligned, column(delegate.parseExpression(condSql))))
     case ShowPartitions(p, nm) if p != null ||

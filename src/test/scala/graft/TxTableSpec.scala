@@ -1217,6 +1217,8 @@ class TxTableSpec extends SparkSpec {
       t.commitSynthetic(if (c == 0) "overwrite" else "append", add, schemaDdl = ddl)
     }
     assert(t.latestVersion.contains(199L))
+    // the writer's cached state, before any cold read replaces it
+    val written = t.fileEntries(199)
     def logBytes(name: String): Long =
       new java.io.File(s"$dir/_graft_log/$name").length()
     // per-commit log bytes ∝ the DELTA (50 files), never the table:
@@ -1238,6 +1240,8 @@ class TxTableSpec extends SparkSpec {
     assert(t2.fileEntries(199).size == 10000)
     assert(t2.lastStateOps <= 2 * graft.core.TxTable.CheckpointInterval + 5,
       s"cold state reconstruction cost grew with the log: ${t2.lastStateOps} ops")
+    assert(t2.fileEntries(199) == written,
+      "the cold replay and the writer's state list different entries")
     // the warm path (a writer re-reading its own table) reads no log
     // at all — one freshness probe against the cached state
     assert(t.fileEntries(199).size == 10000)
@@ -1256,6 +1260,30 @@ class TxTableSpec extends SparkSpec {
     assert(t.fileEntries(199).size == 10000)
     assert(t.fileEntries(195).size == 196 * 50)
     intercept[Exception] { t.readVersion(100) }
+  }
+
+  test("the writer's snapshot equals a cold replay, order included") {
+    import spark.implicits._
+    val (t, dir) = freshTable("tx_replay_order")
+    // three files with disjoint id ranges: each delete vectors one file
+    t.overwrite((0 until 30).map(i => (i.toLong, s"n$i")).toDF("id", "name")
+      .repartitionByRange(3, col("id")))
+    t.setProperties(Map(TxTable.PropDeletionVectors -> "true"))
+    t.deleteWhere(col("id") === 0L)
+    t.deleteWhere(col("id") === 10L)
+    // the restore re-adds the two un-vectored entries and carries the
+    // third, which replay keeps in its place at the head of the list
+    assert(t.restore(1) == 4L)
+    val written = t.fileEntries(4)
+    assert(written.size == 3)
+    val cold = TxTable(spark, dir)
+    cold.invalidateCachedState()
+    assert(cold.fileEntries(4) == written,
+      s"writer ${written.map(_.path)} vs cold ${cold.fileEntries(4).map(_.path)}")
+    val v4 = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(f"$dir/_graft_log/${4}%020d.json"))
+    assert(v4.get("add").size == 2 && v4.get("remove").size == 2)
+    assert(cold.read().count() == 30)
   }
 
   test("deleteWhere rewrites only files holding matching rows; " +
