@@ -1,7 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Deduplication operator family — the LLM-training-data extension
   * surface (BASELINE.json north_star; motivated by the reference's
@@ -424,74 +429,132 @@ object Dedup {
     * *group* needs the transitive closure (A≈B, B≈C ⇒ {A,B,C} is one
     * cluster even when A≈C missed the threshold).
     *
-    * Iterative min-label propagation (Pregel-style CC): each round
-    * every vertex takes the min of its own label and its neighbours'
-    * labels. Converges in O(component diameter) rounds — near-dup
-    * components are shallow (LSH pair sets are clique-ish), so the
-    * loop is tight; each round is two shuffles over the EDGE set
-    * (which holds only documents that have at least one near-dup,
-    * typically a tiny fraction of the corpus) and the labels are
-    * `localCheckpoint`ed so lineage stays flat. At extreme skew the
-    * large-star/small-star refinement drops in without changing the
-    * contract. The convergence check is one count per round — an
-    * action, but over the (small) changed-label set, and bounded by
-    * `maxIters`. */
+    * The path is chosen by size, as Spark chooses a broadcast join.
+    * The pair set is checkpointed once, and an `observe()` on that job
+    * counts its rows and its null ids. A pair set of at most
+    * `spark.sql.autoBroadcastJoinThreshold / 16` rows (16 bytes a pair;
+    * `-1` turns this path off) is small enough to collect on the
+    * driver, which is what a broadcast does first: it is collected
+    * from the cached blocks and one union-find finds its components
+    * ([[localClusters]]). Larger graphs run min-label propagation
+    * ([[labelPropagation]]). Both return `(doc_id, cluster_id)` for
+    * every id that appears in a pair, with the same schema, sorted by
+    * `doc_id`. A pair holding a null id is refused by name on both
+    * paths. */
   def dupClusters(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    // materialize the PAIR set before the symmetric union (round 15):
+    // materialize the PAIR set once, its counts riding the same job:
     // `pairs` is typically a whole candidate-generation + verification
-    // pipeline (minHashLshPairs in p1/c11/c14), and the two union
-    // branches would otherwise evaluate it TWICE inside the edges
-    // checkpoint job. Pair-graph-sized by contract — only documents
-    // with at least one near-dup — so the extra materialization is
-    // bounded and tiny next to one pipeline re-evaluation.
-    val p = pairs.select(col("doc_a"), col("doc_b")).localCheckpoint(true)
-    val edges = p
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    // pipeline (minHashLshPairs in p1/c11/c14), and the distributed
+    // path's symmetric union would otherwise evaluate it TWICE
+    val obs = Observation()
+    val p = pairs.select(col("doc_a"), col("doc_b"))
+      .observe(obs, count(lit(1)).as("rows"),
+        count_if(col("doc_a").isNull || col("doc_b").isNull).as("nulls"))
+      .localCheckpoint(true)
+    val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionAll(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint(true) // reused every round
-    // ckpt = the round's CHECKPOINTED frame (the unpersist handle —
-    // unpersisting a lazy projection would release nothing); labels =
-    // the (doc, cluster_id) view the next round consumes
-    var ckpt = edges.select(col("src").as("doc")).distinct()
+    val stats = obs.get
+    val nulls = stats("nulls").asInstanceOf[Long]
+    val threshold =
+      pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    try {
+      if (nulls > 0) throw new IllegalArgumentException(
+        s"dupClusters: $nulls pairs hold a null doc id; a null is no document")
+      if (threshold >= 0 && stats("rows").asInstanceOf[Long] <= threshold / 16)
+        localClusters(p, edges.schema("src"))
+      else labelPropagation(edges, maxIters)
+    } finally p.unpersist()
+  }
+
+  /** The driver-side path of [[dupClusters]]: the pairs are collected,
+    * their distinct ids sorted under the column type's interpreted
+    * ordering (the ordering `min` uses) and numbered densely, and a
+    * union-find over int arrays links each pair, the root always the
+    * smaller index (so the component's minimum id), with path
+    * compression. The result is a LocalRelation already sorted by
+    * `doc_id`, typed like the distributed path's output. */
+  private def localClusters(p: DataFrame, id: StructField): DataFrame = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(id.dataType)
+    val toScala = CatalystTypeConverters.createToScalaConverter(id.dataType)
+    val ord = TypeUtils.getInterpretedOrdering(id.dataType)
+    val ends = p.select(col("doc_a").cast(id.dataType), col("doc_b").cast(id.dataType))
+      .collect().flatMap(r => Iterator(toCatalyst(r.get(0)), toCatalyst(r.get(1))))
+    val sorted = ends.sorted(ord)
+    val ids = sorted.indices
+      .collect { case i if i == 0 || ord.compare(sorted(i - 1), sorted(i)) != 0 => sorted(i) }
+      .toArray
+    def index(v: Any): Int = java.util.Arrays.binarySearch(
+      ids.asInstanceOf[Array[AnyRef]], v.asInstanceOf[AnyRef],
+      ord.asInstanceOf[Ordering[AnyRef]])
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(x: Int): Int = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var y = x
+      while (parent(y) != root) { val next = parent(y); parent(y) = root; y = next }
+      root
+    }
+    for (k <- ends.indices by 2) {
+      val (ra, rb) = (find(index(ends(k))), find(index(ends(k + 1))))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val rows = ids.indices.map(i => Row(toScala(ids(i)), toScala(ids(find(i)))))
+    p.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("doc_id", id.dataType, id.nullable),
+      StructField("cluster_id", id.dataType, id.nullable))))
+  }
+
+  /** The distributed path of [[dupClusters]]: iterative min-label
+    * propagation (Pregel-style CC). Each round every vertex takes the
+    * min of its own label and its neighbours' labels; a round is two
+    * shuffles over the EDGE set (only documents that have at least one
+    * near-dup) and its labels are `localCheckpoint`ed so lineage stays
+    * flat. The round's changed-label count is an `observe()` on that
+    * same checkpoint job, so convergence costs no extra job. Rounds
+    * grow with the component diameter: if `maxIters` rounds end with a
+    * label still changing, the call refuses by name rather than return
+    * partial labels. */
+  private def labelPropagation(pairEdges: DataFrame, maxIters: Int): DataFrame = {
+    val edges = pairEdges.localCheckpoint(true) // reused every round
+    var labels = edges.select(col("src").as("doc")).distinct()
       .select(col("doc"), col("doc").as("cluster_id"))
       .localCheckpoint(true)
-    var labels = ckpt
-    var converged = false
+    var changed = -1L
     var iter = 0
-    while (!converged && iter < maxIters) {
+    while (changed != 0 && iter < maxIters) {
       val neighborMin = edges
         .join(labels.withColumnRenamed("doc", "src"), "src")
         .groupBy(col("dst").as("doc"))
         .agg(min(col("cluster_id")).as("nmin"))
-      // `changed` rides the round's own checkpoint (round 16): labels
-      // propagate MINIMA, so a node changed iff its neighbor-min
-      // strictly undercuts its label — exactly next ≠ prev, computed
-      // in the same pass. The previous spelling ran a SECOND
-      // node-sized join job per round (next ⋈ labels on doc) just to
-      // test convergence; now the check is one isEmpty scan over the
-      // already-cached checkpoint blocks (guide §5: fewer driver
-      // actions per iteration).
+      // labels propagate MINIMA, so a node changed iff its neighbor-min
+      // strictly undercuts its label — next ≠ prev, computed in the
+      // same pass and counted by the round's own checkpoint job
+      val obs = Observation()
       val next = labels.join(neighborMin, Seq("doc"), "left")
         .select(col("doc"),
           least(col("cluster_id"), coalesce(col("nmin"), col("cluster_id")))
             .as("cluster_id"),
           (coalesce(col("nmin"), col("cluster_id")) < col("cluster_id"))
             .as("changed"))
+        .observe(obs, count_if(col("changed")).as("changed"))
+        .select("doc", "cluster_id")
         .localCheckpoint(true)
-      converged = next.where(col("changed")).isEmpty
+      changed = obs.get("changed").asInstanceOf[Long]
       // superseded checkpoint blocks must not accumulate in the block
       // manager across rounds (or across repeated invocations in a
       // long-lived session)
-      ckpt.unpersist()
-      ckpt = next
-      labels = next.select("doc", "cluster_id")
+      labels.unpersist()
+      labels = next
       iter += 1
     }
-    val out = labels.select(col("doc").as("doc_id"), col("cluster_id"))
-      .orderBy("doc_id")
     edges.unpersist()
-    p.unpersist()
-    out
+    if (changed != 0) {
+      labels.unpersist()
+      throw new IllegalStateException(s"dupClusters: labels still changing " +
+        s"after $maxIters rounds; a component's diameter exceeds the round " +
+        "bound, and partial labels would split it")
+    }
+    labels.select(col("doc").as("doc_id"), col("cluster_id")).orderBy("doc_id")
   }
 
   /** C16 — benchmark decontamination: flag training documents sharing

@@ -23,9 +23,9 @@ import graft.ops.{Dedup, TextOps}
   *
   * Scale shape: stages 1–2 are map-side projections fused into the
   * scan; stage 3 shuffles once on the text hash; stage 4 shuffles on
-  * content-derived band keys and runs the component loop on the
-  * (tiny) paired subset only. Nothing collects to the driver except
-  * the component loop's bounded convergence checks. */
+  * content-derived band keys and finds components over the (tiny)
+  * paired subset only. The only collect to the driver is that pair
+  * set, when it fits [[Dedup.dupClusters]]' broadcast cap. */
 object CleanCorpus {
 
   def run(docs: DataFrame, qualityMin: Double = 0.5): DataFrame = {

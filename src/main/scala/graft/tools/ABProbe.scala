@@ -24,6 +24,9 @@ import graft.steps.GraphOps
   *    `bucketPairs` kernel, over c4's prefix-posting buckets.
   *  - `g5-loop`: the "fat" PageRank loop (outdeg carried on every edge,
   *    the formulation before the slim loop) vs `GraphOps.pageRank`.
+  *  - `dup-clusters`: `Dedup.dupClusters`' distributed label-propagation
+  *    loop (`spark.sql.autoBroadcastJoinThreshold` = -1) vs its
+  *    driver-side union-find, over c11's MinHash-LSH pair graph.
   */
 object ABProbe {
   /** A named spelling; running it writes its result to the noop sink. */
@@ -102,6 +105,18 @@ object ABProbe {
         .localCheckpoint(true)
       (Arm("fat-loop", () => fatPageRank(spark, edges, 5)),
         Arm("pageRank", () => noop(GraphOps.pageRank(edges, 5))))
+    },
+    "dup-clusters" -> { (spark, d) =>
+      val pairs = graft.ops.Dedup.minHashLshPairs(Tables.documents(spark, d))
+        .localCheckpoint(true)
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val threshold = spark.conf.get(key)
+      def clusters(): Unit = noop(graft.ops.Dedup.dupClusters(pairs))
+      (Arm("distributed", () => {
+          spark.conf.set(key, "-1")
+          try clusters() finally spark.conf.set(key, threshold)
+        }),
+        Arm("driver", () => clusters()))
     })
 
   /** PageRank with outdeg joined onto every closure edge once and the

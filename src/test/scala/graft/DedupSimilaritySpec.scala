@@ -315,6 +315,105 @@ class DedupSimilaritySpec extends SparkSpec {
     }
   }
 
+  /** Runs `f` with the driver-side path of dupClusters turned off, so
+    * it takes the distributed label-propagation loop. */
+  private def distributed[T](f: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try f finally spark.conf.set(key, prev)
+  }
+
+  /** Union-find reference: every vertex of `edges` → the minimum of its
+    * component under `ord`. */
+  private def components[T](edges: Seq[(T, T)])(implicit ord: Ordering[T]): Map[T, T] = {
+    val parent = scala.collection.mutable.Map[T, T]()
+    def find(x: T): T = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb)
+    }
+    edges.flatMap(e => Seq(e._1, e._2)).distinct.map(v => v -> find(v)).toMap
+  }
+
+  test("dupClusters: a 31-doc chain is one cluster on the driver path; " +
+      "the distributed loop refuses past its round bound") {
+    import spark.implicits._
+    val chain = (0 until 30).map(i => (i.toLong, i + 1L)).toDF("doc_a", "doc_b")
+    val got = graft.ops.Dedup.dupClusters(chain).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    assert(got == (0L to 30L).map(_ -> 0L))
+    val e = intercept[IllegalStateException](
+      distributed(graft.ops.Dedup.dupClusters(chain)))
+    assert(e.getMessage.contains("dupClusters: labels still changing after 20 rounds"))
+  }
+
+  test("dupClusters: a null doc id refuses by name on both paths") {
+    import spark.implicits._
+    val pairs = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)),
+      (None, Some(3L)), (Some(3L), Some(4L)), (Some(5L), None), (Some(5L), Some(6L)))
+      .toDF("doc_a", "doc_b")
+    for (run <- Seq[(=> Any) => Any](f => f, f => distributed(f))) {
+      val e = intercept[IllegalArgumentException](
+        run(graft.ops.Dedup.dupClusters(pairs)))
+      assert(e.getMessage.contains("dupClusters: 2 pairs hold a null doc id"))
+    }
+  }
+
+  test("dupClusters == union-find reference on chains, stars, cliques and " +
+      "random graphs; both paths agree in schema and order") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    // graphs over vertices 0..n-1, each vertex renamed through a random
+    // permutation so the component minimum sits anywhere in the chain
+    def renamed(n: Int, edges: Seq[(Int, Int)]): Seq[(Int, Int)] = {
+      val perm = rnd.shuffle((0 until n).toVector)
+      edges.map { case (a, b) => if (rnd.nextBoolean()) (perm(a), perm(b)) else (perm(b), perm(a)) }
+    }
+    def chain(n: Int) = renamed(n, (0 until n - 1).map(i => (i, i + 1)))
+    def star(n: Int) = renamed(n, (1 until n).map(i => (0, i)))
+    def clique(n: Int) = renamed(n, for (a <- 0 until n; b <- a + 1 until n) yield (a, b))
+    def random(n: Int, m: Int) = renamed(n, Seq.fill(m) {
+      val a = rnd.nextInt(n); val b = rnd.nextInt(n); (a, if (a == b) (b + 1) % n else b)
+    }.distinct)
+    // id types: Long ids ≥ 2^31, negative Int ids, String ids
+    def asLong(e: Seq[(Int, Int)]) = e.map { case (a, b) => ((1L << 31) + 3L * a, (1L << 31) + 3L * b) }
+    def asNegInt(e: Seq[(Int, Int)]) = e.map { case (a, b) => (-7 * a - 1, -7 * b - 1) }
+    def asString(e: Seq[(Int, Int)]) = e.map { case (a, b) => (s"d$a", s"d$b") }
+    def check[T: Ordering](edges: Seq[(T, T)], pairs: org.apache.spark.sql.DataFrame,
+        bothPaths: Boolean): Unit = {
+      val expected = components(edges)
+      val local = graft.ops.Dedup.dupClusters(pairs)
+      val localRows = local.collect().toSeq
+      assert(localRows.map(r => r.getAs[T](0) -> r.getAs[T](1)).toMap == expected,
+        s"edges=$edges")
+      assert(localRows.map(_.getAs[T](0)) == expected.keys.toSeq.sorted,
+        "driver path must come back sorted by doc_id")
+      if (bothPaths) {
+        val dist = distributed(graft.ops.Dedup.dupClusters(pairs))
+        assert(dist.schema == local.schema)
+        assert(distributed(dist.collect().toSeq) == localRows, s"edges=$edges")
+      }
+    }
+    // driver path: diameters up to ~200
+    for (g <- Seq(chain(201), star(200), clique(20), random(300, 280), random(60, 200))) {
+      check(asLong(g), asLong(g).toDF("doc_a", "doc_b"), bothPaths = false)
+      check(asNegInt(g), asNegInt(g).toDF("doc_a", "doc_b"), bothPaths = false)
+      check(asString(g), asString(g).toDF("doc_a", "doc_b"), bothPaths = false)
+    }
+    // both paths: diameters below the distributed loop's 20 rounds; a
+    // few cases only, since each distributed call runs ~a second
+    val small = chain(12)
+    check(asLong(small), asLong(small).toDF("doc_a", "doc_b"), bothPaths = true)
+    val st = star(15)
+    check(asNegInt(st), asNegInt(st).toDF("doc_a", "doc_b"), bothPaths = true)
+    val cl = clique(6) ++ random(12, 10).map { case (a, b) => (a + 6, b + 6) }
+    check(asString(cl), asString(cl).toDF("doc_a", "doc_b"), bothPaths = true)
+  }
+
   test("srp signature: deterministic and in [0, 2^bits)") {
     val sigs = emb.select(Similarity.srpSignature(col("embedding"), 16).as("s"))
     val mm = sigs.agg(min("s"), max("s")).collect()(0)
