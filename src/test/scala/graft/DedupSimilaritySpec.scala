@@ -297,18 +297,7 @@ class DedupSimilaritySpec extends SparkSpec {
         val a = rnd.nextInt(nV).toLong; val b = rnd.nextInt(nV).toLong
         if (a < b) (a, b) else if (b < a) (b, a) else (a, a + 1)
       }.distinct
-      // driver-side union-find reference
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElse(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val verts = edges.flatMap(e => Seq(e._1, e._2)).distinct
-      val expected = verts.map(v => v -> find(v)).toMap
+      val expected = components(edges)
       val got = graft.ops.Dedup.dupClusters(edges.toDF("doc_a", "doc_b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expected, s"edges=$edges")
