@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
 
 /** Deduplication operator family — the LLM-training-data extension
   * surface (BASELINE.json north_star; motivated by the reference's
@@ -429,42 +429,74 @@ object Dedup {
     * *group* needs the transitive closure (A≈B, B≈C ⇒ {A,B,C} is one
     * cluster even when A≈C missed the threshold).
     *
-    * The path is chosen by size, as Spark chooses a broadcast join.
-    * The pair set is checkpointed once, and an `observe()` on that job
-    * counts its rows and its null ids. A pair set of at most
-    * `spark.sql.autoBroadcastJoinThreshold / 16` rows (16 bytes a pair;
-    * `-1` turns this path off) is small enough to collect on the
-    * driver, which is what a broadcast does first: it is collected
-    * from the cached blocks and one union-find finds its components
-    * ([[localClusters]]). Larger graphs run min-label propagation
-    * ([[labelPropagation]]). Both return `(doc_id, cluster_id)` for
-    * every id that appears in a pair, with the same schema, sorted by
-    * `doc_id`. A pair holding a null id is refused by name on both
-    * paths. */
+    * The path is chosen by size. The pair set is checkpointed once
+    * ([[pinPairs]]), and an `observe()` on that job counts its rows,
+    * its null ids and its id bytes. A pair set within [[LocalPairCap]]
+    * pairs and [[LocalIdBytesCap]] id bytes is collected from the
+    * cached blocks and one driver-side union-find finds its components
+    * ([[localClusters]]). Larger graphs, which the driver cannot be
+    * trusted to hold, run min-label propagation ([[labelPropagation]]),
+    * which refuses by name when a component's diameter exceeds its
+    * round bound. Both return `(doc_id,
+    * cluster_id)` for every id that appears in a pair, with the same
+    * schema, sorted by `doc_id`. A pair holding a null id is refused by
+    * name. */
   def dupClusters(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    // materialize the PAIR set once, its counts riding the same job:
-    // `pairs` is typically a whole candidate-generation + verification
-    // pipeline (minHashLshPairs in p1/c11/c14), and the distributed
-    // path's symmetric union would otherwise evaluate it TWICE
-    val obs = Observation()
-    val p = pairs.select(col("doc_a"), col("doc_b"))
-      .observe(obs, count(lit(1)).as("rows"),
-        count_if(col("doc_a").isNull || col("doc_b").isNull).as("nulls"))
-      .localCheckpoint(true)
-    val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionAll(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    val stats = obs.get
-    val nulls = stats("nulls").asInstanceOf[Long]
-    val threshold =
-      pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val (p, rows, idBytes) = pinPairs(pairs)
     try {
-      if (nulls > 0) throw new IllegalArgumentException(
-        s"dupClusters: $nulls pairs hold a null doc id; a null is no document")
-      if (threshold >= 0 && stats("rows").asInstanceOf[Long] <= threshold / 16)
-        localClusters(p, edges.schema("src"))
-      else labelPropagation(edges, maxIters)
+      if (rows <= LocalPairCap && idBytes <= LocalIdBytesCap) localClusters(p)
+      else labelPropagation(p, maxIters)
     } finally p.unpersist()
   }
+
+  /** The driver path's bounds: the most pairs, and the most id bytes
+    * (summed over both ends, UTF-8 for strings, the type's width
+    * otherwise), that [[dupClusters]] collects. Measured same-JVM on a
+    * 4-vCPU VM with a 3 GB heap, over chains of 5 docs as
+    * `graft.tools.ABProbe dup-clusters-cap` builds them: at 655,360 Long pairs the
+    * driver path takes 6.5 s against the loop's 11.5 s and also runs in
+    * a 1 GB heap; at 655,360 pairs of 24-byte String ids (31 MB) it
+    * takes 9.7 s against 23.5 s; 100,000 pairs of 160-byte ids (32 MB)
+    * run in a 1 GB heap in 2.8 s. Past the caps the driver path stops
+    * paying: at 4,000,000 Long pairs both paths take 89-90 s, but the
+    * union-find's result holds 2.1 GB of the 3 GB heap against the
+    * loop's 0.7 GB. */
+  private[graft] val LocalPairCap = 655360L
+  private[graft] val LocalIdBytesCap = 32L << 20
+
+  /** `(doc_a, doc_b)` of `pairs`, checkpointed once with its row count,
+    * and the bytes of its ids, riding the same job: `pairs` is typically
+    * a whole candidate-generation + verification pipeline
+    * (minHashLshPairs in p1/c11/c14), which the distributed path would
+    * otherwise evaluate twice. A pair holding a null id is refused by
+    * name. The caller unpersists the checkpoint. */
+  private[graft] def pinPairs(pairs: DataFrame): (DataFrame, Long, Long) = {
+    val ab = pairs.select(col("doc_a"), col("doc_b"))
+    def width(c: String): Column = ab.schema(c).dataType match {
+      case _: StringType | BinaryType => coalesce(octet_length(col(c)), lit(0))
+      case t => lit(t.defaultSize)
+    }
+    val obs = Observation()
+    val p = ab
+      .observe(obs, count(lit(1)).as("rows"),
+        count_if(col("doc_a").isNull || col("doc_b").isNull).as("nulls"),
+        coalesce(sum(width("doc_a") + width("doc_b")), lit(0L)).as("bytes"))
+      .localCheckpoint(true)
+    val stats = obs.get
+    val nulls = stats("nulls").asInstanceOf[Long]
+    if (nulls > 0) {
+      p.unpersist()
+      throw new IllegalArgumentException(
+        s"dupClusters: $nulls pairs hold a null doc id; a null is no document")
+    }
+    (p, stats("rows").asInstanceOf[Long], stats("bytes").asInstanceOf[Long])
+  }
+
+  /** The ends of the pinned pairs as one `(src, dst)` edge list, both
+    * directions; its column type is the wider of the two ends'. */
+  private def symmetric(p: DataFrame): DataFrame =
+    p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .unionAll(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
 
   /** The driver-side path of [[dupClusters]]: the pairs are collected,
     * their distinct ids sorted under the column type's interpreted
@@ -473,7 +505,8 @@ object Dedup {
     * smaller index (so the component's minimum id), with path
     * compression. The result is a LocalRelation already sorted by
     * `doc_id`, typed like the distributed path's output. */
-  private def localClusters(p: DataFrame, id: StructField): DataFrame = {
+  private[graft] def localClusters(p: DataFrame): DataFrame = {
+    val id = symmetric(p).schema("src")
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(id.dataType)
     val toScala = CatalystTypeConverters.createToScalaConverter(id.dataType)
     val ord = TypeUtils.getInterpretedOrdering(id.dataType)
@@ -514,8 +547,8 @@ object Dedup {
     * grow with the component diameter: if `maxIters` rounds end with a
     * label still changing, the call refuses by name rather than return
     * partial labels. */
-  private def labelPropagation(pairEdges: DataFrame, maxIters: Int): DataFrame = {
-    val edges = pairEdges.localCheckpoint(true) // reused every round
+  private[graft] def labelPropagation(p: DataFrame, maxIters: Int): DataFrame = {
+    val edges = symmetric(p).localCheckpoint(true) // reused every round
     var labels = edges.select(col("src").as("doc")).distinct()
       .select(col("doc"), col("doc").as("cluster_id"))
       .localCheckpoint(true)

@@ -25,7 +25,7 @@ import graft.ops.{Dedup, TextOps}
   * scan; stage 3 shuffles once on the text hash; stage 4 shuffles on
   * content-derived band keys and finds components over the (tiny)
   * paired subset only. The only collect to the driver is that pair
-  * set, when it fits [[Dedup.dupClusters]]' broadcast cap. */
+  * set, when it fits [[Dedup.dupClusters]]' driver-path caps. */
 object CleanCorpus {
 
   def run(docs: DataFrame, qualityMin: Double = 0.5): DataFrame = {

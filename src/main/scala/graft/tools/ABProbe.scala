@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Sessions, Tables}
+import graft.ops.Dedup
 import graft.steps.GraphOps
 
 /** Same-JVM interleaved A/B of two named spellings of one computation:
@@ -25,8 +26,10 @@ import graft.steps.GraphOps
   *  - `g5-loop`: the "fat" PageRank loop (outdeg carried on every edge,
   *    the formulation before the slim loop) vs `GraphOps.pageRank`.
   *  - `dup-clusters`: `Dedup.dupClusters`' distributed label-propagation
-  *    loop (`spark.sql.autoBroadcastJoinThreshold` = -1) vs its
-  *    driver-side union-find, over c11's MinHash-LSH pair graph.
+  *    loop vs its driver-side union-find, over c11's MinHash-LSH pair
+  *    graph.
+  *  - `dup-clusters-cap`: the same two paths over a synthetic graph of
+  *    `Dedup.LocalPairCap` pairs; its SF_DIR argument is not read.
   */
 object ABProbe {
   /** A named spelling; running it writes its result to the noop sink. */
@@ -107,17 +110,27 @@ object ABProbe {
         Arm("pageRank", () => noop(GraphOps.pageRank(edges, 5))))
     },
     "dup-clusters" -> { (spark, d) =>
-      val pairs = graft.ops.Dedup.minHashLshPairs(Tables.documents(spark, d))
-        .localCheckpoint(true)
-      val key = "spark.sql.autoBroadcastJoinThreshold"
-      val threshold = spark.conf.get(key)
-      def clusters(): Unit = noop(graft.ops.Dedup.dupClusters(pairs))
-      (Arm("distributed", () => {
-          spark.conf.set(key, "-1")
-          try clusters() finally spark.conf.set(key, threshold)
-        }),
-        Arm("driver", () => clusters()))
+      dupClusterArms(Dedup.minHashLshPairs(Tables.documents(spark, d)))
+    },
+    "dup-clusters-cap" -> { (spark, _) =>
+      // chains of 5 docs (4 pairs each) over hashed Long ids, as many
+      // pairs as the driver path takes
+      val k = col("id"); val c = (k / 4).cast("long") * 5 + k % 4
+      dupClusterArms(spark.range(Dedup.LocalPairCap)
+        .select(xxhash64(c).as("doc_a"), xxhash64(c + 1).as("doc_b")))
     })
+
+  /** `Dedup.dupClusters`' two paths over one pinned pair set, each arm
+    * pinning it as `dupClusters` does. */
+  private def dupClusterArms(pairs0: DataFrame): (Arm, Arm) = {
+    val pairs = pairs0.localCheckpoint(true)
+    def arm(name: String, path: DataFrame => DataFrame) = Arm(name, () => {
+      val (p, _, _) = Dedup.pinPairs(pairs)
+      try noop(path(p)) finally p.unpersist()
+    })
+    (arm("distributed", Dedup.labelPropagation(_, 20)),
+      arm("driver", Dedup.localClusters))
+  }
 
   /** PageRank with outdeg joined onto every closure edge once and the
     * loop carrying that fat edge table — the spelling the slim loop of

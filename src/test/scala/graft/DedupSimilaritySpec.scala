@@ -304,13 +304,11 @@ class DedupSimilaritySpec extends SparkSpec {
     }
   }
 
-  /** Runs `f` with the driver-side path of dupClusters turned off, so
-    * it takes the distributed label-propagation loop. */
-  private def distributed[T](f: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try f finally spark.conf.set(key, prev)
+  /** dupClusters' distributed path, called directly: the pair set
+    * pinned as dupClusters pins it, then min-label propagation. */
+  private def distributed(pairs: org.apache.spark.sql.DataFrame) = {
+    val (p, _, _) = graft.ops.Dedup.pinPairs(pairs)
+    try graft.ops.Dedup.labelPropagation(p, 20) finally p.unpersist()
   }
 
   /** Union-find reference: every vertex of `edges` → the minimum of its
@@ -335,8 +333,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val got = graft.ops.Dedup.dupClusters(chain).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toSeq
     assert(got == (0L to 30L).map(_ -> 0L))
-    val e = intercept[IllegalStateException](
-      distributed(graft.ops.Dedup.dupClusters(chain)))
+    val e = intercept[IllegalStateException](distributed(chain))
     assert(e.getMessage.contains("dupClusters: labels still changing after 20 rounds"))
   }
 
@@ -345,10 +342,22 @@ class DedupSimilaritySpec extends SparkSpec {
     val pairs = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)),
       (None, Some(3L)), (Some(3L), Some(4L)), (Some(5L), None), (Some(5L), Some(6L)))
       .toDF("doc_a", "doc_b")
-    for (run <- Seq[(=> Any) => Any](f => f, f => distributed(f))) {
-      val e = intercept[IllegalArgumentException](
-        run(graft.ops.Dedup.dupClusters(pairs)))
+    for (run <- Seq(graft.ops.Dedup.dupClusters(_: org.apache.spark.sql.DataFrame), distributed _)) {
+      val e = intercept[IllegalArgumentException](run(pairs))
       assert(e.getMessage.contains("dupClusters: 2 pairs hold a null doc id"))
+    }
+  }
+
+  test("dupClusters: the pinned pair set counts its rows and id bytes, " +
+      "UTF-8 for strings and the type's width otherwise") {
+    import spark.implicits._
+    for ((pairs, rows, bytes) <- Seq(
+        (Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b"), 2L, 32L),
+        (Seq((1, 2)).toDF("doc_a", "doc_b"), 1L, 8L),
+        (Seq(("ab", "cdé"), ("f", "g")).toDF("doc_a", "doc_b"), 2L, 8L))) {
+      val (p, r, b) = graft.ops.Dedup.pinPairs(pairs)
+      p.unpersist()
+      assert((r, b) == (rows, bytes))
     }
   }
 
@@ -382,9 +391,9 @@ class DedupSimilaritySpec extends SparkSpec {
       assert(localRows.map(_.getAs[T](0)) == expected.keys.toSeq.sorted,
         "driver path must come back sorted by doc_id")
       if (bothPaths) {
-        val dist = distributed(graft.ops.Dedup.dupClusters(pairs))
+        val dist = distributed(pairs)
         assert(dist.schema == local.schema)
-        assert(distributed(dist.collect().toSeq) == localRows, s"edges=$edges")
+        assert(dist.collect().toSeq == localRows, s"edges=$edges")
       }
     }
     // driver path: diameters up to ~200
