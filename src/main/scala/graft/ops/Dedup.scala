@@ -1,12 +1,13 @@
 package graft.ops
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Sort}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
+import org.apache.spark.sql.graft.StreamShims
+import org.apache.spark.sql.types.{BinaryType, StringType}
 
 /** Deduplication operator family — the LLM-training-data extension
   * surface (BASELINE.json north_star; motivated by the reference's
@@ -104,7 +105,7 @@ object Dedup {
     // i<j IS the canonical a<b pair, and emits the bucket's pairs in
     // one array — node-for-node the old plan shape (one Generate), and
     // a same-JVM probe measured it 1.61× over the HOF. Suffix vs
-    // one-call stays unmeasured until ROADMAP item 4 (see
+    // one-call stays unmeasured until ROADMAP item 6 (see
     // VectorKernels.bucketPairs). Pair set is provably the old one:
     // both spell {(min(x,y), max(x,y)) : unordered position pairs}
     // (DedupSimilaritySpec pins the multiset against the HOF spelling).
@@ -216,20 +217,21 @@ object Dedup {
   /** C2 — MinHash + LSH near-dup pairs (the subquadratic scale path
     * for C4's semantics).
     *
-    * shingle → 128 min-hashes (xxhash64 seeded by position — a
-    * `transform` over the signature index, `array_min` over shingle
-    * hashes; all codegen'd, no explode of the shingle×perm cross
-    * product) → 32 bands × 4 rows → bucket-join on (band, bandHash)
-    * → candidate pairs → *exact* Jaccard verification on the shingle
-    * arrays (so precision is exact; only recall is probabilistic:
-    * P(miss) = (1−J⁴)³² ≈ 5e-8 at J = 0.8, ~0 at the fixture's
-    * planted J ≈ 0.99).
+    * shingle → 128 min-hashes and 32 bands × 4 rows in one codegen
+    * kernel pass ([[graft.functions.MinHashBands]]) → ONE
+    * `collect_list` aggregation on (band, bandHash) builds each
+    * bucket's id list → the bucket's pairs ([[cappedBucketPairs]]) →
+    * *exact* Jaccard verification on the shingle arrays (so precision
+    * is exact; only recall is probabilistic: P(miss) = (1−J⁴)³² ≈ 5e-8
+    * at J = 0.8, ~0 at the fixture's planted J ≈ 0.99).
     *
     * Scale: signatures are 128 longs/doc regardless of doc size; the
-    * only shuffles are the band bucket-join (key = band hash) and the
-    * verification joins (key = doc_id). Hot buckets (identical
-    * boilerplate docs) are exactly the dup clusters we're hunting —
-    * AQE skew-join handles them. */
+    * only shuffles are the bucket aggregation (key = band hash) and
+    * the verification joins (key = doc_id). A bucket above
+    * `maxBucket` ids (the df-cap, [[DefaultMaxDocFreq]]) is a
+    * mass-duplication flood, exactDedup territory: it is dropped with
+    * an observe()d count rather than let its quadratic pair emission
+    * pin one task. */
   def minHashLshPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.8,
       numHashes: Int = 128, bands: Int = 32,
       maxBucket: Option[Int] = Some(DefaultMaxDocFreq)): DataFrame = {
@@ -468,10 +470,17 @@ object Dedup {
     * and the bytes of its ids, riding the same job: `pairs` is typically
     * a whole candidate-generation + verification pipeline
     * (minHashLshPairs in p1/c11/c14), which the distributed path would
-    * otherwise evaluate twice. A pair holding a null id is refused by
-    * name. The caller unpersists the checkpoint. */
+    * otherwise evaluate twice. A global sort at the root of `pairs`
+    * (every pair operator ends in one) is dropped first: component
+    * labels do not depend on row order, and the sort would cost a
+    * range-sampling job and a shuffle. A pair holding a null id is
+    * refused by name. The caller unpersists the checkpoint. */
   private[graft] def pinPairs(pairs: DataFrame): (DataFrame, Long, Long) = {
-    val ab = pairs.select(col("doc_a"), col("doc_b"))
+    val unsorted = StreamShims.analyzedPlan(pairs) match {
+      case s: Sort if s.global => StreamShims.ofRows(pairs.sparkSession, s.child)
+      case _ => pairs
+    }
+    val ab = unsorted.select(col("doc_a"), col("doc_b"))
     def width(c: String): Column = ab.schema(c).dataType match {
       case _: StringType | BinaryType => coalesce(octet_length(col(c)), lit(0))
       case t => lit(t.defaultSize)
@@ -508,7 +517,6 @@ object Dedup {
   private[graft] def localClusters(p: DataFrame): DataFrame = {
     val id = symmetric(p).schema("src")
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(id.dataType)
-    val toScala = CatalystTypeConverters.createToScalaConverter(id.dataType)
     val ord = TypeUtils.getInterpretedOrdering(id.dataType)
     val ends = p.select(col("doc_a").cast(id.dataType), col("doc_b").cast(id.dataType))
       .collect().flatMap(r => Iterator(toCatalyst(r.get(0)), toCatalyst(r.get(1))))
@@ -531,10 +539,12 @@ object Dedup {
       val (ra, rb) = (find(index(ends(k))), find(index(ends(k + 1))))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    val rows = ids.indices.map(i => Row(toScala(ids(i)), toScala(ids(find(i)))))
-    p.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
-      StructField("doc_id", id.dataType, id.nullable),
-      StructField("cluster_id", id.dataType, id.nullable))))
+    // the relation holds the catalyst values the union-find already
+    // has, each id object shared by its own row and its members' rows
+    val out = Seq("doc_id", "cluster_id")
+      .map(AttributeReference(_, id.dataType, id.nullable)())
+    StreamShims.ofRows(p.sparkSession, LocalRelation(out,
+      ids.indices.map(i => InternalRow(ids(i), ids(find(i))))))
   }
 
   /** The distributed path of [[dupClusters]]: iterative min-label

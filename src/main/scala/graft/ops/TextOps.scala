@@ -57,55 +57,92 @@ object TextOps {
   /** The plan-shipped profile model (built once per JVM). */
   lazy val langProfileIndex = new graft.functions.LangProfileIndex(trigramProfiles)
 
+  /** The languages in argmax precedence order (ties go to the earlier
+    * one), as [[trigramProfiles]] lists them. */
+  private val langNames = trigramProfiles.map(_._1)
+
+  /** The per-language profile scores of a text column, in
+    * [[trigramProfiles]] order — one codegen kernel pass
+    * ([[graft.functions.LangScores]]); null for a null text. */
+  def langScores(text: Column): Column =
+    graft.functions.GraftFunctions.langScores(lower(text), langProfileIndex)
+
+  /** The predicted language of a score array: the argmax with ties to
+    * the earlier language in [[trigramProfiles]] (so all-zero scores
+    * give "en"), and the last language, "zh", for null scores.
+    * Spelled as `array_max` over (score, precedence) structs so
+    * `scores` appears once: a Filter inlines the projection that
+    * computes it, and `FilterExec` does no subexpression elimination,
+    * so a chain naming each score would run the kernel once per
+    * reference. The index is never null: generated code for
+    * `element_at` with a null index returns an element, not null, in
+    * a Filter (Spark 4.1). */
+  def langPred(scores: Column): Column = {
+    val n = langNames.size
+    val precedence = array((n - 1 to 0 by -1).map(lit): _*)
+    element_at(array(langNames.reverse.map(lit): _*),
+      coalesce(array_max(arrays_zip(scores, precedence)).getField("1"), lit(0)) + 1)
+  }
+
   /** T1 — language identification by character-n-gram profile scoring
     * (Cavnar–Trenkle): score = Σ over every n-gram occurrence of the
     * gram's rank weight, prediction = argmax with a fixed precedence
     * order (en > de > es > fr > zh on ties) so the result is
-    * deterministic and SQL-replicable. One codegen kernel pass scores
-    * all languages ([[graft.functions.LangScores]]); emits the scores
-    * so the oracle checks the whole computation, not just the argmax.
-    * Map-side projection — zero shuffle at any scale. */
-  def langId(docs: DataFrame): DataFrame = {
-    val scores = graft.functions.GraftFunctions
-      .langScores(lower(col("text")), langProfileIndex)
-    val scored = docs.select(
-      col("doc_id") +: col("lang") +:
-        trigramProfiles.zipWithIndex.map { case ((l, _), i) =>
-          element_at(scores, i + 1).as(s"s_$l")
-        }: _*)
-    val Seq(en, de, es, fr, zh) =
-      Seq("en", "de", "es", "fr", "zh").map(l => col(s"s_$l"))
-    scored
-      .withColumn("lang_pred",
-        when(en >= de && en >= es && en >= fr && en >= zh, "en")
-          .when(de >= es && de >= fr && de >= zh, "de")
-          .when(es >= fr && es >= zh, "es")
-          .when(fr >= zh, "fr")
-          .otherwise("zh"))
+    * deterministic and SQL-replicable ([[langPred]]). One codegen
+    * kernel pass scores all languages ([[langScores]]); emits the
+    * scores so the oracle checks the whole computation, not just the
+    * argmax. Map-side projection — zero shuffle at any scale. */
+  def langId(docs: DataFrame): DataFrame =
+    docs
+      .select(col("doc_id"), col("lang"), langScores(col("text")).as("scores"))
+      .select(col("doc_id") +: col("lang") +:
+        langNames.zipWithIndex.map { case (l, i) =>
+          element_at(col("scores"), i + 1).as(s"s_$l")
+        } :+ langPred(col("scores")).as("lang_pred"): _*)
       .orderBy("doc_id")
-  }
+
+  /** Whitespace tokens of a text column. */
+  def nTokens(text: Column): Column = size(split(text, " "))
+
+  /** Mean word length, rounded to 6 places: non-space characters
+    * over tokens. */
+  private def meanWordLen(text: Column): Column =
+    round((length(text) - (nTokens(text) - lit(1))).cast("double") / nTokens(text), 6)
+
+  /** Share of tokens on the [[langMarkers]] stopword lists, rounded
+    * to 6 places. */
+  private def stopwordRatio(text: Column): Column =
+    round(markerCount(split(text, " "), langMarkers.flatMap(_._2)).cast("double") /
+      nTokens(text), 6)
+
+  /** The T2 quality score ([[qualityScore]]) from its three features:
+    * a length factor times a stopword and a word-length penalty. */
+  private def quality(nTokens: Column, stopwordRatio: Column, meanWordLen: Column): Column =
+    round(least(lit(1.0), nTokens / lit(50.0)) *
+      when(stopwordRatio > 0.05, 1.0).otherwise(0.7) *
+      when(meanWordLen.between(3.0, 10.0), 1.0).otherwise(0.5), 6)
+
+  /** The T2 quality score of a text column. */
+  def quality(text: Column): Column =
+    quality(nTokens(text), stopwordRatio(text), meanWordLen(text))
 
   /** T2 — quality scoring: the standard cheap filters (length, mean
     * word length, punctuation density, stopword ratio) combined into
-    * one score. One projection, no shuffle. */
+    * one score ([[quality]]). One projection, no shuffle. The score
+    * reads the projected features, so the interpreted stopword `filter`
+    * runs once per row. */
   def qualityScore(docs: DataFrame): DataFrame = {
     val text = col("text")
-    val toks = split(text, " ")
-    val nTok = size(toks)
-    val stop = markerCount(toks, langMarkers.flatMap(_._2))
     docs.select(
       col("doc_id"),
       length(text).as("n_chars_m"),
-      nTok.as("n_tokens"),
-      round((length(text) - (nTok - lit(1))).cast("double") / nTok, 6)
-        .as("mean_word_len"),
+      nTokens(text).as("n_tokens"),
+      meanWordLen(text).as("mean_word_len"),
       (length(text) - length(regexp_replace(text, "[.,;:!?]", "")))
         .as("n_punct"),
-      round(stop.cast("double") / nTok, 6).as("stopword_ratio"))
+      stopwordRatio(text).as("stopword_ratio"))
       .withColumn("quality",
-        round(least(lit(1.0), col("n_tokens") / lit(50.0)) *
-          when(col("stopword_ratio") > 0.05, 1.0).otherwise(0.7) *
-          when(col("mean_word_len").between(3.0, 10.0), 1.0).otherwise(0.5), 6))
+        quality(col("n_tokens"), col("stopword_ratio"), col("mean_word_len")))
       .orderBy("doc_id")
   }
 

@@ -11,9 +11,9 @@ import graft.ops.{Dedup, TextOps}
   * exact dedup, c2/c11 near-dup clusters):
   *
   *   1. quality filter — keep `quality >= qualityMin`
-  *      ([[TextOps.qualityScore]]);
+  *      ([[TextOps.quality]]);
   *   2. language-consistency filter — keep docs whose predicted
-  *      language matches the declared one ([[TextOps.langId]]);
+  *      language matches the declared one ([[TextOps.langPred]]);
   *   3. exact dedup — keep the min doc_id per identical text;
   *   4. near-dup cluster dedup — MinHash-LSH pairs
   *      ([[Dedup.minHashLshPairs]]) → connected components
@@ -21,36 +21,41 @@ import graft.ops.{Dedup, TextOps}
   *      (the component-min doc), which removes TRANSITIVE near-dups
   *      pairwise emission alone would leave behind.
   *
-  * Scale shape: stages 1–2 are map-side projections fused into the
-  * scan; stage 3 shuffles once on the text hash; stage 4 shuffles on
-  * content-derived band keys and finds components over the (tiny)
-  * paired subset only. The only collect to the driver is that pair
-  * set, when it fits [[Dedup.dupClusters]]' driver-path caps. */
+  * Each row is judged on its own text: a document whose `doc_id`
+  * repeats passes or fails each filter per row, and a null `doc_id`
+  * is no document and is dropped.
+  *
+  * Scale shape: stages 1–2 are one map-side Filter over the scan, with
+  * the language kernel run only for rows that pass the quality test;
+  * nothing joins the corpus to itself to recover a score. Stage 3 is
+  * one aggregation on the 32-byte text hash that keeps each group's min
+  * `doc_id` with its `n_tokens`. Its result is both the output base
+  * and, semi-joined back to the filtered scan for its text, the input
+  * of stage 4, which shuffles on content-derived band keys and finds
+  * components over the (tiny) paired subset only. The only collect to
+  * the driver is that pair set, when it fits [[Dedup.dupClusters]]'
+  * driver-path caps. The returned frame is lazy apart from that. */
 object CleanCorpus {
 
   def run(docs: DataFrame, qualityMin: Double = 0.5): DataFrame = {
-    val quality = TextOps.qualityScore(docs)
-      .where(col("quality") >= qualityMin)
-      .select("doc_id", "n_tokens")
-    val langOk = TextOps.langId(docs)
-      .where(col("lang_pred") === col("lang"))
-      .select(col("doc_id").as("l_doc"))
-    val survivors = docs.select("doc_id", "text")
-      .join(quality, "doc_id")
-      .join(langOk, col("doc_id") === col("l_doc"), "left_semi")
-    // exact dedup: one keeper per identical text — group on the
-    // 256-bit content hash like [[graft.ops.Dedup.exactDedup]], so
-    // the shuffle key is 32 bytes, not the document body
-    val keepers = survivors.groupBy(sha2(col("text"), 256))
-      .agg(min(col("doc_id")).as("k_doc")).select("k_doc")
-    val exact = survivors
-      .join(keepers, col("doc_id") === col("k_doc"), "left_semi")
+    val text = col("text")
+    val survivors = docs
+      .where(col("doc_id").isNotNull && TextOps.quality(text) >= qualityMin &&
+        TextOps.langPred(TextOps.langScores(text)) === col("lang"))
+    // exact dedup: one keeper per identical text, grouped on the
+    // 256-bit content hash like [[graft.ops.Dedup.exactDedup]] so the
+    // shuffle key is 32 bytes, not the document body
+    val keepers = survivors
+      .groupBy(sha2(text, 256))
+      .agg(min_by(struct(col("doc_id"), TextOps.nTokens(text).as("n_tokens")),
+        col("doc_id")).as("k"))
+      .select("k.doc_id", "k.n_tokens")
     // near-dup cluster dedup: only non-representative members drop
-    val nonReps = Dedup.dupClusters(Dedup.minHashLshPairs(exact))
+    val nonReps = Dedup.dupClusters(Dedup.minHashLshPairs(
+        survivors.select("doc_id", "text").join(keepers, Seq("doc_id"), "left_semi")))
       .where(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id").as("d_doc"))
-    exact.join(nonReps, col("doc_id") === col("d_doc"), "left_anti")
-      .select("doc_id", "n_tokens")
+    keepers.join(nonReps, col("doc_id") === col("d_doc"), "left_anti")
       .orderBy("doc_id")
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Sessions, Tables}
-import graft.ops.Dedup
+import graft.ops.{Dedup, TextOps}
 import graft.steps.GraphOps
 
 /** Same-JVM interleaved A/B of two named spellings of one computation:
@@ -30,6 +30,10 @@ import graft.steps.GraphOps
   *    graph.
   *  - `dup-clusters-cap`: the same two paths over a synthetic graph of
   *    `Dedup.LocalPairCap` pairs; its SF_DIR argument is not read.
+  *  - `lang-filter`: a Filter on the CASE-chain language argmax (each
+  *    score reference inlines the scores kernel) vs one on
+  *    `TextOps.langPred` (one reference), over `documents` ×40; prints
+  *    the rows on which the two predictions differ.
   */
 object ABProbe {
   /** A named spelling; running it writes its result to the noop sink. */
@@ -118,6 +122,24 @@ object ABProbe {
       val k = col("id"); val c = (k / 4).cast("long") * 5 + k % 4
       dupClusterArms(spark.range(Dedup.LocalPairCap)
         .select(xxhash64(c).as("doc_a"), xxhash64(c + 1).as("doc_b")))
+    },
+    "lang-filter" -> { (spark, d) =>
+      val docs = Tables.documents(spark, d)
+        .select(col("doc_id"), col("text"), col("lang"),
+          explode(sequence(lit(1), lit(40))).as("copy"))
+        .localCheckpoint(true)
+      val scores = TextOps.langScores(col("text"))
+      val Seq(en, de, es, fr, zh) = (1 to 5).map(element_at(scores, _))
+      val chain = when(en >= de && en >= es && en >= fr && en >= zh, "en")
+        .when(de >= es && de >= fr && de >= zh, "de")
+        .when(es >= fr && es >= zh, "es")
+        .when(fr >= zh, "fr")
+        .otherwise("zh")
+      val argmax = TextOps.langPred(scores)
+      val differ = docs.agg(count_if(!(chain <=> argmax))).head().getLong(0)
+      println(s"[ab] lang-filter mismatches: $differ of ${docs.count()} rows")
+      (Arm("case-chain", () => noop(docs.where(chain === col("lang")))),
+        Arm("argmax", () => noop(docs.where(argmax === col("lang")))))
     })
 
   /** `Dedup.dupClusters`' two paths over one pinned pair set, each arm

@@ -88,6 +88,67 @@ class PlanLintSpec extends SparkSpec {
       s"c4_ngram_jaccard plans a checkpoint scan:\n$plan")
   }
 
+  /** Every operator of an executed plan, through AQE's stages and
+    * reused exchanges. */
+  private def operators(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    p match {
+      case a: AdaptiveSparkPlanExec => operators(a.executedPlan)
+      case q: QueryStageExec => operators(q.plan)
+      case r: ReusedExchangeExec => operators(r.child)
+      case other => other +: other.children.flatMap(operators)
+    }
+  }
+
+  test("p1_clean_corpus runs the language kernel once per operator and " +
+      "never joins documents to itself") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val df = SparkEntry.queries("p1_clean_corpus")(spark, sf)
+    df.collect()
+    val ops = operators(df.queryExecution.executedPlan)
+    // a Filter on the CASE-chain argmax inlined one kernel call per score
+    val kernels = ops.map(_.expressions
+      .map(_.collect { case k: graft.functions.LangScores => k }.size).sum)
+    assert(kernels.sum >= 1, "p1 plans no language kernel")
+    assert(kernels.forall(_ <= 1),
+      s"p1 evaluates graft_lang_scores ${kernels.max} times in one operator")
+    def scansDocuments(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
+      operators(p).exists {
+        case s: FileSourceScanExec =>
+          s.metadata.get("Location").exists(_.contains("documents"))
+        case _ => false
+      }
+    val selfJoins = ops.collect {
+      case j: BaseJoinExec if scansDocuments(j.left) && scansDocuments(j.right) => j
+    }
+    assert(selfJoins.isEmpty, s"p1 joins documents to itself:\n${selfJoins.mkString("\n")}")
+  }
+
+  test("dupClusters checkpoints minHashLshPairs' pairs without a range-partitioned sort") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (f == "localCheckpoint") plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      graft.ops.Dedup.dupClusters(graft.ops.Dedup.minHashLshPairs(
+        graft.core.Tables.documents(spark, sf))).collect()
+      // listener delivery is async — poll briefly
+      val deadline = System.nanoTime() + 10e9.toLong
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+      assert(!plans.isEmpty, "no localCheckpoint job was seen")
+      plans.forEach(p => assert(!p.contains("rangepartitioning"),
+        s"the checkpointed pair job sorts its pairs:\n$p"))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("no interpreted python/UDF eval nodes in any gated plan") {
     SparkEntry.queries.foreach { case (name, fn) =>
       if (!streamingGates(name)) {
