@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.graft.Pins
 import org.apache.spark.storage.StorageLevel
 
 /** The one audited "how many partitions for THIS data" policy —
@@ -96,21 +97,18 @@ object Parallelism {
     df.sparkSession.sparkContext.getExecutorMemoryStatus
       .values.map(_._1).sum
 
-  /** Re-layout a checkpointed iteration state when (and only when) its
+  /** Re-layout a pinned iteration state when (and only when) its
     * measured ideal partition count exceeds the current one by ≥ 1.5×:
     * one hash exchange on `key` (plus an in-partition sort when
     * `sorted` — recorded in the checkpoint so downstream sort-merge
-    * joins skip their per-round sort on this side), then a fresh
-    * checkpoint; the old state is unpersisted BLOCKING (iterative
-    * callers re-checkpoint large state back-to-back — async unpersist
-    * lets dead closures stack against the live one and OOM at the
-    * heap cliff). States measured past [[SerializeAboveMemFraction]]
-    * of cluster memory re-checkpoint MEMORY_AND_DISK_SER regardless
-    * of the requested level. Returns the input unchanged when the
+    * joins skip their per-round sort on this side), then a fresh pin;
+    * the old pin is released ([[Pins.release]], blocking). States
+    * measured past [[SerializeAboveMemFraction]] of cluster memory
+    * re-pin MEMORY_AND_DISK_SER. Returns the input unchanged when the
     * current layout is already right — small data never pays the
     * exchange. */
   def resizeCheckpoint(df: DataFrame, currentParts: Int, key: Column,
-      level: StorageLevel, sorted: Boolean = false): DataFrame = {
+      sorted: Boolean = false): DataFrame = {
     val bytes = persistedBytes(df)
     val target = bytes.map(b => partitionsFor(b, currentParts))
       .getOrElse(currentParts)
@@ -118,12 +116,11 @@ object Parallelism {
       clusterMaxMemory(df) * SerializeAboveMemFraction)
     if (target * 2 <= currentParts * 3 && !serialize) df
     else {
-      val lvl = if (serialize) StorageLevel.MEMORY_AND_DISK_SER else level
       val laid0 =
         if (target == currentParts) df else df.repartition(target, key)
       val laid = if (sorted) laid0.sortWithinPartitions(key) else laid0
-      val out = laid.localCheckpoint(true, lvl)
-      df.unpersist(blocking = true)
+      val out = Pins.pin(laid, serialized = serialize)
+      Pins.release(df)
       out
     }
   }

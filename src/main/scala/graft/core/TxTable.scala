@@ -3,6 +3,7 @@ package graft.core
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, hash, pmod}
+import org.apache.spark.sql.graft.Pins
 import org.apache.spark.sql.types.{ByteType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructType}
 
 /** Minimal transactional table on plain parquet — the capability the
@@ -1627,8 +1628,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
           // subtree — re-reading the affected files per branch (the
           // dominant cost of a CDC-enabled merge commit, measured 6.1s
           // vs 1.0s stats-off at sf0.1 before this checkpoint)
-          val del = existing.exceptAll(rewritten).localCheckpoint(true)
-          val ins = rewritten.exceptAll(existing).localCheckpoint(true)
+          val del = Pins.pin(existing.exceptAll(rewritten))
+          val ins = Pins.pin(rewritten.exceptAll(existing))
           val delK = del.select(keyNames.map(col): _*).distinct()
           val insK = ins.select(keyNames.map(col): _*).distinct()
           val changes = del.join(insK, keyNames, "left_semi")
@@ -1639,14 +1640,15 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
               .withColumn(ChangeTypeCol, lit("update_postimage")))
             .unionByName(ins.join(delK, keyNames, "left_anti")
               .withColumn(ChangeTypeCol, lit("insert")))
-          writeDataFiles(changes, Nil, withStats = false, enforce = false)._1
+          try writeDataFiles(changes, Nil, withStats = false, enforce = false)._1
+          finally Pins.release(del, ins)
         }
       val ddl = if (autoMerge) mergedDdl(Some(m), outSchema) else m.schemaDdl
       commitRowLevel(op, m, affected, files, ddl, txn, cdcFiles, mayMatch)
-    } finally { if (!sourceIsPinned) { src.unpersist(); () } }
+    } finally { if (!sourceIsPinned) Pins.release(src) }
   }
 
-  /** Pin ONE evaluation of a row-level source (localCheckpoint, the
+  /** Pin ONE evaluation of a row-level source ([[Pins.pin]], the
     * probeSignatureIndex discipline): it feeds planning AND the
     * resolve — a non-deterministic source re-evaluated between the two
     * could hash a key into a bucket the plan didn't rewrite, silently
@@ -1662,13 +1664,12 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       sourceIsPinned: Boolean): (DataFrame, Option[Set[String]]) = {
     val routed = spec.fold(source)(withBucket(source, _))
     if (sourceIsPinned) (routed, None)
-    else if (spec.isEmpty) (routed.localCheckpoint(true), None)
+    else if (spec.isEmpty) (Pins.pin(routed), None)
     else {
       val obs = org.apache.spark.sql.Observation()
-      val ckpt = routed
+      val ckpt = Pins.pin(routed
         .observe(obs, org.apache.spark.sql.functions
-          .collect_set(col(BucketCol)).as("touched"))
-        .localCheckpoint(true)
+          .collect_set(col(BucketCol)).as("touched")))
       (ckpt, Some(obs.get("touched").asInstanceOf[Seq[Int]]
         .map(_.toString).toSet))
     }
@@ -2154,9 +2155,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       // source carries become DV entries
       val matching =
         if (read.isEmpty) None
-        else Some(readPositionTagged(m, read)
-          .join(src.select(keys.map(col): _*).distinct(), keys, "left_semi")
-          .localCheckpoint(true)) // matched-rows-sized
+        else Some(Pins.pin(readPositionTagged(m, read) // matched-rows-sized
+          .join(src.select(keys.map(col): _*).distinct(), keys, "left_semi")))
       val (affected, retagged) = matching.fold(
         (Seq.empty[FileEntry], Seq.empty[FileEntry]))(vectorize(m, _))
       // the WHOLE source appends as new bucket files (batch-sized)
@@ -2186,9 +2186,10 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
             p.unionByName(postTagged))
           writeDataFiles(changes, Nil, withStats = false, enforce = false)._1
         }
+      matching.foreach(Pins.release(_))
       commitRowLevel(OpMerge, m, affected, retagged ++ newFiles, ddl, txn,
         cdcFiles, inTouched)
-    } finally { if (!sourceIsPinned) { src.unpersist(); () } }
+    } finally { if (!sourceIsPinned) Pins.release(src) }
   }
 
   /** Row-level UPDATE by predicate — `UPDATE t SET col = expr, ...

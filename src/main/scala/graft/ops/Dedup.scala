@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Sort}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.StreamShims
+import org.apache.spark.sql.graft.{Pins, StreamShims}
 import org.apache.spark.sql.types.{BinaryType, StringType}
 
 /** Deduplication operator family — the LLM-training-data extension
@@ -341,8 +341,10 @@ object Dedup {
     // the new×new side exactly the quadratic candidate blow-up the cap
     // prevents at build time — and make incremental results diverge
     // from a capped full recompute
-    val probe = dropHotBands(probe0, idx.maxBucket, "graft_sigprobe_hot_bands")
-      .localCheckpoint(true) // reused: bucket collect + two join sides
+    // reused: bucket collect + two join sides; stays pinned, because
+    // the lazily returned pairs read it
+    val probe = Pins.pin(
+      dropHotBands(probe0, idx.maxBucket, "graft_sigprobe_hot_bands"))
     val probedBuckets = probe.select("bucket").distinct()
       .collect().map(_.getInt(0)).toSeq // bounded by nBuckets
     val indexed = spark.read
@@ -431,8 +433,9 @@ object Dedup {
     * *group* needs the transitive closure (A≈B, B≈C ⇒ {A,B,C} is one
     * cluster even when A≈C missed the threshold).
     *
-    * The path is chosen by size. The pair set is checkpointed once
-    * ([[pinPairs]]), and an `observe()` on that job counts its rows,
+    * The path is chosen by size. The pair set is pinned once
+    * ([[pinPairs]]) and released before the call returns; an
+    * `observe()` on the pin's job counts its rows,
     * its null ids and its id bytes. A pair set within [[LocalPairCap]]
     * pairs and [[LocalIdBytesCap]] id bytes is collected from the
     * cached blocks and one driver-side union-find finds its components
@@ -448,7 +451,7 @@ object Dedup {
     try {
       if (rows <= LocalPairCap && idBytes <= LocalIdBytesCap) localClusters(p)
       else labelPropagation(p, maxIters)
-    } finally p.unpersist()
+    } finally Pins.release(p)
   }
 
   /** The driver path's bounds: the most pairs, and the most id bytes
@@ -474,7 +477,7 @@ object Dedup {
     * (every pair operator ends in one) is dropped first: component
     * labels do not depend on row order, and the sort would cost a
     * range-sampling job and a shuffle. A pair holding a null id is
-    * refused by name. The caller unpersists the checkpoint. */
+    * refused by name. The caller releases the pin. */
   private[graft] def pinPairs(pairs: DataFrame): (DataFrame, Long, Long) = {
     val unsorted = StreamShims.analyzedPlan(pairs) match {
       case s: Sort if s.global => StreamShims.ofRows(pairs.sparkSession, s.child)
@@ -486,15 +489,14 @@ object Dedup {
       case t => lit(t.defaultSize)
     }
     val obs = Observation()
-    val p = ab
+    val p = Pins.pin(ab
       .observe(obs, count(lit(1)).as("rows"),
         count_if(col("doc_a").isNull || col("doc_b").isNull).as("nulls"),
-        coalesce(sum(width("doc_a") + width("doc_b")), lit(0L)).as("bytes"))
-      .localCheckpoint(true)
+        coalesce(sum(width("doc_a") + width("doc_b")), lit(0L)).as("bytes")))
     val stats = obs.get
     val nulls = stats("nulls").asInstanceOf[Long]
     if (nulls > 0) {
-      p.unpersist()
+      Pins.release(p)
       throw new IllegalArgumentException(
         s"dupClusters: $nulls pairs hold a null doc id; a null is no document")
     }
@@ -551,17 +553,17 @@ object Dedup {
     * propagation (Pregel-style CC). Each round every vertex takes the
     * min of its own label and its neighbours' labels; a round is two
     * shuffles over the EDGE set (only documents that have at least one
-    * near-dup) and its labels are `localCheckpoint`ed so lineage stays
-    * flat. The round's changed-label count is an `observe()` on that
-    * same checkpoint job, so convergence costs no extra job. Rounds
+    * near-dup) and its labels are pinned ([[Pins]]) so lineage stays
+    * flat; each superseded round's labels are released. The round's
+    * changed-label count is an `observe()` on that same pin job, so
+    * convergence costs no extra job. Rounds
     * grow with the component diameter: if `maxIters` rounds end with a
     * label still changing, the call refuses by name rather than return
     * partial labels. */
   private[graft] def labelPropagation(p: DataFrame, maxIters: Int): DataFrame = {
-    val edges = symmetric(p).localCheckpoint(true) // reused every round
-    var labels = edges.select(col("src").as("doc")).distinct()
-      .select(col("doc"), col("doc").as("cluster_id"))
-      .localCheckpoint(true)
+    val edges = Pins.pin(symmetric(p)) // reused every round
+    var labels = Pins.pin(edges.select(col("src").as("doc")).distinct()
+      .select(col("doc"), col("doc").as("cluster_id")))
     var changed = -1L
     var iter = 0
     while (changed != 0 && iter < maxIters) {
@@ -573,30 +575,27 @@ object Dedup {
       // strictly undercuts its label — next ≠ prev, computed in the
       // same pass and counted by the round's own checkpoint job
       val obs = Observation()
-      val next = labels.join(neighborMin, Seq("doc"), "left")
+      val next = Pins.pin(labels.join(neighborMin, Seq("doc"), "left")
         .select(col("doc"),
           least(col("cluster_id"), coalesce(col("nmin"), col("cluster_id")))
             .as("cluster_id"),
           (coalesce(col("nmin"), col("cluster_id")) < col("cluster_id"))
             .as("changed"))
         .observe(obs, count_if(col("changed")).as("changed"))
-        .select("doc", "cluster_id")
-        .localCheckpoint(true)
+        .select("doc", "cluster_id"))
       changed = obs.get("changed").asInstanceOf[Long]
-      // superseded checkpoint blocks must not accumulate in the block
-      // manager across rounds (or across repeated invocations in a
-      // long-lived session)
-      labels.unpersist()
+      Pins.release(labels)
       labels = next
       iter += 1
     }
-    edges.unpersist()
+    Pins.release(edges)
     if (changed != 0) {
-      labels.unpersist()
+      Pins.release(labels)
       throw new IllegalStateException(s"dupClusters: labels still changing " +
         s"after $maxIters rounds; a component's diameter exceeds the round " +
         "bound, and partial labels would split it")
     }
+    // the final labels stay pinned: the returned frame reads them lazily
     labels.select(col("doc").as("doc_id"), col("cluster_id")).orderBy("doc_id")
   }
 

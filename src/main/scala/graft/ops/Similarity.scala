@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Embedding similarity search over `array<float>` columns — the
@@ -113,9 +113,12 @@ object Similarity {
     * is k tiny rows (the MODEL, like MLlib's KMeans centers — never
     * the corpus); ids sorted ascending so kernel tie-breaks match the
     * `max_by(struct(cdist, -centroid_id))` spelling it replaced. */
-  def centroidIndex(centroids: DataFrame): graft.functions.CentroidIndex = {
-    val rows = centroids.select(col("centroid_id"), col("cv"))
-      .orderBy("centroid_id").collect()
+  def centroidIndex(centroids: DataFrame): graft.functions.CentroidIndex =
+    modelIndex(centroids.select(col("centroid_id"), col("cv")).collect())
+
+  /** [[centroidIndex]] of already-collected `(centroid_id, cv)` rows. */
+  private def modelIndex(model: Array[Row]): graft.functions.CentroidIndex = {
+    val rows = model.sortBy(_.getLong(0))
     new graft.functions.CentroidIndex(
       rows.map(_.getLong(0)),
       rows.map(_.getSeq[Float](1).toArray))
@@ -137,10 +140,12 @@ object Similarity {
     * explosion is gone) and mean-reduces per centroid. A cluster that
     * loses every member is dropped (the standard Lloyd artifact — no
     * re-seeding), so the result can hold fewer than k rows; ids are
-    * re-densified to 0..m-1 after each round. Each round is
-    * `localCheckpoint`ed: centroids are k tiny rows, and truncating
-    * the lineage keeps the per-round plan flat. At 100 TB you'd run
-    * this on a sample — same plumbing. */
+    * re-densified to 0..m-1 after each round. The model is k tiny rows
+    * and stays on the driver: each round collects its centroids once,
+    * the next round's assignment kernel ships them, so no round reads
+    * another's frame and nothing is pinned. The result is the final
+    * rows as a local relation, typed like the last round's frame. At
+    * 100 TB you'd run this on a sample — same plumbing. */
   def kmeansCentroids(emb: DataFrame, k: Int, iters: Int = 3): DataFrame = {
     val n = emb.count()
     val stride = math.max(1L, n / k)
@@ -152,12 +157,12 @@ object Similarity {
       emb.where(col("vec_id") % stride === 0)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
         .orderBy("centroid_id").limit(k))
-      .localCheckpoint(true)
+    var model = centroids.collect()
     for (_ <- 1 to iters) {
-      val assigned = assignCentroids(emb, centroidIndex(centroids))
+      val assigned = assignCentroids(emb, modelIndex(model))
       // mean of member vectors per centroid (element-wise): aggregate
       // positional sums via posexplode, then re-assemble
-      val next = densify(assigned
+      centroids = densify(assigned
         .select(col("centroid_id"),
           posexplode(col("embedding")).as(Seq("pos", "x")))
         .groupBy("centroid_id", "pos")
@@ -166,12 +171,10 @@ object Similarity {
         .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
         .select(col("centroid_id"),
           transform(col("pm"), p => p.getField("m").cast("float")).as("cv")))
-        .localCheckpoint(true)
-      // superseded round's checkpoint blocks must not accumulate
-      centroids.unpersist()
-      centroids = next
+      model = centroids.collect()
     }
-    centroids
+    emb.sparkSession.createDataFrame(java.util.Arrays.asList(model: _*),
+      centroids.schema)
   }
 
   /** C7 — IVF-style ANN: the subquadratic scale path for [[annTopK]].

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.core._
+import org.apache.spark.sql.graft.Pins
 
 /** The reference's flagship production workload shape — the 4-asset
   * Common Crawl interfirm-network pipeline **NodesOnly → Edges →
@@ -78,17 +79,6 @@ object GraphOps {
         round(sum(col("weight").cast("decimal(18,2)")), 2).cast("double")
           .as("total_weight"))
       .orderBy("src_nation", "dst_nation")
-
-  /** Storage level for EDGE-SIZED iteration checkpoints. A measured
-    * decision, not a guess (100× probe battery, 40–48 GB heap):
-    * DISK_ONLY costs ~45% on g4 at 10× (36.2 s vs 24.5 s) and
-    * MEMORY_AND_DISK_SER ~18%, while the DEFAULT memory-first level
-    * completes the 100× run too (staged 100× attribution: closure
-    * 72 s, 96 s per peel round — block-level spill handles state larger
-    * than the storage region). Keep the default; if a deployment's iteration
-    * state outgrows executor memory × spill, the SER/DISK levels are
-    * one constant away. */
-  private val IterCkpt = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   /** Largest removed-set the delta-peel will BROADCAST per round.
     * 8 M node ids ≈ low hundreds of MB on each executor — cheap next
@@ -175,15 +165,13 @@ object GraphOps {
     // old distinct-exchange-then-repartition-exchange (two full
     // closure shuffles) with one, and the dedup output keeps the
     // pinned hash(src) layout the loop consumes.
-    var e0 = in.select(col("src"), col("dst"))
+    var e0 = Pins.pin(in.select(col("src"), col("dst"))
       .unionAll(in.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(n0, col("src"))
-      .dropDuplicates("src", "dst")
-      .localCheckpoint(true, IterCkpt)
-    e0 = graft.core.Parallelism.resizeCheckpoint(e0, n0, col("src"), IterCkpt)
+      .dropDuplicates("src", "dst"))
+    e0 = graft.core.Parallelism.resizeCheckpoint(e0, n0, col("src"))
     // initial degrees: co-partitioned map-side agg, zero exchange
-    var deg = e0.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+    var deg = Pins.pin(e0.groupBy("src").agg(count(lit(1)).as("deg")))
     var stable = false
     for (_ <- 1 to rounds if !stable) {
       val removed = deg.where(col("deg") < k).select("src")
@@ -199,23 +187,21 @@ object GraphOps {
         // simply find no match in the filtered deg join below
         val lost = e0.join(r, Seq("dst"), "left_semi")
           .groupBy("src").agg(count(lit(1)).as("lost"))
-        val next = deg.where(col("deg") >= k)
+        val next = Pins.pin(deg.where(col("deg") >= k)
           .join(lost, Seq("src"), "left")
           .select(col("src"),
-            (col("deg") - coalesce(col("lost"), lit(0L))).as("deg"))
-          .localCheckpoint(true)
-        deg.unpersist()
+            (col("deg") - coalesce(col("lost"), lit(0L))).as("deg")))
+        Pins.release(deg)
         deg = next
       }
     }
     val out = deg.where(col("deg") >= 1)
       .select(col("src").as("node_id"), col("deg").as("degree"))
       .orderBy("node_id")
-    // the result consumes only the (checkpointed, node-sized) degree
-    // table — release the closure now, BLOCKING: back-to-back peels
-    // (bench cold+warm×2) each build an edge-sized closure, and async
-    // unpersist lets dead ones stack against the live one
-    e0.unpersist(blocking = true)
+    // the result reads only the final degree table, which stays
+    // pinned; the edge-sized closure is released before the next peel
+    // (bench cold+warm×2) builds its own
+    Pins.release(e0)
     out
   }
 
@@ -272,25 +258,21 @@ object GraphOps {
     // one-exchange closure build: see kCorePeel — hash(src) satisfies
     // the dedup's clustering, so the distinct runs in place after the
     // single repartition and the sort records the SMJ-ready order
-    var e = in.select(col("src"), col("dst"))
+    var e = Pins.pin(in.select(col("src"), col("dst"))
       .unionAll(in.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(n0, col("src"))
       .dropDuplicates("src", "dst")
-      .sortWithinPartitions("src")
-      .localCheckpoint(true, IterCkpt)
-    e = graft.core.Parallelism.resizeCheckpoint(
-      e, n0, col("src"), IterCkpt, sorted = true)
+      .sortWithinPartitions("src"))
+    e = graft.core.Parallelism.resizeCheckpoint(e, n0, col("src"), sorted = true)
     val n = e.rdd.getNumPartitions
     if (n != n0) spark.conf.set("spark.sql.shuffle.partitions", n)
     // node-sized, pinned hash(node) at the edge layout's count: the
     // agg output of the pinned closure is ALREADY hash(src)-partitioned
     // (map-side partial + zero-exchange final), and every round's share
     // join consumes it co-partitioned
-    val outdeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint(true)
-    var pr = outdeg.select(col("node"), lit(1000000L).as("pr"))
-      .localCheckpoint(true)
+    val outdeg = Pins.pin(e.groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("outdeg")))
+    var pr = Pins.pin(outdeg.select(col("node"), lit(1000000L).as("pr")))
     // below the cap the node-sized share BROADCASTS (per-round edge
     // join = BroadcastHashJoin: no exchange, no sort — what the old
     // loop got implicitly at small scale from pr's known checkpoint
@@ -308,15 +290,14 @@ object GraphOps {
       .map(_ <= BroadcastShareCap * 24L)
       .getOrElse(outdeg.count() <= BroadcastShareCap)
     for (_ <- 1 to iters) {
-      val next = pageRankRound(e, outdeg, pr, bcastShare)
-        .localCheckpoint(true)
-      pr.unpersist()
+      val next = Pins.pin(pageRankRound(e, outdeg, pr, bcastShare))
+      Pins.release(pr)
       pr = next
     }
+    // the result reads only the final rank vector, which stays pinned
     val out = pr.select(col("node").as("node_id"),
       col("pr").as("pr_micro")).orderBy("node_id")
-    e.unpersist(blocking = true)
-    outdeg.unpersist(blocking = true)
+    Pins.release(e, outdeg)
     out
   }
 
@@ -368,8 +349,11 @@ object GraphOps {
     val spark = loopSession(incidence.sparkSession)
     spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
     val in = org.apache.spark.sql.graft.StreamShims.rebind(spark, incidence)
-    triangleCensusImpl(in, maxLeftDegree, minShareTenths)
-      .localCheckpoint(true)
+    val co = coProjection(in, maxLeftDegree, minShareTenths)
+    // the census row stays pinned: the caller reads it lazily
+    val census = Pins.pin(censusOf(co))
+    Pins.release(co)
+    census
   }
 
   /** The weighted co-occurrence projection the census closes over —
@@ -388,24 +372,32 @@ object GraphOps {
     // clustering (subset), the degree agg, AND the self-join, so the
     // ONE exchange here is the projection's only shuffle before the
     // (a, b) rollup. Edge-set-sized — the same budget the census's own
-    // co0 checkpoint already spends — released right after co0
-    // materializes.
+    // co0 pin already spends — released right after co0 materializes.
+    // Its pin job also observes the id range the pair emission
+    // dispatches on.
     val nIncParts = incidence.sparkSession
       .conf.get("spark.sql.shuffle.partitions").toInt
-    // integral rights take the packed-pair kernel path below; the
-    // cast to long is an injective id map (cannot change duplicates,
-    // degrees or pair counts)
+    // integral rights in [0, 2³¹) take the packed-pair kernel path
+    // below, any other rights the self-join spelling; the cast to long
+    // is an injective id map (cannot change duplicates, degrees or pair
+    // counts)
     val rightIntegral = incidence.schema("right").dataType match {
       case LongType | IntegerType | ShortType | ByteType => true
       case _ => false
     }
-    val inc = incidence.select(col("left"),
+    val range = org.apache.spark.sql.Observation()
+    val inc = Pins.pin(incidence.select(col("left"),
         (if (rightIntegral) col("right").cast("long") else col("right"))
           .as("right"))
+      .observe(range, min(col("right")).as("lo"), max(col("right")).as("hi"))
       .repartition(nIncParts, col("left"))
       .dropDuplicates("left", "right")
-      .sortWithinPartitions("left")
-      .localCheckpoint(true, IterCkpt)
+      .sortWithinPartitions("left"))
+    val packed = rightIntegral && {
+      val r = range.get
+      Option(r("lo")).forall(_.asInstanceOf[Long] >= 0L) &&
+        Option(r("hi")).forall(_.asInstanceOf[Long] < (1L << 31))
+    }
     val keep = inc.groupBy("left").agg(count(lit(1)).as("d"))
       .where(col("d") <= maxLeftDegree).select("left")
     val pruned = inc.join(keep, Seq("left"), "left_semi")
@@ -424,8 +416,8 @@ object GraphOps {
     // (a, b) key; here the posting list per left is built by ONE
     // zero-exchange aggregation (inc is pinned hash(left)), each
     // (left, position) row emits its ≤|rs| suffix pairs as PACKED
-    // longs (a<<32|b — rights are supplier keys, the kernel refuses
-    // ids ≥ 2³¹ by name), and the rollup exchanges 8-byte keys.
+    // longs (a<<32|b — hence the [0, 2³¹) range `packed` checks), and
+    // the rollup exchanges 8-byte keys.
     // Cap story: the suffix form streams a df-capped hot left
     // (10⁴ rights ⇒ 5·10⁷ pairs) as 10⁴ bounded chunks instead of
     // materializing one 400 MB pair array. Pair multiset is
@@ -433,9 +425,8 @@ object GraphOps {
     // (dedup upstream), sorted ascending ⇒ {(rs[i], rs[j]) : i<j}
     // = {(x, y) : x < y} exactly (GraphPipelineSpec pins equality
     // against the join spelling).
-    val co0 = coPairCounts(pruned, rightIntegral)
-      .localCheckpoint(true, IterCkpt)
-    inc.unpersist()
+    val co0 = Pins.pin(coPairCounts(pruned, packed))
+    Pins.release(inc)
     val maxShare = Option(co0.agg(max(col("c"))).head.get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
     // pin the projection hash-partitioned on `a`: the triangle wedge
@@ -446,21 +437,21 @@ object GraphOps {
     // census; one co-sized exchange here buys two away below)
     val nParts = incidence.sparkSession
       .conf.get("spark.sql.shuffle.partitions").toInt
-    val co = co0
+    val co = Pins.pin(co0
       .where(col("c") * 10 >= lit(minShareTenths) * lit(maxShare))
       .select("a", "b")
-      .repartition(nParts, col("a"))
-      .localCheckpoint(true, IterCkpt)
-    co0.unpersist()
+      .repartition(nParts, col("a")))
+    Pins.release(co0)
     co
   }
 
   /** The (a, b, c) shared-neighbor pair counts of the weighted
     * projection — [[coProjection]]'s pair-emission subtree, exposed
     * pre-checkpoint so plan evidence and probes can see the shape the
-    * checkpoint otherwise hides. Integral rights take the posting-list
-    * + packed-pair kernel path; any other ordered type keeps the
-    * self-join spelling (see the call site for the full rationale). */
+    * checkpoint otherwise hides. `rightIntegral` long rights, which
+    * must lie in [0, 2³¹), take the posting-list + packed-pair kernel
+    * path; any other rights keep the self-join spelling (see the call
+    * site for the full rationale). */
   private[graft] def coPairCounts(pruned: DataFrame,
       rightIntegral: Boolean): DataFrame =
     if (rightIntegral) {
@@ -475,7 +466,7 @@ object GraphOps {
         .select(shiftright(col("p"), 32).as("a"),
           col("p").bitwiseAND(lit(0xFFFFFFFFL)).as("b"), col("c"))
     } else {
-      // non-integral rights (spec hand graphs): the general
+      // non-integral rights, or ids outside [0, 2³¹): the general
       // ordered-type self-join spelling
       pruned.alias("x")
         .join(pruned.alias("y"), Seq("left"))
@@ -484,9 +475,9 @@ object GraphOps {
         .agg(count(lit(1)).as("c"))
     }
 
-  private def triangleCensusImpl(incidence: DataFrame,
-      maxLeftDegree: Int, minShareTenths: Int): DataFrame = {
-    val co = coProjection(incidence, maxLeftDegree, minShareTenths)
+  /** The one-row (nodes, edges, triangles) census of a pinned
+    * projection. */
+  private def censusOf(co: DataFrame): DataFrame = {
     val tri = co.alias("ab")
       .join(co.alias("bc"), col("ab.b") === col("bc.a"))
       .select(col("ab.a").as("ta"), col("ab.b").as("tb"),

@@ -6,13 +6,16 @@ import org.apache.spark.sql.functions._
 import graft.core.{Sessions, Tables}
 import graft.ops.{Dedup, TextOps}
 import graft.steps.GraphOps
+import org.apache.spark.sql.graft.Pins
 
 /** Same-JVM interleaved A/B of two named spellings of one computation:
   * ONE pinned input, the arms alternating which runs first each round,
   * each timed to a noop sink, so box drift and hypervisor steal hit
   * both arms alike (box-level A/Bs of identical binaries have measured
   * ±25 %). Prints per-round walls and the per-arm means; round 0 warms
-  * both arms and stays out of the means. Not a gate.
+  * both arms and stays out of the means. After each arm it also prints
+  * the bytes of cached blocks (the probe's own pinned input included)
+  * and the heap retained after a full collection. Not a gate.
   *
   * Usage: tools/run.sh graft.tools.ABProbe <experiment> [SF_DIR] [ROUNDS]
   * (SF_DIR defaults to `SPARK_GRAFT_SF_DIR`, as for graft.Bench).
@@ -148,7 +151,7 @@ object ABProbe {
     val pairs = pairs0.localCheckpoint(true)
     def arm(name: String, path: DataFrame => DataFrame) = Arm(name, () => {
       val (p, _, _) = Dedup.pinPairs(pairs)
-      try noop(path(p)) finally p.unpersist()
+      try noop(path(p)) finally Pins.release(p)
     })
     (arm("distributed", Dedup.labelPropagation(_, 20)),
       arm("driver", Dedup.localClusters))
@@ -166,38 +169,34 @@ object ABProbe {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val in = org.apache.spark.sql.graft.StreamShims.rebind(spark, edges)
     val n0 = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = graft.core.Parallelism.resizeCheckpoint(
-      in.select(col("src"), col("dst"))
+      Pins.pin(in.select(col("src"), col("dst"))
         .unionAll(in.select(col("dst").as("src"), col("src").as("dst")))
         .distinct()
         .repartition(n0, col("src"))
-        .sortWithinPartitions("src")
-        .localCheckpoint(true, level),
-      n0, col("src"), level, sorted = true)
+        .sortWithinPartitions("src")),
+      n0, col("src"), sorted = true)
     val n = e.rdd.getNumPartitions
     spark.conf.set("spark.sql.shuffle.partitions", n)
-    val withDeg = e
+    val withDeg = Pins.pin(e
       .join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
       .repartition(n, col("src"))
-      .sortWithinPartitions("src")
-      .localCheckpoint(true, level)
-    var pr = e.select(col("src").as("node")).distinct()
+      .sortWithinPartitions("src"))
+    var pr = Pins.pin(e.select(col("src").as("node")).distinct()
       .withColumn("pr", lit(1000000L))
-      .repartition(n, col("node"))
-      .localCheckpoint(true)
+      .repartition(n, col("node")))
     for (_ <- 1 to iters) {
       val s = withDeg
         .join(pr, withDeg("src") === pr("node"))
         .select(col("dst"), expr("pr div outdeg").as("c"))
         .groupBy(col("dst").as("node")).agg(sum(col("c")).as("s"))
-      val next = s.select(col("node"), (lit(150000L) + expr(
+      val next = Pins.pin(s.select(col("node"), (lit(150000L) + expr(
         "(s div 1000000) * 850000 + ((s % 1000000) * 850000) div 1000000"
-      )).as("pr")).localCheckpoint(true)
-      pr.unpersist(); pr = next
+      )).as("pr")))
+      Pins.release(pr); pr = next
     }
     noop(pr)
-    Seq(e, withDeg, pr).foreach(_.unpersist(blocking = true))
+    Pins.release(e, withDeg, pr)
   }
 
   def main(args: Array[String]): Unit = {
@@ -216,7 +215,14 @@ object ABProbe {
         val t0 = System.nanoTime()
         arm.run()
         val s = (System.nanoTime() - t0) / 1e9
-        println(f"[ab] $name ${arm.name} r$r: $s%.2f s")
+        val cached = spark.sparkContext.getRDDStorageInfo
+          .map(i => i.memSize + i.diskSize).sum
+        // the pause lets the ContextCleaner free what the first GC found
+        System.gc(); Thread.sleep(200); System.gc()
+        val rt = Runtime.getRuntime
+        println(f"[ab] $name ${arm.name} r$r: $s%.2f s; then ${cached >> 20} " +
+          f"MB of blocks cached, ${(rt.totalMemory - rt.freeMemory) >> 20} " +
+          "MB heap retained after a full collection")
         arm.name -> s
       }.toMap
     }.drop(1)

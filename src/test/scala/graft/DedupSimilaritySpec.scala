@@ -308,7 +308,8 @@ class DedupSimilaritySpec extends SparkSpec {
     * pinned as dupClusters pins it, then min-label propagation. */
   private def distributed(pairs: org.apache.spark.sql.DataFrame) = {
     val (p, _, _) = graft.ops.Dedup.pinPairs(pairs)
-    try graft.ops.Dedup.labelPropagation(p, 20) finally p.unpersist()
+    try graft.ops.Dedup.labelPropagation(p, 20)
+    finally org.apache.spark.sql.graft.Pins.release(p)
   }
 
   /** Union-find reference: every vertex of `edges` → the minimum of its
@@ -356,7 +357,7 @@ class DedupSimilaritySpec extends SparkSpec {
         (Seq((1, 2)).toDF("doc_a", "doc_b"), 1L, 8L),
         (Seq(("ab", "cdé"), ("f", "g")).toDF("doc_a", "doc_b"), 2L, 8L))) {
       val (p, r, b) = graft.ops.Dedup.pinPairs(pairs)
-      p.unpersist()
+      org.apache.spark.sql.graft.Pins.release(p)
       assert((r, b) == (rows, bytes))
     }
   }

@@ -212,6 +212,26 @@ class GraphPipelineSpec extends SparkSpec {
       "the refusal must name the wide-id kernel that exists")
   }
 
+  test("coProjection: rights outside [0, 2^31) take the self-join spelling " +
+      "and give the string relabeling's census") {
+    import spark.implicits._
+    val rows = for (l <- 0 until 120; j <- 0 until 6)
+      yield (l.toLong, ((l * (j + 3) + j * 17) % 40).toLong)
+    val all = rows ++ rows.take(50)
+    def census(inc: org.apache.spark.sql.DataFrame) = {
+      val r = GraphOps.triangleCensus(inc, minShareTenths = 1).head
+      (r.getLong(0), r.getLong(1), r.getLong(2))
+    }
+    val want = census(all.map { case (l, r) => (l, f"r$r%03d") }
+      .toDF("left", "right"))
+    assert(want._3 > 0, s"the census must hold triangles: $want")
+    for (shift <- Seq(1L << 31, -20L)) {
+      val got = census(all.map { case (l, r) => (l, r + shift) }
+        .toDF("left", "right"))
+      assert(got == want, s"rights shifted by $shift")
+    }
+  }
+
   test("coPairCounts' packed-pair kernel compiles: no interpreted fallback") {
     import spark.implicits._
     // with fallback off, generated Java that does not compile fails the
