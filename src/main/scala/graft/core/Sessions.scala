@@ -53,6 +53,21 @@ object Sessions {
       .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       .config("spark.sql.sources.v2.bucketing.enabled", "true")
       .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
+      // Local files through java.nio, for both Hadoop APIs: without
+      // libhadoop the stock local filesystem starts a chmod, ls -ld or
+      // readlink process per created file, listed status and checkpoint
+      // rename, about 410 per warm etl_ingest iteration (NioLocalFs).
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
+      // The generated-class cache (default 100 entries) must hold the
+      // warm working set. perfbench compiles 130 distinct generated
+      // classes through a cold etl_ingest iteration and 116 through
+      // corpus_dedup; at 100 entries each warm etl_ingest iteration
+      // reloaded 196-200 generated classes. 256 keeps twice the larger
+      // set. A streaming query's tasks still compile afresh: they run
+      // under a classloader of their own per query (artifact
+      // isolation), and those dead entries age out of the cache.
+      .config("spark.sql.codegen.cache.maxEntries", "256")
 
   /** Local session sized from env (driver runs local[32]). */
   def local(): SparkSession = {

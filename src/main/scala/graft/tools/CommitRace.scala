@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** MULTI-PROCESS commit-race probe: a separate JVM appending to one
   * txtable — forked (2+ concurrent processes) by `CommitRaceSpec`
   * and runnable by hand:
@@ -20,11 +18,8 @@ object CommitRace {
   def main(args: Array[String]): Unit = {
     val Array(root, writer, nStr) = args.take(3)
     val n = nStr.toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
+    val spark = graft.core.Sessions.builder("local[2]", 2)
       .appName(s"graft-commit-race-$writer")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.ui.enabled", false)
       .getOrCreate()
     try {
       import spark.implicits._

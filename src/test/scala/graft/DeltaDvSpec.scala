@@ -47,8 +47,11 @@ class DeltaDvSpec extends AnyFunSuite {
   }
 
   test("DV file frame: version byte, offsets, size + CRC verified") {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(conf)
+    // uncached: a FileSystem.getLocal of a plain Configuration would cache the
+    // stock local filesystem for every later spec in this JVM, in place of the
+    // session's (Sessions.builder)
+    val fs = org.apache.hadoop.fs.FileSystem.newInstanceLocal(
+      new org.apache.hadoop.conf.Configuration())
     val dir = java.nio.file.Files.createTempDirectory("dvspec").toString
     val root = new org.apache.hadoop.fs.Path(dir)
     val blobA = DeltaDv.serializeBitmaps(Seq(1L, 3L))
@@ -89,8 +92,8 @@ class DeltaDvSpec extends AnyFunSuite {
     val blob = DeltaDv.serializeBitmaps(pos)
     val d = DeltaDv.Descriptor("i", DeltaDv.z85Encode(blob), None,
       blob.length, 3)
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(conf)
+    val fs = org.apache.hadoop.fs.FileSystem.newInstanceLocal(
+      new org.apache.hadoop.conf.Configuration())
     assert(DeltaDv.readPositions(fs,
       new org.apache.hadoop.fs.Path("/tmp"), d).toSeq == pos)
   }

@@ -15,7 +15,7 @@ import graft.streaming.EventsStream
   * destination), while create-exclusive IS atomic (NIO `CREATE_NEW`,
   * the conditional-put primitive S3/GCS/ABFS expose). Registered as
   * `nonatomic://` so whole TxTable batteries can run on it. */
-class NonAtomicRenameFs extends RawLocalFileSystem {
+class NonAtomicRenameFs extends graft.core.NioRawLocalFileSystem {
   override def getScheme: String = "nonatomic"
   // no field: the superclass constructor calls getUri before Scala
   // field initializers run
@@ -76,18 +76,6 @@ class NonAtomicRenameFs extends RawLocalFileSystem {
       bufferSize: Int, replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream =
     atomicPut(f, exclusive = !overwrite)
-
-  // RawLocal's lazy permission loader does `new File(path.toUri)`,
-  // which rejects the nonatomic: scheme — serve EAGER plain statuses
-  private def eager(st: org.apache.hadoop.fs.FileStatus)
-      : org.apache.hadoop.fs.FileStatus =
-    new org.apache.hadoop.fs.FileStatus(st.getLen, st.isDirectory,
-      st.getReplication, st.getBlockSize, st.getModificationTime,
-      st.getAccessTime, FsPermission.getDefault, "root", "root", st.getPath)
-  override def listStatus(f: Path): Array[org.apache.hadoop.fs.FileStatus] =
-    super.listStatus(f).map(eager)
-  override def getFileStatus(f: Path): org.apache.hadoop.fs.FileStatus =
-    eager(super.getFileStatus(f))
 }
 
 object NonAtomicRenameFs {
