@@ -355,6 +355,25 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
   def lastTxn(appId: String): Option[Long] =
     latestVersion.flatMap(v => manifest(v).txns.get(appId))
 
+  /** The exactly-once rule of a streaming writer's microbatch `batchId`
+    * under `appId`: true when that batch is already committed, a
+    * crash-after-commit replay the caller skips. Structured Streaming
+    * replays at most the LAST uncommitted batch, so a batchId BELOW
+    * the last commit means the checkpoint was reset against a live
+    * table (a fresh stream restarts at 0); skipping every batch up to
+    * the last commit would silently discard the new stream's data, so
+    * that refuses by name instead (resume by pointing the new stream
+    * at a new table or a new txn app id — the Delta txnAppId
+    * discipline). */
+  def committedBatch(appId: String, batchId: Long): Boolean = {
+    val last = lastTxn(appId)
+    last.foreach(l => require(batchId >= l,
+      s"batchId $batchId < last committed $l for app $appId — " +
+        "checkpoint reset against a live table; use a fresh table dir " +
+        "or txn app id instead of silently dropping batches"))
+    last.contains(batchId)
+  }
+
   // ---- table properties ---------------------------------------------------
 
   /** The latest snapshot's table properties (persisted in every log
@@ -966,24 +985,11 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
         val keep = candidateFilter(full, preds)
         m.files.zip(statuses).collect { case (e, st) if keep(e) => st }
       },
-      // metadata-answered count(*): sound exactly when every entry
-      // recorded its row count (no DV snapshots reach this branch)
-      exactRowCount =
-        if (m.files.forall(_.rows >= 0)) Some(m.files.map(_.rows).sum)
-        else None,
-      // metadata-answered min/max: integer/floating columns where
-      // EVERY entry carries both stats (an absent stat usually means
-      // an all-null or legacy file — min/max can't fold over those;
-      // strings can't fold at all: their max stat is truncation-
-      // dropped). Values parse once here, typed for the rule.
-      exactMinMax = visible.fields.collect {
-        case f if (f.dataType match {
-            case IntegerType | LongType | DoubleType | FloatType |
-                 ShortType | ByteType => true
-            case _ => false
-          }) && m.files.nonEmpty &&
-          m.files.forall(e => e.min.contains(f.name) &&
-            e.max.contains(f.name)) =>
+      // metadata-answered count(*) and min/max ([[Manifest.stats]];
+      // no DV snapshots reach this branch), min/max typed for the rule
+      exactRowCount = m.stats.rows,
+      exactMinMax = visible.fields.flatMap { f =>
+        m.stats.bounds.get(f.name).flatMap { case (lo, hi) =>
           def parse(b: BigDecimal): Any = f.dataType match {
             case IntegerType => b.toIntExact
             case LongType    => b.toLongExact
@@ -992,14 +998,10 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
             case ShortType   => b.toShortExact
             case ByteType    => b.toByteExact
           }
-          try {
-            val mins = m.files.map(e => BigDecimal(e.min(f.name)))
-            val maxs = m.files.map(e => BigDecimal(e.max(f.name)))
-            Some(f.name -> ((parse(mins.min), parse(maxs.max))))
-          } catch {
-            case _: NumberFormatException | _: ArithmeticException => None
-          }
-      }.flatten.toMap)
+          try Some(f.name -> ((parse(lo), parse(hi))))
+          catch { case _: ArithmeticException => None }
+        }
+      }.toMap)
   }
 
   /** Planning payload for the DataSource-V2 catalog read path
@@ -1020,10 +1022,7 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
       m.bucketSpec.map(s => (s.cols, s.n)),
       filters => candidateFilter(full, sourcesToCatalyst(full, filters),
         physNameOf(m, _)),
-      exactRowCount =
-        if (m.files.forall(_.rows >= 0))
-          Some(m.files.map(f => f.rows - f.dvRows).sum)
-        else None,
+      exactRowCount = m.stats.liveRows,
       dvOf = f => f.dvPath,
       loadDv = () => dvPositions(v),
       physNameOf = physNameOf(m, _))
@@ -1087,12 +1086,8 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
     * relation's CBO [[org.apache.spark.sql.catalyst.plans.logical.Statistics]]
     * so named-txtable joins broadcast/reorder WITHOUT an external
     * ANALYZE. None when any entry predates row-count recording. */
-  private[graft] def manifestRowCount(v: Long): Option[Long] = {
-    val m = manifest(v)
-    if (m.files.forall(_.rows >= 0))
-      Some(m.files.map(f => f.rows - f.dvRows).sum)
-    else None
-  }
+  private[graft] def manifestRowCount(v: Long): Option[Long] =
+    manifest(v).stats.liveRows
 
   /** Column-level CBO statistics straight from the manifest —
     * (min external string, max external string, null count) per
@@ -1108,48 +1103,27 @@ final class TxTable private (spark: SparkSession, root: Path, fs: FileSystem,
   private[graft] def manifestColumnStats(v: Long)
       : Map[String, (String, String, Option[Long], Option[Long])] = {
     val m = manifest(v)
-    if (m.files.isEmpty) Map.empty
-    else {
-      val schema = StructType.fromDDL(m.schemaDdl)
-      val totalRows =
-        if (m.files.forall(_.rows >= 0)) Some(m.files.map(_.rows).sum)
-        else None
-      schema.fields.collect {
-        case f if (f.dataType match {
-            case IntegerType | LongType | DoubleType | FloatType |
-                 ShortType | ByteType => true
-            case _ => false
-          }) && {
-            val phys = physNameOf(m, f.name)
-            m.files.forall(e =>
-              e.min.contains(phys) && e.max.contains(phys))
-          } =>
-          val phys = physNameOf(m, f.name)
-          try {
-            val mins = m.files.map(e => BigDecimal(e.min(phys)))
-            val maxs = m.files.map(e => BigDecimal(e.max(phys)))
-            val nulls =
-              if (m.files.forall(_.nulls.contains(phys)))
-                Some(m.files.map(_.nulls(phys)).sum)
-              else None
-            // FilterEstimation refuses attributes without an ndv; for
-            // INTEGRAL columns min(rowCount, value span) is the
-            // uniformity-assumption estimate (exact manifests track no
-            // ndv) — floats get min/max only and their conditions fall
-            // back, never misestimate
-            val ndv = f.dataType match {
-              case IntegerType | LongType | ShortType | ByteType =>
-                val span = (maxs.max - mins.min + 1).toLong
-                totalRows.map(r => math.max(1L, math.min(r, span)))
-              case _ => None
-            }
-            Some(f.name ->
-              ((mins.min.toString, maxs.max.toString, nulls, ndv)))
-          } catch {
-            case _: NumberFormatException => None
-          }
-      }.flatten.toMap
-    }
+    StructType.fromDDL(m.schemaDdl).fields.flatMap { f =>
+      m.stats.bounds.get(f.name).map { case (lo, hi) =>
+        val phys = physNameOf(m, f.name)
+        val nulls =
+          if (m.files.forall(_.nulls.contains(phys)))
+            Some(m.files.map(_.nulls(phys)).sum)
+          else None
+        // FilterEstimation refuses attributes without an ndv; for
+        // INTEGRAL columns min(rowCount, value span) is the
+        // uniformity-assumption estimate (exact manifests track no
+        // ndv) — floats get min/max only and their conditions fall
+        // back, never misestimate
+        val ndv = f.dataType match {
+          case IntegerType | LongType | ShortType | ByteType =>
+            val span = (hi - lo + 1).toLong
+            m.stats.rows.map(r => math.max(1L, math.min(r, span)))
+          case _ => None
+        }
+        f.name -> ((lo.toString, hi.toString, nulls, ndv))
+      }
+    }.toMap
   }
 
   /** Overwrite preserving the CURRENT layout (bucketed or hive) — the
@@ -5938,6 +5912,19 @@ object TxTable {
     }
   }
 
+  /** A snapshot's manifest statistics — what every metadata-answered
+    * path reads (`scanRelation`, `v2ScanInfo`, `manifestRowCount`,
+    * `manifestColumnStats`). `rows` / `liveRows` are the on-disk and
+    * the live (minus deletion-vector rows) row sums, None when any
+    * entry predates row-count recording. `bounds` holds, per NUMERIC
+    * column of the snapshot schema whose every entry carries a
+    * parseable min and max stat (under its physical name), the
+    * (min, max) over all entries. An absent stat usually means an
+    * all-null or legacy file — min/max can't fold over those; strings
+    * can't fold at all: their max stat is truncation-dropped. */
+  private[core] final case class ManifestStats(rows: Option[Long],
+      liveRows: Option[Long], bounds: Map[String, (BigDecimal, BigDecimal)])
+
   /** Snapshot manifest — the complete state of one version
     * (reconstructed in memory from the delta log; persisted whole only
     * as a checkpoint). JSON via Jackson (ships with Spark). Files are
@@ -5958,6 +5945,29 @@ object TxTable {
       properties: Map[String, String] = Map.empty,
       colMap: Map[String, String] = Map.empty,
       retired: Seq[String] = Nil) {
+    /** This snapshot's statistics, derived once per manifest. */
+    lazy val stats: ManifestStats = {
+      val counted = files.forall(_.rows >= 0)
+      def sum(n: FileEntry => Long) =
+        if (counted) Some(files.map(n).sum) else None
+      val bounds = StructType.fromDDL(schemaDdl).fields.flatMap { f =>
+        val phys = colMap.getOrElse(f.name, f.name)
+        val numeric = f.dataType match {
+          case IntegerType | LongType | DoubleType | FloatType |
+               ShortType | ByteType => true
+          case _ => false
+        }
+        if (!numeric || files.isEmpty ||
+            !files.forall(e => e.min.contains(phys) && e.max.contains(phys)))
+          None
+        else
+          try Some(f.name -> ((files.map(e => BigDecimal(e.min(phys))).min,
+            files.map(e => BigDecimal(e.max(phys))).max)))
+          catch { case _: NumberFormatException => None }
+      }.toMap
+      ManifestStats(sum(_.rows), sum(e => e.rows - e.dvRows), bounds)
+    }
+
     def toJson: String = {
       val om = new com.fasterxml.jackson.databind.ObjectMapper()
       val node = om.createObjectNode()

@@ -342,53 +342,6 @@ case class BpeCountTokens(child: Expression, model: BpeModel)
     copy(child = newChild)
 }
 
-/** Ascending long-array sort (codegen'd; `sort_array` is not). */
-case class SortedLongs(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_sorted_longs"
-  override protected def nullSafeEval(a: Any): Any =
-    VectorKernels.sortedLongs(a.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VectorKernels.sortedLongs($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Packed suffix pair emission over a sorted posting list — see
-  * [[VectorKernels.packedPairsFrom]] (refuses ids outside [0, 2³¹)). */
-case class PackedPairsFrom(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_packed_pairs_from"
-  override protected def nullSafeEval(rs: Any, i: Any): Any =
-    VectorKernels.packedPairsFrom(rs.asInstanceOf[ArrayData],
-      i.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      // a private[graft] method gets no static forwarder: call the module
-      (rs, i) => s"graft.functions.VectorKernels$$.MODULE$$.packedPairsFrom($rs, $i)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** One-call canonical pair emission over a posting list — see
-  * [[VectorKernels.bucketPairs]]. */
-case class BucketPairs(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(new StructType()
-    .add("a", LongType, nullable = false)
-    .add("b", LongType, nullable = false), containsNull = false)
-  override def prettyName: String = "graft_bucket_pairs"
-  override protected def nullSafeEval(ids: Any): Any =
-    VectorKernels.bucketPairs(ids.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      ids => s"graft.functions.VectorKernels.bucketPairs($ids)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 case class SimHash64(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_simhash"
@@ -516,12 +469,6 @@ object GraftFunctions {
   def shingleHashes(tokens: Column, n: Int): Column =
     col(ShingleHashes(ex(tokens), n))
   def simHash64(tokens: Column): Column = col(SimHash64(ex(tokens)))
-  def sortedLongs(a: Column): Column = col(SortedLongs(ex(a)))
-  /** `graft`-internal: the kernel checks only the ends of `rs`, so
-    * unsorted input would silently merge pairs. */
-  private[graft] def packedPairsFrom(rs: Column, i: Column): Column =
-    col(PackedPairsFrom(ex(rs), ex(i)))
-  def bucketPairs(ids: Column): Column = col(BucketPairs(ex(ids)))
   def spanFingerprints(tokens: Column, k: Int): Column =
     col(SpanFingerprints(ex(tokens), k))
   def spanFilter(tokens: Column, spans: Column, k: Int): Column =

@@ -335,84 +335,6 @@ object VectorKernels {
     new GenericArrayData(out)
   }
 
-  /** Ascending sort of a long array — one kernel pass feeding the
-    * pair-emission kernels below (Spark's `sort_array` runs outside
-    * codegen; the posting lists here are group-sized, but they sit on
-    * the hot path of every bucket). */
-  def sortedLongs(a: ArrayData): ArrayData = {
-    val arr = a.toLongArray()
-    java.util.Arrays.sort(arr)
-    new GenericArrayData(arr)
-  }
-
-  /** Suffix pair emission, PACKED: pairs (rs[i], rs[j]) for j > i as
-    * rs[i]<<32 | rs[j] — 8 bytes per pair instead of a 2-long struct,
-    * halving the pair rollup's shuffle key. Requires a SORTED list
-    * (ascending ⇒ a < b canonical order for free) of values in
-    * [0, 2³¹): the guard REFUSES out-of-range ids by name rather than
-    * silently merging distinct pairs (the engine's refuse-by-name
-    * discipline; for wider id spaces use [[bucketPairs]], the
-    * `graft_bucket_pairs` struct emitter). The suffix
-    * form bounds the emitted array by the list length — one
-    * (row, position) emission is ≤ |rs| longs — so a df-cap-sized hot
-    * key (10⁴ ids ⇒ 5·10⁷ pairs) never materializes one 400 MB array:
-    * the quadratic mass streams through the generate as |rs| bounded
-    * chunks (guide §5: bound per-task state). */
-  private[graft] def packedPairsFrom(rs: ArrayData, i: Int): ArrayData = {
-    val n = rs.numElements()
-    if (n > 0 && (rs.getLong(0) < 0L || rs.getLong(n - 1) >= (1L << 31)))
-      throw new IllegalArgumentException(
-        "graft_packed_pairs_from: ids must lie in [0, 2^31) to pack as " +
-          s"a<<32|b (got ${rs.getLong(0)}..${rs.getLong(n - 1)}); " +
-          "use graft_bucket_pairs (VectorKernels.bucketPairs) for wider " +
-          "id spaces")
-    val a = rs.getLong(i) << 32
-    val out = new Array[Long](n - i - 1)
-    var j = i + 1
-    while (j < n) { out(j - i - 1) = a | rs.getLong(j); j += 1 }
-    new GenericArrayData(out)
-  }
-
-  /** All canonical pairs of one posting list in ONE kernel call:
-    * sorts, then emits (ids[i], ids[j]) i<j as struct<a,b> — the
-    * unbounded-id-space pair emission for doc-id bucket lists
-    * (c2/c3/c4/c8/c18/c19). ONE Generate node, exactly like the
-    * interpreted `transform(ids, (x,i) -> transform(slice(...), y ->
-    * struct(least, greatest)))` spelling it replaces, and kept for
-    * that: it matches the HOF node for node (one Generate, no carried
-    * array), and a same-JVM probe measured it 1.61× over the HOF on
-    * the emission span. Suffix (posexplode + per-position) vs this
-    * one-call form stays unmeasured until ROADMAP item 4 re-measures
-    * it: the A/B once cited here was void (both arms ran the same
-    * binaries). Memory bound unchanged from the old spelling (both
-    * materialize the full pair array per bucket; the df-cap bounds it
-    * — 5000 ids ⇒ 12.5 M pairs); the refusal below converts the old
-    * spelling's silent 2⁶³-element OOM into a named error. */
-  def bucketPairs(ids0: ArrayData): ArrayData = {
-    val ids = ids0.toLongArray()
-    java.util.Arrays.sort(ids)
-    val n = ids.length
-    val m = n.toLong * (n - 1) / 2
-    if (m > Int.MaxValue - 8)
-      throw new IllegalArgumentException(
-        s"graft_bucket_pairs: $n ids emit $m pairs — beyond one array; " +
-          "cap the bucket (maxDocFreq) before pair emission")
-    val out = new Array[Any](m.toInt)
-    var w = 0
-    var i = 0
-    while (i < n) {
-      var j = i + 1
-      while (j < n) {
-        out(w) = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(Array[Any](ids(i), ids(j)))
-        w += 1
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
   /** 64-bit Charikar SimHash over the token array: per-bit ±1 votes
     * weighted by token frequency (tokens appear as often as they
     * occur), bit set iff the vote is positive. */

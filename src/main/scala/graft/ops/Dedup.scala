@@ -38,7 +38,9 @@ object Dedup {
     * list whose pair emission is quadratic *inside a single task*; at
     * 100 TB that is the operator's only scale-killer, so the cap
     * defaults ON. 5000 ids ≈ 12.5M emitted pairs per hot key — the
-    * most one task should absorb. Dropping is never silent: each
+    * most one task should absorb. [[postingPairs]] streams them as
+    * 5000 generator rows of ≤ 5000 pairs each, so the cap bounds the
+    * task's time, not one row's memory. Dropping is never silent: each
     * operator attaches an `observe()` metric (surfaced through
     * `QueryExecutionListener` / `DataFrame.observe` semantics) with
     * the dropped count. Verification stays exact, so the cap affects
@@ -80,56 +82,67 @@ object Dedup {
   def hashedShingles(text: Column, n: Int): Column =
     graft.functions.GraftFunctions.shingleHashes(split(text, " "), n)
 
-  /** df-capped bucket pair emission shared by the LSH-family
-    * operators (c2/c4/c8): `buckets0` carries an `ids: array<long>`
-    * posting list per bucket (already filtered to size > 1). Buckets
-    * above the cap are dropped with an observe()d count (no silent
-    * caps); surviving lists emit canonical (a < b) pairs via one
-    * nested transform — never a self-join that would re-evaluate the
-    * signature pipeline.
+  /** Every pair {(rs[i], rs[j]) : i < j} of each bucket's sorted
+    * posting list: the one pair emitter of the dedup, similarity and
+    * graph operators (c2, c3, c4, c8, c18, c19, g6). ONE aggregation
+    * groups `id` by `bucketCols` into `rs = sort_array(collect_list(id))`;
+    * the sort sits inside the aggregation, so no Filter the optimizer
+    * infers for the generators can re-evaluate it (a sort in a Project
+    * was copied into `InferFiltersFromGenerate`'s Filter: three sorts
+    * per list). Lists of one id pair with nothing and are dropped;
+    * lists above `cap` are dropped with an observe()d count
+    * ([[capBuckets]]). Each surviving list emits through built-ins
+    * alone, in one codegen'd stage: `posexplode(rs)` → (i, a), then
+    * `explode(slice(rs, i + 2, size(rs) - i - 1))` → b. Any orderable
+    * element type works (long, int, string, struct), and the rows one
+    * list position emits are bounded by the list's length: the
+    * quadratic mass of a cap-sized list streams through the
+    * generators, never as one materialized pair array. Ascending
+    * order makes each pair canonical (a ≤ b); an id listed twice in
+    * one bucket pairs with itself. Returns (a, b).
     *
     * Metric caveat: if the WHOLE query comes back empty, AQE
     * empty-relation propagation may prune the subtree including the
     * CollectMetrics node, so the drop count is only reported on
     * queries that return rows — fine in practice (a corpus where
     * every candidate bucket is hot has no pairs to report anyway). */
-  private[ops] def cappedBucketPairs(buckets0: DataFrame,
-      maxBucket: Option[Int], metric: String,
-      aName: String, bName: String): DataFrame = {
-    val buckets = capBuckets(buckets0, maxBucket, metric)
-    // pair emission via the codegen'd one-call kernel (round 16): the
-    // nested `transform(ids, (x, i) -> transform(slice(...), y ->
-    // struct(least, greatest)))` ran INTERPRETED (HOFs don't codegen)
-    // and allocated a slice + a nested array per position before
-    // flatten. The kernel sorts each bucket once so (ids[i], ids[j])
-    // i<j IS the canonical a<b pair, and emits the bucket's pairs in
-    // one array — node-for-node the old plan shape (one Generate), and
-    // a same-JVM probe measured it 1.61× over the HOF. Suffix vs
-    // one-call stays unmeasured until ROADMAP item 6 (see
-    // VectorKernels.bucketPairs). Pair set is provably the old one:
-    // both spell {(min(x,y), max(x,y)) : unordered position pairs}
-    // (DedupSimilaritySpec pins the multiset against the HOF spelling).
-    buckets
-      .select(explode(graft.functions.GraftFunctions
-        .bucketPairs(col("ids"))).as("p"))
-      .select(col("p.a").as(aName), col("p.b").as(bName))
-      .distinct()
+  private[graft] def postingPairs(rows: DataFrame, bucketCols: Seq[String],
+      id: Column, cap: Option[Int], metric: String): DataFrame = {
+    val rs = col("rs")
+    val i = col("i")
+    capBuckets(
+      rows.groupBy(bucketCols.map(col): _*)
+        .agg(sort_array(collect_list(id)).as("rs"))
+        .where(size(rs) > 1),
+      cap, metric)
+      .select(rs, posexplode(rs).as(Seq("i", "a")))
+      .select(col("a"), explode(slice(rs, i + 2, size(rs) - i - 1)).as("b"))
   }
 
-  /** The df-cap on a posting-list frame (`ids` per bucket): buckets
+  /** The distinct id pairs of the `id` column's posting lists per
+    * bucket ([[postingPairs]]), named (`aName`, `bName`) — the
+    * candidate set of the LSH-family operators (c2/c4/c8/c18/c19),
+    * whose exact verification follows. */
+  private[ops] def cappedBucketPairs(rows: DataFrame, bucketCols: Seq[String],
+      id: String, maxBucket: Option[Int], metric: String,
+      aName: String, bName: String): DataFrame =
+    postingPairs(rows, bucketCols, col(id), maxBucket, metric)
+      .select(col("a").as(aName), col("b").as(bName))
+      .distinct()
+
+  /** The df-cap on a posting-list frame (`rs` per bucket): buckets
     * above the cap are dropped with an observe()d count of the
     * dropped buckets and postings (no silent caps). */
   private def capBuckets(buckets0: DataFrame, maxBucket: Option[Int],
       metric: String): DataFrame = maxBucket match {
     case Some(cap) =>
+      val n = size(col("rs"))
       buckets0
         .observe(s"${metric}_gt$cap",
-          sum(when(size(col("ids")) > cap, 1L).otherwise(0L))
-            .as("dropped_buckets"),
-          coalesce(sum(when(size(col("ids")) > cap,
-            size(col("ids")).cast("long"))), lit(0L))
+          sum(when(n > cap, 1L).otherwise(0L)).as("dropped_buckets"),
+          coalesce(sum(when(n > cap, n.cast("long"))), lit(0L))
             .as("dropped_postings"))
-        .where(size(col("ids")) <= cap)
+        .where(n <= cap)
     case None => buckets0
   }
 
@@ -196,8 +209,8 @@ object Dedup {
     // list's length, so the separate hot-list aggregation + anti-join
     // (and the round-15 checkpoint that kept them from re-running the
     // shingle kernel twice, with its unreleasable-retention ADVICE) are
-    // one `where(size(ids) <= cap)` on the single collect_list pass —
-    // the exact shape c2/c8 have always used (cappedBucketPairs).
+    // one `where(size(rs) <= cap)` on the single collect_list pass
+    // ([[postingPairs]], the shape every pair emitter shares).
     // Plan diff: 2 corpus-posting aggregations + 1 anti-join +
     // 1 checkpoint job → 1 aggregation, zero checkpoints, and the gate
     // plan is visible again (no Scan ExistingRDD). §5 note: a hot
@@ -207,9 +220,7 @@ object Dedup {
     // sort-based aggregation past its key threshold, and one list is
     // ≤ the hot key's df — the df-cap's own observability names the
     // mass that was dropped).
-    val cand = cappedBucketPairs(
-      pref0.groupBy("s").agg(collect_list(col("doc_id")).as("ids"))
-        .where(size(col("ids")) > 1),
+    val cand = cappedBucketPairs(pref0, Seq("s"), "doc_id",
       maxDocFreq, "graft_c4_hot_shingles", "doc_a", "doc_b")
     jaccardVerify(cand, withSh, threshold)
   }
@@ -258,10 +269,7 @@ object Dedup {
     // df-cap (see [[DefaultMaxDocFreq]]): a bucket bigger than the cap
     // is a mass-duplication flood — exactDedup territory — whose
     // quadratic emission would pin one task.
-    val cand = cappedBucketPairs(
-      banded.groupBy("band", "band_hash")
-        .agg(collect_list(col("doc_id")).as("ids"))
-        .where(size(col("ids")) > 1),
+    val cand = cappedBucketPairs(banded, Seq("band", "band_hash"), "doc_id",
       maxBucket, "graft_c2_hot_buckets", "doc_a", "doc_b")
     jaccardVerify(cand, withSh, threshold)
   }
@@ -405,22 +413,12 @@ object Dedup {
     // shape as c2/c4 (a banded self-join would evaluate the
     // fingerprint pipeline on both sides and shuffle doc rows twice).
     // The 8-byte fingerprint rides along in the bucket, so exact
-    // Hamming verification happens inline with no re-join.
-    val buckets = capBuckets( // df-cap, see [[DefaultMaxDocFreq]]
-      banded.groupBy("chunk", "chunk_val")
-        .agg(sort_array(collect_list(struct(col("doc_id"), col("fp")))).as("ids"))
-        .where(size(col("ids")) > 1),
-      maxBucket, "graft_c3_hot_buckets")
-    buckets
-      .select(explode(flatten(transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + lit(2), size(col("ids")) - i - 1),
-          y => struct(
-            x.getField("doc_id").as("doc_a"),
-            y.getField("doc_id").as("doc_b"),
-            bit_count(x.getField("fp").bitwiseXOR(y.getField("fp")))
-              .as("hamming"))))))
-        .as("p"))
-      .select(col("p.doc_a"), col("p.doc_b"), col("p.hamming"))
+    // Hamming verification happens inline with no re-join. df-cap:
+    // see [[DefaultMaxDocFreq]].
+    postingPairs(banded, Seq("chunk", "chunk_val"),
+        struct(col("doc_id"), col("fp")), maxBucket, "graft_c3_hot_buckets")
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        bit_count(col("a.fp").bitwiseXOR(col("b.fp"))).as("hamming"))
       .distinct()
       .where(col("hamming") <= maxHamming)
       .orderBy("doc_a", "doc_b")

@@ -364,11 +364,8 @@ object Similarity {
     // shuffle on the bucket key) — the banded self-join it replaces
     // ran the signature pipeline on both sides. df-cap as in
     // [[Dedup.DefaultMaxDocFreq]], dropped buckets observed.
-    val cand = graft.ops.Dedup.cappedBucketPairs(
-      banded.groupBy("band", "chunk")
-        .agg(collect_list(col("vec_id")).as("ids"))
-        .where(size(col("ids")) > 1),
-      maxBucket, "graft_c8_hot_buckets", "vec_a", "vec_b")
+    val cand = graft.ops.Dedup.cappedBucketPairs(banded, Seq("band", "chunk"),
+      "vec_id", maxBucket, "graft_c8_hot_buckets", "vec_a", "vec_b")
     verifyCosinePairs(emb, cand, threshold)
   }
 
@@ -430,11 +427,8 @@ object Similarity {
     val banded = emb.select(col("vec_id"),
       posexplode(graft.functions.GraftFunctions.srpBandChunks(
         col("embedding"), kBands, rBits)).as(Seq("band", "chunk")))
-    val cand = graft.ops.Dedup.cappedBucketPairs(
-      banded.groupBy("band", "chunk")
-        .agg(collect_list(col("vec_id")).as("ids"))
-        .where(size(col("ids")) > 1),
-      maxBucket, "graft_c18_hot_buckets", "vec_a", "vec_b")
+    val cand = graft.ops.Dedup.cappedBucketPairs(banded, Seq("band", "chunk"),
+      "vec_id", maxBucket, "graft_c18_hot_buckets", "vec_a", "vec_b")
     verifyCosinePairs(emb, cand, threshold)
   }
 
@@ -511,11 +505,9 @@ object Similarity {
     // where one centroid absorbs a constant fraction of the corpus —
     // is dropped with an OBSERVED count instead of silently going
     // quadratic; verification is the shared exact-cosine tail
-    val cand = graft.ops.Dedup.cappedBucketPairs(
-      assigned.groupBy("centroid_id")
-        .agg(collect_list(col("vec_id")).as("ids"))
-        .where(size(col("ids")) > 1),
-      maxCluster, "graft_c19_hot_clusters", "vec_a", "vec_b")
+    val cand = graft.ops.Dedup.cappedBucketPairs(assigned,
+      Seq("centroid_id"), "vec_id", maxCluster, "graft_c19_hot_clusters",
+      "vec_a", "vec_b")
     val pairs = verifyCosinePairs(emb, cand, threshold)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
     graft.ops.Dedup.dupClusters(pairs)

@@ -290,12 +290,7 @@ final class TxTableSink(table: TxTable, appId: String,
     extends org.apache.spark.sql.execution.streaming.Sink {
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    val last = table.lastTxn(appId)
-    if (last.contains(batchId)) return // crash-after-commit replay
-    last.foreach(l => require(batchId > l,
-      s"batchId $batchId < last committed $l for app $appId — " +
-        "checkpoint reset against a live table; use a fresh table dir " +
-        "or txnAppId instead of silently dropping batches"))
+    if (table.committedBatch(appId, batchId)) return
     val txn = Some(appId -> batchId)
     // the engine's microbatch frame is streaming-flagged and refuses
     // .write — rewrap its planned execution as a batch frame

@@ -2,7 +2,6 @@ package graft.steps
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.core._
 import org.apache.spark.sql.graft.Pins
 
@@ -364,43 +363,6 @@ object GraphOps {
     * (hash-partitioned on `a`, checkpointed) pair set. */
   private[graft] def coProjection(incidence: DataFrame,
       maxLeftDegree: Int, minShareTenths: Int): DataFrame = {
-    // materialize the distinct incidence ONCE, pinned hash(left) and
-    // sorted (round 15): it feeds the degree-cap aggregation and BOTH
-    // sides of the pair self-join, so the un-pinned spelling re-ran
-    // the scan + dimension join + distinct up to three more times
-    // inside one census — and hash(left) satisfies the dedup keys'
-    // clustering (subset), the degree agg, AND the self-join, so the
-    // ONE exchange here is the projection's only shuffle before the
-    // (a, b) rollup. Edge-set-sized — the same budget the census's own
-    // co0 pin already spends — released right after co0 materializes.
-    // Its pin job also observes the id range the pair emission
-    // dispatches on.
-    val nIncParts = incidence.sparkSession
-      .conf.get("spark.sql.shuffle.partitions").toInt
-    // integral rights in [0, 2³¹) take the packed-pair kernel path
-    // below, any other rights the self-join spelling; the cast to long
-    // is an injective id map (cannot change duplicates, degrees or pair
-    // counts)
-    val rightIntegral = incidence.schema("right").dataType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    val range = org.apache.spark.sql.Observation()
-    val inc = Pins.pin(incidence.select(col("left"),
-        (if (rightIntegral) col("right").cast("long") else col("right"))
-          .as("right"))
-      .observe(range, min(col("right")).as("lo"), max(col("right")).as("hi"))
-      .repartition(nIncParts, col("left"))
-      .dropDuplicates("left", "right")
-      .sortWithinPartitions("left"))
-    val packed = rightIntegral && {
-      val r = range.get
-      Option(r("lo")).forall(_.asInstanceOf[Long] >= 0L) &&
-        Option(r("hi")).forall(_.asInstanceOf[Long] < (1L << 31))
-    }
-    val keep = inc.groupBy("left").agg(count(lit(1)).as("d"))
-      .where(col("d") <= maxLeftDegree).select("left")
-    val pruned = inc.join(keep, Seq("left"), "left_semi")
     // WEIGHTED projection (the co-occurrence-analysis norm): keep a
     // pair iff its shared-neighbor count reaches minShareTenths/10 of
     // the maximum share — an sf-independent sparsifier in exact
@@ -408,25 +370,7 @@ object GraphOps {
     // data degenerates toward a complete graph, whose triangle join
     // is n³ no matter the algorithm). The max is one model-sized
     // driver scalar (the c10 discipline).
-    //
-    // Pair emission (round 16): grouped posting list + packed-pair
-    // kernel instead of the pruned⋈pruned self-join. The self-join
-    // evaluated the `pruned` subtree (semi join + its degree agg)
-    // TWICE and rolled the ~|pairs| join output up on a two-long
-    // (a, b) key; here the posting list per left is built by ONE
-    // zero-exchange aggregation (inc is pinned hash(left)), each
-    // (left, position) row emits its ≤|rs| suffix pairs as PACKED
-    // longs (a<<32|b — hence the [0, 2³¹) range `packed` checks), and
-    // the rollup exchanges 8-byte keys.
-    // Cap story: the suffix form streams a df-capped hot left
-    // (10⁴ rights ⇒ 5·10⁷ pairs) as 10⁴ bounded chunks instead of
-    // materializing one 400 MB pair array. Pair multiset is
-    // provably the self-join's: per left the rights are distinct
-    // (dedup upstream), sorted ascending ⇒ {(rs[i], rs[j]) : i<j}
-    // = {(x, y) : x < y} exactly (GraphPipelineSpec pins equality
-    // against the join spelling).
-    val co0 = Pins.pin(coPairCounts(pruned, packed))
-    Pins.release(inc)
+    val co0 = Pins.pin(coPairCounts(incidence, maxLeftDegree))
     val maxShare = Option(co0.agg(max(col("c"))).head.get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
     // pin the projection hash-partitioned on `a`: the triangle wedge
@@ -445,35 +389,27 @@ object GraphOps {
     co
   }
 
-  /** The (a, b, c) shared-neighbor pair counts of the weighted
-    * projection — [[coProjection]]'s pair-emission subtree, exposed
-    * pre-checkpoint so plan evidence and probes can see the shape the
-    * checkpoint otherwise hides. `rightIntegral` long rights, which
-    * must lie in [0, 2³¹), take the posting-list + packed-pair kernel
-    * path; any other rights keep the self-join spelling (see the call
-    * site for the full rationale). */
-  private[graft] def coPairCounts(pruned: DataFrame,
-      rightIntegral: Boolean): DataFrame =
-    if (rightIntegral) {
-      val posting = pruned.groupBy("left")
-        .agg(collect_list(col("right")).as("rs0"))
-        .select(graft.functions.GraftFunctions.sortedLongs(col("rs0")).as("rs"))
-      posting
-        .select(col("rs"), posexplode(col("rs")).as(Seq("i", "__r")))
-        .select(explode(graft.functions.GraftFunctions
-          .packedPairsFrom(col("rs"), col("i"))).as("p"))
-        .groupBy("p").agg(count(lit(1)).as("c"))
-        .select(shiftright(col("p"), 32).as("a"),
-          col("p").bitwiseAND(lit(0xFFFFFFFFL)).as("b"), col("c"))
-    } else {
-      // non-integral rights, or ids outside [0, 2³¹): the general
-      // ordered-type self-join spelling
-      pruned.alias("x")
-        .join(pruned.alias("y"), Seq("left"))
-        .where(col("x.right") < col("y.right"))
-        .groupBy(col("x.right").as("a"), col("y.right").as("b"))
-        .agg(count(lit(1)).as("c"))
-    }
+  /** The (a, b, c) shared-neighbor pair counts of the projection —
+    * [[coProjection]]'s pair-emission subtree, exposed pre-checkpoint
+    * so plan evidence and probes can see the shape the checkpoint
+    * otherwise hides. The distinct incidence is hash-partitioned on
+    * `left` once, which also clusters the posting aggregation of
+    * [[graft.ops.Dedup.postingPairs]]: each left's sorted rights emit
+    * their (a < b) pairs, a left above `maxLeftDegree` rights is
+    * dropped with an observe()d count (a celebrity customer touching
+    * every supplier would alone emit |right|² pairs), and the pairs
+    * are counted on (a, b). Rights may be of any orderable type. */
+  private[graft] def coPairCounts(incidence: DataFrame,
+      maxLeftDegree: Int): DataFrame = {
+    val nParts = incidence.sparkSession
+      .conf.get("spark.sql.shuffle.partitions").toInt
+    val distinctInc = incidence.select("left", "right")
+      .repartition(nParts, col("left"))
+      .dropDuplicates("left", "right")
+    graft.ops.Dedup.postingPairs(distinctInc, Seq("left"), col("right"),
+        Some(maxLeftDegree), "graft_g6_hot_lefts")
+      .groupBy("a", "b").agg(count(lit(1)).as("c"))
+  }
 
   /** The one-row (nodes, edges, triangles) census of a pinned
     * projection. */

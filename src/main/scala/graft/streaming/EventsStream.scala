@@ -499,22 +499,10 @@ object EventsStream {
 
   /** One microbatch of the TxTable upsert — factored out so the spec
     * can replay a batch against a live table and assert the
-    * exactly-once no-op. Exactly-once contract: Structured Streaming
-    * replays at most the LAST uncommitted batch, so the only
-    * legitimate duplicate is batchId == lastTxn — that no-ops. A
-    * batchId BELOW lastTxn means the checkpoint was reset against a
-    * live table (a fresh stream restarts at 0); silently no-op'ing
-    * every batch up to lastTxn would discard the new stream's data,
-    * so fail loudly instead (resume by pointing the new stream at a
-    * new table / new txn app id — the Delta txnAppId discipline). */
+    * exactly-once no-op ([[graft.core.TxTable.committedBatch]]). */
   private[graft] def upsertBatchTx(t: graft.core.TxTable, batch: Dataset[Row],
       batchId: Long, nBuckets: Int): Unit = {
-    val last = t.lastTxn(UpsertAppId)
-    if (last.contains(batchId)) return // crash-after-commit replay: committed
-    last.foreach(l => require(batchId > l,
-      s"batchId $batchId < last committed $l for app $UpsertAppId — " +
-        "checkpoint reset against a live table; use a fresh table dir " +
-        "or txn app id instead of silently dropping batches"))
+    if (t.committedBatch(UpsertAppId, batchId)) return
     val asState = latest(batch.select(col("user_id"),
       col("event_id").as("last_event_id"), col("ts").as("last_ts"),
       col("value").as("last_value")))
@@ -625,12 +613,7 @@ object EventsStream {
     * no-op (same contract as [[upsertBatchTx]]). */
   private[graft] def dedupIngestBatchTx(t: graft.core.TxTable,
       batch: Dataset[Row], batchId: Long, nBuckets: Int): Unit = {
-    val last = t.lastTxn(DedupIngestAppId)
-    if (last.contains(batchId)) return // crash-after-commit replay
-    last.foreach(l => require(batchId > l,
-      s"batchId $batchId < last committed $l for app $DedupIngestAppId — " +
-        "checkpoint reset against a live table; use a fresh table dir " +
-        "or txn app id instead of silently dropping batches"))
+    if (t.committedBatch(DedupIngestAppId, batchId)) return
     // redelivery can land INSIDE one batch too: reduce batch-locally
     // first. max over the payload struct, not dropDuplicates — the
     // surviving row is deterministic under any file-to-batch split

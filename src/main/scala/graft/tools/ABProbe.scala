@@ -22,10 +22,15 @@ import org.apache.spark.sql.graft.Pins
   *
   *  - `ids`: g5 PageRank + g4 k-core over STRING ("c…"/"s…") vs packed
   *    LONG (2k / 2k+1) node ids.
-  *  - `g6-pairs`: `GraphOps.coPairCounts`' join spelling vs its packed
-  *    pair kernel, over the same pruned incidence.
-  *  - `bucket-pairs`: the interpreted nested-`transform` HOF vs the
-  *    `bucketPairs` kernel, over c4's prefix-posting buckets.
+  *  - `g6-pairs`: the degree-capped incidence self-join vs
+  *    `GraphOps.coPairCounts` (posting-list pairs), over the same
+  *    pinned distinct incidence.
+  *  - `bucket-pairs`: the interpreted nested-`transform` HOF over
+  *    pinned posting lists vs `Dedup.postingPairs` over the pinned
+  *    rows they were collected from (its sort runs in its own
+  *    aggregation, so that arm pays the aggregation too), over c4's
+  *    prefix shingles; `bucket-pairs-planted`: the same two arms over
+  *    4 planted buckets of 2,000 ids each (SF_DIR is not read).
   *  - `g5-loop`: the "fat" PageRank loop (outdeg carried on every edge,
   *    the formulation before the slim loop) vs `GraphOps.pageRank`.
   *  - `dup-clusters`: `Dedup.dupClusters`' distributed label-propagation
@@ -80,8 +85,13 @@ object ABProbe {
       val keep = inc.groupBy("left").agg(count(lit(1)).as("cnt"))
         .where(col("cnt") <= 10000).select("left")
       val pruned = inc.join(keep, Seq("left"), "left_semi")
-      (Arm("join", () => noop(GraphOps.coPairCounts(pruned, rightIntegral = false))),
-        Arm("kernel", () => noop(GraphOps.coPairCounts(pruned, rightIntegral = true))))
+      val join = pruned.alias("x")
+        .join(pruned.alias("y"), Seq("left"))
+        .where(col("x.right") < col("y.right"))
+        .groupBy(col("x.right").as("a"), col("y.right").as("b"))
+        .agg(count(lit(1)).as("c"))
+      (Arm("join", () => noop(join)),
+        Arm("helper", () => noop(GraphOps.coPairCounts(inc, 10000))))
     },
     "bucket-pairs" -> { (spark, d) =>
       val nGram = 3; val threshold = 0.8
@@ -91,22 +101,12 @@ object ABProbe {
           graft.ops.Dedup.hashedShingles(col("text"), nGram).as("sh"))
       val prefixLen =
         (size(col("sh")) - ceil(size(col("sh")) * lit(threshold)) + 1).cast("int")
-      val buckets = withSh
-        .select(col("doc_id"), explode(slice(col("sh"), lit(1), prefixLen)).as("s"))
-        .groupBy("s").agg(collect_list(col("doc_id")).as("ids"))
-        .where(size(col("ids")) > 1)
-        .localCheckpoint(true)
-      val hof = buckets
-        .select(explode(flatten(transform(col("ids"), (x, i) =>
-          transform(slice(col("ids"), i + lit(2), size(col("ids")) - i - 1),
-            y => struct(least(x, y).as("a"), greatest(x, y).as("b"))))))
-          .as("p"))
-      val kernel = buckets
-        .select(explode(graft.functions.GraftFunctions
-          .bucketPairs(col("ids"))).as("p"))
-      def pairs(p: DataFrame) =
-        noop(p.select(col("p.a").as("doc_a"), col("p.b").as("doc_b")).distinct())
-      (Arm("hof", () => pairs(hof)), Arm("kernel", () => pairs(kernel)))
+      pairArms(withSh.select(col("doc_id"),
+        explode(slice(col("sh"), lit(1), prefixLen)).as("s")))
+    },
+    "bucket-pairs-planted" -> { (spark, _) =>
+      pairArms(spark.range(4 * 2000).select((col("id") % 4).as("s"),
+        xxhash64(col("id")).as("doc_id")))
     },
     "g5-loop" -> { (spark, d) =>
       val edges = GraphOps.edges(Tables.lineitem(spark, d), Tables.orders(spark, d))
@@ -144,6 +144,26 @@ object ABProbe {
       (Arm("case-chain", () => noop(docs.where(chain === col("lang")))),
         Arm("argmax", () => noop(docs.where(argmax === col("lang")))))
     })
+
+  /** The distinct (doc_a, doc_b) pairs of the `doc_id` posting lists
+    * per `s`: the nested-`transform` HOF over pinned lists vs
+    * `Dedup.postingPairs` over the pinned rows. */
+  private def pairArms(rows0: DataFrame): (Arm, Arm) = {
+    val rows = rows0.localCheckpoint(true)
+    val buckets = rows.groupBy("s").agg(collect_list(col("doc_id")).as("ids"))
+      .where(size(col("ids")) > 1)
+      .localCheckpoint(true)
+    val hof = buckets
+      .select(explode(flatten(transform(col("ids"), (x, i) =>
+        transform(slice(col("ids"), i + lit(2), size(col("ids")) - i - 1),
+          y => struct(least(x, y).as("a"), greatest(x, y).as("b"))))))
+        .as("p"))
+      .select(col("p.a"), col("p.b"))
+    val helper = Dedup.postingPairs(rows, Seq("s"), col("doc_id"), None, "")
+    def pairs(p: DataFrame) =
+      noop(p.select(col("a").as("doc_a"), col("b").as("doc_b")).distinct())
+    (Arm("hof", () => pairs(hof)), Arm("helper", () => pairs(helper)))
+  }
 
   /** `Dedup.dupClusters`' two paths over one pinned pair set, each arm
     * pinning it as `dupClusters` does. */

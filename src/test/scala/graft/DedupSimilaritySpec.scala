@@ -45,25 +45,39 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(Dedup.ngramJaccardPairs(docs, maxDocFreq = Some(0)).count() == 0)
   }
 
-  test("bucketPairs kernel reproduces the nested-transform emission " +
-      "(round 16: one-call sorted pair emission vs the interpreted HOF)") {
+  test("postingPairs matches the HOF on long, int, string and struct ids") {
     import spark.implicits._
-    // unsorted lists, duplicate values, singleton and empty lists
-    val buckets = Seq(Seq(5L, 1L, 3L, 1L), Seq(2L, 2L), Seq(9L), Seq[Long]())
-      .toDF("ids")
-    def pairsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    val kernel = pairsOf(buckets
-      .select(explode(graft.functions.GraftFunctions
-        .bucketPairs(col("ids"))).as("p"))
-      .select(col("p.a"), col("p.b")))
-    val hof = pairsOf(buckets
+    import org.apache.spark.sql.DataFrame
+    // the reference: each bucket's unsorted list, every position pair
+    // through the interpreted HOF, ordered by least/greatest
+    def hof(rows: DataFrame): Seq[String] = rows.groupBy("bucket")
+      .agg(collect_list(col("id")).as("ids"))
       .select(explode(flatten(transform(col("ids"), (x, i) =>
         transform(slice(col("ids"), i + lit(2), size(col("ids")) - i - 1),
           y => struct(least(x, y).as("a"), greatest(x, y).as("b"))))))
         .as("p"))
-      .select(col("p.a"), col("p.b")))
-    assert(kernel == hof && kernel.nonEmpty, s"$kernel vs $hof")
+      .select(col("p.a"), col("p.b"))
+      .collect().map(_.toString).toSeq.sorted
+    def helper(rows: DataFrame): Seq[String] =
+      Dedup.postingPairs(rows, Seq("bucket"), col("id"), None, "spec")
+        .collect().map(_.toString).toSeq.sorted
+    // unsorted lists, duplicate values and a singleton list
+    val longs = Seq((0, 5L), (0, 1L), (0, 3L), (0, 1L), (1, 2L), (1, 2L),
+      (2, 9L)).toDF("bucket", "id")
+    val ints = Seq((0, 5), (0, 1), (0, 3), (1, 7), (1, 2)).toDF("bucket", "id")
+    val strings = Seq((0, "b"), (0, "a"), (0, "c"), (1, "x"), (1, "x"))
+      .toDF("bucket", "id")
+    val structs = Seq((0, 2L, 7L), (0, 1L, 9L), (0, 3L, 0L), (1, 4L, 4L))
+      .toDF("bucket", "doc_id", "fp")
+      .select(col("bucket"), struct(col("doc_id"), col("fp")).as("id"))
+    withoutCodegenFallback {
+      for (rows <- Seq(longs, ints, strings, structs)) {
+        val (got, want) = (helper(rows), hof(rows))
+        assert(got == want && got.nonEmpty, s"$got vs $want")
+      }
+      // ints stay ints: (a, b) are the list's own values
+      assert(helper(ints) == Seq("[1,3]", "[1,5]", "[2,7]", "[3,5]"))
+    }
   }
 
   test("df-cap bounds hot-key candidates without losing cold pairs") {
@@ -115,7 +129,7 @@ class DedupSimilaritySpec extends SparkSpec {
       // flood (capped away) + surviving twins: the query must return
       // rows, else AQE empty-relation propagation prunes the whole
       // candidate subtree INCLUDING the CollectMetrics node (see
-      // cappedBucketPairs scaladoc)
+      // postingPairs scaladoc)
       val flood = (1 to 30).map(i =>
         (i.toLong, "mass duplicated boilerplate text appears everywhere online")) ++
         Seq((100L, "alpha beta gamma delta epsilon zeta"),

@@ -170,8 +170,7 @@ class GraphPipelineSpec extends SparkSpec {
     }
   }
 
-  test("coProjection packed-pair kernel ≡ the self-join spelling " +
-      "(round-16: integral rights take the posting-list path)") {
+  test("coProjection's posting-list pairs equal the self-join spelling's") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     // deterministic bipartite incidence with shared neighbors and
@@ -179,41 +178,39 @@ class GraphPipelineSpec extends SparkSpec {
     val rows = for (l <- 0 until 120; j <- 0 until 6)
       yield (l.toLong, ((l * (j + 3) + j * 17) % 40).toLong)
     val inc = (rows ++ rows.take(50)).toDF("left", "right")
-    // kernel-path projection (long rights) vs the join spelling
-    // computed inline with the same cap/threshold
-    val co = graft.steps.GraphOps.coProjection(inc, 10000, 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val pr = inc.distinct()
-    val co0 = pr.alias("x").join(pr.alias("y"), Seq("left"))
-      .where(col("x.right") < col("y.right"))
-      .groupBy(col("x.right").as("a"), col("y.right").as("b"))
-      .agg(count(lit(1)).as("c"))
-    val mx = co0.agg(max("c")).head.getLong(0)
-    val want = co0.where(col("c") * 10 >= lit(8) * lit(mx))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(co == want, s"kernel path diverged: ${co.diff(want)} / ${want.diff(co)}")
-    // the full census agrees across the two dispatch paths: string
-    // rights (join spelling) vs long rights (kernel) under an
-    // order-preserving relabeling
-    val strInc = (rows ++ rows.take(50))
-      .map { case (l, r) => (l, f"r$r%03d") }.toDF("left", "right")
-    val a = graft.steps.GraphOps.triangleCensus(inc).head
-    val b = graft.steps.GraphOps.triangleCensus(strInc).head
-    assert((a.getLong(0), a.getLong(1), a.getLong(2)) ==
-      ((b.getLong(0), b.getLong(1), b.getLong(2))), s"$a vs $b")
-    // refuse-by-name: packed ids must fit [0, 2^31)
-    val ex = intercept[IllegalArgumentException] {
-      graft.functions.VectorKernels.packedPairsFrom(
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          Array(1L, 1L << 31)), 0)
+    withoutCodegenFallback {
+      // the projection vs the join spelling computed inline with the
+      // same cap/threshold
+      val co = graft.steps.GraphOps.coProjection(inc, 10000, 8)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val pr = inc.distinct()
+      val co0 = pr.alias("x").join(pr.alias("y"), Seq("left"))
+        .where(col("x.right") < col("y.right"))
+        .groupBy(col("x.right").as("a"), col("y.right").as("b"))
+        .agg(count(lit(1)).as("c"))
+      val mx = co0.agg(max("c")).head.getLong(0)
+      val want = co0.where(col("c") * 10 >= lit(8) * lit(mx))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(co == want, s"projection diverged: ${co.diff(want)} / ${want.diff(co)}")
+      // the full census agrees across right types: string rights vs
+      // long rights under an order-preserving relabeling
+      val strInc = (rows ++ rows.take(50))
+        .map { case (l, r) => (l, f"r$r%03d") }.toDF("left", "right")
+      val a = graft.steps.GraphOps.triangleCensus(inc).head
+      val b = graft.steps.GraphOps.triangleCensus(strInc).head
+      assert((a.getLong(0), a.getLong(1), a.getLong(2)) ==
+        ((b.getLong(0), b.getLong(1), b.getLong(2))), s"$a vs $b")
+      // hand-counted shared neighbors, and the degree cap drops left 0
+      val small = Seq((0L, 1L), (0L, 2L), (0L, 3L), (1L, 1L), (1L, 2L))
+        .toDF("left", "right")
+      def counts(cap: Int) = GraphOps.coPairCounts(small, cap)
+        .as[(Long, Long, Long)].collect().toSet
+      assert(counts(10) == Set((1L, 2L, 2L), (1L, 3L, 1L), (2L, 3L, 1L)))
+      assert(counts(2) == Set((1L, 2L, 1L)))
     }
-    assert(ex.getMessage.contains("2^31"))
-    assert(ex.getMessage.contains("graft_bucket_pairs"),
-      "the refusal must name the wide-id kernel that exists")
   }
 
-  test("coProjection: rights outside [0, 2^31) take the self-join spelling " +
-      "and give the string relabeling's census") {
+  test("coProjection: rights outside [0, 2^31) give the string-relabeled census") {
     import spark.implicits._
     val rows = for (l <- 0 until 120; j <- 0 until 6)
       yield (l.toLong, ((l * (j + 3) + j * 17) % 40).toLong)
@@ -222,30 +219,16 @@ class GraphPipelineSpec extends SparkSpec {
       val r = GraphOps.triangleCensus(inc, minShareTenths = 1).head
       (r.getLong(0), r.getLong(1), r.getLong(2))
     }
-    val want = census(all.map { case (l, r) => (l, f"r$r%03d") }
-      .toDF("left", "right"))
-    assert(want._3 > 0, s"the census must hold triangles: $want")
-    for (shift <- Seq(1L << 31, -20L)) {
-      val got = census(all.map { case (l, r) => (l, r + shift) }
+    withoutCodegenFallback {
+      val want = census(all.map { case (l, r) => (l, f"r$r%03d") }
         .toDF("left", "right"))
-      assert(got == want, s"rights shifted by $shift")
+      assert(want._3 > 0, s"the census must hold triangles: $want")
+      for (shift <- Seq(1L << 31, -20L)) {
+        val got = census(all.map { case (l, r) => (l, r + shift) }
+          .toDF("left", "right"))
+        assert(got == want, s"rights shifted by $shift")
+      }
     }
-  }
-
-  test("coPairCounts' packed-pair kernel compiles: no interpreted fallback") {
-    import spark.implicits._
-    // with fallback off, generated Java that does not compile fails the
-    // query instead of silently running the stage interpreted
-    val key = "spark.sql.codegen.fallback"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
-      val pruned = Seq((0L, 1L), (0L, 2L), (0L, 3L), (1L, 1L), (1L, 2L))
-        .toDF("left", "right")
-      val got = GraphOps.coPairCounts(pruned, rightIntegral = true)
-        .as[(Long, Long, Long)].collect().toSet
-      assert(got == Set((1L, 2L, 2L), (1L, 3L, 1L), (2L, 3L, 1L)))
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("triangleCensus: sparse hand graph, hot-left df-cap") {

@@ -88,6 +88,20 @@ class PlanLintSpec extends SparkSpec {
       s"c4_ngram_jaccard plans a checkpoint scan:\n$plan")
   }
 
+  test("c4_ngram_jaccard sorts its posting lists in the aggregate alone") {
+    // a sort outside the aggregation can be copied into the Filter the
+    // optimizer infers for the pair generators, sorting a list again
+    import org.apache.spark.sql.catalyst.expressions.SortArray
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val df = SparkEntry.queries("c4_ngram_jaccard")(spark, sf)
+    df.collect()
+    val sorting = operators(df.queryExecution.executedPlan)
+      .filter(_.expressions.exists(_.exists(_.isInstanceOf[SortArray])))
+    assert(sorting.size == 1 && sorting.head.isInstanceOf[BaseAggregateExec],
+      s"sort_array runs in ${sorting.map(_.nodeName)}:\n" +
+        df.queryExecution.executedPlan)
+  }
+
   /** Every operator of an executed plan, through AQE's stages and
     * reused exchanges. */
   private def operators(p: org.apache.spark.sql.execution.SparkPlan)

@@ -17,4 +17,13 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = TestSpark.sf
+
+  /** Runs `body` with codegen fallback off: generated code that does
+    * not compile fails the query instead of running interpreted. */
+  def withoutCodegenFallback[T](body: => T): T = {
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

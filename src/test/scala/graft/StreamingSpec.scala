@@ -275,6 +275,30 @@ class StreamingSpec extends SparkSpec {
       EventsStream.upsertBatchTx(t, batch(3, 3.0), batchId = 0, nBuckets = 4))
     assert(e.getMessage.contains("checkpoint reset"))
     assert(t.versions == versions)
+    // the same rule through the format("txtable") streaming sink: two
+    // batches under one checkpoint, then a fresh checkpoint's batch 0
+    val src = EventsStream.scratchDir("sink_tx_reset_src")
+    (0 until 4).foreach(i => batch(i.toLong, i.toDouble).coalesce(1)
+      .write.mode("append").parquet(s"$src/files"))
+    val sinkDir = EventsStream.scratchDir("sink_tx_reset") + "/t"
+    def sinkRun(ckpt: String): Unit = spark.readStream
+      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, value DOUBLE")
+      .option("maxFilesPerTrigger", 2)
+      .parquet(s"$src/files")
+      .writeStream.format("txtable")
+      .option("path", sinkDir)
+      .option("checkpointLocation", EventsStream.scratchDir(ckpt))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    sinkRun("sink_tx_reset_ckpt")
+    val sinkTable = graft.core.TxTable(spark, sinkDir)
+    val sinkVersions = sinkTable.versions
+    assert(sinkVersions.size == 2, s"two batches, got $sinkVersions")
+    val reset = intercept[Exception](sinkRun("sink_tx_reset_ckpt2"))
+    assert(Iterator.iterate[Throwable](reset)(_.getCause).takeWhile(_ != null)
+      .exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains("checkpoint reset")), reset)
+    assert(sinkTable.versions == sinkVersions)
   }
 
   test("foreachBatch upsert survives a driver restart: disk-recovered state") {
